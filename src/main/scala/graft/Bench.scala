@@ -1,7 +1,7 @@
 package graft
 
 import graft.catalog.{PipelineRunner, Warehouse}
-import graft.etl.{Pipeline, Retention, Sales}
+import graft.etl.{Retention, Sales}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark. Prints TWO JSON lines to stdout:
@@ -36,8 +36,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    plus the raw `materialize_passes`; pass 1 reuses the shared
   *    Pipeline's cached staging frames — the honest cost of materializing
   *    after the query series, not a cold rebuild), then EVERY in-session
-  *    cache is invalidated (Pipeline/Dedup/TextOps/Vectors/Corpus/Basket
-  *    memo maps + `catalog.clearCache()`) so the read-back queries run against the
+  *    cache is invalidated (every memo-registry entry of the sf-dir +
+  *    `catalog.clearCache()`) so the read-back queries run against the
   *    warehouse parquet with no cross-series cache pressure or flattery —
   *    r4's w_* read-back drag was exactly this interference. The synthetic
   *    daily cycle (drain → pruned merge → scoped compaction against the
@@ -737,19 +737,10 @@ object Bench {
         }
         // Isolation barrier: the read-back series must measure the
         // warehouse parquet alone, not compete with (or borrow from) the
-        // query series' persisted frames.
-        Pipeline.invalidate(spark, sfDir)
-        ops.Dedup.invalidate(spark, sfDir)
-        ops.TextOps.invalidate(spark, sfDir)
-        ops.Vectors.invalidate(spark, sfDir)
-        // r18 ADVICE: these two grains are checkpoint-backed RDD blocks
-        // that clearCache() does NOT evict — without their own hooks the
-        // read-back series no longer measured the warehouse parquet alone.
-        // Basket keys its checkpoint registry by session only, so the
-        // whole-session hook is its per-dir barrier here (every Basket
-        // grain in this run was built from sfDir).
-        ops.Corpus.invalidate(spark, sfDir)
-        ops.Basket.invalidateAll(spark)
+        // query series' persisted frames. Checkpoint-backed grains hold
+        // RDD blocks that clearCache() does NOT evict (r18 ADVICE), so the
+        // registry releases the dir's entries first.
+        Caches.invalidate(spark, sfDir)
         spark.catalog.clearCache()
         if (mats.headOption.exists(_ >= 0)) {
           // pass 1 succeeded → the warehouse is complete and readable

@@ -1,7 +1,8 @@
 package graft
 
-/** The docs/vectors DuckDB oracle prelude (see Oracle.scala). Embedded
-  * verbatim from tools/docs_prelude.sql (prototyped there first). */
+/** The docs/vectors DuckDB oracle prelude (see Oracle.scala): the shared
+  * CTEs that re-derive the docs/vectors data model from the bare parquet
+  * tables, which each docs oracle entry extends with its final SELECT. */
 object DocsOracleSql {
   private val text1: String = """WITH RECURSIVE
 docs AS (

@@ -23,29 +23,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object Ids {
 
-  /** Every `sorted` frame [[dense]] persists, so session teardown can
-    * unpersist them ([[graft.Caches.invalidateAll]]). Without the
-    * registry each dense call leaked one persisted FACT-SIZED frame for
-    * the JVM lifetime (exactly the unregistered-persist leak
-    * `Pipeline.registerCached`'s scaladoc warns about) — at the 8× scale
-    * probe several multi-GB sorted fact frames of the PREVIOUS pass
-    * stayed pinned in the block manager and evicted the current pass's
-    * staging cache. */
-  private val persisted =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Unpersist and forget every dense-sort frame `spark` holds. */
-  def invalidateAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    persisted.synchronized {
-      persisted.filter(_.sparkSession eq spark).foreach(_.unpersist(false))
-      persisted.filterInPlace(df => !(df.sparkSession eq spark))
-    }
-
-  /** Registered dense-sort frames for `spark` (spec hook). */
-  private[graft] def persistedCount(
-      spark: org.apache.spark.sql.SparkSession): Int =
-    persisted.synchronized { persisted.count(_.sparkSession eq spark) }
-
   /** Prepend a dense 1-based id column assigned in `sortCols` order.
     * `sortCols` must form a unique key for the assignment to be
     * deterministic. */
@@ -54,9 +31,15 @@ object Ids {
     val cols = sortCols.map(df.col)
     // Persisted: zipWithIndex runs a light counting job before the main
     // pass — without the cache the whole upstream plan would execute twice.
-    val sorted = df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persisted.synchronized { persisted += sorted }
+    // Tracked in the memo registry, or each call would leak one persisted
+    // FACT-SIZED frame for the JVM lifetime (at the 8× scale probe the
+    // previous pass's sorted facts evicted the current pass's staging
+    // cache). Ids sits below the dir layer: inside a grain build (the
+    // Pipeline's dims and facts) the sort is released with that grain,
+    // elsewhere at session teardown.
+    val sorted = graft.Caches.track(df.sparkSession, "",
+      df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val schema = StructType(
       StructField(idCol, LongType, nullable = false) +: sorted.schema.fields)
     val rdd = sorted.rdd.zipWithIndex().map { case (r, i) =>

@@ -4,11 +4,12 @@ import org.apache.spark.sql.Dataset
 
 /** Deployment-mode lineage truncation for the session memo grains.
   *
-  * Every memo registry in the library (Pipeline staging, Dedup bands/runs,
-  * TextOps shingles/tf/stats, Basket graph grains, Vectors serving grains,
-  * Corpus curation grains, the CC-loop round frames) truncates its frame's
-  * logical plan eagerly — Catalyst re-analyzing a multi-hundred-node
-  * persisted lineage per consumer action was the r18 heavy tail (guide
+  * Most grains in the memo registry ([[graft.Caches]]: Pipeline staging,
+  * Dedup bands/runs, TextOps shingles/tf/stats, Basket graph grains,
+  * Vectors serving grains, Corpus curation grains, the CC-loop round
+  * frames) truncate their frame's logical plan eagerly — Catalyst
+  * re-analyzing a multi-hundred-node persisted lineage per consumer action
+  * was the r18 heavy tail (guide
   * §3.3/§7.3). HOW the truncation materializes is a deployment decision:
   *
   *  - `local` (default): eager `localCheckpoint` — blocks live in executor

@@ -130,7 +130,7 @@ object ScaleProbe {
 
     def runAll(dir: String): Map[String, Double] = {
       // drop BOTH cache layers so every timed pass recomputes from parquet:
-      // CacheManager data (persist frames) and ALL memo maps of the WHOLE
+      // CacheManager data (persist frames) and every memo entry of the WHOLE
       // session — not just this dir's (the other dir's leftover frames
       // would otherwise sit in the block manager and evict this pass's
       // staging cache mid-run) — 1× and N× then pay identical first-touch

@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.Caches
 import graft.Memo.TruncateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -12,54 +13,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scalars (`count()` of a dimension-sized plan).
   */
 object Pipeline {
-  private val instances =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Pipeline]
 
-  /** One shared Pipeline per (session, sf-dir): its lazy DataFrames (and
-    * their persisted shared subplans) are the in-session materialized
-    * staging layer. Sharing the INSTANCE matters since Ids.dense — the
-    * two-phase id assignment is RDD-backed, so two instances' id plans
-    * never canonicalize equal and would each re-cache their own copy.
-    *
-    * STALE-READ CONTRACT: instances are never invalidated automatically.
-    * If the parquet under `dir` is rewritten within a session, call
-    * [[invalidate]] first — otherwise callers keep getting results
-    * computed over the OLD files' persisted partitions. */
+  /** One shared Pipeline per (session, sf-dir), memoized in
+    * [[graft.Caches]] with every frame it pins: its lazy DataFrames are
+    * the in-session materialized staging layer. Sharing the INSTANCE
+    * matters since Ids.dense — the two-phase id assignment is RDD-backed,
+    * so two instances' id plans never canonicalize equal and would each
+    * re-cache their own copy. Same stale-read contract as every grain:
+    * call `Caches.invalidate(spark, dir)` after rewriting `dir`. */
   def of(spark: SparkSession, dir: String): Pipeline =
-    instances.computeIfAbsent((spark, dir), { case (s, d) => new Pipeline(s, d) })
-
-  /** Drop the memoized instance for (session, dir) and unpersist every
-    * shared subplan it cached — REQUIRED before re-reading a dir whose
-    * files changed. */
-  def invalidate(spark: SparkSession, dir: String): Unit =
-    Option(instances.remove((spark, dir))).foreach(_.unpersistAll())
-
-  /** Drop EVERY memoized instance of `spark` (all dirs) and unpersist
-    * their shared subplans — same session-teardown hook as
-    * [[graft.ops.Vectors.invalidateAll]]. */
-  def invalidateAll(spark: SparkSession): Unit =
-    instances.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) e.getValue.unpersistAll()
-      hit
-    }
-
-  /** Entry count of this session in the instance map (spec hook). */
-  private[graft] def cacheSize(spark: SparkSession): Int = {
-    import scala.jdk.CollectionConverters._
-    instances.keySet.asScala.count(_._1 eq spark)
-  }
+    Caches.grain(spark, dir, "etl.pipeline")(new Pipeline(spark, dir))
 }
 
 class Pipeline(spark: SparkSession, dir: String) {
 
   import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  private val persistedFrames =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private def cached(df: DataFrame): DataFrame = persistedFrames.synchronized {
-    val p = df.persist(MEMORY_AND_DISK); persistedFrames += p; p
-  }
 
   // r18: the STAGING frames are eager localCheckpoints, not persists — a
   // persisted frame keeps its full logical lineage inside every consumer's
@@ -77,31 +45,20 @@ class Pipeline(spark: SparkSession, dir: String) {
   // and the persist on top serves consumers a COLUMNAR in-memory scan
   // (measured: warehouse materialize reads row-RDD checkpoints ~1.7×
   // slower than the columnar cache; with persist alone the planning cost
-  // returns). unpersistAll releases both layers.
-  // The checkpoint JOB runs outside the registry lock (r18 ADVICE: a
-  // concurrent registerCached/unpersistAll caller blocked for the full
-  // materialization otherwise); only the registry append is locked.
-  private def materialized(df: DataFrame): DataFrame = {
-    val cp = df.truncated
-    cp.persist(MEMORY_AND_DISK)
-    persistedFrames.synchronized { persistedFrames += cp }
-    cp
-  }
-
-  /** Register an externally-built shared subplan in this pipeline's persist
-    * registry, so [[Pipeline.invalidate]]/unpersistAll cover it (operators
-    * like Analytics.salesCubeOf take this as their `share` hook instead of
-    * persisting unilaterally — an unregistered persist leaks across bench
-    * invocations). CacheManager dedupes by canonicalized plan, so repeated
-    * registration of the same derived frame caches its data only once. */
-  def registerCached(df: DataFrame): DataFrame = cached(df)
-  private[etl] def unpersistAll(): Unit = persistedFrames.synchronized {
-    persistedFrames.foreach { df =>
-      df.unpersist(false) // CacheManager entries (persisted frames)
-      graft.etl.Catchup.releaseLocalCheckpoint(df) // checkpoint blocks
+  // returns). Releasing the grain releases both layers.
+  private def materialized(name: String)(df: => DataFrame): DataFrame =
+    Caches.grain(spark, dir, s"etl.$name") {
+      val cp = df.truncated; cp.persist(MEMORY_AND_DISK); cp
     }
-    persistedFrames.clear()
-  }
+
+  /** Register an externally-built shared subplan for release with this
+    * pipeline's dir (operators like Analytics.salesCubeOf take this as
+    * their `share` hook instead of persisting unilaterally — an
+    * unregistered persist leaks across bench invocations). CacheManager
+    * dedupes by canonicalized plan, so repeated registration of the same
+    * derived frame caches its data only once. */
+  def registerCached(df: DataFrame): DataFrame =
+    Caches.track(spark, dir, df.persist(MEMORY_AND_DISK))
 
   /** Shared subplans consumed more than once within a single query are
     * persisted (spill-safe MEMORY_AND_DISK): the synthesized order feed
@@ -110,7 +67,7 @@ class Pipeline(spark: SparkSession, dir: String) {
     * these correspond to materialized staging tables; in-memory caching is
     * the single-job equivalent. */
   private lazy val feedCached: DataFrame =
-    materialized(Feeds.orderFeed(spark, dir))
+    materialized("feed")(Feeds.orderFeed(spark, dir))
   private lazy val ordCut: DataFrame = Feeds.ordersCutoff(spark, dir)
 
   lazy val uol: DataFrame = Feeds.splitLe(feedCached, ordCut, "date_time")
@@ -126,27 +83,36 @@ class Pipeline(spark: SparkSession, dir: String) {
   lazy val priceLog: DataFrame = Feeds.priceLog(spark, dir)
 
   lazy val calDates: DataFrame =
-    materialized(Calendar.dates(research, ual, uol))
-  lazy val dCalendar: DataFrame = Calendar.attrs(calDates)
+    materialized("cal-dates")(Calendar.dates(research, ual, uol))
+  // Frames that pin storage are registry grains, not per-instance state —
+  // the dense-id frames too: their Ids.dense sort persist is tracked with
+  // the grain, so per-dir invalidation releases it
+  lazy val dCalendar: DataFrame =
+    Caches.grain(spark, dir, "etl.d-calendar")(Calendar.attrs(calDates))
   /** |d_calendar| — offset for the incremental calendar ids. */
   lazy val calCount: Long = calDates.count()
   lazy val dCalendarTemp: DataFrame =
-    Calendar.attrs(Calendar.dates(researchTemp, ualTemp, uolTemp), calCount)
+    Caches.grain(spark, dir, "etl.d-calendar-temp")(Calendar.attrs(
+      Calendar.dates(researchTemp, ualTemp, uolTemp), calCount))
   lazy val dCalendarFull: DataFrame = dCalendar.unionAll(dCalendarTemp)
 
-  lazy val dCustomer: DataFrame = Dims.dCustomer(uol)
-  lazy val dItem: DataFrame = Dims.dItem(uol)
+  lazy val dCustomer: DataFrame =
+    Caches.grain(spark, dir, "etl.d-customer")(Dims.dCustomer(uol))
+  lazy val dItem: DataFrame =
+    Caches.grain(spark, dir, "etl.d-item")(Dims.dItem(uol))
 
-  lazy val fSales: DataFrame = Sales.fSales(uol, dCalendar)
+  lazy val fSales: DataFrame =
+    Caches.grain(spark, dir, "etl.f-sales")(Sales.fSales(uol, dCalendar))
   /** |f_sales| = |uol| (every order date is a calendar date) — cheaper count. */
   lazy val fSalesCount: Long = uol.count()
   lazy val fSalesTemp: DataFrame =
-    Sales.fSalesTemp(uolTemp, dCalendarTemp, fSalesCount)
+    Caches.grain(spark, dir, "etl.f-sales-temp")(
+      Sales.fSalesTemp(uolTemp, dCalendarTemp, fSalesCount))
   lazy val fSalesV2: DataFrame = Sales.fSalesV2(fSales, fSalesTemp)
 
   lazy val weeks: DataFrame = Retention.weeks(dCalendarFull)
   lazy val uolvPeriod: DataFrame =
-    materialized(Retention.withPeriod(uolV2, weeks))
+    materialized("uolv-period")(Retention.withPeriod(uolV2, weeks))
 
   /** Level-1 retention aggregates, shared across the whole family: 8 of the
     * SparkEntry queries (3 classes × 2 grains + compact mart + 2 full marts)
@@ -154,12 +120,10 @@ class Pipeline(spark: SparkSession, dir: String) {
     * `shipped` one even feeds two classes (HAVING =1 vs >1) inside a single
     * query. One persisted copy per (status, grain) — each is a small
     * aggregate, far below the staging frames it derives from. */
-  private val l1cache =
-    scala.collection.mutable.Map.empty[(String, Boolean), DataFrame]
   private def level1(status: String, includeItem: Boolean): DataFrame =
-    l1cache.synchronized {
-      l1cache.getOrElseUpdate((status, includeItem),
-        materialized(Retention.level1(uolvPeriod, status, includeItem)))
+    synchronized { // PipelineRunner's parallel mart wave: one build each
+      materialized(s"level1/$status/$includeItem")(
+        Retention.level1(uolvPeriod, status, includeItem))
     }
 
   def newCust(includeItem: Boolean): DataFrame =
@@ -174,8 +138,10 @@ class Pipeline(spark: SparkSession, dir: String) {
     * point-in-time join, the change-rate monitor) each re-ran the
     * repartition + double-window compress per call; production
     * materializes the dimension once per load. */
-  lazy val dCustomerScdV2: DataFrame = materialized(Dims.dCustomerScd(uolV2))
-  lazy val dCustomerScdHist: DataFrame = materialized(Dims.dCustomerScd(uol))
+  lazy val dCustomerScdV2: DataFrame =
+    materialized("scd-v2")(Dims.dCustomerScd(uolV2))
+  lazy val dCustomerScdHist: DataFrame =
+    materialized("scd-hist")(Dims.dCustomerScd(uol))
 
   lazy val retentionCompact: DataFrame =
     Retention.retentionCompact(newCust(false), returnedCust(false),

@@ -22,80 +22,26 @@ import org.apache.spark.sql.functions._
   */
 object Basket {
 
-  // Per-session registry of every frame this object persists. The graph
-  // ops persist per-call intermediates (edge lists, degree tables) whose
-  // consumers are lazy, so the frames cannot be unpersisted before return
-  // ([[graphHopsOf]]'s bounded-output collect trick doesn't apply to
-  // node-/pair-sized outputs); routing them through this registry makes
-  // [[graft.Caches.invalidateAll]] reclaim them — the same teardown
-  // contract as Dedup/TextOps/Vectors' memo maps. Query-level entry
-  // points additionally memoize their RESULT per (session, dir), so a
-  // long-lived session re-running a query reuses the first call's
+  // The graph ops persist per-call intermediates (edge lists, degree
+  // tables) whose consumers are lazy, so the frames cannot be unpersisted
+  // before return ([[graphHopsOf]]'s bounded-output collect trick doesn't
+  // apply to node-/pair-sized outputs); tracking them in the memo registry
+  // releases them with the grain being built (or at session teardown).
+  // Query-level entry points memoize their RESULT per (session, dir), so
+  // a long-lived session re-running a query reuses the first call's
   // persisted intermediates instead of accreting new ones.
-  private val tracked = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]
-  private val resultCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]
+  private def persistTracked(df: DataFrame): DataFrame =
+    graft.Caches.track(df.sparkSession, "",
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private def persistTracked(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tracked.computeIfAbsent(df.sparkSession,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]).add(df)
-    df
-  }
-
-  // r18: eager localCheckpoint + registry for the SMALL shared grains.
-  // persist() keeps the full logical lineage in every consumer's plan, and
-  // with the graph grains nested five deep Catalyst re-analyzes a
+  // r18: the SMALL shared grains are eager localCheckpoints. persist()
+  // keeps the full logical lineage in every consumer's plan, and with the
+  // graph grains nested five deep Catalyst re-analyzes a
   // multi-thousand-node tree per action — measured 4-5 s PLANNING for a
   // 3-row join at sf0.1 (guide §3.3/§7.3: planning time as the
   // bottleneck). A checkpoint truncates the consumer-side plan to a flat
-  // LogicalRDD leaf; blocks are released through the same teardown hook
-  // (Dataset.unpersist does not cover checkpoint RDDs).
-  private val ckpts = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]
-
-  private def checkpointTracked(df: DataFrame): DataFrame = {
-    val cp = df.truncated
-    ckpts.computeIfAbsent(cp.sparkSession,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]).add(cp)
-    cp
-  }
-
-  // get-then-putIfAbsent, NOT computeIfAbsent: memoized queries compose
-  // (topPartners builds on partPairs), and a nested computeIfAbsent on
-  // the same map throws "Recursive update". A racy double build is
-  // harmless — both frames are identical plans, one wins the putIfAbsent.
-  private def cached(spark: SparkSession, dir: String, name: String)
-                    (build: => DataFrame): DataFrame = {
-    val key = (spark, dir, name)
-    val hit = resultCache.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = resultCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  /** Unpersist every frame `spark` persisted through this object and drop
-    * its memoized results — the [[graft.Caches.invalidateAll]] hook. */
-  def invalidateAll(spark: SparkSession): Unit = {
-    Option(tracked.remove(spark)).foreach { q =>
-      q.forEach(df => df.unpersist(false))
-    }
-    Option(ckpts.remove(spark)).foreach { q =>
-      q.forEach(df => graft.etl.Catchup.releaseLocalCheckpoint(df))
-    }
-    resultCache.keySet.removeIf(_._1 eq spark)
-  }
-
-  import scala.jdk.CollectionConverters._
-  /** Memo entries held for `spark` (spec hook). */
-  private[graft] def cacheSize(spark: SparkSession): Int =
-    resultCache.keySet.asScala.count(_._1 eq spark) +
-      Option(tracked.get(spark)).map(_.size).getOrElse(0) +
-      Option(ckpts.get(spark)).map(_.size).getOrElse(0)
+  // LogicalRDD leaf. Memoized queries compose (topPartners builds on
+  // partPairs) — the registry's grains nest.
 
   /** Distinct (order, part) pairs — basket semantics are set-based: a part
     * listed on two lines of one order counts once. */
@@ -111,8 +57,8 @@ object Basket {
     // denominators, the order total) — persist so the scan+distinct runs
     // once (CacheManager dedupes the canonicalized subplan; the house
     // shared-subplan pattern, see Dedup.minhashPairsOf). Tracked: the
-    // lazy result frame references it, so Caches.invalidateAll is the
-    // reclaim point (r13 verdict task 2).
+    // lazy result frame references it, so its release waits for the
+    // caller's grain or the session teardown (r13 verdict task 2).
     val items = persistTracked(itemsOf(lineitem))
     val nOrders = items.select(countDistinct("l_orderkey").as("n_orders"))
     val freq = items.groupBy("l_partkey").agg(count(lit(1)).as("n"))
@@ -136,8 +82,8 @@ object Basket {
   }
 
   def partPairs(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "partPairs") {
-      checkpointTracked(partPairsOf(Feeds.table(spark, dir, "lineitem")))
+    graft.Caches.grain(spark, dir, "basket.partPairs") {
+      partPairsOf(Feeds.table(spark, dir, "lineitem")).truncated
     }
 
   /** Undirected co-purchase edges (support ≥ `minSupport` basket pairs). */
@@ -153,14 +99,13 @@ object Basket {
   // serving artifact (in production a materialized table); build it once
   // per (session, dir) and hang the degree / orientation / triangle-corner
   // grains off it, so each pipeline stage runs once and every consumer
-  // starts from an in-memory scan. Same stale-read contract as the other
-  // registries.
+  // starts from an in-memory scan. Same stale-read contract as every
+  // registry grain.
 
   /** Memoized, persisted co-purchase edge list at the default support. */
   def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "coPurchaseEdges") {
-      checkpointTracked(
-        coPurchaseEdgesOf(Feeds.table(spark, dir, "lineitem")))
+    graft.Caches.grain(spark, dir, "basket.coPurchaseEdges") {
+      coPurchaseEdgesOf(Feeds.table(spark, dir, "lineitem")).truncated
     }
 
   /** Per-node degree of the undirected edge list. */
@@ -202,27 +147,27 @@ object Basket {
   }
 
   private def graphDegrees(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "graphDegrees") {
-      checkpointTracked(degreesOf(coPurchaseEdges(spark, dir)))
+    graft.Caches.grain(spark, dir, "basket.graphDegrees") {
+      degreesOf(coPurchaseEdges(spark, dir)).truncated
     }
 
   private def graphWithDeg(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "graphWithDeg") {
-      checkpointTracked(withDegOf(coPurchaseEdges(spark, dir),
-                               graphDegrees(spark, dir)))
+    graft.Caches.grain(spark, dir, "basket.graphWithDeg") {
+      withDegOf(coPurchaseEdges(spark, dir), graphDegrees(spark, dir))
+        .truncated
     }
 
   private def graphTriCorners(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "graphTriCorners") {
-      checkpointTracked(triCornersOf(orientedOf(graphWithDeg(spark, dir))))
+    graft.Caches.grain(spark, dir, "basket.graphTriCorners") {
+      triCornersOf(orientedOf(graphWithDeg(spark, dir))).truncated
     }
 
   /** Per-node triangle count — node-sized, so the local-cc consumer reads
     * a tiny frame instead of re-folding the (much larger) corner list per
     * call. */
   private def graphNodeTri(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "graphNodeTri") {
-      checkpointTracked(nodeTriOf(graphTriCorners(spark, dir)))
+    graft.Caches.grain(spark, dir, "basket.graphNodeTri") {
+      nodeTriOf(graphTriCorners(spark, dir)).truncated
     }
 
   /** Triangle corners folded to (node, n_tri). */
@@ -273,7 +218,7 @@ object Basket {
   }
 
   def triangleStats(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "triangleStats") {
+    graft.Caches.grain(spark, dir, "basket.triangleStats") {
       triangleStatsFrom(coPurchaseEdges(spark, dir),
                         graphDegrees(spark, dir),
                         graphTriCorners(spark, dir))
@@ -295,7 +240,7 @@ object Basket {
   }
 
   def coPurchaseComponents(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "coPurchaseComponents") {
+    graft.Caches.grain(spark, dir, "basket.coPurchaseComponents") {
       coPurchaseComponentsOf(coPurchaseEdges(spark, dir))
     }
 
@@ -340,8 +285,8 @@ object Basket {
     // r18: ranks persisted (part-sized) — the fixed-round iteration plan
     // otherwise re-executes its 3 × (join + groupBy) chain per call;
     // production topic-rank jobs materialize the rank table.
-    cached(spark, dir, "pageRank") {
-      checkpointTracked(pageRankOf(coPurchaseEdges(spark, dir)))
+    graft.Caches.grain(spark, dir, "basket.pageRank") {
+      pageRankOf(coPurchaseEdges(spark, dir)).truncated
     }
 
   /** Degree distribution of the co-purchase graph — the power-law readout
@@ -398,7 +343,7 @@ object Basket {
   }
 
   def neighborJaccard(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "neighborJaccard") {
+    graft.Caches.grain(spark, dir, "basket.neighborJaccard") {
       neighborJaccardFrom(graphWithDeg(spark, dir),
                           graphTriCorners(spark, dir))
     }
@@ -435,16 +380,15 @@ object Basket {
       .select(col("node"))
     // no broadcast hint: hop-0 is one row but later frontiers grow —
     // AQE picks broadcast vs shuffle per round from actual sizes
-    val frontiers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var frontier = seed.persist(MEMORY_AND_DISK)
-    frontiers += frontier
+    var frontiers = List(frontier)
     var reached = frontier.select(col("node"), lit(0L).as("hops"))
     for (h <- 1 to maxHops) {
       frontier = sym
         .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node")).distinct()
         .persist(MEMORY_AND_DISK)
-      frontiers += frontier
+      frontiers ::= frontier
       reached = reached.unionAll(
         frontier.select(col("node"), lit(h.toLong).as("hops")))
     }
@@ -464,7 +408,7 @@ object Basket {
     // r18: memoized — graphHopsOf runs its BFS rounds and collects the
     // bounded rollup eagerly at construction, so an unmemoized call
     // re-runs the whole expansion every time; shared edge grain.
-    cached(spark, dir, "graphHops") {
+    graft.Caches.grain(spark, dir, "basket.graphHops") {
       graphHopsOf(coPurchaseEdges(spark, dir))
     }
 
@@ -506,7 +450,7 @@ object Basket {
     // r18: the symmetrized endpoint-degree frame is the shared withDeg
     // grain read twice (once per direction) — same sums as the
     // self-contained form, no fresh degree joins per call.
-    cached(spark, dir, "degreeAssortativity") {
+    graft.Caches.grain(spark, dir, "basket.degreeAssortativity") {
       val wd = graphWithDeg(spark, dir)
       wd.select(col("deg_u").as("da"), col("deg_v").as("db"))
         .unionAll(wd.select(col("deg_v").as("da"), col("deg_u").as("db")))
@@ -553,7 +497,7 @@ object Basket {
   }
 
   def topPartners(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "topPartners") {
+    graft.Caches.grain(spark, dir, "basket.topPartners") {
       topPartnersOfPairs(partPairs(spark, dir), 3)
     }
 
@@ -588,7 +532,7 @@ object Basket {
   }
 
   def localCcHist(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "localCcHist") {
+    graft.Caches.grain(spark, dir, "basket.localCcHist") {
       localCcHistFrom(graphDegrees(spark, dir),
                       graphNodeTri(spark, dir))
     }

@@ -34,60 +34,11 @@ object Corpus {
   // frame feeds FIVE query forms (v2 itself, v3, v4, the mask-vs-drop
   // yield, the v4 release card) and the v4 frame three — without a memo
   // each re-runs the full cluster-join/filter-bank chain per call, exactly
-  // the recompute class the Dedup/Basket registries already guard against.
+  // the recompute class the Dedup/Basket grains already guard against.
   // In production curated_v2/v4 ARE materialized tables (PipelineRunner's
   // mart stance); the memo plays that role in-session. Same stale-read
-  // contract as the other registries; get-then-putIfAbsent because the
-  // grains compose (v4 builds on v2) and a nested computeIfAbsent on one
-  // map throws "Recursive update".
-  private val resultCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]
-
-  private def cached(spark: SparkSession, dir: String, name: String)
-                    (build: => DataFrame): DataFrame = {
-    val key = (spark, dir, name)
-    val hit = resultCache.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = resultCache.putIfAbsent(key, built)
-      // a concurrent first call loses the race with an already-materialized
-      // checkpoint: release its blocks, they are reachable from nowhere
-      // (r18 ADVICE — unlike Dedup.memoClusters, losers here are not
-      // covered by any tracked registry)
-      if (prev != null) { release(built); prev } else built
-    }
-  }
-
-  /** Drop this (session, dir)'s memoized curation frames — REQUIRED before
-    * re-reading a dir whose files changed (the house stale-read
-    * contract). */
-  def invalidate(spark: SparkSession, dir: String): Unit =
-    resultCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 == spark && e.getKey._2 == dir
-      if (hit) release(e.getValue)
-      hit
-    }
-
-  // grains are eager localCheckpoints (plan truncation — guide §3.3);
-  // Dataset.unpersist covers only CacheManager entries, so release both
-  private def release(df: DataFrame): Unit = {
-    df.unpersist(false)
-    graft.etl.Catchup.releaseLocalCheckpoint(df)
-  }
-
-  /** Session-teardown hook ([[graft.Caches.invalidateAll]]). */
-  def invalidateAll(spark: SparkSession): Unit =
-    resultCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) release(e.getValue)
-      hit
-    }
-
-  import scala.jdk.CollectionConverters._
-  /** Memo entries held for `spark` (spec hook). */
-  private[graft] def cacheSize(spark: SparkSession): Int =
-    resultCache.keySet.asScala.count(_._1 eq spark)
+  // contract as every registry grain; the grains compose (v4 builds on
+  // v2).
 
   /** Quality floor for curated output (see DocsOracleSql `corpus_curated`
     * — the oracle uses the identical literal). */
@@ -134,7 +85,7 @@ object Corpus {
       .select("doc_id", "lang", "quality", "rep_ratio", "n_dups", "split")
 
   def curatedV2(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "curatedV2") {
+    graft.Caches.grain(spark, dir, "corpus.curatedV2") {
       curatedV2Of(
         curated(spark, dir),
         TextOps.contamination(spark, dir),
@@ -198,7 +149,7 @@ object Corpus {
   }
 
   def curatedV4(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "curatedV4") {
+    graft.Caches.grain(spark, dir, "corpus.curatedV4") {
       curatedV4Of(curatedV2(spark, dir), Dedup.quoteHeavyDocs(spark, dir),
                   Dedup.spanMaskRanges(spark, dir),
                   TextOps.docsWords(spark, dir)).truncated
@@ -279,13 +230,13 @@ object Corpus {
   // normalize/split scan and the explode+distinct shuffle run once, the
   // [[TextOps.shingles]] treatment applied to the increment.
   private def incBatchWords(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "incBatchWords") {
+    graft.Caches.grain(spark, dir, "corpus.incBatchWords") {
       TextOps.withWords(Dedup.batchOnly(TextOps.docs(spark, dir),
                                         spark, dir)).truncated
     }
 
   private def incBatchShingles(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "incBatchShingles") {
+    graft.Caches.grain(spark, dir, "corpus.incBatchShingles") {
       TextOps.shinglesOf(incBatchWords(spark, dir)).truncated
     }
 

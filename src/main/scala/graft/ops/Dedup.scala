@@ -3,7 +3,6 @@ package graft.ops
 import graft.Memo.TruncateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** Deduplication operators over `documents` — exact, MinHash+LSH, SimHash,
   * and exact n-gram Jaccard (BASELINE.json north star).
@@ -294,187 +293,41 @@ object Dedup {
       .where(col("bsz") > maxBucket)
       .withColumn("pairs_dropped", expr("bsz * (bsz - 1) DIV 2 - (bsz - 1)"))
 
-  // Memoized per (session, dir): the banded-signature pipeline (and its
-  // persist) is shared by every consumer — pairs at any guard level,
-  // clusters — instead of re-running per query construction.
+  // Memoized per (session, dir) in [[graft.Caches]]: the banded-signature
+  // pipeline (and its persist) is shared by every consumer — pairs at any
+  // guard level, clusters — instead of re-running per query construction.
+  // Same stale-read contract as every registry grain.
   //
-  // STALE-READ CONTRACT: entries are never invalidated automatically. If
-  // the parquet under `dir` is rewritten within a session, call
-  // [[invalidate]] first — otherwise consumers keep reading the persisted
-  // result of the OLD files (same contract as Spark's own table cache
-  // after an external overwrite).
-  private val bandsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]
-  // The substring-tier run grain (maximal duplicated spans) feeds FOUR
-  // queries — per-pair rollup, span histogram, quote-heavy docs, source
-  // matrix — which without a memo each re-run the whole explode → census
-  // → match join → islands pipeline (r15's four most expensive bench
-  // plans, ~12.7 s combined at sf0.1). Pinned at the production defaults
-  // (minRun=8, maxOcc=64); parameterized callers go through
-  // substringRunsOf directly.
-  private val runsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  // The INCREMENTAL run grain (spans of every pair touching the decile
-  // batch) feeds four consumers of its own — the per-pair inc rollup,
-  // the ingest-time mask ranges, the incremental quote gate and the
-  // incremental curation capstone — which without a memo each re-run
-  // the identical census → capped-index → match-join → islands pipeline
-  // (r17's two most expensive bench plans, ~6.7 s combined at sf0.1,
-  // were exactly two such re-runs). Same pinned defaults and stale-read
-  // contract as [[runsCache]].
-  private val incRunsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  // FINAL-round checkpoints of the CC loops: each backs its returned
-  // (lazy) labels, so it cannot be released at construction — registered
-  // here and drained by invalidateAll (superseded per-round checkpoints
-  // are released eagerly inside the loops)
-  private val checkpoints = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]
-
-  private def trackCheckpoint(df: DataFrame): DataFrame = {
-    checkpoints.computeIfAbsent(df.sparkSession,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]).add(df)
-    df
-  }
-
-  // r18: all four grain memos are eager localCheckpoints, not persists —
-  // a persisted grain keeps its full build lineage inside every consumer's
+  // r18: all the grain memos are eager localCheckpoints, not persists — a
+  // persisted grain keeps its full build lineage inside every consumer's
   // plan, and Catalyst re-analyzing those multi-hundred-node trees per
   // action dominated the dedup families' warm cost (measured: the span
   // family's 3-row folds cost seconds of pure planning; guide §3.3/§7.3).
   private[graft] def bandsCached(spark: SparkSession, dir: String): DataFrame =
-    bandsCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-        val cp = minhashBands(s, d).truncated
-        cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cp })
+    graft.Caches.grain(spark, dir, "dedup.bands") {
+      val cp = minhashBands(spark, dir).truncated
+      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cp
+    }
 
   // The pair list itself is persisted too (it is tiny next to its inputs):
   // one guard level's pairs are computed ONCE and shared by every consumer —
   // q_dedup_minhash_pairs_guarded, clustersOf and clustersFastOf all iterate
   // over the same materialized edge list instead of re-running the bucket
-  // join per query (the r3 q_dedup_clusters regression).
+  // join per query (the r3 q_dedup_clusters regression). Keyed by the
+  // guard level, so two levels never alias.
   def minhashPairs(spark: SparkSession, dir: String,
                    maxBucket: Int = 256): DataFrame =
-    pairsCache.computeIfAbsent((spark, dir, maxBucket),
-      { case (s, d, m) =>
-        val cp = minhashPairsOf(bandsCached(s, d), m).truncated
-        cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cp })
+    graft.Caches.grain(spark, dir, s"dedup.pairs/$maxBucket") {
+      val cp = minhashPairsOf(bandsCached(spark, dir), maxBucket).truncated
+      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cp
+    }
 
-  /** Drop this (session, dir)'s memoized frames and unpersist their cached
-    * partitions — REQUIRED before re-reading a dir whose files changed. */
-  private def release(df: DataFrame): Unit = {
-    df.unpersist(false) // CacheManager entries (persisted frames)
-    graft.etl.Catchup.releaseLocalCheckpoint(df) // checkpoint blocks
-  }
-
-  def invalidate(spark: SparkSession, dir: String): Unit = {
-    Option(bandsCache.remove((spark, dir))).foreach(release)
-    Option(runsCache.remove((spark, dir))).foreach(release)
-    Option(incRunsCache.remove((spark, dir))).foreach(release)
-    Option(containmentCache.remove((spark, dir))).foreach(release)
-    pairsCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 == spark && e.getKey._2 == dir
-      if (hit) release(e.getValue)
-      hit
-    }
-    // cluster-label values are checkpoint-topped; releasing them here
-    // (not only via the invalidateAll-drained registry) keeps a per-dir
-    // invalidate + rebuild from pinning the stale frames' blocks for the
-    // session lifetime (r18 ADVICE). Double release via the registry at
-    // teardown is a safe no-op.
-    clustersCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 == spark && e.getKey._2 == dir
-      if (hit) graft.etl.Catchup.releaseLocalCheckpoint(e.getValue)
-      hit
-    }
-  }
-
-  /** Drop and unpersist EVERY memoized frame of `spark`, whatever dir it
-    * was built from — same session-teardown hook as
-    * [[graft.ops.Vectors.invalidateAll]] (a stopped session's entries
-    * would otherwise stay pinned for the JVM lifetime). Cluster-label
-    * entries are dropped from the memo without Dataset.unpersist (their
-    * backing data is a checkpoint, not a CacheManager plan); the
-    * checkpoint BLOCKS themselves are released through the tracked
-    * final-round registry below — a released checkpoint cannot be
-    * recomputed, which is exactly the retire-the-session contract. */
-  def invalidateAll(spark: SparkSession): Unit = {
-    Option(checkpoints.remove(spark)).foreach { q =>
-      q.forEach(df => graft.etl.Catchup.releaseLocalCheckpoint(df))
-    }
-    bandsCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) release(e.getValue)
-      hit
-    }
-    runsCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) release(e.getValue)
-      hit
-    }
-    incRunsCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) release(e.getValue)
-      hit
-    }
-    pairsCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) release(e.getValue)
-      hit
-    }
-    containmentCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) release(e.getValue)
-      hit
-    }
-    clustersCache.keySet.removeIf(_._1 eq spark)
-  }
-
-  /** Entry count of this session across the memo maps (spec hook). */
-  private[graft] def cacheSize(spark: SparkSession): Int =
-    bandsCache.keySet.asScala.count(_._1 eq spark) +
-      runsCache.keySet.asScala.count(_._1 eq spark) +
-      incRunsCache.keySet.asScala.count(_._1 eq spark) +
-      pairsCache.keySet.asScala.count(_._1 eq spark) +
-      containmentCache.keySet.asScala.count(_._1 eq spark) +
-      clustersCache.keySet.asScala.count(_._1 eq spark)
-
-  // Cluster labels are memoized too: the CC label-propagation loop runs
-  // driver-side at construction, so without this every consumer
-  // (q_dedup_clusters, Corpus.curated's keeper join) re-runs the whole
-  // iterative computation. The memoized frame is a join of doc_ids with
-  // the final labels (checkpoint-backed — already materialized). Keyed by
-  // algorithm too, so the min-label and star-contraction variants each
-  // memoize once per (session, dir) instead of the star path re-running
-  // per consumer (the r4 q_dedup_clusters_fast 2.5 s recompute).
-  private val clustersCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]
-
-  /** Memoize a cluster-label frame under `tag` via get-then-putIfAbsent —
-    * NOT computeIfAbsent, because cluster builders compose (the incremental
-    * merge looks up its history labels in the same map) and a nested
-    * computeIfAbsent on one ConcurrentHashMap throws "Recursive update".
-    * A racy double build is harmless: both frames are identical plans, one
-    * wins the putIfAbsent (the [[graft.ops.Basket]] `cached` stance).
-    * graft-private so sibling operators with cluster-shaped results (the
-    * multimodal frame clusters) share the registry and its invalidate /
-    * teardown contract instead of growing one map each. */
-  private[graft] def memoClusters(spark: SparkSession, dir: String,
-                                  tag: String)
-                                 (build: => DataFrame): DataFrame = {
-    val key = (spark, dir, tag)
-    val hit = clustersCache.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = clustersCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
+  /** Track a checkpoint that a lazily returned frame still reads: it is
+    * released with the grain being built (or at session teardown). */
+  private def tracked(df: DataFrame): DataFrame =
+    graft.Caches.track(df.sparkSession, "", df)
 
   /** Per-doc SimHash as ONE map-side higher-order expression — ZERO shuffle
     * for the hash computation (the former shape exploded ×nBits bit-rows
@@ -635,9 +488,9 @@ object Dedup {
     // both `nodes` and the CC input from it) re-read blocks instead of
     // re-running the banded bucket join; (b) lets the input persist be
     // released HERE instead of leaking for the session lifetime (r14
-    // advice) — the checkpoint itself is registered in the tracked
-    // queue, so Caches.invalidateAll reclaims its blocks.
-    val edges = trackCheckpoint(barrier.truncated)
+    // advice) — the checkpoint itself is tracked in the memo registry,
+    // so it is released with the caller's grain (or at teardown).
+    val edges = tracked(barrier.truncated)
     if (owned) hashes.unpersist(false)
     edges
   }
@@ -753,9 +606,8 @@ object Dedup {
     // consensus tier, the precision curve) re-ran the hamming bucket join
     // per call; candidate-sized output, same registry/teardown as the
     // other grains.
-    memoClusters(spark, dir, "simhash-pairs") {
-      trackCheckpoint(
-        simhashPairsOf(simhash(spark, dir)).truncated)
+    graft.Caches.grain(spark, dir, "dedup.simhash-pairs") {
+      simhashPairsOf(simhash(spark, dir)).truncated
     }
 
   def simhash64Pairs(spark: SparkSession, dir: String): DataFrame =
@@ -827,7 +679,7 @@ object Dedup {
       iter += 1
     }
     edges.unpersist()
-    trackCheckpoint(labels) // final checkpoint backs the returned labels
+    tracked(labels) // final checkpoint backs the returned labels
     // Silent non-convergence would return WRONG cluster labels (components
     // with diameter > maxIters) while still matching row counts — fail loudly.
     if (changed > 0) throw new IllegalStateException(
@@ -840,15 +692,22 @@ object Dedup {
               coalesce(col("cluster"), col("doc_id")).as("cluster"))
   }
 
-  // every clustersCache entry point goes through memoClusters (get-then-
-  // putIfAbsent): cluster builders COMPOSE (clustersVerified's lambda
-  // reaches verifiedJaccardCached, which memoizes into the same map), and
-  // a computeIfAbsent whose mapping function writes the same
-  // ConcurrentHashMap throws "Recursive update" whenever the two keys
-  // collide into one bin — identity-hash dependent, so it fired
-  // nondeterministically (a full-registry ScaleProbe run, round 19)
+  // Cluster labels are memoized too: the CC label-propagation loop runs
+  // driver-side at construction, so without this every consumer
+  // (q_dedup_clusters, Corpus.curated's keeper join) re-runs the whole
+  // iterative computation. The memoized frame is a join of doc_ids with
+  // the final labels (checkpoint-backed — already materialized, and
+  // tracked with the grain). Keyed by algorithm too, so the min-label and
+  // star-contraction variants each memoize once per (session, dir)
+  // instead of the star path re-running per consumer (the r4
+  // q_dedup_clusters_fast 2.5 s recompute). Cluster builders COMPOSE
+  // (clustersVerified's lambda reaches
+  // verifiedJaccardCached, the incremental merge its history labels), so
+  // they memoize through the registry's get-then-putIfAbsent grain — a
+  // nested computeIfAbsent fired "Recursive update" nondeterministically
+  // (a full-registry ScaleProbe run, round 19)
   def clusters(spark: SparkSession, dir: String): DataFrame =
-    memoClusters(spark, dir, "minlabel") {
+    graft.Caches.grain(spark, dir, "dedup.minlabel") {
       clustersOf(TextOps.docs(spark, dir).select("doc_id"),
                  minhashPairs(spark, dir))
     }
@@ -905,7 +764,7 @@ object Dedup {
     // without the memo (the r4 q_dedup_clusters_fast recompute class). In
     // production the merged labels are WRITTEN back as the new label
     // table, so one evaluation per load is the real shape.
-    memoClusters(spark, dir, "minlabel-inc") {
+    graft.Caches.grain(spark, dir, "dedup.minlabel-inc") {
       clustersIncrementalBuild(spark, dir)
     }
 
@@ -919,22 +778,21 @@ object Dedup {
     // history labels are MEMOIZED like every cluster frame (in production
     // they would be READ from the previous load, not recomputed — the
     // memo plays that role here, so repeat calls pay only the merge)
-    val oldLabels = memoClusters(spark, dir, "minlabel-history") {
+    val oldLabels = graft.Caches.grain(spark, dir, "dedup.minlabel-history") {
       clustersOf(
         d.where(col("doc_id") <= col("cutoff")).select("doc_id"),
         p.where(col("doc_b") <= col("cutoff"))
           .select("doc_a", "doc_b"))
     }
-    // Eager checkpoint (registered for teardown like every CC label
-    // frame): the pass-through anti-join + affected-subgraph merge is
-    // evaluated once and its three consumers read materialized blocks —
-    // production WRITES the merged labels, it does not re-derive them.
-    trackCheckpoint(
-      clustersIncrementalOf(
-        oldLabels,
-        d.where(col("doc_id") > col("cutoff")).select("doc_id"),
-        p.where(col("doc_b") > col("cutoff")).select("doc_a", "doc_b"))
-        .truncated)
+    // Eager checkpoint: the pass-through anti-join + affected-subgraph
+    // merge is evaluated once and its three consumers read materialized
+    // blocks — production WRITES the merged labels, it does not re-derive
+    // them.
+    clustersIncrementalOf(
+      oldLabels,
+      d.where(col("doc_id") > col("cutoff")).select("doc_id"),
+      p.where(col("doc_b") > col("cutoff")).select("doc_a", "doc_b"))
+      .truncated
   }
 
   /** Clusters over the VERIFIED pair graph — the full production
@@ -944,7 +802,7 @@ object Dedup {
     * clusters can only be equal-or-finer than [[clusters]]'. Memoized like
     * its siblings; reuses the shared pairs and shingle frames. */
   def clustersVerified(spark: SparkSession, dir: String): DataFrame =
-    memoClusters(spark, dir, "verified") {
+    graft.Caches.grain(spark, dir, "dedup.verified") {
       clustersOf(TextOps.docs(spark, dir).select("doc_id"),
                  minhashPairsVerified(spark, dir).select("doc_a", "doc_b"))
     }
@@ -952,7 +810,7 @@ object Dedup {
   /** Memoized star-contraction variant over the same shared pair list —
     * same (doc_id, cluster) contract and oracle as [[clusters]]. */
   def clustersFast(spark: SparkSession, dir: String): DataFrame =
-    memoClusters(spark, dir, "star") {
+    graft.Caches.grain(spark, dir, "dedup.star") {
       clustersFastOf(TextOps.docs(spark, dir).select("doc_id"),
                      minhashPairs(spark, dir))
     }
@@ -1035,8 +893,8 @@ object Dedup {
       s"clustersFastOf: star contraction did not converge in $maxIters " +
       "rounds (theoretical bound is O(log n) — raise maxIters)")
     // the FINAL round's checkpoint backs the returned (lazy) labels — it
-    // cannot be released here; register it so invalidateAll reclaims it
-    trackCheckpoint(edges)
+    // cannot be released here; track it for release with the caller
+    tracked(edges)
     docIds.join(edges.select(col("u").as("doc_id"), col("v").as("cluster")),
                 Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
@@ -1083,11 +941,9 @@ object Dedup {
     * consumers filter), candidate-sized (907 rows at sf0.1). */
   private def verifiedJaccardCached(spark: SparkSession,
                                     dir: String): DataFrame =
-    memoClusters(spark, dir, "verified-jaccard") {
-      trackCheckpoint(
-        ngramJaccardFor(minhashPairs(spark, dir),
-                        TextOps.shingles(spark, dir))
-          .truncated)
+    graft.Caches.grain(spark, dir, "dedup.verified-jaccard") {
+      ngramJaccardFor(minhashPairs(spark, dir), TextOps.shingles(spark, dir))
+        .truncated
     }
 
   /** ASYMMETRIC containment tier over the guarded candidate pairs:
@@ -1128,17 +984,13 @@ object Dedup {
   // The containment frame feeds two queries (the containment tier itself
   // and the Jaccard histogram derived from its exact counts) — memoized +
   // persisted per (session, dir) so the shingle-intersection join runs
-  // once, not per consumer. Same stale-read contract as the other caches.
-  private val containmentCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
+  // once, not per consumer. Same stale-read contract as the other grains.
   def minhashContainment(spark: SparkSession, dir: String): DataFrame =
-    containmentCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-          containmentFor(minhashPairs(s, d).select("doc_a", "doc_b"),
-                         TextOps.shingles(s, d))
-            .truncated
-      })
+    graft.Caches.grain(spark, dir, "dedup.containment") {
+      containmentFor(minhashPairs(spark, dir).select("doc_a", "doc_b"),
+                     TextOps.shingles(spark, dir))
+        .truncated
+    }
 
   /** Candidate-pair Jaccard HISTOGRAM in tenth buckets — the
     * banding-threshold tuning readout: where the guarded candidates'
@@ -1236,9 +1088,8 @@ object Dedup {
   def minhashEstError(spark: SparkSession, dir: String): DataFrame =
     minhashEstErrorOf(
       verifiedJaccardCached(spark, dir),
-      memoClusters(spark, dir, "minhash-sigs") {
-        trackCheckpoint(minhashOf(TextOps.shingles(spark, dir))
-          .truncated)
+      graft.Caches.grain(spark, dir, "dedup.minhash-sigs") {
+        minhashOf(TextOps.shingles(spark, dir)).truncated
       })
 
   /** Deterministic pair sample (consecutive even/odd doc_id pairs —
@@ -1517,17 +1368,22 @@ object Dedup {
       .select("doc_a", "doc_b", "diag", "start_a", "run_len")
   }
 
-  /** Memoized run grain at the production defaults — the shared upstream
-    * of all four substring-tier queries (same stale-read/invalidate
-    * contract as [[bandsCache]]). */
+  /** Memoized run grain (maximal duplicated spans) at the production
+    * defaults (minRun=8, maxOcc=64; parameterized callers go through
+    * substringRunsOf directly) — the shared upstream of all four
+    * substring-tier queries: per-pair rollup, span histogram, quote-heavy
+    * docs, source matrix. Without the memo each re-ran the whole explode →
+    * census → match join → islands pipeline (r15's four most expensive
+    * bench plans, ~12.7 s combined at sf0.1). Same stale-read contract as
+    * [[bandsCached]]. */
   private[ops] def substringRunsCached(spark: SparkSession,
                                        dir: String): DataFrame =
-    runsCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-        val cp = substringRunsOf(TextOps.posShingles(s, d), 8, 64)
-          .truncated
-        cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cp })
+    graft.Caches.grain(spark, dir, "dedup.runs") {
+      val cp = substringRunsOf(TextOps.posShingles(spark, dir), 8, 64)
+        .truncated
+      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cp
+    }
 
   private[graft] def spansFromRuns(runs: DataFrame): DataFrame =
     runs
@@ -1759,23 +1615,24 @@ object Dedup {
     * [[dedupSubstringInc]], [[spanMaskRangesInc]],
     * [[quoteHeavyDocsInc]] and [[graft.ops.Corpus.curatedV4Inc]]
     * (without it each re-runs the identical census → capped-index →
-    * match-join → islands pipeline; same stale-read/invalidate contract
-    * as [[runsCache]]). */
+    * match-join → islands pipeline: r17's two most expensive bench plans,
+    * ~6.7 s combined at sf0.1, were exactly two such re-runs). Same
+    * stale-read contract as [[substringRunsCached]]. */
   private[ops] def substringIncRunsCached(spark: SparkSession,
                                           dir: String): DataFrame =
-    incRunsCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-        val tagged = TextOps.posShingles(s, d)
-          .crossJoin(broadcast(batchCutoff(s, d)))
-        val idx = tagged.where(col("doc_id") <= col("cutoff"))
-          .select("doc_id", "pos", "sh")
-        val inc = tagged.where(col("doc_id") > col("cutoff"))
-          .select("doc_id", "pos", "sh")
-        val census = substringCensusOf(idx)
-        val cp = substringIncRunsOf(substringIndexOf(idx, census), census,
-                                    inc, 8, 64).truncated
-        cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cp })
+    graft.Caches.grain(spark, dir, "dedup.inc-runs") {
+      val tagged = TextOps.posShingles(spark, dir)
+        .crossJoin(broadcast(batchCutoff(spark, dir)))
+      val idx = tagged.where(col("doc_id") <= col("cutoff"))
+        .select("doc_id", "pos", "sh")
+      val inc = tagged.where(col("doc_id") > col("cutoff"))
+        .select("doc_id", "pos", "sh")
+      val census = substringCensusOf(idx)
+      val cp = substringIncRunsOf(substringIndexOf(idx, census), census,
+                                  inc, 8, 64).truncated
+      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cp
+    }
 
   /** Query form: the top decile of doc_ids plays the "new batch"; rides
     * the memoized incremental run grain. */

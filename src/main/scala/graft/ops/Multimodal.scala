@@ -281,7 +281,7 @@ object Multimodal {
   def frameNearDupClustersOf(documents: DataFrame,
                              maxBucket: Int = 256): DataFrame = {
     // hammingSpanningEdgesOf returns an eagerly-checkpointed edge list
-    // (tracked, reclaimed by Caches.invalidateAll), so BOTH consumers
+    // (tracked in the memo registry), so BOTH consumers
     // below — the nodes derivation and clustersFastOf's canonical-edge
     // checkpoint — re-read its blocks through this cheap projection; the
     // banded bucket join runs exactly once (r14 advice).
@@ -299,13 +299,12 @@ object Multimodal {
   }
 
   def frameNearDupClusters(spark: SparkSession, dir: String): DataFrame =
-    // r18: memoized through the dedup stack's cluster registry — the
-    // banding + spanning-edge + star-contraction pipeline runs eagerly at
-    // construction (checkpoint-backed), so without the memo every call
-    // re-runs the whole build (the same r4 recompute class the text-side
-    // cluster frames already guard against). Same invalidate/teardown
-    // contract as Dedup's own label frames.
-    Dedup.memoClusters(spark, dir, "mm-frame-clusters") {
+    // r18: memoized — the banding + spanning-edge + star-contraction
+    // pipeline runs eagerly at construction (checkpoint-backed, its
+    // checkpoints tracked with this grain), so without the memo every
+    // call re-runs the whole build (the same r4 recompute class the
+    // text-side cluster frames already guard against).
+    graft.Caches.grain(spark, dir, "multimodal.frame-clusters") {
       frameNearDupClustersOf(Feeds.table(spark, dir, "documents"))
     }
 

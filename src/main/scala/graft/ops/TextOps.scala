@@ -57,16 +57,13 @@ object TextOps {
   // readability, length histograms/moments, the curation chains, the
   // quote-heavy rollups) — each call re-ran the normalize + split +
   // 4-regex scan without the memo. Six small numeric columns per doc:
-  // tiny to hold, expensive to recompute. Same contract as shinglesCache.
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
+  // tiny to hold, expensive to recompute. Same contract as shingles.
   def textStats(spark: SparkSession, dir: String): DataFrame =
-    statsCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-          val cp = textStatsOf(docsWords(s, d)).truncated
-          cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cp })
+    graft.Caches.grain(spark, dir, "text.stats") {
+      val cp = textStatsOf(docsWords(spark, dir)).truncated
+      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cp
+    }
 
   /** Composite quality score in [0,1]: length, punctuation-density and
     * stopword-ratio components (deterministic double arithmetic — the
@@ -216,81 +213,43 @@ object TextOps {
   // rows) feeds the span-run grain, the incremental-run grain, the
   // index-stats audit and the ingest-debt ledger; the latter two re-ran
   // the full explode + md5 per call without the memo.
-  private val posShinglesCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
   def posShingles(spark: SparkSession, dir: String): DataFrame =
-    posShinglesCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-          val cp = posShinglesOf(docsWords(s, d)).truncated
-          cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cp })
+    graft.Caches.grain(spark, dir, "text.pos-shingles") {
+      val cp = posShinglesOf(docsWords(spark, dir)).truncated
+      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cp
+    }
 
   // The distinct-shingle set feeds five query families (jaccard,
   // fingerprint, contamination, repetition, curation v2) — memoize and
   // persist one instance per (session, dir) so the explode+distinct
-  // shuffle runs once, not per consumer. Same stale-read contract and
-  // `invalidate` hook as the Dedup caches.
-  private val shinglesCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
+  // shuffle runs once, not per consumer. Same stale-read contract as
+  // every [[graft.Caches]] grain.
   def shingles(spark: SparkSession, dir: String): DataFrame =
-    shinglesCache.computeIfAbsent((spark, dir),
+    graft.Caches.grain(spark, dir, "text.shingles") {
       // eager checkpoint, not persist: truncates every consumer's plan at
       // the shingle leaf (r18 — planning over the nested explode tree
       // dominated the dedup/verify tail's warm cost, guide §3.3)
-      { case (s, d) =>
-          val cp = shinglesOf(docsWords(s, d)).truncated
-          cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cp })
+      val cp = shinglesOf(docsWords(spark, dir)).truncated
+      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cp
+    }
 
   // The (doc, word) term-frequency frame feeds four plan positions in the
   // bag-cosine verify tier alone (both dot sides + both norm attaches) —
   // without the memo Catalyst plans FOUR full docs scans+explodes per
-  // query (plan-audited, round 13). Same contract as shinglesCache.
-  private val tfCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
+  // query (plan-audited, round 13). Same contract as shingles.
   /** Memoized (doc_id, w, tf) term frequencies over the whitespace
     * tokens. */
   def tf(spark: SparkSession, dir: String): DataFrame =
-    tfCache.computeIfAbsent((spark, dir),
-      { case (s, d) => docsWords(s, d)
-          .select(col("doc_id"), explode(col("words")).as("w"))
-          .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-          .truncated match { case cp =>
-            cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            cp } })
-
-  /** Drop the memoized shingle/tf frames for (session, dir) — REQUIRED
-    * before re-reading a dir whose files changed (see
-    * [[graft.ops.Dedup.invalidate]]). */
-  def invalidate(spark: SparkSession, dir: String): Unit = {
-    Seq(shinglesCache, tfCache, statsCache, posShinglesCache).foreach { c =>
-      Option(c.remove((spark, dir))).foreach { df =>
-        df.unpersist(false)
-        graft.etl.Catchup.releaseLocalCheckpoint(df)
-      }
+    graft.Caches.grain(spark, dir, "text.tf") {
+      val cp = docsWords(spark, dir)
+        .select(col("doc_id"), explode(col("words")).as("w"))
+        .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
+        .truncated
+      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cp
     }
-  }
-
-  /** Drop and unpersist EVERY memoized shingle/tf frame of `spark` — same
-    * session-teardown hook as [[graft.ops.Vectors.invalidateAll]]. */
-  def invalidateAll(spark: SparkSession): Unit = {
-    Seq(shinglesCache, tfCache, statsCache, posShinglesCache)
-      .foreach(_.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) { e.getValue.unpersist(false)
-                 graft.etl.Catchup.releaseLocalCheckpoint(e.getValue) }
-      hit
-    })
-  }
-
-  /** Entry count of this session in the memo map (spec hook). */
-  private[graft] def cacheSize(spark: SparkSession): Int = {
-    import scala.jdk.CollectionConverters._
-    shinglesCache.keySet.asScala.count(_._1 eq spark)
-  }
 
   /** Full-doc md5 + min-shingle-hash fingerprint (rolling-hash-style
     * winnowing reduced to its minimum: the smallest k-gram hash). */

@@ -162,116 +162,31 @@ object Vectors {
           .as("balance_ppm"))
   }
 
-  // Memoized per (session, dir), like Dedup's band/cluster caches: the
-  // quantized frame, the IVF cell ranking, the LSH-bucketed frame and the
-  // trained PQ codebook are each built (and persisted) ONCE and shared by
-  // every ANN consumer — previously each query call-site carried its own
-  // persist() and none could unpersist it (the frame outlives the call),
-  // so repeated invocations accumulated cached copies for the session
-  // lifetime. Same STALE-READ CONTRACT as Dedup: entries are never
-  // auto-invalidated; call [[invalidate]] after rewriting `dir`.
-  private val quantizedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  private val cellsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  private val lshCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  private val pqCbCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  // keyed by sampleN too (the pairsCache treatment): the memoized frame
-  // IS the sample, so two budgets must not alias to one entry
-  private val kmSampleCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]
-  // r18: the exact brute-force top-k grain, keyed by k — the ground-truth
-  // table EIGHT monitors consume (recall/MRR/rank-stability/label-
-  // agreement/mutual-kNN/components/probe-cmp/ingest-recall), each of
-  // which re-ran the eval×corpus scoring per call without the memo. In
-  // production the exact-truth table is computed once per release and
-  // read by every eval job; the memo plays that role in-session. Output
-  // is |eval set|·k rows — tiny next to its build.
-  // keyed (session, dir, tag, param) — the tag names WHAT the frame is
+  // Memoized per (session, dir) in [[graft.Caches]], like Dedup's grains:
+  // the quantized frame, the IVF cell ranking, the LSH-bucketed frame and
+  // the trained PQ codebook are each built (and persisted) ONCE and shared
+  // by every ANN consumer — previously each query call-site carried its
+  // own persist() and none could unpersist it (the frame outlives the
+  // call), so repeated invocations accumulated cached copies for the
+  // session lifetime. Same STALE-READ CONTRACT as every registry grain.
+  //
+  // Names are `vectors.<what>/<dial>` — the tag names WHAT the frame is
   // (exact top-k, trained centroids, ADC ranking, sampled grain) and the
-  // param its dial (k / iters / sampleN). r18 packed all of these into one
-  // hand-offset Int (9·2^20+iters, ...), where an out-of-range caller value
-  // silently collided into a frame with a different schema (r18 ADVICE).
-  private val topkCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Int), DataFrame]
-
+  // dial its parameter (k / iters / sampleN), so two dials never alias.
+  // r18 packed these into one hand-offset Int (9·2^20+iters, ...), where
+  // an out-of-range caller value silently collided into a frame with a
+  // different schema (r18 ADVICE).
   private def mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   private def quantizedCached(spark: SparkSession, dir: String): DataFrame =
-    quantizedCache.computeIfAbsent((spark, dir),
-      { case (s, d) => quantized(s, d).persist(mem) })
+    graft.Caches.grain(spark, dir, "vectors.quantized") {
+      quantized(spark, dir).persist(mem)
+    }
 
   private def ivfCellsCached(spark: SparkSession, dir: String): DataFrame =
-    cellsCache.computeIfAbsent((spark, dir),
-      { case (s, d) => ivfCellsOf(quantizedCached(s, d)).persist(mem) })
-
-  /** Drop this (session, dir)'s memoized ANN frames and unpersist them —
-    * REQUIRED before re-reading a dir whose files changed. */
-  def invalidate(spark: SparkSession, dir: String): Unit = {
-    Seq(quantizedCache, cellsCache, lshCache, pqCbCache,
-        pqCodesCache, pqDtabCache).foreach { c =>
-      Option(c.remove((spark, dir))).foreach { df =>
-        df.unpersist(false)
-        graft.etl.Catchup.releaseLocalCheckpoint(df)
-      }
+    graft.Caches.grain(spark, dir, "vectors.ivf-cells") {
+      ivfCellsOf(quantizedCached(spark, dir)).persist(mem)
     }
-    kmSampleCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 == spark && e.getKey._2 == dir
-      if (hit) { e.getValue.unpersist(false)
-                 graft.etl.Catchup.releaseLocalCheckpoint(e.getValue) }
-      hit
-    }
-    topkCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 == spark && e.getKey._2 == dir
-      if (hit) { e.getValue.unpersist(false)
-                 graft.etl.Catchup.releaseLocalCheckpoint(e.getValue) }
-      hit
-    }
-  }
-
-  /** Drop and unpersist EVERY memoized ANN frame of `spark`, whatever dir
-    * it was built from — the session-teardown hook for long-lived
-    * multi-session/multi-dir JVMs, where per-dir [[invalidate]] would
-    * require enumerating every dir ever touched (entries of a stopped
-    * session would otherwise stay pinned for the JVM lifetime). */
-  def invalidateAll(spark: SparkSession): Unit = {
-    Seq(quantizedCache, cellsCache, lshCache, pqCbCache,
-        pqCodesCache, pqDtabCache).foreach { c =>
-      val it = c.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 eq spark) {
-          e.getValue.unpersist(false)
-          graft.etl.Catchup.releaseLocalCheckpoint(e.getValue)
-          it.remove()
-        }
-      }
-    }
-    kmSampleCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) { e.getValue.unpersist(false)
-                 graft.etl.Catchup.releaseLocalCheckpoint(e.getValue) }
-      hit
-    }
-    topkCache.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) { e.getValue.unpersist(false)
-                 graft.etl.Catchup.releaseLocalCheckpoint(e.getValue) }
-      hit
-    }
-  }
-
-  /** Entry count of this session across the ANN memo maps (spec hook). */
-  private[graft] def cacheSize(spark: SparkSession): Int = {
-    import scala.jdk.CollectionConverters._
-    Seq(quantizedCache, cellsCache, lshCache, pqCbCache,
-        pqCodesCache, pqDtabCache)
-      .map(_.keySet.asScala.count(_._1 eq spark)).sum +
-      kmSampleCache.keySet.asScala.count(_._1 eq spark) +
-      topkCache.keySet.asScala.count(_._1 eq spark)
-  }
 
   private def scored(q: DataFrame, c: DataFrame): DataFrame =
     q.join(c, col("cand_id") =!= col("query_id"))
@@ -280,10 +195,17 @@ object Vectors {
 
   /** Brute-force cosine top-5 for the deterministic query subset
     * (vec_id % 50 == 0). */
+  // r18: the exact brute-force top-k grain, keyed by k — the ground-truth
+  // table EIGHT monitors consume (recall/MRR/rank-stability/label-
+  // agreement/mutual-kNN/components/probe-cmp/ingest-recall), each of
+  // which re-ran the eval×corpus scoring per call without the memo. In
+  // production the exact-truth table is computed once per release and
+  // read by every eval job; the memo plays that role in-session. Output
+  // is |eval set|·k rows — tiny next to its build.
   def annCosineTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
-    topkCache.computeIfAbsent((spark, dir, "exact-topk", k),
-      { case (s, d, _, kk) => annCosineTopKOf(quantizedCached(s, d), kk)
-          .truncated })
+    graft.Caches.grain(spark, dir, s"vectors.exact-topk/$k") {
+      annCosineTopKOf(quantizedCached(spark, dir), k).truncated
+    }
 
   /** Frame-based core of [[annCosineTopK]] (fixture-testable). */
   def annCosineTopKOf(emb: DataFrame, k: Int = 5): DataFrame = {
@@ -399,10 +321,9 @@ object Vectors {
     // the lazily-composed Lloyd rounds otherwise re-execute on every
     // call/pass of each consumer (the assignment query AND the drift
     // monitor); production trains once and serves the centroid table.
-    val cents = topkCache.computeIfAbsent((spark, dir, "km-cents", iters),
-      { case (s, d, _, _) =>
-          lloydTrain(quantizedCached(s, d), quantizedCached(s, d), iters)
-            .truncated })
+    val cents = graft.Caches.grain(spark, dir, s"vectors.km-cents/$iters") {
+      lloydTrain(emb, emb, iters).truncated
+    }
     assignTo(emb, cents)
   }
 
@@ -451,23 +372,25 @@ object Vectors {
     * [[kmeansAssign]] (exact int sums, one IEEE division + round per
     * dim), over a sample both engines select identically — oracle-green
     * by the same argument, no float drift surface. The sample frame is
-    * memoized per (session, dir) (reclaimed via [[invalidateAll]]) so
-    * the Lloyd rounds' repeated consumption reads cached blocks. */
+    * memoized per (session, dir, sampleN) so the Lloyd rounds' repeated
+    * consumption reads cached blocks. */
   def kmeansAssignSampled(spark: SparkSession, dir: String,
                           iters: Int = LloydIters,
                           sampleN: Int = 4096): DataFrame = {
     val emb = quantizedCached(spark, dir)
-    val cents = topkCache.computeIfAbsent(
-      (spark, dir, s"km-cents-sampled-n$sampleN", iters),
-      { case (s, d, _, _) =>
-          val samp = kmSampleCache.computeIfAbsent((s, d, sampleN),
-            { case (s2, d2, _) => quantizedCached(s2, d2)
-                .select(col("vec_id"), col("qv"), col("n2"),
-                        md5(col("vec_id").cast("string")).as("h"))
-                .orderBy(col("h"), col("vec_id")).limit(sampleN)
-                .select("vec_id", "qv", "n2")
-                .persist(mem) })
-          lloydTrain(samp, samp, iters).truncated })
+    val cents = graft.Caches.grain(spark, dir,
+        s"vectors.km-cents-sampled/$sampleN/$iters") {
+      // keyed by sampleN: the memoized frame IS the sample, so two
+      // budgets must not alias to one entry
+      val samp = graft.Caches.grain(spark, dir, s"vectors.km-sample/$sampleN") {
+        emb.select(col("vec_id"), col("qv"), col("n2"),
+                   md5(col("vec_id").cast("string")).as("h"))
+          .orderBy(col("h"), col("vec_id")).limit(sampleN)
+          .select("vec_id", "qv", "n2")
+          .persist(mem)
+      }
+      lloydTrain(samp, samp, iters).truncated
+    }
     assignTo(emb, cents)
   }
 
@@ -728,9 +651,10 @@ object Vectors {
                  threshold: Double = 0.90): DataFrame = {
     // the interpreted HOF bucket expression is the expensive part — built
     // once per (session, dir) and shared by both join sides
-    val emb = lshCache.computeIfAbsent((spark, dir),
-      { case (s, d) => quantizedCached(s, d)
-          .withColumn("bucket", expr(rhBucketExpr)).persist(mem) })
+    val emb = graft.Caches.grain(spark, dir, "vectors.lsh") {
+      quantizedCached(spark, dir)
+        .withColumn("bucket", expr(rhBucketExpr)).persist(mem)
+    }
     val q = emb.select(col("vec_id").as("query_id"), col("bucket"),
                        col("qv").as("q_qv"), col("n2").as("qa2"))
     val c = emb.select(col("vec_id").as("cand_id"), col("bucket"),
@@ -871,30 +795,25 @@ object Vectors {
     * composition all broadcast the SAME materialized codebook instead of
     * re-running the training chain per use. */
   private def pqCbCached(spark: SparkSession, dir: String): DataFrame =
-    pqCbCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-          pqCodebookTrainedOf(pqSubOf(quantizedCached(s, d))).persist(mem) })
+    graft.Caches.grain(spark, dir, "vectors.pq-codebook") {
+      pqCodebookTrainedOf(pqSubOf(quantizedCached(spark, dir))).persist(mem)
+    }
 
   // r18: the PQ code table and the per-query distance table are THE
   // serving-index artifacts (written once per build in production) and
   // feed five query families (codes, flat ADC, IVF-PQ, rerank, recall) —
   // memoized + checkpointed like the other grains.
-  private val pqCodesCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  private val pqDtabCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    pqCodesCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-          pqEncode(pqSubOf(quantizedCached(s, d)), pqCbCached(s, d))
-            .truncated })
+    graft.Caches.grain(spark, dir, "vectors.pq-codes") {
+      pqEncode(pqSubOf(quantizedCached(spark, dir)), pqCbCached(spark, dir))
+        .truncated
+    }
 
   private def pqDtabCached(spark: SparkSession, dir: String): DataFrame =
-    pqDtabCache.computeIfAbsent((spark, dir),
-      { case (s, d) =>
-          pqDtabOf(pqSubOf(quantizedCached(s, d)), pqCbCached(s, d))
-            .truncated })
+    graft.Caches.grain(spark, dir, "vectors.pq-dtab") {
+      pqDtabOf(pqSubOf(quantizedCached(spark, dir)), pqCbCached(spark, dir))
+        .truncated
+    }
 
   /** PQ ADC top-k: the query set (vec_id % 50 == 0) precomputes one
     * distance-table row per (query, subspace, codebook entry) — |Q|·M·k'
@@ -941,12 +860,11 @@ object Vectors {
     // r18: memoized like the exact grain — the ADC ranking feeds both its
     // own query and the rank-stability monitor, and |eval|·k rows are
     // tiny next to the encode+lookup scoring they pay per call otherwise.
-    topkCache.computeIfAbsent((spark, dir, "adc-topk", k),
-      { case (s, d, _, _) =>
-          val codes = pqCodes(s, d)
-            .select(col("vec_id").as("cand_id"), col("m").as("cm"),
-                    col("code"))
-          adcRank(codes, pqDtabCached(s, d), k).truncated })
+    graft.Caches.grain(spark, dir, s"vectors.adc-topk/$k") {
+      val codes = pqCodes(spark, dir)
+        .select(col("vec_id").as("cand_id"), col("m").as("cm"), col("code"))
+      adcRank(codes, pqDtabCached(spark, dir), k).truncated
+    }
 
   /** IVF-PQ — the two halves composed, i.e. the production ANN serving
     * shape (FAISS's default index family): IVF cell blocking prunes the
@@ -1469,10 +1387,10 @@ object Vectors {
 
   def knnComponents(spark: SparkSession, dir: String): DataFrame =
     // k = 5 to match the oracle's exact-top-k CTE (see knnMutual).
-    // r18: memoized through the dedup cluster registry — the min-label CC
-    // loop inside runs eagerly at construction, so an unmemoized call
-    // re-ran it per invocation (the r4 recompute class).
-    graft.ops.Dedup.memoClusters(spark, dir, "knn-mutual-cc") {
+    // r18: memoized — the min-label CC loop inside runs eagerly at
+    // construction, so an unmemoized call re-ran it per invocation (the
+    // r4 recompute class).
+    graft.Caches.grain(spark, dir, "vectors.knn-mutual-cc") {
       knnComponentsOf(annCosineTopK(spark, dir))
     }
 
@@ -1498,8 +1416,8 @@ object Vectors {
     knnComponentsOf(sampledMutualTopkOf(emb, k, sampleN))
 
   /** The sampled exact-top-k grain under [[knnComponentsSampledOf]] —
-    * split out (r18) so the query form can persist it through
-    * [[topkCache]]: the |sample|² scoring is the whole cost of the
+    * split out (r18) so the query form can memoize it as a grain: the
+    * |sample|² scoring is the whole cost of the
     * monitor, and the component labeling re-reads the grain for nodes
     * AND edges, so an unpersisted grain is scored twice per call (and
     * once more per repeated call). Keyed by its own tag — never aliases
@@ -1524,12 +1442,11 @@ object Vectors {
   }
 
   def knnComponentsSampled(spark: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.memoClusters(spark, dir, "knn-mutual-cc-sampled") {
-      knnComponentsOf(topkCache.computeIfAbsent(
-        (spark, dir, "sampled-mutual-topk-k5", 1024),
-        { case (s, d, _, _) =>
-            sampledMutualTopkOf(quantizedCached(s, d), 5, 1024)
-              .truncated }))
+    graft.Caches.grain(spark, dir, "vectors.knn-mutual-cc-sampled") {
+      knnComponentsOf(graft.Caches.grain(spark, dir,
+          "vectors.sampled-mutual-topk/5/1024") {
+        sampledMutualTopkOf(quantizedCached(spark, dir), 5, 1024).truncated
+      })
     }
 
   /** Cosine RANGE search count: per eval query, how many corpus vectors

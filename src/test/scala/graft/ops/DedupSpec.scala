@@ -226,7 +226,7 @@ class DedupSpec extends SparkSpec {
     // All entry points now go through the get-then-putIfAbsent memo; this
     // pins the composed build succeeding AND both layers memo-hitting.
     val d = "/root/testdata/sf0.001"
-    Dedup.invalidate(spark, d)
+    graft.Caches.invalidate(spark, d)
     val v1 = Dedup.clustersVerified(spark, d) // builds nested grain inside
     val p1 = Dedup.minhashPairsVerified(spark, d)
     assert(Dedup.clustersVerified(spark, d) eq v1, "outer memo must hit")

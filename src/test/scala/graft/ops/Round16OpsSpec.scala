@@ -175,16 +175,16 @@ class Round16OpsSpec extends SparkSpec {
        "reclaimed by Caches.invalidateAll (r15 verdict task 1)") {
     val d = "/root/testdata/sf0.001"
     graft.Caches.invalidateAll(spark)
-    val before = Dedup.cacheSize(spark)
+    val before = graft.Caches.size(spark, "dedup.")
     Dedup.substringSpans(spark, d).count()
-    val afterOne = Dedup.cacheSize(spark)
+    val afterOne = graft.Caches.size(spark, "dedup.")
     Dedup.substringSpanHist(spark, d).count()
     Dedup.quoteHeavyDocs(spark, d).count()
     Dedup.spanSourceMatrix(spark, d).count()
     // the three follow-on queries add no new run-grain entry
-    assert(Dedup.cacheSize(spark) == afterOne)
+    assert(graft.Caches.size(spark, "dedup.") == afterOne)
     assert(afterOne > before)
     graft.Caches.invalidateAll(spark)
-    assert(Dedup.cacheSize(spark) == 0)
+    assert(graft.Caches.size(spark, "dedup.") == 0)
   }
 }

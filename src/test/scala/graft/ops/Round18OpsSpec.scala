@@ -136,19 +136,19 @@ class Round18OpsSpec extends SparkSpec {
        "cached frame, reclaimed by Caches.invalidateAll") {
     graft.Caches.invalidateAll(spark)
     Dedup.dedupSubstringInc(spark, dir).count()
-    val afterOne = Dedup.cacheSize(spark)
+    val afterOne = graft.Caches.size(spark, "dedup.")
     Dedup.spanMaskRangesInc(spark, dir).count()
     Dedup.quoteHeavyDocsInc(spark, dir).count()
     // the follow-on inc queries add no new inc-run-grain entry (the
     // quote gate pulls in the shared full-run/shingle memos its stats
     // join needs on first touch, nothing more on repeat)
-    val afterAll = Dedup.cacheSize(spark)
+    val afterAll = graft.Caches.size(spark, "dedup.")
     Dedup.spanMaskRangesInc(spark, dir).count()
     Dedup.quoteHeavyDocsInc(spark, dir).count()
-    assert(Dedup.cacheSize(spark) == afterAll)
+    assert(graft.Caches.size(spark, "dedup.") == afterAll)
     assert(afterOne >= 1)
     graft.Caches.invalidateAll(spark)
-    assert(Dedup.cacheSize(spark) == 0)
+    assert(graft.Caches.size(spark, "dedup.") == 0)
   }
 
   test("v4 release card reconciles with the admitted corpus and keeps " +
