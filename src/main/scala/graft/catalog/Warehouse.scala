@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
 /** The staging/mart warehouse layer — Spark-native replacement for the
   * reference's two PostgreSQL schemas and their DDL verbs (SURVEY §2.1):
@@ -452,7 +453,7 @@ class Warehouse(spark: SparkSession, root: String) {
         s"$db.$table is a bucketed table; compacting it path-level " +
         "would break its bucket layout — rewrite via bucketedOverwrite")
     val frag = values.filter { v =>
-      val d = hPath(s"${path(db, table)}/$partitionCol=$v")
+      val d = partitionDir(db, table, partitionCol, v)
       val fs = fsOf(d)
       fs.exists(d) && {
         val sts = fs.listStatus(d).toIndexedSeq
@@ -531,50 +532,71 @@ class Warehouse(spark: SparkSession, root: String) {
         "path-level would break its bucket layout — rewrite via " +
         "bucketedOverwrite")
 
-  /** Partition-pruned merge for tables partitioned on `partitionCol` — the
-    * 100 TB shape: only partitions PRESENT in `updates` are read, merged and
-    * rewritten (dynamic partition overwrite); untouched partitions' files
-    * are never opened or replaced. An increment touching one day of a
-    * 5-year fact table rewrites 1/1800th of it.
+  /** Directory of one partition value, named the way Spark's partitioned
+    * writer names it: the value escaped, a null (or empty) value mapped to
+    * `__HIVE_DEFAULT_PARTITION__`. */
+  private def partitionDir(db: String, table: String, partitionCol: String,
+                           value: String) =
+    hPath(s"${path(db, table)}/" +
+      ExternalCatalogUtils.getPartitionPathString(partitionCol, value))
+
+  /** Directory-addressed merge for tables partitioned on `partitionCol` —
+    * the 100 TB shape: the partition values present in `updates` are
+    * collected first, and the target is read through exactly those
+    * partition directories (explicit paths under a `basePath`), so the
+    * scan lists and opens only the touched partitions' files; untouched
+    * partitions are never listed, opened or replaced. Touched values with
+    * no directory yet (a new month) contribute no history. The merged
+    * partitions are then rewritten by dynamic partition overwrite. An
+    * increment touching one day of a 5-year fact table reads and rewrites
+    * 1/1800th of it. Asserted in WarehouseSpec by the files the merge's
+    * scans open and by file identity of untouched partitions.
     *
     * Durability: the merged affected partitions are first written to a temp
     * path (a real parquet copy, not executor-local blocks); the dynamic
     * partition overwrite then reads FROM the temp copy, so the target scan
     * and target write never race, and a failure mid-overwrite leaves the
-    * temp copy on disk for recovery. The temp dir is removed on success. */
+    * temp copy on disk for recovery. The temp dir is removed on success.
+    *
+    * Returns the touched partition values (as strings, the form Spark
+    * formats partition paths from), sorted, null first. */
   def mergePartitioned(db: String, table: String, updates: DataFrame,
-                       keys: Seq[String], partitionCol: String): Unit = {
+                       keys: Seq[String], partitionCol: String): Seq[String] = {
     uncacheSchema(db, table)
     val pc = org.apache.spark.sql.functions.col(partitionCol)
+    val touched = updates.select(pc.cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq.sortBy(Option(_))
     if (!exists(db, table)) {
       updates.repartition(pc)
         .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
         .parquet(path(db, table))
-      return
+      return touched
     }
-    val parts = updates.select(partitionCol).distinct()
-    val affected = readPhysical(db, table) // partition filter prunes the scan
-      .join(org.apache.spark.sql.functions.broadcast(parts),
-            Seq(partitionCol), "left_semi")
-    val kept = affected.join(
-      updates.select(keys.map(updates.col): _*), keys, "left_anti")
+    val dirs = touched.map(partitionDir(db, table, partitionCol, _))
+      .filter(d => fsOf(d).exists(d))
+    val merged =
+      if (dirs.isEmpty) updates
+      else spark.read.option("basePath", path(db, table))
+        .parquet(dirs.map(_.toString): _*)
+        .join(updates.select(keys.map(updates.col): _*), keys, "left_anti")
+        .unionByName(updates)
 
     val tmp = hPath(s"$root/$db/.${table}__merge_tmp")
     val fs = fsOf(tmp)
     fs.delete(tmp, true)
-    kept.unionByName(updates)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     // repartition on the layout column so each rewritten partition lands as
     // ONE file — without it every merge re-fragments the touched months
     // into task-count files (same small-file debt overwritePartitioned
     // avoids; [[compact]] stays the healer for externally-written tables)
-    spark.read.parquet(tmp.toString)
+    spark.read.schema(merged.schema).parquet(tmp.toString)
       .repartition(pc)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path(db, table))
     fs.delete(tmp, true)
+    touched
   }
 }
 

@@ -78,8 +78,12 @@ object IncrementStream {
     * Blocks until the drain completes. */
   def runIncrementAvailableNow(spark: SparkSession, dir: String,
                                watchDir: String, sinkDir: String,
-                               checkpointDir: String): Unit = {
-    val q = orderLogStream(spark, dir, watchDir)
+                               checkpointDir: String): Unit =
+    drain(orderLogStream(spark, dir, watchDir), sinkDir, checkpointDir)
+
+  private def drain(stream: DataFrame, sinkDir: String,
+                    checkpointDir: String): Unit = {
+    val q = stream
       .writeStream.format("parquet")
       .option("path", sinkDir)
       .option("checkpointLocation", checkpointDir)
@@ -99,9 +103,11 @@ object IncrementStream {
     *     day's rows are the files THIS drain COMMITTED (metadata-log set
     *     diff — a raw listing could include uncommitted files from a
     *     crashed drain — read back as explicit paths);
-    *  2. partition-pruned MERGE of the day's rows into the
-    *     month-partitioned fact (only touched months' files are read and
-    *     rewritten — [[graft.catalog.Warehouse.mergePartitioned]]);
+    *  2. directory-addressed MERGE of the day's rows into the
+    *     month-partitioned fact (only the touched months' directories are
+    *     listed, read and rewritten —
+    *     [[graft.catalog.Warehouse.mergePartitioned]], which also returns
+    *     the touched months);
     *  3. partition-scoped COMPACTION of the touched months
     *     ([[graft.catalog.Warehouse.compactPartitions]]) — a no-op while
     *     the merge path keeps one file per partition, the heal when an
@@ -118,37 +124,31 @@ object IncrementStream {
     import graft.catalog.Warehouse.PartCol
     val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
     val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // one stream frame: its schema is the sink's, so every read below
+    // passes it and none pays a schema-inference job
+    val stream = orderLogStream(spark, dir, watchDir)
     // the COMMITTED file set per the sink's own metadata log (that is what
     // spark.read resolves through for a streaming sink dir) — a raw
     // directory listing could pick up uncommitted files from a drain that
     // crashed mid-batch, and those rows would double once the checkpoint
-    // re-delivers them. Only the committed-but-EMPTY sink reads as Set()
-    // (no metadata log yet, or schema inference over zero files); any
-    // other read failure must PROPAGATE — swallowing a transient post-
-    // drain error here would classify that day's files as already-seen on
-    // the next cycle and silently drop them from the warehouse forever
+    // re-delivers them. With the schema given, a metadata log holding zero
+    // committed files reads as Set(); any read failure must PROPAGATE —
+    // swallowing a transient post-drain error here would classify that
+    // day's files as already-seen on the next cycle and silently drop them
+    // from the warehouse forever
     def committed: Set[String] = {
       val meta = new org.apache.hadoop.fs.Path(sinkPath, "_spark_metadata")
       if (!fs.exists(meta)) Set()
-      else try spark.read.parquet(sinkDir).inputFiles.toSet
-      catch {
-        // match the error CLASS, not message text (wording is
-        // Spark-version-fragile; the class id is the stable contract)
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-          Set() // metadata log exists but holds zero committed files
-      }
+      else spark.read.schema(stream.schema).parquet(sinkDir).inputFiles.toSet
     }
     val before = committed
-    runIncrementAvailableNow(spark, dir, watchDir, sinkDir, checkpointDir)
+    drain(stream, sinkDir, checkpointDir)
     val fresh = (committed -- before).toSeq.sorted
     // a cycle with no new deliveries commits no files — nothing to do
     if (fresh.isEmpty) return Nil
-    val day = spark.read.parquet(fresh: _*)
+    val day = spark.read.schema(stream.schema).parquet(fresh: _*)
       .withColumn(PartCol, date_format(col("date_time"), "yyyy-MM"))
-    wh.mergePartitioned(db, table, day, Seq("uniq_id"), PartCol)
-    val touched = day.select(PartCol).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // month-count scalar list
+    val touched = wh.mergePartitioned(db, table, day, Seq("uniq_id"), PartCol)
     wh.compactPartitions(db, table, PartCol, touched)
     touched
   }

@@ -94,6 +94,95 @@ class WarehouseSpec extends SparkSpec {
     assert(files("2024-01-01") == day1Before && day1Before.nonEmpty)
   }
 
+  test("partitioned merge opens only the touched partition's files") {
+    // 40 month directories — more than Spark's parallel-listing threshold
+    // (32), the regime where a whole-table read lists every month in a job
+    import Warehouse.PartCol
+    val root = tmp()
+    val wh = new Warehouse(spark, root)
+    val months = (0 until 40).map(i => f"${2020 + i / 12}%d-${i % 12 + 1}%02d")
+    val hist = months.zipWithIndex.flatMap { case (m, i) =>
+      Seq((2L * i, m, 1.0), (2L * i + 1, m, 2.0)) }
+    wh.overwritePartitioned("mart", "fp40",
+      hist.toDF("id", PartCol, "amt"), PartCol)
+    // a one-month increment, delivered as files like the daily cycle's
+    val month = months(17)
+    Seq((34L, month, 9.0), (1000L, month, 5.0)).toDF("id", PartCol, "amt")
+      .repartition(2).write.parquet(s"$root/updates")
+    val (touched, writes) = MergeScans.around(spark) { rec =>
+      (wh.mergePartitioned("mart", "fp40", spark.read.parquet(s"$root/updates"),
+         Seq("id"), PartCol),
+       rec.take(spark))
+    }
+    assert(touched == Seq(month))
+    assert(writes.size == 1, writes)
+    val files = writes.head.files
+    val (history, other) = files.partition(_.contains("/mart/fp40/"))
+    assert(history.nonEmpty &&
+           history.forall(_.contains(s"/$PartCol=$month/")), history)
+    assert(other.nonEmpty && other.forall(_.contains("/updates/")), other)
+    assert(writes.head.filesOpened == files.size, writes)
+    assert(wh.read("mart", "fp40").count() == hist.size + 1)
+  }
+
+  /** Merge `updates` into a fresh month-partitioned table holding `hist`,
+    * then check the read-back is kept ∪ updates over the touched
+    * partitions (every other row untouched) and every untouched
+    * partition's files are byte-identical. */
+  private def mergeMatchesSemantics(hist: Seq[(Long, String, Double)],
+                                    updates: Seq[(Long, String, Double)])
+      : Unit = {
+    import Warehouse.PartCol
+    val root = tmp()
+    val wh = new Warehouse(spark, root)
+    wh.overwritePartitioned("mart", "e",
+      hist.toDF("id", PartCol, "amt"), PartCol)
+    val table = java.nio.file.Paths.get(root, "mart", "e")
+    def files(part: String): Map[String, Seq[Byte]] = {
+      val dir = table.resolve(
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .getPartitionPathString(PartCol, part))
+      val names = Option(dir.toFile.list()).toSeq.flatten
+        .filter(_.startsWith("part-"))
+      names.map(n =>
+        n -> java.nio.file.Files.readAllBytes(dir.resolve(n)).toSeq).toMap
+    }
+    val touched = updates.map(_._2).distinct
+    val untouched = hist.map(_._2).distinct.filterNot(touched.contains)
+    val before = untouched.map(p => p -> files(p)).toMap
+    val got = wh.mergePartitioned("mart", "e",
+      updates.toDF("id", PartCol, "amt"), Seq("id"), PartCol)
+    assert(got.toSet == touched.toSet)
+    val upKeys = updates.map(_._1).toSet
+    val want = hist.filterNot(r => touched.contains(r._2) && upKeys(r._1))
+      .toSet ++ updates
+    assert(wh.readPhysical("mart", "e").select("id", PartCol, "amt")
+      .as[(Long, String, Double)].collect().toSet == want)
+    for (p <- untouched)
+      assert(files(p) == before(p) && before(p).nonEmpty, p)
+  }
+
+  test("partitioned merge into a partition with no directory yet") {
+    // 2024-03 is new; id 3 also lives in the untouched 2024-02, which the
+    // merge neither reads nor rewrites, so both rows remain
+    mergeMatchesSemantics(
+      Seq((1L, "2024-01", 1.0), (2L, "2024-01", 2.0), (3L, "2024-02", 3.0)),
+      Seq((1L, "2024-01", 10.0), (3L, "2024-03", 30.0), (7L, "2024-03", 7.0)))
+  }
+
+  test("partitioned merge into a partition whose path is escaped") {
+    mergeMatchesSemantics(
+      Seq((1L, "2024-01 late:x", 1.0), (2L, "2024-01 late:x", 2.0),
+          (3L, "2024-02", 3.0)),
+      Seq((2L, "2024-01 late:x", 20.0), (4L, "2024-01 late:x", 4.0)))
+  }
+
+  test("partitioned merge into the null partition keeps its history") {
+    mergeMatchesSemantics(
+      Seq((1L, null, 1.0), (2L, null, 2.0), (3L, "2024-02", 3.0)),
+      Seq((1L, null, 10.0), (5L, null, 5.0)))
+  }
+
   test("DAG month-partitions the big facts; read() hides the layout column") {
     val root = tmp()
     val sf = "/root/testdata/sf0.001"

@@ -186,7 +186,9 @@ class StreamingSpec extends SparkSpec {
     // touched partition after EVERY cycle (small-file debt cannot creep in
     // at any horizon), and (b) per-cycle wall time stays flat as the
     // table's history grows 30× (the cycle costs the day + its touched
-    // months, not the history).
+    // months, not the history), and (c) the count form of (b): the files
+    // each cycle's merge reads from history stay bounded by its touched
+    // months.
     val dir = "/root/testdata/sf0.001"
     val watch = java.nio.file.Files.createTempDirectory("graft_skw").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_skc").toString
@@ -216,23 +218,33 @@ class StreamingSpec extends SparkSpec {
       .map(_.count(_.startsWith("part-"))).getOrElse(0)
     var allTouched = Set[String]()
     val times = new Array[Double](months.length)
-    for ((month, day) <- months.zipWithIndex) {
-      deliver(f"inc_day$day%02d.parquet", month)
-      val t0 = System.nanoTime()
-      val touched = IncrementStream.runDailyCycle(
-        spark, dir, watch, sink, ckpt, wh, "mart", "uol_soak")
-      times(day) = (System.nanoTime() - t0) / 1e9
-      assert(touched.contains(month), s"day $day missed month $month")
-      allTouched ++= touched
-      // (a) after EVERY cycle: no partition ever holds more than 1 file
-      for (m <- allTouched)
-        assert(filesIn(m) <= 1, s"day $day: month $m has ${filesIn(m)} files")
+    val historyRead = new Array[Int](months.length)
+    graft.catalog.MergeScans.around(spark) { rec =>
+      for ((month, day) <- months.zipWithIndex) {
+        deliver(f"inc_day$day%02d.parquet", month)
+        val t0 = System.nanoTime()
+        val touched = IncrementStream.runDailyCycle(
+          spark, dir, watch, sink, ckpt, wh, "mart", "uol_soak")
+        times(day) = (System.nanoTime() - t0) / 1e9
+        assert(touched.contains(month), s"day $day missed month $month")
+        allTouched ++= touched
+        // (a) after EVERY cycle: no partition ever holds more than 1 file
+        for (m <- allTouched)
+          assert(filesIn(m) <= 1, s"day $day: month $m has ${filesIn(m)} files")
+        historyRead(day) = rec.take(spark).flatMap(_.files)
+          .count(_.contains("/mart/uol_soak/"))
+      }
     }
     // the 30 days reassemble the 30 months' worth of the batch feed
     val batchN = Feeds.orderFeed(spark, dir)
       .where(date_format(col("date_time"), "yyyy-MM").isin(months: _*))
       .count()
     assert(wh.read("mart", "uol_soak").count() == batchN)
+    // (c) flat read set, count-based: each cycle's merge opens at most one
+    // history file per month it touched (one month a day here) — the
+    // count does not grow while history grows 30×
+    assert(historyRead.forall(_ <= 1),
+      s"merge history files read per cycle: ${historyRead.mkString(", ")}")
     // (b) flat cost: the median of the last 10 cycles must not exceed the
     // median of cycles 1-10 (day 0 pays stream setup) by more than the
     // shared-JVM noise allowance — linear-in-history growth would show as
