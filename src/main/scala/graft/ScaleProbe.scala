@@ -314,6 +314,7 @@ object ScaleProbe {
     }
     time(src) // warm code paths
     val t1 = time(src)
+    time(dst) // untimed pass, so both ratios compare steady-state runs
     val tN = time(dst)
     println(f"[scale-part] ${"query"}%-24s 1x(s)   ${copies}x(s)  ratio " +
       "(l_partkey shifted: constant per-part co-purchase degree)")

@@ -1,7 +1,9 @@
 package graft.catalog
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.col
 
 /** The staging/mart warehouse layer — Spark-native replacement for the
   * reference's two PostgreSQL schemas and their DDL verbs (SURVEY §2.1):
@@ -15,11 +17,13 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   *  - S11 ALTER ADD COLUMN            → schema evolution by projection
   *
   * Tables are parquet under `root/<db>/<table>` — the lake layout that maps
-  * 1:1 onto a production metastore; every write goes through the normal
-  * committer so concurrent readers never see partial output. Idempotent
-  * re-runs (the reference's one stated correctness property,
-  * /root/reference/README.md:20-22) hold because every layer is a pure
-  * overwrite of its inputs.
+  * 1:1 onto a production metastore. Idempotent re-runs (the reference's
+  * one stated correctness property, /root/reference/README.md:20-22) hold
+  * because every layer is a pure overwrite of its inputs, committed by ONE
+  * protocol: every write verb first runs [[begin]] (heal a crashed swap);
+  * whole-table rewrites commit through [[swap]], partition rewrites
+  * through [[rewritePartitions]]; only `append` and the catalog-bound
+  * bucketed verbs write in place.
   */
 class Warehouse(spark: SparkSession, root: String) {
 
@@ -58,9 +62,12 @@ class Warehouse(spark: SparkSession, root: String) {
   private def uncacheSchema(db: String, table: String): Unit =
     schemaCache.remove(s"$db/$table")
 
+  /** Full refresh through [[swap]]: the new copy is written before the
+    * live path changes, so `df` may read the very table it replaces (e.g.
+    * a catchup accumulator folding over itself). */
   def overwrite(db: String, table: String, df: DataFrame): Unit = {
-    uncacheSchema(db, table)
-    df.write.mode(SaveMode.Overwrite).parquet(path(db, table))
+    begin(db, table)
+    replace(db, table, df, Nil)
   }
 
   /** Overwrite laid out as one directory per `partitionCol` value — the
@@ -80,14 +87,12 @@ class Warehouse(spark: SparkSession, root: String) {
     * month, no stragglers of tiny files) is unchanged. */
   def overwritePartitioned(db: String, table: String, df: DataFrame,
                            partitionCol: String): Unit = {
-    uncacheSchema(db, table)
-    df.repartition(org.apache.spark.sql.functions.col(partitionCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-      .parquet(path(db, table))
+    begin(db, table)
+    replace(db, table, df, Seq(partitionCol))
   }
 
   def append(db: String, table: String, df: DataFrame): Unit = {
-    uncacheSchema(db, table)
+    begin(db, table)
     df.write.mode(SaveMode.Append).parquet(path(db, table))
   }
 
@@ -127,14 +132,13 @@ class Warehouse(spark: SparkSession, root: String) {
   def readRange(db: String, table: String, partitionCol: String,
                 lo: String, hi: String): DataFrame = {
     val df = readPhysical(db, table)
-      .where(org.apache.spark.sql.functions.col(partitionCol)
-        .between(lo, hi))
+      .where(col(partitionCol).between(lo, hi))
     val layoutCols = df.columns.filter(_.startsWith(Warehouse.PartPrefix))
     df.drop(layoutCols.toIndexedSeq: _*)
   }
 
-  private def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-  private def fsOf(p: org.apache.hadoop.fs.Path) =
+  private def hPath(s: String) = new Path(s)
+  private def fsOf(p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Existence through the same Hadoop FileSystem handle the swap/merge
@@ -157,7 +161,7 @@ class Warehouse(spark: SparkSession, root: String) {
   def bucketedOverwrite(db: String, table: String, df: DataFrame,
                         bucketCol: String, n: Int,
                         moreCols: String*): Unit = {
-    uncacheSchema(db, table)
+    begin(db, table)
     df.write.mode(SaveMode.Overwrite)
       .format("parquet")
       .option("path", path(db, table))
@@ -184,7 +188,7 @@ class Warehouse(spark: SparkSession, root: String) {
   def bucketedAppend(db: String, table: String, df: DataFrame,
                      bucketCol: String, n: Int,
                      moreCols: String*): Unit = {
-    uncacheSchema(db, table)
+    begin(db, table)
     df.write.mode(SaveMode.Append)
       .format("parquet")
       .option("path", path(db, table))
@@ -213,19 +217,18 @@ class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** Read a small control file (e.g. the streaming ingest's commit
-    * manifest), healing a crash that left only the `.__bak` copy from
-    * [[writeSmallFileAtomic]]'s swap. Hadoop FileSystem, same handle as
-    * the table paths — a java.io.File read would be always-missing on
-    * HDFS/object-store roots and silently reset the manifest (r16
-    * advice: the hwm file had exactly that defect). Shares
+    * manifest), first healing a crash that left only the `.__bak` copy
+    * from [[writeSmallFileAtomic]]'s swap. Hadoop FileSystem, same handle
+    * as the table paths — a java.io.File read would be always-missing on
+    * HDFS/object-store roots and silently reset the manifest (r16 advice:
+    * the hwm file had exactly that defect). Shares
     * [[writeSmallFileAtomic]]'s SINGLE-WRITER contract: the `.__bak` heal
     * must never race a live swap, so only the writing process may call
     * this, between (not during) its own writes. */
   def readSmallFile(pathStr: String): Option[String] = {
     val live = hPath(pathStr)
     val fs = fsOf(live)
-    val bak = hPath(pathStr + ".__bak")
-    if (!fs.exists(live) && fs.exists(bak)) renameOrThrow(fs, bak, live)
+    heal(live, hPath(pathStr + ".__bak"))
     if (!fs.exists(live)) None
     else {
       val in = fs.open(live)
@@ -239,9 +242,8 @@ class Warehouse(spark: SparkSession, root: String) {
     }
   }
 
-  /** Atomically replace a small control file: temp write, live → `.__bak`,
-    * temp → live, drop bak — the [[writeSwap]] idiom at file grain. The
-    * live rename is the single commit point: a crash mid-sequence leaves
+  /** Atomically replace a small control file through [[swap]] at file
+    * grain (`<file>.__tmp`, `<file>.__bak`): a crash mid-sequence leaves
     * either the old content (possibly parked under `.__bak`, healed by
     * [[readSmallFile]]) or the new, never a torn in-place write (the r16
     * verdict's truncating-hwm defect).
@@ -252,98 +254,15 @@ class Warehouse(spark: SparkSession, root: String) {
     * satisfies both — one driver, reads and writes serialized per batch).
     * A foreign reader racing the swap could heal `.__bak` back to live
     * between the two renames and defeat the tmp → live commit; that race
-    * is outside this contract, and the recovery below reports rather than
-    * assumes its own success. */
+    * is outside this contract, and [[swap]] reports rather than assumes
+    * the success of its own recovery. */
   def writeSmallFileAtomic(pathStr: String, content: String): Unit = {
     val live = hPath(pathStr)
-    val fs = fsOf(live)
-    val tmp = hPath(pathStr + ".__tmp")
     val bak = hPath(pathStr + ".__bak")
-    fs.delete(tmp, true)
-    fs.mkdirs(live.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    fs.delete(bak, true)
-    val had = fs.exists(live)
-    if (had) renameOrThrow(fs, live, bak)
-    if (!fs.rename(tmp, live)) {
-      // recovery is itself a rename that can fail (e.g. something already
-      // re-created live) — report what actually happened, don't claim
-      // "restored" unconditionally (r17 advice)
-      val restored = had && fs.rename(bak, live)
-      val state =
-        if (restored) "original restored"
-        else if (had) "RECOVERY RENAME ALSO FAILED; original at " + bak
-        else "no prior content existed"
-      throw new java.io.IOException(
-        s"atomic write: rename $tmp -> $live failed; $state")
-    }
-    fs.delete(bak, true)
-  }
-
-  /** Write `df` to a hidden temp path next to the table, then swap it into
-    * place (current → `.bak`, temp → live, drop `.bak`). The merged data is
-    * DURABLY on the filesystem before the live path is touched — unlike the
-    * previous localCheckpoint-then-overwrite-in-place, which kept the only
-    * copy in non-replicated executor storage while the target was being
-    * cleared (executor loss ⇒ table destroyed, on a real cluster). Uses the
-    * Hadoop FileSystem API, so the same swap works on HDFS/object-store
-    * paths; rename is atomic per-path on HDFS and a cheap move locally. */
-  private def bakPath(db: String, table: String) =
-    hPath(s"$root/$db/.${table}__swap_bak")
-
-  /** Rename checking the boolean result — the Hadoop API reports many
-    * failures (missing parent, cross-FS, existing destination) as `false`
-    * rather than throwing, and ignoring that is how a swap destroys the
-    * only surviving copy. */
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-                            src: org.apache.hadoop.fs.Path,
-                            dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"swap: rename $src -> $dst failed")
-
-  private def writeSwap(db: String, table: String, df: DataFrame)(
-      write: (DataFrame, String) => Unit): Unit = {
-    val target = hPath(path(db, table))
-    val fs = fsOf(target)
-    val tmp = hPath(s"$root/$db/.${table}__swap_tmp")
-    val bak = bakPath(db, table)
-    fs.delete(tmp, true)
-    write(df, tmp.toString)
-    fs.delete(bak, true)
-    val hadTarget = fs.exists(target)
-    if (hadTarget) renameOrThrow(fs, target, bak)
-    if (!fs.rename(tmp, target)) {
-      // never leave no live path: put the original back before failing
-      if (hadTarget) fs.rename(bak, target)
-      throw new java.io.IOException(
-        s"swap: rename $tmp -> $target failed; original restored")
-    }
-    // drop the backup only once the new live copy is confirmed in place
-    if (fs.exists(target)) fs.delete(bak, true)
-  }
-
-  /** Heal a crash that hit between writeSwap's two renames (live path gone,
-    * `.bak` still holding the previous table): restore the backup. Called on
-    * merge entry so the exists() check never mistakes a mid-swap crash for a
-    * missing table (which would overwrite history with just the updates). */
-  private def recoverSwap(db: String, table: String): Unit = {
-    val target = hPath(path(db, table))
-    val fs = fsOf(target)
-    val bak = bakPath(db, table)
-    if (!fs.exists(target) && fs.exists(bak)) renameOrThrow(fs, bak, target)
-  }
-
-  /** Full refresh through the temp-write + swap path — for callers whose
-    * replacement frame READS the current table (e.g. a catchup accumulator
-    * folding over itself): plain overwrite would clear the files out from
-    * under the scan; here the new copy is fully written before the live
-    * path changes. */
-  def overwriteAtomic(db: String, table: String, df: DataFrame): Unit = {
-    uncacheSchema(db, table)
-    recoverSwap(db, table)
-    writeSwap(db, table, df) { (d, p) =>
-      d.write.mode(SaveMode.Overwrite).parquet(p)
+    heal(live, bak)
+    swap(live, hPath(pathStr + ".__tmp"), bak) { tmp =>
+      val out = fsOf(tmp).create(tmp, true) // creates the parent dirs too
+      try out.write(content.getBytes("UTF-8")) finally out.close()
     }
   }
 
@@ -352,34 +271,25 @@ class Warehouse(spark: SparkSession, root: String) {
     * rows with no match are appended. The reference's motivating case is the
     * increment status backfill (load_inc_f_table.sql:7-10), which as a
     * full-table UPDATE+INSERT rewrites ALL of history every day; merge
-    * rewrites once and appends.
-    *
-    * The merged frame is written to a temp path and swapped in
-    * ([[writeSwap]]) — readers of the old table keep a consistent snapshot.
-    * A crash between the swap's two renames leaves the table parked at its
-    * `.bak` path; [[recoverSwap]] restores it on the next merge before the
-    * exists() check, so history is never mistaken for a missing table. The
-    * unrecoverable window is a crash inside a single rename — atomic on
-    * HDFS per-path, not guaranteed on every object store. */
+    * rewrites once and appends. The merged frame commits through [[swap]],
+    * so readers of the old table keep a consistent snapshot; [[begin]]
+    * heals a table a crashed swap parked at `.bak` before the exists()
+    * check, so history is never mistaken for a missing table. */
   def merge(db: String, table: String, updates: DataFrame,
             keys: Seq[String]): Unit = {
-    uncacheSchema(db, table)
-    recoverSwap(db, table)
-    if (!exists(db, table)) { overwrite(db, table, updates); return }
+    begin(db, table)
+    if (!exists(db, table)) { replace(db, table, updates, Nil); return }
     // A flat merge on a partitioned table would silently rewrite it WITHOUT
     // its layout (the gp_ column is stripped by read) — refuse loudly.
-    val physical = readPhysical(db, table)
-    if (physical.columns.exists(_.startsWith(Warehouse.PartPrefix)))
+    val target = readPhysical(db, table)
+    val layout = target.columns.filter(_.startsWith(Warehouse.PartPrefix))
+    if (layout.nonEmpty)
       throw new IllegalArgumentException(
-        s"$db.$table is partitioned (${physical.columns.filter(
-          _.startsWith(Warehouse.PartPrefix)).mkString(",")}); " +
+        s"$db.$table is partitioned (${layout.mkString(",")}); " +
         "use mergePartitioned so the layout and partition pruning survive")
-    val target = read(db, table)
     val kept = target.join(
       updates.select(keys.map(updates.col): _*), keys, "left_anti")
-    writeSwap(db, table, kept.unionByName(updates)) { (df, p) =>
-      df.write.mode(SaveMode.Overwrite).parquet(p)
-    }
+    replace(db, table, kept.unionByName(updates), Nil)
   }
 
   /** Small-file COMPACTION — the maintenance pass every fact table fed by
@@ -388,157 +298,55 @@ class Warehouse(spark: SparkSession, root: String) {
     * FILE COUNT (driver-side listings, task-per-file scheduling) becomes
     * the bottleneck before data volume does.
     *
-    * Flat tables rewrite into `nFiles` files; tables with a `gp_` layout
-    * column rewrite into ONE file per partition (hash-repartitioning on
-    * the layout column puts each partition's rows in exactly one task) —
-    * row set identical, partition layout and pruning preserved, only the
-    * file count changes (asserted in WarehouseSpec). Both go through the
-    * durable temp-write + swap, so readers keep a consistent snapshot and
-    * a crash never leaves a half-compacted table. Production would size
-    * by bytes (`maxRecordsPerFile`); the rewrite shape is the same.
-    *
-    * BUCKETED tables are refused (same guard class as the flat-merge
-    * refusal on partitioned tables): their bucket ids live in the file
-    * NAMES plus a catalog entry, so a path-level rewrite would silently
-    * break the co-located-join contract. */
-  def compact(db: String, table: String, nFiles: Int = 1): Unit = {
-    // catalog check first (names the right remedy), then the filesystem
-    // check — bucket ids live in the FILE NAMES (`part-…_00003.c000…`), so
-    // a fresh session with an empty in-memory catalog still refuses to
-    // rewrite a table another session bucketed. Recursive: this is a
-    // deliberate whole-table rewrite, so one full-tree listing is cheap
-    // insurance against nested externally-bucketed files.
-    if (spark.catalog.tableExists(catalogName(db, table)) ||
-        hasBucketedFiles(db, table, recursive = true))
-      throw new IllegalArgumentException(
-        s"$db.$table is a bucketed table; compacting it path-level " +
-        "would break its bucket layout — rewrite via bucketedOverwrite")
-    uncacheSchema(db, table)
-    recoverSwap(db, table)
+    * Flat tables rewrite into one file; tables with `gp_` layout columns
+    * rewrite into ONE file per partition (hash-repartitioning on ALL the
+    * layout columns puts each partition's rows in exactly one task, and
+    * keeps every level of a nested layout) — row set identical, partition
+    * layout and pruning preserved, only the file count changes (asserted in
+    * WarehouseSpec). The rewrite commits through [[swap]], so readers keep
+    * a consistent snapshot and a crash never leaves a half-compacted table.
+    * Production would size by bytes (`maxRecordsPerFile`); the rewrite
+    * shape is the same. Bucketed tables are refused ([[refuseBucketed]]
+    * over the whole file tree — a deliberate whole-table rewrite can
+    * afford the full listing). */
+  def compact(db: String, table: String): Unit = {
+    begin(db, table)
+    val p = hPath(path(db, table))
+    val files = fsOf(p).listFiles(p, true)
+    refuseBucketed(db, table,
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next()).toSeq)
     val physical = readPhysical(db, table)
     val partCols = physical.columns.filter(_.startsWith(Warehouse.PartPrefix))
       .toIndexedSeq
-    if (partCols.isEmpty)
-      writeSwap(db, table, physical.repartition(nFiles)) { (d, p) =>
-        d.write.mode(SaveMode.Overwrite).parquet(p)
-      }
-    else
-      // ALL layout columns: repartitioning/partitionBy on just the first
-      // would silently flatten the remaining levels of a nested layout
-      writeSwap(db, table,
-          physical.repartition(
-            partCols.map(org.apache.spark.sql.functions.col): _*)) {
-        (d, p) =>
-          d.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(p)
-      }
+    replace(db, table,
+      if (partCols.isEmpty) physical.repartition(1) else physical, partCols)
   }
 
   /** Partition-scoped compaction — the maintenance shape the DAILY cycle
     * can afford at 100 TB: [[compact]] rewrites the whole table (fine as a
     * one-shot), but a nightly pass must touch only the partitions the
     * day's increments fragmented. Each partition in `values` whose
-    * directory holds ≥ `minFiles` data files is rewritten to one file via
-    * the same temp-copy + dynamic-partition-overwrite as
-    * [[mergePartitioned]]; partitions already compact (the normal case —
+    * directory holds two or more data files is rewritten to one file by
+    * [[rewritePartitions]]; partitions already compact (the normal case —
     * [[mergePartitioned]] itself lands one file per partition) are LEFT
     * UNTOUCHED, so the pass is a cheap no-op unless an external
-    * appender/writer fragmented something. Returns the partitions it
-    * actually rewrote. */
+    * appender/writer fragmented something. The bucketed-table guard reads
+    * only listings the pass makes anyway: the table's top level and each
+    * touched partition. Returns the partitions it actually rewrote. */
   def compactPartitions(db: String, table: String, partitionCol: String,
-                        values: Seq[String],
-                        minFiles: Int = 2): Seq[String] = {
-    if (spark.catalog.tableExists(catalogName(db, table)) ||
-        hasBucketedFiles(db, table))
-      throw new IllegalArgumentException(
-        s"$db.$table is a bucketed table; compacting it path-level " +
-        "would break its bucket layout — rewrite via bucketedOverwrite")
-    val frag = values.filter { v =>
-      val d = partitionDir(db, table, partitionCol, v)
-      val fs = fsOf(d)
-      fs.exists(d) && {
-        val sts = fs.listStatus(d).toIndexedSeq
-        // nested-bucketed-files guard, free: this listing happens anyway
-        assertNotBucketed(db, table, s"$partitionCol=$v", sts)
-        sts.count(_.getPath.getName.startsWith("part-")) >= minFiles
-      }
-    }
-    if (frag.nonEmpty) {
-      val pc = org.apache.spark.sql.functions.col(partitionCol)
-      val tmp = hPath(s"$root/$db/.${table}__compact_tmp")
-      val fs = fsOf(tmp)
-      fs.delete(tmp, true)
-      readPhysical(db, table).where(pc.isin(frag: _*))
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      spark.read.parquet(tmp.toString)
-        .repartition(pc)
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(path(db, table))
-      fs.delete(tmp, true)
-    }
+                        values: Seq[String]): Seq[String] = {
+    begin(db, table)
+    val listed = values.map(v =>
+      v -> listing(partitionDir(db, table, partitionCol, v)))
+    refuseBucketed(db, table,
+      listing(hPath(path(db, table))) ++ listed.flatMap(_._2))
+    val frag = listed.collect { case (v, sts)
+      if sts.count(_.getPath.getName.startsWith("part-")) >= 2 => v }
+    if (frag.nonEmpty)
+      rewritePartitions(db, table, partitionCol, readPhysical(db, table)
+        .where(col(partitionCol).isin(frag: _*)), "compact")
     frag
   }
-
-  /** Spark bucketed outputs carry the bucket id in the file name
-    * (`part-NNNNN-<uuid>_BBBBB.cNNN…`, the `_BBBBB` suffix before the file
-    * counter) — detectable without any catalog state. Bucketed tables are
-    * FLAT (bucket files sit directly under the table dir), so ONE
-    * top-level listing decides the common case — the r6 recursive walk
-    * made every nightly no-op compact pass pay a full-tree listing on a
-    * partitioned table. The top-level check has a FALSE-NEGATIVE
-    * direction, though: an external writer that bucketed files under
-    * NESTED (e.g. partition) dirs slips past it, and a path-level rewrite
-    * would silently destroy that bucket layout. Each caller closes it at
-    * its own price point: [[compact]] — a deliberate whole-table rewrite —
-    * pays one `recursive = true` walk (trivial next to the rewrite);
-    * [[compactPartitions]] — the nightly pass — piggybacks
-    * [[assertNotBucketed]] on the per-partition listing it already does,
-    * so the no-op path stays one listing per touched partition. A false
-    * positive in either direction fails LOUD (the guard names the
-    * remedy); an operator who really wants a path-level rewrite of such a
-    * table can read + overwrite it explicitly. */
-  private val bucketFileName = ".*_\\d{5}\\.c\\d+.*".r
-  private def isBucketFile(st: org.apache.hadoop.fs.FileStatus): Boolean = {
-    val name = st.getPath.getName
-    st.isFile && name.startsWith("part-") && bucketFileName.matches(name)
-  }
-  private def hasBucketedFiles(db: String, table: String,
-                               recursive: Boolean = false): Boolean = {
-    val p = hPath(path(db, table))
-    val fs = fsOf(p)
-    if (!fs.exists(p)) return false
-    if (fs.listStatus(p).exists(isBucketFile)) return true
-    if (!recursive) return false
-    val it = fs.listFiles(p, true)
-    var found = false
-    while (!found && it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      found = name.startsWith("part-") && bucketFileName.matches(name)
-    }
-    found
-  }
-
-  /** Refuse a path-level rewrite of `sts` if any listed file carries a
-    * bucket id — the nested-bucketed-files guard of [[compactPartitions]],
-    * at zero extra IO (the statuses were already listed to count files). */
-  private def assertNotBucketed(db: String, table: String, where: String,
-                                sts: Seq[org.apache.hadoop.fs.FileStatus])
-      : Unit =
-    if (sts.exists(isBucketFile))
-      throw new IllegalArgumentException(
-        s"$db.$table holds bucketed files under $where; compacting it " +
-        "path-level would break its bucket layout — rewrite via " +
-        "bucketedOverwrite")
-
-  /** Directory of one partition value, named the way Spark's partitioned
-    * writer names it: the value escaped, a null (or empty) value mapped to
-    * `__HIVE_DEFAULT_PARTITION__`. */
-  private def partitionDir(db: String, table: String, partitionCol: String,
-                           value: String) =
-    hPath(s"${path(db, table)}/" +
-      ExternalCatalogUtils.getPartitionPathString(partitionCol, value))
 
   /** Directory-addressed merge for tables partitioned on `partitionCol` —
     * the 100 TB shape: the partition values present in `updates` are
@@ -547,29 +355,22 @@ class Warehouse(spark: SparkSession, root: String) {
     * scan lists and opens only the touched partitions' files; untouched
     * partitions are never listed, opened or replaced. Touched values with
     * no directory yet (a new month) contribute no history. The merged
-    * partitions are then rewritten by dynamic partition overwrite. An
-    * increment touching one day of a 5-year fact table reads and rewrites
-    * 1/1800th of it. Asserted in WarehouseSpec by the files the merge's
-    * scans open and by file identity of untouched partitions.
-    *
-    * Durability: the merged affected partitions are first written to a temp
-    * path (a real parquet copy, not executor-local blocks); the dynamic
-    * partition overwrite then reads FROM the temp copy, so the target scan
-    * and target write never race, and a failure mid-overwrite leaves the
-    * temp copy on disk for recovery. The temp dir is removed on success.
+    * partitions are then committed by [[rewritePartitions]]. An increment
+    * touching one day of a 5-year fact table reads and rewrites 1/1800th
+    * of it. Asserted in WarehouseSpec by the files the merge's scans open
+    * and by file identity of untouched partitions. Like every write verb
+    * it heals a crashed swap first ([[begin]]), so a table parked at `.bak`
+    * is merged into, not replaced by the updates.
     *
     * Returns the touched partition values (as strings, the form Spark
     * formats partition paths from), sorted, null first. */
   def mergePartitioned(db: String, table: String, updates: DataFrame,
                        keys: Seq[String], partitionCol: String): Seq[String] = {
-    uncacheSchema(db, table)
-    val pc = org.apache.spark.sql.functions.col(partitionCol)
-    val touched = updates.select(pc.cast("string")).distinct()
+    begin(db, table)
+    val touched = updates.select(col(partitionCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq.sortBy(Option(_))
     if (!exists(db, table)) {
-      updates.repartition(pc)
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-        .parquet(path(db, table))
+      replace(db, table, updates, Seq(partitionCol))
       return touched
     }
     val dirs = touched.map(partitionDir(db, table, partitionCol, _))
@@ -580,23 +381,148 @@ class Warehouse(spark: SparkSession, root: String) {
         .parquet(dirs.map(_.toString): _*)
         .join(updates.select(keys.map(updates.col): _*), keys, "left_anti")
         .unionByName(updates)
+    rewritePartitions(db, table, partitionCol, merged, "merge")
+    touched
+  }
 
-    val tmp = hPath(s"$root/$db/.${table}__merge_tmp")
+  /** Directory of one partition value, named the way Spark's partitioned
+    * writer names it: the value escaped, a null (or empty) value mapped to
+    * `__HIVE_DEFAULT_PARTITION__`. */
+  private def partitionDir(db: String, table: String, partitionCol: String,
+                           value: String) =
+    hPath(s"${path(db, table)}/" +
+      ExternalCatalogUtils.getPartitionPathString(partitionCol, value))
+
+  /** The statuses directly under `p`; none when it does not exist. */
+  private def listing(p: Path): Seq[FileStatus] = {
+    val fs = fsOf(p)
+    if (fs.exists(p)) fs.listStatus(p).toIndexedSeq else Nil
+  }
+
+  // ---- the commit protocol ------------------------------------------
+
+  /** Writer prologue, run first by every write verb: drop the schema memo
+    * and [[heal]] a table that a crashed [[swap]] left parked at
+    * `.<table>__swap_bak` — so no verb (an exists() check above all)
+    * mistakes a mid-swap crash for a missing table and rewrites history
+    * as just its own input. */
+  private def begin(db: String, table: String): Unit = {
+    uncacheSchema(db, table)
+    heal(hPath(path(db, table)), bakPath(db, table))
+  }
+
+  private def bakPath(db: String, table: String) =
+    hPath(s"$root/$db/.${table}__swap_bak")
+
+  /** Restore `live` from `bak` when a crash between [[swap]]'s two renames
+    * left only the backup; a no-op otherwise. */
+  private def heal(live: Path, bak: Path): Unit = {
+    val fs = fsOf(live)
+    if (!fs.exists(live) && fs.exists(bak) && !fs.rename(bak, live))
+      throw new java.io.IOException(s"heal: rename $bak -> $live failed")
+  }
+
+  /** Replace `live` with what `write` puts at `tmp`: temp write, live →
+    * `bak`, temp → live, drop `bak`. The new copy is DURABLY on the
+    * filesystem before the live path is touched (not executor-local
+    * blocks, which executor loss would take with the table), and the
+    * temp → live rename is the single commit point. Hadoop FileSystem
+    * API, so the same swap works on HDFS/object-store paths; rename is
+    * atomic per-path on HDFS and a cheap move locally.
+    *
+    * Every rename is checked — the Hadoop API reports many failures
+    * (missing source, cross-FS, existing destination) as `false` or an
+    * exception, and ignoring that is how a swap destroys the only
+    * surviving copy. A failed commit puts the original back, and the
+    * recovery, itself a rename that can fail, reports what actually
+    * happened rather than claiming "restored". A crash between the two
+    * renames leaves `live` parked at `bak`, which [[heal]] restores. */
+  private[catalog] def swap(live: Path, tmp: Path, bak: Path)(
+      write: Path => Unit): Unit = {
+    val fs = fsOf(live)
+    fs.delete(tmp, true)
+    write(tmp)
+    fs.delete(bak, true)
+    val had = fs.exists(live)
+    if (had && !fs.rename(live, bak))
+      throw new java.io.IOException(s"swap: rename $live -> $bak failed")
+    val commit = scala.util.Try(fs.rename(tmp, live))
+    if (!commit.getOrElse(false)) {
+      val state =
+        if (!had) "no prior copy existed"
+        else if (scala.util.Try(fs.rename(bak, live)).getOrElse(false))
+          "original restored"
+        else s"RECOVERY RENAME ALSO FAILED; original at $bak"
+      val why = if (fs.exists(tmp)) "" else " (the write left no temp copy)"
+      throw new java.io.IOException(
+        s"swap: rename $tmp -> $live failed$why; $state",
+        commit.failed.toOption.orNull)
+    }
+    fs.delete(bak, true)
+  }
+
+  /** Whole-table rewrite through [[swap]] via `.<table>__swap_tmp`: `df`
+    * written flat, or — with layout columns — hash-repartitioned on them
+    * and laid out one directory per value (one file per partition). */
+  private def replace(db: String, table: String, df: DataFrame,
+                      partCols: Seq[String]): Unit =
+    swap(hPath(path(db, table)), hPath(s"$root/$db/.${table}__swap_tmp"),
+         bakPath(db, table)) { tmp =>
+      val w =
+        if (partCols.isEmpty) df.write
+        else df.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
+      w.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    }
+
+  /** Replace exactly the `partitionCol` partitions that `rows` covers with
+    * `rows`, leaving every other partition's files untouched: a durable
+    * temp copy at `.<table>__<tag>_tmp` (a real parquet copy, not
+    * executor-local blocks), read back with `rows`' own schema (no
+    * inference job), repartitioned on the layout column so each rewritten
+    * partition lands as ONE file, then a dynamic partition overwrite. The
+    * overwrite reads FROM the temp copy, so a target scan inside `rows`
+    * and the target write never race, and a failure mid-overwrite leaves
+    * the temp copy on disk for recovery; it is removed on success. */
+  private def rewritePartitions(db: String, table: String,
+                                partitionCol: String, rows: DataFrame,
+                                tag: String): Unit = {
+    val tmp = hPath(s"$root/$db/.${table}__${tag}_tmp")
     val fs = fsOf(tmp)
     fs.delete(tmp, true)
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // repartition on the layout column so each rewritten partition lands as
-    // ONE file — without it every merge re-fragments the touched months
-    // into task-count files (same small-file debt overwritePartitioned
-    // avoids; [[compact]] stays the healer for externally-written tables)
-    spark.read.schema(merged.schema).parquet(tmp.toString)
-      .repartition(pc)
+    rows.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    spark.read.schema(rows.schema).parquet(tmp.toString)
+      .repartition(col(partitionCol))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path(db, table))
     fs.delete(tmp, true)
-    touched
+  }
+
+  /** Refuse a path-level rewrite of a BUCKETED table — the guard of both
+    * [[compact]] and [[compactPartitions]] (same class as the flat-merge
+    * refusal on partitioned tables). Bucket ids live in a catalog entry
+    * AND in the file names (`part-NNNNN-<uuid>_BBBBB.cNNN…`, the `_BBBBB`
+    * suffix before the file counter), so a path-level rewrite would
+    * silently break the co-located-join contract. The file-name check
+    * still refuses in a fresh session whose in-memory catalog is empty,
+    * and catches bucketed files an external writer nested under partition
+    * dirs when `files` covers those dirs: each caller passes the listing
+    * it can afford. A false positive fails LOUD and names the remedy; an
+    * operator who really wants a path-level rewrite of such a table can
+    * read + overwrite it explicitly. */
+  private def refuseBucketed(db: String, table: String,
+                             files: Seq[FileStatus]): Unit =
+    if (spark.catalog.tableExists(catalogName(db, table)) ||
+        files.exists(isBucketFile))
+      throw new IllegalArgumentException(
+        s"$db.$table is a bucketed table; compacting it path-level " +
+        "would break its bucket layout — rewrite via bucketedOverwrite")
+
+  private val bucketFileName = ".*_\\d{5}\\.c\\d+.*".r
+  private def isBucketFile(st: FileStatus): Boolean = {
+    val name = st.getPath.getName
+    st.isFile && name.startsWith("part-") && bucketFileName.matches(name)
   }
 }
 

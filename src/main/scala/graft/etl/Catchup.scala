@@ -61,17 +61,17 @@ object Catchup {
       case _ => ()
     }
 
-  /** Durable per-step materializer: atomically overwrite a warehouse table
-    * with the accumulator and read it back. Each fold step's plan is then a
+  /** Durable per-step materializer: overwrite a warehouse table with the
+    * accumulator and read it back. Each fold step's plan is then a
     * constant-depth parquet scan (no lineage growth, nothing pinned in
     * executor storage, survives executor loss — the long-catchup shape on a
-    * real cluster). [[graft.catalog.Warehouse.overwriteAtomic]] writes the
-    * new copy to a temp path BEFORE swapping, so the write that reads the
+    * real cluster). [[graft.catalog.Warehouse.overwrite]] writes the new
+    * copy to a temp path BEFORE swapping it in, so the write that reads the
     * current table never clears files out from under its own scan. Pair
     * with `release = _ => ()` (nothing to unpersist). */
   def warehouseMaterializer(wh: graft.catalog.Warehouse, db: String,
                             table: String): DataFrame => DataFrame =
-    df => { wh.overwriteAtomic(db, table, df); wh.read(db, table) }
+    df => { wh.overwrite(db, table, df); wh.read(db, table) }
 
   /** One catchup step: drop rows the accumulated log already has (re-run
     * idempotency), id the rest from the accumulated count, append. The

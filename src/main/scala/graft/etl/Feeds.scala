@@ -86,12 +86,25 @@ object Feeds {
     * window is partitioned (no global sort) — scales. */
   def orderFeed(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val li0 = table(spark, dir, "lineitem")
     val dedupW = Window
       .partitionBy("l_orderkey", "l_linenumber")
       .orderBy("l_partkey", "l_suppkey", "l_extendedprice", "l_quantity",
                "l_discount")
-    val li = li0.withColumn("line_seq", row_number().over(dedupW))
+    orderFeedOf(spark, dir,
+      table(spark, dir, "lineitem").withColumn("line_seq",
+        row_number().over(dedupW)),
+      "l_orderkey", "l_linenumber", "line_seq")
+  }
+
+  /** The order-feed projection of a (possibly streaming) lineitem frame
+    * `li`: joined to the dimension tables and projected into the
+    * `user_order_log_temp` shape, `uniq_id` being `idParts` joined by `-`.
+    * One implementation, two execution modes: [[orderFeed]] keys by
+    * (orderkey, linenumber, line_seq); the increment stream
+    * (`streaming.IncrementStream`) has no partitioned window to number
+    * lines with and keys by (orderkey, linenumber) only. */
+  def orderFeedOf(spark: SparkSession, dir: String, li: DataFrame,
+                  idParts: String*): DataFrame = {
     val o = table(spark, dir, "orders")
     val c = table(spark, dir, "customer")
     val n = table(spark, dir, "nation")
@@ -104,9 +117,7 @@ object Feeds {
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
       .join(p, col("l_partkey") === col("p_partkey"))
       .select(
-        concat_ws("-", col("l_orderkey").cast("string"),
-                       col("l_linenumber").cast("string"),
-                       col("line_seq").cast("string")).as("uniq_id"),
+        concat_ws("-", idParts.map(col(_).cast("string")): _*).as("uniq_id"),
         col("o_orderdate").as("date_time"),
         col("c_nationkey").cast("int").as("city_id"),
         col("n_name").as("city_name"),

@@ -33,39 +33,8 @@ object IncrementStream {
     // file-source streams watch a DIRECTORY: each parquet file dropped into
     // `watchDir` is one increment delivery
     val liStream = spark.readStream.schema(batchLi.schema).parquet(watchDir)
-    feedOf(liStream, spark, dir)
-  }
-
-  /** The batch orderFeed projection applied to a (possibly streaming)
-    * lineitem DataFrame — one implementation, two execution modes. The
-    * dedup row_number of the batch path needs a partitioned window, which
-    * streams don't allow; the stream variant keys uniq_id by
-    * (orderkey, linenumber) only and documents the restriction. */
-  private def feedOf(li: DataFrame, spark: SparkSession,
-                     dir: String): DataFrame = {
-    val o = Feeds.table(spark, dir, "orders")
-    val c = Feeds.table(spark, dir, "customer")
-    val n = Feeds.table(spark, dir, "nation")
-    val p = Feeds.table(spark, dir, "part")
-    li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .join(p, col("l_partkey") === col("p_partkey"))
-      .select(
-        concat_ws("-", col("l_orderkey").cast("string"),
-                       col("l_linenumber").cast("string")).as("uniq_id"),
-        col("o_orderdate").as("date_time"),
-        col("c_nationkey").cast("int").as("city_id"),
-        col("n_name").as("city_name"),
-        col("o_custkey").cast("long").as("customer_id"),
-        substring(col("c_name"), 1, 8).as("first_name"),
-        expr("substring(c_name, 10)").as("last_name"),
-        col("l_partkey").cast("int").as("item_id"),
-        col("p_name").as("item_name"),
-        floor(col("l_quantity")).cast("long").as("quantity"),
-        col("l_extendedprice").cast("decimal(14,2)").as("payment_amount"),
-        when(col("l_returnflag") === "R", "refunded")
-          .otherwise("shipped").as("status"))
+    // no partitioned window on a stream: uniq_id without the line_seq part
+    Feeds.orderFeedOf(spark, dir, liStream, "l_orderkey", "l_linenumber")
   }
 
   /** One daily-increment run as an `AvailableNow` drain: process every

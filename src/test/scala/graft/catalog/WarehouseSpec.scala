@@ -45,30 +45,61 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("merge recovers a table parked at .bak by a crash mid-swap") {
+    import Warehouse.PartCol
     val root = tmp()
     val wh = new Warehouse(spark, root)
-    val hist = Seq((1L, "shipped"), (2L, "shipped")).toDF("id", "status")
-    wh.overwrite("mart", "f", hist)
-    // simulate a crash between writeSwap's two renames: live path gone,
-    // previous table parked at the .bak path
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/mart/f"),
-                     new org.apache.hadoop.fs.Path(s"$root/mart/.f__swap_bak")))
-    val updates = Seq((2L, "refunded")).toDF("id", "status")
-    wh.merge("mart", "f", updates, Seq("id"))
+    def p(name: String) = new org.apache.hadoop.fs.Path(s"$root/mart/$name")
+    // simulate a crash between the swap's two renames: live path gone,
+    // previous table parked at the .bak path
+    def park(t: String): Unit = assert(fs.rename(p(t), p(s".${t}__swap_bak")))
+    // flat table, flat merge
+    wh.overwrite("mart", "f",
+      Seq((1L, "shipped"), (2L, "shipped")).toDF("id", "status"))
+    park("f")
+    wh.merge("mart", "f", Seq((2L, "refunded")).toDF("id", "status"), Seq("id"))
     val got = wh.read("mart", "f").as[(Long, String)].collect().toSet
     // history row 1 survives — merge did NOT degrade to overwrite(updates)
     assert(got == Set((1L, "shipped"), (2L, "refunded")))
+    assert(!fs.exists(p(".f__swap_bak")))
+    // month-partitioned table, partitioned merge of one month
+    val hist = Seq((1L, "2024-01", 1.0), (2L, "2024-01", 2.0),
+                   (3L, "2024-02", 3.0), (4L, "2024-03", 4.0),
+                   (5L, "2024-03", 5.0), (6L, "2024-04", 6.0))
+    wh.overwritePartitioned("mart", "t", hist.toDF("id", PartCol, "amt"),
+      PartCol)
+    park("t")
+    val update = Seq((7L, "2024-02", 7.0))
+    assert(wh.mergePartitioned("mart", "t", update.toDF("id", PartCol, "amt"),
+      Seq("id"), PartCol) == Seq("2024-02"))
+    assert(wh.readPhysical("mart", "t").select("id", PartCol, "amt")
+      .as[(Long, String, Double)].collect().toSet == (hist ++ update).toSet)
+    assert(!fs.exists(p(".t__swap_bak")))
   }
 
-  test("overwriteAtomic replaces a table from a frame that reads it") {
+  test("a swap whose write leaves no temp copy fails and keeps the original") {
+    val root = tmp()
+    val wh = new Warehouse(spark, root)
+    val rows = Set((1L, "a"), (2L, "b"))
+    wh.overwrite("mart", "s", rows.toSeq.toDF("id", "v"))
+    def p(name: String) = new org.apache.hadoop.fs.Path(s"$root/mart/$name")
+    val e = intercept[java.io.IOException] {
+      wh.swap(p("s"), p(".s__swap_tmp"), p(".s__swap_bak"))(_ => ())
+    }
+    assert(e.getMessage.contains("left no temp copy") &&
+           e.getMessage.contains("original restored"), e.getMessage)
+    assert(wh.read("mart", "s").as[(Long, String)].collect().toSet == rows)
+    assert(!new java.io.File(s"$root/mart/.s__swap_bak").exists())
+  }
+
+  test("overwrite replaces a table from a frame that reads it") {
     val wh = new Warehouse(spark, tmp())
     wh.overwrite("stg", "acc", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    // replacement frame scans the live table — plain overwrite would race
+    // replacement frame scans the live table — an in-place write would race
     val next = wh.read("stg", "acc")
       .unionByName(Seq((3L, "c")).toDF("id", "v"))
-    wh.overwriteAtomic("stg", "acc", next)
+    wh.overwrite("stg", "acc", next)
     assert(wh.read("stg", "acc").as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b"), (3L, "c")))
   }
@@ -367,7 +398,7 @@ class WarehouseSpec extends SparkSpec {
         Seq("2024-01", "2024-02"))
     }
     assert(e.getMessage.contains("bucketedOverwrite"))
-    // whole-table compact's recursive walk refuses it too
+    // whole-table compact's full-tree listing refuses it too
     val e2 = intercept[IllegalArgumentException] { wh.compact("mart", "nb") }
     assert(e2.getMessage.contains("bucket"))
   }
