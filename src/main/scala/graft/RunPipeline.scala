@@ -1,7 +1,6 @@
 package graft
 
 import graft.catalog.{PipelineRunner, Warehouse}
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point equivalent to one reference DAG run
   * (/root/reference/src/dags/ETL_logs_inc.py dag_id='v1'): materializes all
@@ -12,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, root) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(32)
     val t0 = System.nanoTime()
     val wh: Warehouse = PipelineRunner.run(spark, sfDir, root)
     val dt = (System.nanoTime() - t0) / 1e9

@@ -1,5 +1,7 @@
 package graft
 
+import graft.catalog.Warehouse
+import graft.etl.{Retention, Sales}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +18,7 @@ object ScaleProbe {
   /** Probe list = the FULL live registry, derived (alphabetical), never
     * hand-maintained: r13 verdict task 5 — round additions were duplicated
     * here and in [[SparkEntry.newThisRound]], a drift risk every round.
-    * BenchLineSpec pins probe ≡ registry; deriving makes drift impossible.
+    * QueriesIndexSpec pins probe ≡ registry; deriving makes drift impossible.
     * Expected >N ratios are the documented flat-scan/quadratic-by-design
     * exactness baselines beside their blocked/grained production siblings:
     * q_ann_cosine_topk[_fast] (brute force), q_f_customer_retention
@@ -27,6 +29,95 @@ object ScaleProbe {
     * q_multimodal_near_dup — guarded sibling q_multimodal_near_dup_clusters
     * is the production entry). */
   val probeQueries: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
+
+  /** Drops both cache layers so the next timed pass recomputes from
+    * parquet: CacheManager data (persist frames) and every memo entry of
+    * the WHOLE session — not just one dir's (another dir's leftover frames
+    * would otherwise sit in the block manager and evict this pass's
+    * staging cache mid-run) — so 1× and N× pay identical first-touch costs
+    * and a ratio measures the plans, not cache luck. */
+  private def dropCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    Caches.invalidateAll(spark)
+  }
+
+  /** Seconds per query for one cache-cold pass over `qs` on `dir`. Times
+    * `count()`, not the full result, so the ratios stay comparable with
+    * the ones committed in queries_index.json. */
+  private def timeCounts(spark: SparkSession, dir: String,
+                         qs: Seq[String]): Map[String, Double] = {
+    dropCaches(spark)
+    qs.map { q =>
+      val t0 = System.nanoTime()
+      SparkEntry.queries(q)(spark, dir).count()
+      q -> (System.nanoTime() - t0) / 1e9
+    }.toMap
+  }
+
+  /** The warehouse read-back series: one query per mart over a
+    * materialized warehouse at `root`. */
+  private def warehouseQueries(spark: SparkSession,
+                               root: String): Seq[(String, () => DataFrame)] = {
+    val wh = new Warehouse(spark, root)
+    def v2 = wh.read("staging", "user_order_log_v2")
+    def weeks = wh.read("mart", "d_calendar_weeks")
+    def tagged = Retention.withPeriod(v2, weeks)
+    Seq(
+      "w_f_sales" -> (() =>
+        Sales.fSales(wh.read("staging", "user_order_log"),
+                     wh.read("mart", "d_calendar"))),
+      "w_new_customers" -> (() => Retention.newCust(tagged, true)),
+      "w_returned_customers" -> (() => Retention.returnedCust(tagged, true)),
+      "w_refunded_customers" -> (() => Retention.refundedCust(tagged, true)),
+      "w_retention_compact" -> (() =>
+        Retention.retentionCompact(Retention.newCust(tagged, false),
+          Retention.returnedCust(tagged, false),
+          Retention.refundedCust(tagged, false))),
+      "w_f_customer_retention_grain" -> (() =>
+        Retention.fCustomerRetentionGrain(Retention.newCust(tagged, true),
+          Retention.returnedCust(tagged, true),
+          Retention.refundedCust(tagged, true))),
+      // the pruned read path — one month of the 80-month fact through
+      // readRange: lists/opens ~1/80th of the files the full-scan w_*
+      // queries pay for, i.e. the payoff side of the month layout
+      "w_uol_v2_month" -> (() =>
+        wh.readRange("staging", "user_order_log_v2", Warehouse.PartCol,
+                     "1997-01", "1997-01")
+          .groupBy("status")
+          .agg(sum("payment_amount").as("amt"))))
+  }
+
+  /** One streamed substring-ingest cycle (`w_ss_ingest`): split `sfDir`'s
+    * documents into three ascending doc_id ranges, deliver each as one
+    * parquet file into a fresh watch dir, and drain per delivery
+    * ([[graft.streaming.SubstringIngest.runIngestAvailableNow]]) — the
+    * crawler's steady state: check batch against the committed bucketed
+    * index, fold its shingles in, commit. */
+  private def ssIngestCycle(spark: SparkSession, sfDir: String,
+                            root: String): Unit = {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val n = docs.agg(max("doc_id")).head().getLong(0)
+    val wh = new Warehouse(spark, s"$root/wh")
+    val watch = s"$root/watch"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
+    val cuts = Seq(n / 3, 2 * n / 3)
+    for (i <- 0 to 2) {
+      val b = i match {
+        case 0 => docs.where(col("doc_id") <= cuts(0))
+        case 1 => docs.where(col("doc_id") > cuts(0) &&
+                             col("doc_id") <= cuts(1))
+        case _ => docs.where(col("doc_id") > cuts(1))
+      }
+      val tmp = s"$root/.deliver_$i"
+      b.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(watch, s"crawl_$i.parquet"))
+      graft.streaming.SubstringIngest.runIngestAvailableNow(spark, sfDir,
+        watch, s"$root/ckpt", wh, s"$root/results")
+    }
+  }
 
   def makeBig(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {
     // the embedding rotation below is the identity at i = 64 (reintroducing
@@ -94,13 +185,7 @@ object ScaleProbe {
     }
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/graft_sf_x$copies"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(32, "ERROR")
     // events.parquet has shipped as TIMESTAMP(NANOS) and as micros-NTZ;
     // nanosAsLong lets the NANOS vintage load (as raw longs), and
     // Feeds.normalizeEventTs converts either representation identically
@@ -128,28 +213,12 @@ object ScaleProbe {
     makeBig(spark, src, dst, copies)
     println(s"[scale] built ${copies}x dataset at $dst")
 
-    def runAll(dir: String): Map[String, Double] = {
-      // drop BOTH cache layers so every timed pass recomputes from parquet:
-      // CacheManager data (persist frames) and every memo entry of the WHOLE
-      // session — not just this dir's (the other dir's leftover frames
-      // would otherwise sit in the block manager and evict this pass's
-      // staging cache mid-run) — 1× and N× then pay identical first-touch
-      // costs and the ratio measures the plans, not cache luck
-      spark.catalog.clearCache()
-      Caches.invalidateAll(spark)
-      probeQueries
-        .filter(q => only.isEmpty || only(q))
-        .map { q =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(q)(spark, dir).count()
-          q -> (System.nanoTime() - t0) / 1e9
-        }.toMap
-    }
-    runAll(src) // warm code paths
-    val t1 = runAll(src)
-    val tN = runAll(dst)
+    val probed = probeQueries.filter(q => only.isEmpty || only(q))
+    timeCounts(spark, src, probed) // warm code paths
+    val t1 = timeCounts(spark, src, probed)
+    val tN = timeCounts(spark, dst, probed)
     println(f"[scale] ${"query"}%-28s 1x(s)   ${copies}x(s)  ratio")
-    probeQueries.filter(q => only.isEmpty || only(q)).foreach { q =>
+    probed.foreach { q =>
       println(f"[scale] $q%-28s ${t1(q)}%6.2f ${tN(q)}%7.2f ${tN(q) / t1(q)}%6.1f")
     }
     val s1 = t1.values.sum; val sN = tN.values.sum
@@ -160,18 +229,14 @@ object ScaleProbe {
     // (exactly where the r5 small-file regression hid: the pipeline probes
     // never touched the partitioned warehouse read path)
     def runWh(dir: String): (Double, Map[String, Double]) = {
-      def barrier(): Unit = {
-        spark.catalog.clearCache()
-        Caches.invalidateAll(spark)
-      }
-      barrier()
+      dropCaches(spark)
       val rootPath = java.nio.file.Files.createTempDirectory("graft_swh")
       val root = rootPath.toString
       val t0 = System.nanoTime()
       catalog.PipelineRunner.run(spark, dir, root)
       val mat = (System.nanoTime() - t0) / 1e9
-      barrier() // read-backs measure the warehouse parquet alone
-      val times = Bench.warehouseQueries(spark, root).map { case (n, fn) =>
+      dropCaches(spark) // read-backs measure the warehouse parquet alone
+      val times = warehouseQueries(spark, root).map { case (n, fn) =>
         val s = System.nanoTime()
         fn().count()
         n -> (System.nanoTime() - s) / 1e9
@@ -195,9 +260,9 @@ object ScaleProbe {
       val tdc = System.nanoTime()
       streaming.IncrementStream.runDailyCycle(spark, src, watch,
         s"$root/.dc_sink", s"$root/.dc_ckpt",
-        new catalog.Warehouse(spark, root), "staging", "user_order_log_v2")
+        new Warehouse(spark, root), "staging", "user_order_log_v2")
       val dc = (System.nanoTime() - tdc) / 1e9
-      Bench.deleteRecursively(rootPath)
+      Probe.deleteRecursively(rootPath)
       (mat, times + ("w_daily_cycle" -> dc))
     }
     val (m1, w1) = runWh(src)
@@ -259,19 +324,11 @@ object ScaleProbe {
     // distinct's map-side collapse degrades); the shifted builder keeps
     // per-customer depth constant, the way real growth adds customers
     val custQs = Seq("q_order_gaps", "q_cohort_ltv", "q_cohort_retention")
-    def time(dir: String): Map[String, Double] = {
-      spark.catalog.clearCache()
-      Caches.invalidateAll(spark)
-      custQs.map { q =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir).count()
-        q -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-    }
-    time(src) // warm code paths
-    val t1 = time(src)
-    time(dstCust) // untimed pass, so both ratios compare steady-state runs
-    val tN = time(dstCust)
+    timeCounts(spark, src, custQs) // warm code paths
+    val t1 = timeCounts(spark, src, custQs)
+    // untimed pass, so both ratios compare steady-state runs
+    timeCounts(spark, dstCust, custQs)
+    val tN = timeCounts(spark, dstCust, custQs)
     custQs.foreach { q =>
       println(f"[scale-cust] $q (o_custkey shifted) 1x=${t1(q)}%.2fs " +
         f"${copies}x=${tN(q)}%.2fs ratio=${tN(q) / t1(q)}%.1f " +
@@ -303,19 +360,11 @@ object ScaleProbe {
     val graphQs = Seq("q_basket_pairs", "q_triangle_stats",
       "q_local_cc_hist", "q_copurchase_partners", "q_pagerank",
       "q_basket_components", "q_degree_dist")
-    def time(dir: String): Map[String, Double] = {
-      spark.catalog.clearCache()
-      Caches.invalidateAll(spark)
-      graphQs.map { q =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir).count()
-        q -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-    }
-    time(src) // warm code paths
-    val t1 = time(src)
-    time(dst) // untimed pass, so both ratios compare steady-state runs
-    val tN = time(dst)
+    timeCounts(spark, src, graphQs) // warm code paths
+    val t1 = timeCounts(spark, src, graphQs)
+    // untimed pass, so both ratios compare steady-state runs
+    timeCounts(spark, dst, graphQs)
+    val tN = timeCounts(spark, dst, graphQs)
     println(f"[scale-part] ${"query"}%-24s 1x(s)   ${copies}x(s)  ratio " +
       "(l_partkey shifted: constant per-part co-purchase degree)")
     graphQs.foreach { q =>
@@ -365,10 +414,9 @@ object ScaleProbe {
       TextOps.withWords(TextOps.normalize(incDocs)))
     def run(tag: String,
             idxDocs: org.apache.spark.sql.DataFrame): (Double, Double, Double) = {
-      spark.catalog.clearCache()
-      Caches.invalidateAll(spark)
+      dropCaches(spark)
       val root = java.nio.file.Files.createTempDirectory("graft_ssp")
-      val wh = new catalog.Warehouse(spark, root.toString)
+      val wh = new Warehouse(spark, root.toString)
       val ps = TextOps.posShinglesOf(
         TextOps.withWords(TextOps.normalize(idxDocs)))
       val t0 = System.nanoTime()
@@ -391,7 +439,7 @@ object ScaleProbe {
       val mask = (System.nanoTime() - t2) / 1e9
       println(f"[scale-ss] $tag%-4s index build=$build%6.2fs  " +
         f"check=$check%6.2fs  mask=$mask%6.2fs  (pairs=$n, ranges=$nm)")
-      Bench.deleteRecursively(root)
+      Probe.deleteRecursively(root)
       (build, check, mask)
     }
     run("1x", idxDocs1) // warm code paths
@@ -408,10 +456,9 @@ object ScaleProbe {
       f"${cN / c1}%6.2f")
     println(f"[scale-ss-q] q_span_mask_ranges_inc ${m1}%6.2f ${mN}%7.2f " +
       f"${mN / m1}%6.2f")
-    // streamed ingest cycle (w_ss_ingest, the Bench row's probe): a
-    // 3-batch AvailableNow drain on a 1× vs N× corpus — index AND
-    // increments both grow, the honest "ingest cost tracks corpus size"
-    // number for the stream path.
+    // streamed ingest cycle (w_ss_ingest): a 3-batch AvailableNow drain
+    // on a 1× vs N× corpus — index AND increments both grow, the honest
+    // "ingest cost tracks corpus size" number for the stream path.
     val dstDocs = s"/tmp/graft_sf_ssdocs_x$copies"
     (0 until copies)
       .map(i => docs
@@ -423,13 +470,12 @@ object ScaleProbe {
       .reduce(_ unionAll _)
       .write.mode("overwrite").parquet(s"$dstDocs/documents.parquet")
     def drain(dir: String): Double = {
-      spark.catalog.clearCache()
-      Caches.invalidateAll(spark)
+      dropCaches(spark)
       val root = java.nio.file.Files.createTempDirectory("graft_ssi")
       val t0 = System.nanoTime()
-      Bench.ssIngestCycle(spark, dir, root.toString)
+      ssIngestCycle(spark, dir, root.toString)
       val t = (System.nanoTime() - t0) / 1e9
-      Bench.deleteRecursively(root)
+      Probe.deleteRecursively(root)
       t
     }
     drain(src) // warm code paths
@@ -438,16 +484,15 @@ object ScaleProbe {
     println(f"[scale-ss-w] w_ss_ingest ${d1}%6.2f ${dN}%7.2f " +
       f"${dN / d1}%6.2f")
     // per-phase split of the same 3-batch cycle (direct ingestBatch with
-    // the timer hook, same doc_id-range batching as Bench.ssIngestCycle):
+    // the timer hook, same doc_id-range batching as ssIngestCycle):
     // decides which phase carries the drain's linear term — shingling is
     // expected linear (the payload IS N× bigger), the check and the
     // append/commit should stay far below it. Also times the post-drain
     // compaction (the nightly maintenance slot's cost at 1× vs N×).
     def phases(dir: String): (Map[String, Double], Double) = {
-      spark.catalog.clearCache()
-      Caches.invalidateAll(spark)
+      dropCaches(spark)
       val root = java.nio.file.Files.createTempDirectory("graft_ssh")
-      val wh = new catalog.Warehouse(spark, root.toString)
+      val wh = new Warehouse(spark, root.toString)
       val d = spark.read.parquet(s"$dir/documents.parquet")
       val n = d.agg(max("doc_id")).head().getLong(0)
       val acc = scala.collection.mutable.Map[String, Double]()
@@ -465,7 +510,7 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       graft.streaming.SubstringIngest.compactState(wh)
       val compact = (System.nanoTime() - t0) / 1e9
-      Bench.deleteRecursively(root)
+      Probe.deleteRecursively(root)
       (acc.toMap, compact)
     }
     phases(src) // warm code paths
@@ -498,8 +543,7 @@ object ScaleProbe {
       .reduce(_ unionAll _)
       .write.mode("overwrite").parquet(s"$dst/lineitem.parquet")
     def run(dir: String): (Double, Double) = {
-      spark.catalog.clearCache()
-      Caches.invalidateAll(spark)
+      dropCaches(spark)
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
       val t0 = System.nanoTime()
       val pairs = ops.Basket.partPairsOf(li)

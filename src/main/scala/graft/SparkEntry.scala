@@ -11,6 +11,21 @@ import org.apache.spark.sql.functions.col
   */
 object SparkEntry {
 
+  /** The CLI mains' session: `local[SPARK_GRAFT_CPUS]` (default
+    * `defaultCpus`) with as many shuffle partitions, UTC, AQE, no UI. */
+  def localSession(defaultCpus: Int, logLevel: String = "WARN"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Pipeline.of(spark, "/root/testdata/sf0.001").retentionCompact

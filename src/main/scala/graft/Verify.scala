@@ -26,10 +26,7 @@ object Verify {
       fn.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       None
     } catch { case e: Throwable =>
-      // getMessage can be null (bare NPE/ISE) — fall back to toString so
-      // the sentinel carries a signal, not "SomeException: null"
-      val detail = Option(e.getMessage).getOrElse(e.toString)
-      val msg = s"${e.getClass.getSimpleName}: $detail"
+      val msg = describe(e)
       System.err.println(s"[verify] $name failed: $msg")
       try {
         import spark.implicits._
@@ -41,6 +38,11 @@ object Verify {
       }
       Some(msg)
     }
+
+  /** `Class: message` of a failure; getMessage can be null (bare NPE/ISE),
+    * so fall back to toString and carry a signal, not "SomeException: null". */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse(e.toString)}"
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
@@ -60,14 +62,7 @@ object Verify {
     // optional extra args: run only these queries (local iteration; the
     // driver always passes exactly two args → full run)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(4)
     new java.io.File(outDir).mkdirs()
     // Preflight BEFORE any query: a regenerated input table surfaces here
     // as one message naming table+column, ahead of whatever downstream

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Multi-SF correctness dump — the automation of the "verify at multiple
@@ -49,14 +48,7 @@ object VerifyMulti {
       "no queries to verify: pass names or populate SparkEntry.newThisRound")
     val unknown = names -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(8)
     val oracleJson = SparkEntry.oracleSql
       .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${Verify.q(k)}: ${Verify.q(v)}" }

@@ -36,7 +36,7 @@ object Feeds {
     *    micros, the same truncation DuckDB applies casting TIMESTAMP_NS →
     *    TIMESTAMP, keeping the oracle comparable.
     *  - MICROS without UTC adjust arrives as TIMESTAMP_NTZ; the session
-    *    zone is pinned UTC everywhere (Bench/Verify/specs), so the cast to
+    *    zone is pinned UTC everywhere (mains/perfbench/specs), so the cast to
     *    TimestampType is wall-clock-identity and matches DuckDB reading
     *    the same column as naive TIMESTAMP.
     *  - MICROS with UTC adjust arrives as TimestampType already. */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Wires the §3 DAG as plain function composition: feeds → dims → facts →
   * retention. Each step is a lazy DataFrame; actions happen only at the
-  * caller's sink (Verify writes parquet, Bench counts).
+  * caller's sink (Verify writes parquet, perfbench and Probe noop).
   *
   * Incremental id continuation (PG sequences living across statements)
   * requires the previous table's cardinality; those are the only driver-side

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
   * two runtime services built on it:
   *
   *  - [[preflight]] + [[yearWindowViolations]]: checks every entry point
-  *    (`Verify.main`, `Bench.main`) runs BEFORE any query, so a
+  *    (`Verify`, `VerifyMulti`, perfbench) runs BEFORE any query, so a
   *    driver-side testdata regeneration surfaces as ONE message naming
   *    the table and column — not as N downstream query crashes (round 8:
   *    `events.ts` changed parquet type mid-round and the drift surfaced

@@ -75,6 +75,6 @@ class LeakScanSpec extends AnyFunSuite {
       assert(out.contains(realMail), s"real-domain email not flagged:\n$out")
       assert(!out.contains(fixtureMail),
         s"RFC 2606 subdomain fixture wrongly flagged:\n$out")
-    } finally Bench.deleteRecursively(tmp)
+    } finally Probe.deleteRecursively(tmp)
   }
 }

@@ -181,4 +181,17 @@ class QueriesIndexSpec extends AnyFunSuite {
       .map(_.group(1)).toSeq
     assert(bad.isEmpty, s"index rows without full anchors: $bad")
   }
+
+  test("ScaleProbe covers every SparkEntry query exactly once") {
+    // r10 verdict item 5: the scale claim was scoped to a 53-query
+    // subset; the probe list must now track the full query set so a new
+    // query cannot silently fall outside the "no super-linear" claim
+    val probe = ScaleProbe.probeQueries
+    assert(probe.distinct.size == probe.size,
+      s"duplicate probe entries: ${probe.diff(probe.distinct).mkString(",")}")
+    val all = SparkEntry.queries.keySet
+    assert(probe.toSet == all,
+      s"probe/query drift — missing: ${(all -- probe.toSet).mkString(",")}; " +
+      s"unknown: ${(probe.toSet -- all).mkString(",")}")
+  }
 }

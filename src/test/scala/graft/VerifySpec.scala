@@ -15,7 +15,7 @@ class VerifySpec extends SparkSpec {
       assert(err.isEmpty)
       val back = spark.read.parquet(s"$out/q_ok")
       assert(back.columns.toSeq == Seq("n") && back.count() == 3)
-    } finally Bench.deleteRecursively(java.nio.file.Paths.get(out))
+    } finally Probe.deleteRecursively(java.nio.file.Paths.get(out))
   }
 
   test("a throwing query leaves a _verify_error sentinel, not an omission") {
@@ -31,7 +31,7 @@ class VerifySpec extends SparkSpec {
       // the error text travels inside the artifact
       val msg = sentinel.head().getString(0)
       assert(msg == err.get && msg.nonEmpty)
-    } finally Bench.deleteRecursively(java.nio.file.Paths.get(out))
+    } finally Probe.deleteRecursively(java.nio.file.Paths.get(out))
   }
 
   test("a null exception message falls back to toString, not 'null'") {
@@ -45,7 +45,7 @@ class VerifySpec extends SparkSpec {
       assert(!err.get.endsWith(": null"), err.get)
       assert(err.get ==
         "IllegalStateException: java.lang.IllegalStateException")
-    } finally Bench.deleteRecursively(java.nio.file.Paths.get(out))
+    } finally Probe.deleteRecursively(java.nio.file.Paths.get(out))
   }
 
   test("json escape covers quotes, backslashes, and control chars") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * pipeline queries crashed in analysis — the failure surfaced as holes
   * in downstream artifacts, not as a named schema drift). The pins
   * themselves live in [[TestdataContract]] (single source of truth: the
-  * same checks run as a preflight inside `Verify.main`/`Bench.main`);
+  * same checks run as a preflight inside `Verify.main` and perfbench);
   * this spec asserts they hold for the current testdata AND that the
   * preflight actually names table+column on seeded drift.
   *
@@ -65,7 +65,7 @@ class TestdataSchemaSpec extends SparkSpec {
       val unread = TestdataContract.checkTable(spark, tmp.toString, "nation")
       assert(unread.size == 1 && unread.head._1 == "nation" &&
         unread.head._2 == "*")
-    } finally graft.Bench.deleteRecursively(tmp)
+    } finally graft.Probe.deleteRecursively(tmp)
   }
 
   test("preflight names a MISSING pinned column (r10 ADVICE: the branch was untested)") {
@@ -84,7 +84,7 @@ class TestdataSchemaSpec extends SparkSpec {
       assert(drift.size == 1, drift)
       assert(drift.head._1 == "orders" && drift.head._2 == "o_orderpriority")
       assert(drift.head._3.contains("missing"), drift.head._3)
-    } finally graft.Bench.deleteRecursively(tmp)
+    } finally graft.Probe.deleteRecursively(tmp)
   }
 
   test("year-window preflight names a decade-shifted regeneration") {
@@ -109,7 +109,7 @@ class TestdataSchemaSpec extends SparkSpec {
       // the other pinned columns are absent in this dir — they must
       // report unreadable/missing, not crash the preflight
       assert(drift.forall(_._3.nonEmpty))
-    } finally graft.Bench.deleteRecursively(tmp)
+    } finally graft.Probe.deleteRecursively(tmp)
   }
 
   test("year-window preflight is clean on the current testdata") {
