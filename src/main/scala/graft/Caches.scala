@@ -127,11 +127,13 @@ object Caches {
   /** Release the storage of `gone`'s frames that no remaining entry
     * reaches: a shared upstream grain's checkpoint leaf, or a cache entry
     * that an identical remaining plan shares, stays. */
-  private def release(gone: Seq[Entry]): Unit = if (gone.nonEmpty) {
+  private def release(gone: Seq[Entry]): Unit = {
+    val frames = gone.flatMap(_.frames)
+    if (frames.isEmpty) return // plain values (schemas) hold no storage
     val live = entries.values.asScala.toList.flatMap(_.frames)
     val livePlans = live.map(_.queryExecution.analyzed)
     val liveRdds = live.flatMap(checkpointRdds).map(_.id).toSet
-    gone.flatMap(_.frames).foreach { df =>
+    frames.foreach { df =>
       val plan = df.queryExecution.analyzed
       if (!livePlans.exists(_.sameResult(plan))) df.unpersist(false)
       checkpointRdds(df).filterNot(r => liveRdds(r.id))

@@ -2,6 +2,7 @@ package graft
 
 import graft.catalog.Warehouse
 import graft.etl.{Retention, Sales}
+import graft.sources.SourceReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -95,7 +96,7 @@ object ScaleProbe {
     * index, fold its shingles in, commit. */
   private def ssIngestCycle(spark: SparkSession, sfDir: String,
                             root: String): Unit = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = SourceReader.table(spark, sfDir, "documents")
     val n = docs.agg(max("doc_id")).head().getLong(0)
     val wh = new Warehouse(spark, s"$root/wh")
     val watch = s"$root/watch"
@@ -124,7 +125,7 @@ object ScaleProbe {
     // the clone-collapse degeneracy) and slice() underflows past it
     require(copies <= 64, s"makeBig supports at most 64 copies, got $copies")
     def shifted(name: String, shift: (DataFrame, Int) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$src/$name.parquet")
+      val base = SourceReader.table(spark, src, name)
       val big = (0 until copies).map(i => shift(base, i)).reduce(_ unionAll _)
       big.write.mode("overwrite").parquet(s"$dst/$name.parquet")
     }
@@ -169,7 +170,7 @@ object ScaleProbe {
           else expr(s"concat(slice(embedding, ${i + 1}, ${64 - i}), " +
                     s"slice(embedding, 1, $i))")))
     for (t <- Seq("customer", "part", "nation", "region", "supplier"))
-      spark.read.parquet(s"$src/$t.parquet")
+      SourceReader.table(spark, src, t)
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
   }
 
@@ -250,8 +251,8 @@ object ScaleProbe {
       // at this layout), never the other months' files — its Nx ratio
       // tracks the touched-month growth, far below the full-scan
       // read-backs' ratio.
-      val day = spark.read.parquet(s"$src/lineitem.parquet").join(
-        spark.read.parquet(s"$src/orders.parquet")
+      val day = SourceReader.table(spark, src, "lineitem").join(
+        SourceReader.table(spark, src, "orders")
           .where(col("o_orderdate").between("1997-03-01", "1997-03-07"))
           .select("o_orderkey"),
         col("l_orderkey") === col("o_orderkey"), "left_semi")
@@ -301,7 +302,7 @@ object ScaleProbe {
     val dstCust = s"/tmp/graft_sf_cust_x$copies"
     val K = 100000000L
     def nCopies(table: String, shiftCols: String*): Unit = {
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = SourceReader.table(spark, src, table)
       (0 until copies)
         .map(i => shiftCols.foldLeft(base)((df, c) =>
           df.withColumn(c, col(c) + lit(i * K))))
@@ -314,7 +315,7 @@ object ScaleProbe {
     // dimension tables the feed joins on UNSHIFTED keys: exactly one
     // copy, or every feed row would match `copies` duplicate dim rows
     Seq("nation", "part").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      SourceReader.table(spark, src, t)
         .write.mode("overwrite").parquet(s"$dstCust/$t.parquet")
     }
     // r19: q_cohort_retention joins the customer-depth family — its
@@ -350,7 +351,7 @@ object ScaleProbe {
   def graphProbe(spark: SparkSession, src: String, copies: Int): Unit = {
     val dst = s"/tmp/graft_sf_part_x$copies"
     val K = 100000000L
-    val base = spark.read.parquet(s"$src/lineitem.parquet")
+    val base = SourceReader.table(spark, src, "lineitem")
     (0 until copies)
       .map(i => base
         .withColumn("l_orderkey", col("l_orderkey") + lit(i * K))
@@ -389,7 +390,7 @@ object ScaleProbe {
   def ssProbe(spark: SparkSession, src: String, copies: Int): Unit = {
     import ops.{Dedup, TextOps}
     val K = 100000000L
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = SourceReader.table(spark, src, "documents")
     val cut = docs.agg(expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)")
       .as("cutoff"))
     val tagged = docs.crossJoin(broadcast(cut))
@@ -493,7 +494,7 @@ object ScaleProbe {
       dropCaches(spark)
       val root = java.nio.file.Files.createTempDirectory("graft_ssh")
       val wh = new Warehouse(spark, root.toString)
-      val d = spark.read.parquet(s"$dir/documents.parquet")
+      val d = SourceReader.table(spark, dir, "documents")
       val n = d.agg(max("doc_id")).head().getLong(0)
       val acc = scala.collection.mutable.Map[String, Double]()
         .withDefaultValue(0.0)
@@ -535,7 +536,7 @@ object ScaleProbe {
   def copurchaseSplit(spark: SparkSession, src: String, copies: Int): Unit = {
     val dst = s"/tmp/graft_sf_part_x$copies"
     val K = 100000000L
-    val base = spark.read.parquet(s"$src/lineitem.parquet")
+    val base = SourceReader.table(spark, src, "lineitem")
     (0 until copies)
       .map(i => base
         .withColumn("l_orderkey", col("l_orderkey") + lit(i * K))
@@ -544,7 +545,7 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$dst/lineitem.parquet")
     def run(dir: String): (Double, Double) = {
       dropCaches(spark)
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
+      val li = SourceReader.table(spark, dir, "lineitem")
       val t0 = System.nanoTime()
       val pairs = ops.Basket.partPairsOf(li)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -581,7 +582,7 @@ object ScaleProbe {
       "cookie notice subscribe to our newsletter contact us about"
     def seeded(dir: String): DataFrame =
       ops.TextOps.withWords(ops.TextOps.normalize(
-        spark.read.parquet(s"$dir/documents.parquet")
+        SourceReader.table(spark, dir, "documents")
           .withColumn("text",
             when(col("doc_id") % 100 === 0, lit(boiler))
               .otherwise(col("text")))))

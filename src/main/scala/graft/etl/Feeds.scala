@@ -22,8 +22,10 @@ import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, Time
   */
 object Feeds {
 
+  /** Input table `name` under `dir` through the one source reader
+    * ([[graft.sources.SourceReader]]: footer schema, no inference job). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.SourceReader.table(spark, dir, name)
 
   /** The generator has shipped `events.ts` as parquet TIMESTAMP(NANOS)
     * (rounds 1-7) and as TIMESTAMP(MICROS, isAdjustedToUTC=false)

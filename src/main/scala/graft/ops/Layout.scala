@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.expr.ZOrder2
+import graft.sources.SourceReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +19,7 @@ object Layout {
     * deterministic and oracle-reproducible; production layouts would
     * range-bucket instead to preserve locality of the full domain). */
   def orderZKeys(spark: SparkSession, dir: String): DataFrame = {
-    val o = spark.read.parquet(s"$dir/orders.parquet")
+    val o = SourceReader.table(spark, dir, "orders")
     o.select(
       col("o_orderkey"),
       (col("o_custkey") % 65536).as("xk"),

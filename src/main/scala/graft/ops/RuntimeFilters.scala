@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.expr.{BloomMightContainLong, CmsEstimateLong}
+import graft.sources.SourceReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -18,8 +19,8 @@ import org.apache.spark.sql.types.DecimalType
 object RuntimeFilters {
 
   private def liOrders(spark: SparkSession, dir: String) = (
-    spark.read.parquet(s"$dir/lineitem.parquet"),
-    spark.read.parquet(s"$dir/orders.parquet"))
+    SourceReader.table(spark, dir, "lineitem"),
+    SourceReader.table(spark, dir, "orders"))
 
   /** Hard cap on the bloom's `expectedNumItems`. Sizing the filter to the
     * true qualifying-key count is a scale trap: at the 100 TB target ~20% of
@@ -83,7 +84,7 @@ object RuntimeFilters {
   def heavyHitterParts(spark: SparkSession, dir: String,
                        minCount: Long = 40): DataFrame = {
     val (li, _) = liOrders(spark, dir)
-    val part = spark.read.parquet(s"$dir/part.parquet")
+    val part = SourceReader.table(spark, dir, "part")
     // CMS size is set by (eps, confidence), independent of key count —
     // ~1.1 MB here — but it gets the same Broadcast transport as the bloom
     val cms = spark.sparkContext.broadcast(

@@ -12,9 +12,12 @@ import org.apache.spark.sql.types._
   *    the table and column — not as N downstream query crashes (round 8:
   *    `events.ts` changed parquet type mid-round and the drift surfaced
   *    as 22 analysis failures spread over two artifacts). The schema
-  *    check is footer-only; the year-window check adds one min/max
-  *    aggregate per pinned ts column (a type-correct but decade-shifted
-  *    regeneration would silently move every date-derived mart).
+  *    check is footer-only: [[SourceReader]] reads each table's parquet
+  *    footer on the driver, so it runs no Spark job, and a table
+  *    rewritten in place is read again. The year-window check adds one
+  *    min/max aggregate per pinned ts column (a type-correct but
+  *    decade-shifted regeneration would silently move every
+  *    date-derived mart).
   *  - [[fingerprintJson]]: the dataset identity (per-table schema hash +
   *    row count) stamped into `BENCH_full.json` and the Verify out-dir,
   *    so artifact consumers can tell a testdata regeneration from a code
@@ -112,23 +115,29 @@ object TestdataContract {
     case other => throw new IllegalArgumentException(s"no pin for $other")
   }
 
-  /** Raw (un-normalized) read of one input table. The nanosAsLong conf is
-    * session-wide and harmless on non-nanos files; setting it here keeps
-    * a nanos-vintage events.parquet readable for schema checks exactly as
-    * `Feeds.events` reads it for queries. */
-  private def rawTable(spark: SparkSession, dir: String, name: String) = {
+  /** The nanosAsLong conf is session-wide and harmless on non-nanos
+    * files; setting it before touching events keeps a nanos-vintage
+    * events.parquet readable for the checks exactly as `Feeds.events`
+    * reads it for queries. */
+  private def nanosAsLongFor(spark: SparkSession, name: String): Unit =
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Raw (un-normalized) read of one input table. */
+  private def rawTable(spark: SparkSession, dir: String, name: String) = {
+    nanosAsLongFor(spark, name)
+    SourceReader.table(spark, dir, name)
   }
 
   /** One table's contract violations as (table, column, detail). A table
     * that cannot be read at all reports a single ("table", "*", why) row.
-    * Schema-only — no data is scanned. */
+    * Footer-only: the schema is [[SourceReader.schema]]'s, read on the
+    * driver, so no Spark job runs and no data is scanned. */
   private[graft] def checkTable(spark: SparkSession, dir: String,
                                 name: String): Seq[(String, String, String)] =
     try {
-      val schema = rawTable(spark, dir, name).schema
+      nanosAsLongFor(spark, name)
+      val schema = SourceReader.schema(spark, dir, name)
       pins(name).toSeq.sortBy(_._1).flatMap { case (colName, ok) =>
         schema.fieldNames.find(_ == colName) match {
           case None => Seq((name, colName, s"column $colName missing"))
@@ -146,7 +155,7 @@ object TestdataContract {
     }
 
   /** All SCHEMA contract violations for a testdata dir; empty = contract
-    * holds. Schema-only — value windows are [[yearWindowViolations]]. */
+    * holds. Footer-only — value windows are [[yearWindowViolations]]. */
   def preflight(spark: SparkSession, dir: String): Seq[(String, String, String)] =
     tables.flatMap(checkTable(spark, dir, _))
 

@@ -29,7 +29,7 @@ object IncrementStream {
     * `business_dt`). */
   def orderLogStream(spark: SparkSession, dir: String,
                      watchDir: String): DataFrame = {
-    val batchLi = spark.read.parquet(s"$dir/lineitem.parquet")
+    val batchLi = Feeds.table(spark, dir, "lineitem")
     // file-source streams watch a DIRECTORY: each parquet file dropped into
     // `watchDir` is one increment delivery
     val liStream = spark.readStream.schema(batchLi.schema).parquet(watchDir)

@@ -27,9 +27,6 @@ class MemoRegistryLintSpec extends AnyFunSuite {
     * each with its reason. Keep the reasons current. */
   private val allowed: Map[(String, String), String] = Map(
     ("graft/Caches.scala", "ConcurrentHashMap") -> "the memo registry itself",
-    ("graft/catalog/Warehouse.scala", "ConcurrentHashMap") ->
-      ("schemaCache: an instance-scoped schema memo that writes " +
-        "invalidate, not a session grain"),
     ("graft/ScaleProbe.scala", "mutable.Map") ->
       "a probe's local per-phase timing accumulator; holds no frames")
 

@@ -156,6 +156,47 @@ class WarehouseSpec extends SparkSpec {
     assert(wh.read("mart", "fp40").count() == hist.size + 1)
   }
 
+  test("a partition rewrite reads its temp copy back from a listed path") {
+    // Spark's file listing ignores names starting with '.' or '_'; a
+    // hidden temp copy was read back only because Spark lists an
+    // explicitly named root anyway, warning "All paths were ignored"
+    import Warehouse.PartCol
+    val root = tmp()
+    val wh = new Warehouse(spark, root)
+    wh.overwritePartitioned("mart", "rt",
+      Seq((1L, "2024-01", 1.0)).toDF("id", PartCol, "amt"), PartCol)
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val rec = new org.apache.spark.sql.util.QueryExecutionListener
+        with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        collect(qe.executedPlan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            s.relation.location.rootPaths
+        }.flatten.foreach(p => roots.add(p.toString))
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(rec)
+    try {
+      wh.mergePartitioned("mart", "rt",
+        Seq((2L, "2024-01", 2.0)).toDF("id", PartCol, "amt"), Seq("id"),
+        PartCol)
+      org.apache.spark.SpecListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(rec)
+    import scala.jdk.CollectionConverters._
+    val copies = roots.asScala.toSeq.filter(_.contains("__merge_tmp"))
+    assert(copies.nonEmpty, roots)
+    val hidden = copies.filter(p => org.apache.spark.SpecFileListing
+      .hidden(new org.apache.hadoop.fs.Path(p).getName))
+    assert(hidden.isEmpty, s"temp copy read back from a hidden path: $hidden")
+    // the copy is removed once the merge commits
+    assert(!new java.io.File(s"$root/mart").list().exists(_.endsWith("_tmp")))
+    assert(wh.read("mart", "rt").count() == 2)
+  }
+
   /** Merge `updates` into a fresh month-partitioned table holding `hist`,
     * then check the read-back is kept ∪ updates over the touched
     * partitions (every other row untouched) and every untouched
