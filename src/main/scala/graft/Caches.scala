@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** The library's one memo registry: every in-session grain (the staging
   * frames of [[graft.etl.Pipeline]], the shared dedup/text/vector/graph/
@@ -29,7 +28,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * The registry imposes no storage policy: each build chooses truncation,
   * persist or both ([[graft.Memo]]). Every release follows one rule — a
   * frame's cache entry (`unpersist(false)`) and the blocks behind its
-  * checkpoint leaves ([[graft.etl.Catchup.releaseLocalCheckpoint]]) —
+  * checkpoint leaves ([[graft.Memo.release]]) —
   * except storage some remaining entry still reaches.
   *
   * STALE-READ CONTRACT: nothing is invalidated automatically. A caller
@@ -121,9 +120,6 @@ object Caches {
     release(entries.keySet.asScala.filter(hit).toList
       .flatMap(k => Option(entries.remove(k))))
 
-  private def checkpointRdds(df: Dataset[_]) =
-    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
-
   /** Release the storage of `gone`'s frames that no remaining entry
     * reaches: a shared upstream grain's checkpoint leaf, or a cache entry
     * that an identical remaining plan shares, stays. */
@@ -132,12 +128,11 @@ object Caches {
     if (frames.isEmpty) return // plain values (schemas) hold no storage
     val live = entries.values.asScala.toList.flatMap(_.frames)
     val livePlans = live.map(_.queryExecution.analyzed)
-    val liveRdds = live.flatMap(checkpointRdds).map(_.id).toSet
+    val liveRdds = live.flatMap(Memo.checkpointRdds).map(_.id).toSet
     frames.foreach { df =>
       val plan = df.queryExecution.analyzed
       if (!livePlans.exists(_.sameResult(plan))) df.unpersist(false)
-      checkpointRdds(df).filterNot(r => liveRdds(r.id))
-        .foreach(_.unpersist(false))
+      Memo.release(df, liveRdds)
     }
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Deployment-mode lineage truncation for the session memo grains.
   *
@@ -31,11 +33,10 @@ import org.apache.spark.sql.Dataset
   * comparable; `reliable` is proven equivalent by MemoSpec and an
   * oracle run (OPTIMIZATION_r19.md).
   *
-  * Release: [[graft.etl.Catchup.releaseLocalCheckpoint]] unpersists the
-  * blocks behind a local checkpoint and is a safe no-op on a reliable
-  * checkpoint (its RDD is not block-persisted; files are reclaimed with
-  * the checkpoint dir, or by `spark.cleaner.referenceTracking
-  * .cleanCheckpoints` on long-lived clusters).
+  * Release: [[release]], a safe no-op on a reliable checkpoint (its RDD
+  * is not block-persisted; files go with the checkpoint dir, or with
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` on long-lived
+  * clusters).
   */
 object Memo {
 
@@ -63,6 +64,15 @@ object Memo {
         s"spark.graft.memo.mode must be local|reliable, got '$other'")
       df.localCheckpoint(eager = true)
   }
+
+  /** The RDDs behind the LogicalRDD leaves [[truncate]] left in `df`. */
+  private[graft] def checkpointRdds(df: Dataset[_]): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+
+  /** Unpersist the blocks behind `df`'s checkpoint leaves, which
+    * `Dataset.unpersist` does not reach, except RDD ids in `keep`. */
+  def release(df: Dataset[_], keep: Set[Int] = Set.empty): Unit =
+    checkpointRdds(df).filterNot(r => keep(r.id)).foreach(_.unpersist(false))
 
   /** Postfix form — `df.truncated` reads like the `localCheckpoint(true)`
     * call sites it replaces (import graft.Memo.TruncateOps). */

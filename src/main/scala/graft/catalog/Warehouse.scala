@@ -1,6 +1,7 @@
 package graft.catalog
 
 import graft.Caches
+import graft.sources.SourceReader
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -346,11 +347,11 @@ class Warehouse(spark: SparkSession, root: String) {
     * collected first, and the target is read through exactly those
     * partition directories (explicit paths under a `basePath`), so the
     * scan lists and opens only the touched partitions' files; untouched
-    * partitions are never listed, opened or replaced. Touched values with
-    * no directory yet (a new month) contribute no history. The merged
-    * partitions are then committed by [[rewritePartitions]]. An increment
-    * touching one day of a 5-year fact table reads and rewrites 1/1800th
-    * of it. Asserted in WarehouseSpec by the files the merge's scans open
+    * partitions are never listed, opened or replaced ([[readPartitions]]).
+    * Touched values with no directory yet (a new month) contribute no
+    * history. The merged partitions are then committed by
+    * [[rewritePartitions]]. An increment touching one day of a 5-year fact
+    * table reads and rewrites 1/1800th of it. Asserted in WarehouseSpec by the files the merge's scans open
     * and by file identity of untouched partitions. Like every write verb
     * it heals a crashed swap first ([[begin]]), so a table parked at `.bak`
     * is merged into, not replaced by the updates.
@@ -366,16 +367,24 @@ class Warehouse(spark: SparkSession, root: String) {
       replace(db, table, updates, Seq(partitionCol))
       return touched
     }
-    val dirs = touched.map(partitionDir(db, table, partitionCol, _))
-      .filter(d => fsOf(d).exists(d))
-    val merged =
-      if (dirs.isEmpty) updates
-      else spark.read.option("basePath", path(db, table))
-        .parquet(dirs.map(_.toString): _*)
-        .join(updates.select(keys.map(updates.col): _*), keys, "left_anti")
-        .unionByName(updates)
+    val merged = readPartitions(db, table, partitionCol, touched).fold(updates)(
+      _.join(updates.select(keys.map(updates.col): _*), keys, "left_anti")
+        .unionByName(updates))
     rewritePartitions(db, table, partitionCol, merged, "merge")
     touched
+  }
+
+  /** The `values` partitions' rows through their directories under a
+    * `basePath` (Spark discovers `partitionCol` from the paths), with the
+    * data schema from a footer ([[SourceReader.dataSchema]]): no inference
+    * job. None when no such directory holds a data file. */
+  private[catalog] def readPartitions(db: String, table: String,
+                                      partitionCol: String,
+                                      values: Seq[String]): Option[DataFrame] = {
+    val dirs = values.map(partitionDir(db, table, partitionCol, _))
+      .filter(d => fsOf(d).exists(d))
+    SourceReader.dataSchema(spark, dirs).map(spark.read.schema(_)
+      .option("basePath", path(db, table)).parquet(dirs.map(_.toString): _*))
   }
 
   /** Directory of one partition value, named the way Spark's partitioned

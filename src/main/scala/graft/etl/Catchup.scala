@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.Memo.TruncateOps
-import graft.Ids
+import graft.{Ids, Memo}
 import org.apache.spark.sql.DataFrame
 
 /** Multi-day increment catchup — the reference DAG runs daily with
@@ -39,7 +39,7 @@ object Catchup {
     * holds O(1) executor storage, not O(#increments). */
   def applyAll(history: DataFrame, increments: Seq[DataFrame],
                materialize: DataFrame => DataFrame = _.truncated,
-               release: DataFrame => Unit = releaseLocalCheckpoint)
+               release: DataFrame => Unit = Memo.release(_))
       : DataFrame = {
     var acc = materialize(Ids.dense(history, sortCols, "id"))
     increments.foreach { inc =>
@@ -49,17 +49,6 @@ object Catchup {
     }
     acc
   }
-
-  /** Unpersist the RDD blocks behind an eager localCheckpoint result.
-    * (Dataset.unpersist only covers CacheManager entries; a checkpoint's
-    * blocks sit behind the returned frame's LogicalRDD leaf.) Safe no-op
-    * on frames that aren't checkpoint-backed. */
-  def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Durable per-step materializer: overwrite a warehouse table with the
     * accumulator and read it back. Each fold step's plan is then a

@@ -144,29 +144,39 @@ object Feeds {
     events(spark, dir)
       .agg(expr("max(ts) - INTERVAL '7' DAY").as("cutoff"))
 
-  private[etl] def splitLe(df: DataFrame, cut: DataFrame, tsCol: String): DataFrame =
-    df.crossJoin(broadcast(cut)).where(col(tsCol) <= col("cutoff")).drop("cutoff")
+  /** A staging feed split at its increment cutoff (the reference's dated
+    * `_inc` CSV per business day): `history` holds the rows at or before
+    * the cutoff (`staging.<feed>`), `increment` the later ones
+    * (`staging.<feed>_temp`). */
+  final case class Split(history: DataFrame, increment: DataFrame) {
+    def map(f: DataFrame => DataFrame): Split = Split(f(history), f(increment))
+  }
 
-  private[etl] def splitGt(df: DataFrame, cut: DataFrame, tsCol: String): DataFrame =
-    df.crossJoin(broadcast(cut)).where(col(tsCol) > col("cutoff")).drop("cutoff")
+  private def split(df: DataFrame, cut: DataFrame, tsCol: String): Split = {
+    def side(keep: Column) =
+      df.crossJoin(broadcast(cut)).where(keep).drop("cutoff")
+    Split(side(col(tsCol) <= col("cutoff")), side(col(tsCol) > col("cutoff")))
+  }
 
-  /** `staging.user_order_log` — the full-history feed (no status column). */
-  def uol(spark: SparkSession, dir: String): DataFrame =
-    splitLe(orderFeed(spark, dir), ordersCutoff(spark, dir), "date_time")
-      .drop("status")
+  /** `staging.user_order_log` and `_temp`: `feed` ([[orderFeed]]'s shape)
+    * split at `cut` ([[ordersCutoff]]); the history has no status column.
+    * The one spelling of the split, shared by [[Pipeline]] and the report
+    * API ([[graft.sources.LocalFixtureClient]]). */
+  def orderLog(feed: DataFrame, cut: DataFrame): Split = {
+    val log = split(feed, cut, "date_time")
+    log.copy(history = log.history.drop("status"))
+  }
 
-  /** `staging.user_order_log_temp` — the increment feed (carries status). */
-  def uolTemp(spark: SparkSession, dir: String): DataFrame =
-    splitGt(orderFeed(spark, dir), ordersCutoff(spark, dir), "date_time")
+  def orderLog(spark: SparkSession, dir: String): Split =
+    orderLog(orderFeed(spark, dir), ordersCutoff(spark, dir))
 
   /** `staging.user_order_log_v2` — history backfilled with status='shipped'
     * plus the increment with its real status
     * (/root/reference/src/dags/sql/date_periods.sql:17-26: CTAS + ALTER ADD
     * COLUMN + UPDATE SET status + INSERT SELECT, re-expressed as a pure
     * projection + unionByName — Spark has no in-place UPDATE; SURVEY §7.4 H2). */
-  def uolV2(spark: SparkSession, dir: String): DataFrame =
-    uol(spark, dir).withColumn("status", lit("shipped"))
-      .unionByName(uolTemp(spark, dir))
+  def orderLogV2(log: Split): DataFrame =
+    log.history.withColumn("status", lit("shipped")).unionByName(log.increment)
 
   private def actionId(c: Column): Column =
     when(c === "click", 1).when(c === "view", 2).when(c === "purchase", 3)
@@ -180,13 +190,9 @@ object Feeds {
       col("user_id").cast("long").as("customer_id"),
       floor(col("value")).cast("long").as("quantity"))
 
-  /** `staging.user_activity_log`. */
-  def ual(spark: SparkSession, dir: String): DataFrame =
-    splitLe(activityAll(spark, dir), eventsCutoff(spark, dir), "date_time")
-
-  /** `staging.user_activity_log_temp`. */
-  def ualTemp(spark: SparkSession, dir: String): DataFrame =
-    splitGt(activityAll(spark, dir), eventsCutoff(spark, dir), "date_time")
+  /** `staging.user_activity_log` and `_temp`. */
+  def activityLog(spark: SparkSession, dir: String): Split =
+    split(activityAll(spark, dir), eventsCutoff(spark, dir), "date_time")
 
   private def researchAll(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
@@ -200,15 +206,11 @@ object Feeds {
           .as("sales_amt"),
         max(col("ts")).as("max_ts"))
 
-  /** `staging.customer_research` — daily/category sales rollup of events. */
-  def research(spark: SparkSession, dir: String): DataFrame =
-    splitLe(researchAll(spark, dir), eventsCutoff(spark, dir), "max_ts")
-      .drop("max_ts")
-
-  /** `staging.customer_research_temp`. */
-  def researchTemp(spark: SparkSession, dir: String): DataFrame =
-    splitGt(researchAll(spark, dir), eventsCutoff(spark, dir), "max_ts")
-      .drop("max_ts")
+  /** `staging.customer_research` and `_temp` — daily/category sales
+    * rollup of events. */
+  def researchLog(spark: SparkSession, dir: String): Split =
+    split(researchAll(spark, dir), eventsCutoff(spark, dir), "max_ts")
+      .map(_.drop("max_ts"))
 
   /** `staging.price_log` — headerless CSV in the reference
     * (ETL_logs_inc.py:126: names=['prod_name','price']); synthesized from

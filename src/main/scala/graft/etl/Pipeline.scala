@@ -66,20 +66,19 @@ class Pipeline(spark: SparkSession, dir: String) {
     * v2 log (scanned by all three retention classes). At cluster scale
     * these correspond to materialized staging tables; in-memory caching is
     * the single-job equivalent. */
-  private lazy val feedCached: DataFrame =
-    materialized("feed")(Feeds.orderFeed(spark, dir))
-  private lazy val ordCut: DataFrame = Feeds.ordersCutoff(spark, dir)
+  private lazy val orderLog: Feeds.Split = Feeds.orderLog(
+    materialized("feed")(Feeds.orderFeed(spark, dir)),
+    Feeds.ordersCutoff(spark, dir))
+  private lazy val activityLog: Feeds.Split = Feeds.activityLog(spark, dir)
+  private lazy val researchLog: Feeds.Split = Feeds.researchLog(spark, dir)
 
-  lazy val uol: DataFrame = Feeds.splitLe(feedCached, ordCut, "date_time")
-    .drop("status")
-  lazy val uolTemp: DataFrame = Feeds.splitGt(feedCached, ordCut, "date_time")
-  lazy val uolV2: DataFrame =
-    uol.withColumn("status", org.apache.spark.sql.functions.lit("shipped"))
-      .unionByName(uolTemp)
-  lazy val ual: DataFrame = Feeds.ual(spark, dir)
-  lazy val ualTemp: DataFrame = Feeds.ualTemp(spark, dir)
-  lazy val research: DataFrame = Feeds.research(spark, dir)
-  lazy val researchTemp: DataFrame = Feeds.researchTemp(spark, dir)
+  lazy val uol: DataFrame = orderLog.history
+  lazy val uolTemp: DataFrame = orderLog.increment
+  lazy val uolV2: DataFrame = Feeds.orderLogV2(orderLog)
+  lazy val ual: DataFrame = activityLog.history
+  lazy val ualTemp: DataFrame = activityLog.increment
+  lazy val research: DataFrame = researchLog.history
+  lazy val researchTemp: DataFrame = researchLog.increment
   lazy val priceLog: DataFrame = Feeds.priceLog(spark, dir)
 
   lazy val calDates: DataFrame =

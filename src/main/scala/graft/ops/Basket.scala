@@ -424,32 +424,10 @@ object Basket {
     * returns NaN/inf — nullif pins BOTH engines to NULL (assortativity is
     * genuinely undefined at zero degree variance).
     *
-    * Scale shape: one degree groupBy, two degree attach joins keyed on
-    * the edge endpoints, one global partial-agg fold to a single row. */
-  def degreeAssortativityOf(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(edges.select(col("v").as("a"), col("u").as("b")))
-    val deg = sym.groupBy(col("a").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    sym
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      .agg(count(lit(1)).as("n_endpoints"),
-           sum("da").as("s_deg"),
-           sum(col("da") * col("da")).as("s_deg2"),
-           sum(col("da") * col("db")).as("s_prod"))
-      .select(col("n_endpoints"), col("s_deg"), col("s_deg2"), col("s_prod"),
-        expr("""(CAST(n_endpoints AS DOUBLE) * CAST(s_prod AS DOUBLE)
-                 - CAST(s_deg AS DOUBLE) * CAST(s_deg AS DOUBLE))
-                / nullif(CAST(n_endpoints AS DOUBLE) * CAST(s_deg2 AS DOUBLE)
-                 - CAST(s_deg AS DOUBLE) * CAST(s_deg AS DOUBLE), 0.0D)""")
-          .as("assortativity"))
-  }
-
+    * Scale shape: the symmetrized endpoint degrees are the shared
+    * [[graphWithDeg]] grain read twice (once per direction), then one
+    * global partial-agg fold to a single row. */
   def degreeAssortativity(spark: SparkSession, dir: String): DataFrame =
-    // r18: the symmetrized endpoint-degree frame is the shared withDeg
-    // grain read twice (once per direction) — same sums as the
-    // self-contained form, no fresh degree joins per call.
     graft.Caches.grain(spark, dir, "basket.degreeAssortativity") {
       val wd = graphWithDeg(spark, dir)
       wd.select(col("deg_u").as("da"), col("deg_v").as("db"))

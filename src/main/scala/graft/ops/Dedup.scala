@@ -674,7 +674,7 @@ object Dedup {
       changed = next.join(labels.withColumnRenamed("cluster", "prev"), "doc_id")
         .where(col("cluster") =!= col("prev")).count()
       // prev labels' checkpoint blocks are dead once `changed` is counted
-      graft.etl.Catchup.releaseLocalCheckpoint(labels)
+      graft.Memo.release(labels)
       labels = next
       iter += 1
     }
@@ -884,7 +884,7 @@ object Dedup {
       // does not reference the previous round — release the superseded
       // round's blocks NOW instead of accreting one checkpoint per round
       // for the session lifetime (r13 verdict task 2's hygiene class)
-      graft.etl.Catchup.releaseLocalCheckpoint(edges)
+      graft.Memo.release(edges)
       edges = next
       cur = nextSig
       iter += 1
@@ -1231,14 +1231,13 @@ object Dedup {
     * norm attaches) and would otherwise plan four docs scans; the dot
     * products join only the CANDIDATE pairs through their shared words —
     * never all-pairs; norms attach doc-keyed. */
-  def bagCosinePairsOf(pairs: DataFrame, wordsFlat: DataFrame): DataFrame = {
-    val tf = wordsFlat.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-    val nn = tf.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("n2"))
-    pairsCosine(pairs, tf, nn)
-  }
+  def bagCosinePairs(spark: SparkSession, dir: String): DataFrame =
+    bagCosinePairsWithTf(minhashPairs(spark, dir), TextOps.tf(spark, dir))
 
-  private def pairsCosine(pairs: DataFrame, tf: DataFrame,
-                          nn: DataFrame): DataFrame =
+  /** [[bagCosinePairs]] over `pairs` with a precomputed (doc_id, w, tf)
+    * frame. */
+  def bagCosinePairsWithTf(pairs: DataFrame, tf: DataFrame): DataFrame = {
+    val nn = tf.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("n2"))
     pairs.select("doc_a", "doc_b")
       .join(tf.select(col("doc_id").as("doc_a"), col("w"),
                       col("tf").as("tfa")), Seq("doc_a"))
@@ -1253,14 +1252,6 @@ object Dedup {
       .where(expr("""25.0 * CAST(dot AS DOUBLE) * CAST(dot AS DOUBLE)
                      >= 16.0 * CAST(na2 AS DOUBLE) * CAST(nb2 AS DOUBLE)"""))
       .select("doc_a", "doc_b", "dot", "na2", "nb2")
-
-  def bagCosinePairs(spark: SparkSession, dir: String): DataFrame =
-    bagCosinePairsWithTf(minhashPairs(spark, dir), TextOps.tf(spark, dir))
-
-  /** [[bagCosinePairsOf]] with a precomputed (doc_id, w, tf) frame. */
-  def bagCosinePairsWithTf(pairs: DataFrame, tf: DataFrame): DataFrame = {
-    val nn = tf.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("n2"))
-    pairsCosine(pairs, tf, nn)
   }
 
   /** LSH RECALL on a sampled subset — the measurement the candidate-side

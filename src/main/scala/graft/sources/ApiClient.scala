@@ -57,14 +57,14 @@ class LocalFixtureClient(spark: SparkSession, dir: String,
   /** S4-S6: the four feeds of the full report (the reference's CSV
     * downloads, here schema-first parquet-derived frames). */
   def fetchReport(reportId: String): Map[String, DataFrame] = Map(
-    "user_order_log" -> Feeds.uol(spark, dir),
-    "user_activity_log" -> Feeds.ual(spark, dir),
-    "customer_research" -> Feeds.research(spark, dir),
+    "user_order_log" -> Feeds.orderLog(spark, dir).history,
+    "user_activity_log" -> Feeds.activityLog(spark, dir).history,
+    "customer_research" -> Feeds.researchLog(spark, dir).history,
     "price_log" -> Feeds.priceLog(spark, dir))
 
   /** The increment feeds (`*_inc.csv` in the reference). */
   def fetchIncrement(incrementId: String): Map[String, DataFrame] = Map(
-    "user_order_log_inc" -> Feeds.uolTemp(spark, dir),
-    "user_activity_log_inc" -> Feeds.ualTemp(spark, dir),
-    "customer_research_inc" -> Feeds.researchTemp(spark, dir))
+    "user_order_log_inc" -> Feeds.orderLog(spark, dir).increment,
+    "user_activity_log_inc" -> Feeds.activityLog(spark, dir).increment,
+    "customer_research_inc" -> Feeds.researchLog(spark, dir).increment)
 }

@@ -36,29 +36,42 @@ object SourceReader {
     * version. Throws when the table has no readable data file. */
   def schema(spark: SparkSession, dir: String, name: String): StructType = {
     val path = new Path(pathOf(dir, name))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val file = schemaFile(path.getFileSystem(conf), path)
-    val sql = spark.sessionState.conf
+    val st = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(path)
+    val file = if (!st.isDirectory) st else firstDataFile(spark, Seq(path))
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"no parquet data file in $path"))
     graft.Caches.grain(spark, dir,
         s"sources.schema/$name/${file.getPath}/${file.getLen}/" +
-        s"${file.getModificationTime}/${sql.legacyParquetNanosAsLong}") {
-      val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(file, conf),
-        ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-        new ParquetToSparkSchemaConverter(sql))
-    }
+        s"${file.getModificationTime}/" +
+        spark.sessionState.conf.legacyParquetNanosAsLong)(
+      footerSchema(spark, file))
+  }
+
+  /** The data schema of the parquet files under `dirs` (e.g. some
+    * partition directories of a warehouse table), from the footer of
+    * their first data file in sorted path order — the same non-merging
+    * rule, not memoized. None when `dirs` hold no data file. */
+  def dataSchema(spark: SparkSession, dirs: Seq[Path]): Option[StructType] =
+    firstDataFile(spark, dirs).map(footerSchema(spark, _))
+
+  /** The first non-hidden data file under `dirs` in sorted path order. */
+  private def firstDataFile(spark: SparkSession,
+                            dirs: Seq[Path]): Option[FileStatus] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dirs.flatMap(d => dataFiles(d.getFileSystem(conf), d))
+      .minByOption(_.getPath.toString)
+  }
+
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   private def pathOf(dir: String, name: String) = s"$dir/$name.parquet"
-
-  /** `path` itself, or for a directory its first non-hidden data file. */
-  private def schemaFile(fs: FileSystem, path: Path): FileStatus = {
-    val st = fs.getFileStatus(path)
-    if (!st.isDirectory) st
-    else dataFiles(fs, path).minByOption(_.getPath.toString).getOrElse(
-      throw new java.io.FileNotFoundException(s"no parquet data file in $path"))
-  }
 
   /** Files under `dir`, skipping the names Spark's file listing hides
     * (`_SUCCESS`, `.crc` files, `_spark_metadata`; `_`-names holding `=`

@@ -47,7 +47,7 @@ class MemoSpec extends SparkSpec {
       assert(cp.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
         === base.collect().map(r => (r.getLong(0), r.getLong(1))).sorted)
       // release path is a safe no-op on a reliable checkpoint
-      graft.etl.Catchup.releaseLocalCheckpoint(cp)
+      Memo.release(cp)
     } finally spark.conf.unset("spark.graft.memo.mode")
   }
 

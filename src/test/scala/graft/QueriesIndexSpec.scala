@@ -182,6 +182,39 @@ class QueriesIndexSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"index rows without full anchors: $bad")
   }
 
+  test("every index anchor names a live file and line") {
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("queries_index.json"))
+    val anchor = "\"(entry|impl|oracle|spec)\": \"([^\"]+)\"".r
+    val lines = scala.collection.mutable.Map.empty[String, IndexedSeq[String]]
+    def lineOf(file: String, n: Int): Option[String] =
+      lines.getOrElseUpdate(file, java.nio.file.Files.readString(
+        java.nio.file.Paths.get(file)).split("\n", -1).toIndexedSeq)
+        .lift(n - 1)
+    val bad = for {
+      m <- "\"(q_\\w+)\"\\s*:\\s*\\{([^}]*)\\}".r.findAllMatchIn(text).toSeq
+      name = m.group(1)
+      a <- anchor.findAllMatchIn(m.group(2))
+      (field, loc) = (a.group(1), a.group(2))
+      (file, line) = loc.span(_ != ':')
+      why <-
+        if (!new java.io.File(file).isFile) Some("no such file")
+        else if (line.isEmpty) None
+        else lineOf(file, line.drop(1).toInt) match {
+          case None => Some("no such line")
+          case Some(l) if field == "entry" || field == "oracle" =>
+            if (l.contains("\"" + name + "\"")) None
+            else Some(s"line does not name the query: ${l.trim}")
+          case Some(l) if field == "impl" =>
+            if ("\\b(def|val)\\b|\"q_".r.findFirstIn(l).isDefined) None
+            else Some(s"line declares nothing: ${l.trim}")
+          case _ => None
+        }
+    } yield s"$name.$field $loc: $why"
+    assert(bad.isEmpty, "stale queries_index.json anchors (rerun " +
+      "python3 tools/gen_index.py):\n  " + bad.mkString("\n  "))
+  }
+
   test("ScaleProbe covers every SparkEntry query exactly once") {
     // r10 verdict item 5: the scale claim was scoped to a 53-query
     // subset; the probe list must now track the full query set so a new

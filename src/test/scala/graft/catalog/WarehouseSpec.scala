@@ -467,6 +467,58 @@ class WarehouseSpec extends SparkSpec {
     assert(inc("user_order_log_inc").columns.contains("status"))
   }
 
+  test("fixture client feeds equal the DAG's staging frames (sf0.001)") {
+    val sf = graft.VerifyMulti.SfDirs.head // the smallest testdata
+    val client = new LocalFixtureClient(spark, sf)
+    val p = graft.etl.Pipeline.of(spark, sf)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      (df.columns.toSeq, df.collect().groupBy(identity).view
+        .mapValues(_.length).toMap)
+    val report = client.fetchReport("r")
+    val inc = client.fetchIncrement("i")
+    for ((feed, staged) <- Seq(
+           report("user_order_log") -> p.uol,
+           report("user_activity_log") -> p.ual,
+           report("customer_research") -> p.research,
+           report("price_log") -> p.priceLog,
+           inc("user_order_log_inc") -> p.uolTemp,
+           inc("user_activity_log_inc") -> p.ualTemp,
+           inc("customer_research_inc") -> p.researchTemp)) {
+      val want = rows(staged)
+      assert(want._2.nonEmpty && rows(feed) == want, staged.columns.toSeq)
+    }
+  }
+
+  test("a partitioned merge reads its touched partitions without a " +
+       "Spark job") {
+    import Warehouse.PartCol
+    import org.apache.spark.sql.types._
+    val wh = new Warehouse(spark, tmp())
+    val hist = Seq((1L, null, 1.0), (2L, "2024-01", 2.0),
+                   (3L, "2024-02", 3.0), (4L, "2024-02", 4.0))
+    wh.overwritePartitioned("mart", "m", hist.toDF("id", PartCol, "amt"),
+      PartCol)
+    // the null partition, a month on disk, and a month with no directory
+    val touched = Seq(null, "2024-02", "2024-03")
+    val (read, jobs) =
+      jobsDuring(wh.readPartitions("mart", "m", PartCol, touched))
+    assert(jobs == 0, s"$jobs jobs")
+    assert(read.get.select("id", PartCol, "amt").as[(Long, String, Double)]
+      .collect().toSet == Set((1L, null, 1.0), (3L, "2024-02", 3.0),
+                              (4L, "2024-02", 4.0)))
+    assert(wh.readPartitions("mart", "m", PartCol, Seq("2024-03")).isEmpty)
+    val update = Seq((1L, null, 10.0), (4L, "2024-02", 40.0),
+                     (5L, "2024-03", 5.0))
+    assert(wh.mergePartitioned("mart", "m", update.toDF("id", PartCol, "amt"),
+      Seq("id"), PartCol) == touched)
+    val merged = wh.readPhysical("mart", "m")
+    assert(merged.schema == StructType(Seq(StructField("id", LongType),
+      StructField("amt", DoubleType), StructField(PartCol, StringType))))
+    assert(merged.select("id", PartCol, "amt").as[(Long, String, Double)]
+      .collect().toSet == Set((1L, null, 10.0), (2L, "2024-01", 2.0),
+        (3L, "2024-02", 3.0), (4L, "2024-02", 40.0), (5L, "2024-03", 5.0)))
+  }
+
   test("small control files: atomic replace, and a crash that parked the " +
        "old copy under .__bak heals on read") {
     val root = tmp()
@@ -509,7 +561,12 @@ class WarehouseSpec extends SparkSpec {
     val second = new Warehouse(spark, root)
       .read("mart", "retention_compact").collect().toSet
     assert(first == second && first.nonEmpty)
-    for (t <- PipelineRunner.martTables)
-      assert(new Warehouse(spark, root).exists("mart", t), t)
+    // exactly the DAG's tables, and nothing else (no leftover temp copy)
+    for ((db, tables) <- Seq("staging" -> PipelineRunner.stagingTables,
+                             "mart" -> PipelineRunner.martTables)) {
+      for (t <- tables)
+        assert(new Warehouse(spark, root).exists(db, t), s"$db.$t")
+      assert(new java.io.File(s"$root/$db").list().toSet == tables.toSet, db)
+    }
   }
 }

@@ -23,12 +23,7 @@ class SourceReadLintSpec extends AnyFunSuite {
     ("graft/catalog/Warehouse.scala", "readPhysical") ->
       ("a warehouse table's first read after a write infers once, so " +
         "partition discovery types its layout columns; the schema is then " +
-        "a Caches grain every later read passes"),
-    ("graft/catalog/Warehouse.scala", "mergePartitioned") ->
-      ("reads only the touched partition directories of a warehouse " +
-        "table under basePath; the table's schema memo was just dropped " +
-        "by the write, and inferring it over the whole table would list " +
-        "every partition"))
+        "a Caches grain every later read passes"))
 
   private val defName = """\bdef\s+(\w+)""".r
   /** A DataFrameReader chain up to its terminal load call. */

@@ -1,11 +1,9 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
 import graft.etl.Feeds
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,23 +14,6 @@ class SourceReaderSpec extends SparkSpec {
 
   private val dir = graft.VerifyMulti.SfDirs.head // the smallest testdata
   private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-
-  /** `body`'s value and the Spark jobs it started. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.SpecListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.SpecListenerBus.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def inferred(dir: String, name: String): StructType =
     spark.read.parquet(s"$dir/$name.parquet").schema

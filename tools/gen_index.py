@@ -102,15 +102,34 @@ def read(path):
 
 def scala_sources(root_rel):
     out = []
-    for dirpath, _, files in os.walk(os.path.join(ROOT, root_rel)):
+    for dirpath, dirs, files in os.walk(os.path.join(ROOT, root_rel)):
+        dirs.sort()  # a walk order independent of the filesystem's
         for fn in sorted(files):
             if fn.endswith(".scala"):
                 out.append(os.path.relpath(os.path.join(dirpath, fn), ROOT))
     return out
 
+def strip_comment(line):
+    """`line` without its `//` comment (a `//` inside a string literal is
+    kept), so a comment's words never become search tokens."""
+    in_str, i = False, 0
+    while i < len(line):
+        if line[i] == '"':
+            in_str = not in_str
+        elif line[i] == "\\" and in_str:
+            i += 1
+        elif not in_str and line.startswith("//", i):
+            return line[:i]
+        i += 1
+    return line
+
+def code_lines(path):
+    """`path`'s lines with `//` comments stripped (line numbers kept)."""
+    return [strip_comment(l) for l in read(path).split("\n")]
+
 def parse_entries():
     """{name: (entry_line, rhs_text)} in registration order."""
-    lines = read(ENTRY_FILE).split("\n")
+    lines = code_lines(ENTRY_FILE)
     starts = []  # (idx, name)
     for i, l in enumerate(lines):
         m = re.search(r'"(q_\w+)"\s*->', l)
@@ -135,9 +154,8 @@ def build_decl_index():
     """{(Object, member): 'file:line'} for every def/val in main sources."""
     decl = {}
     for path in scala_sources("src/main/scala"):
-        text = read(path)
         obj = None
-        for i, l in enumerate(text.split("\n")):
+        for i, l in enumerate(code_lines(path)):
             m = re.search(r"\bobject\s+(\w+)", l)
             if m:
                 obj = m.group(1)
