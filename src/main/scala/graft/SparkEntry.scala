@@ -662,13 +662,4 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Oracle.sql
-
-  /** Queries ADDED in the current round — the [[VerifyMulti]] work list.
-    * Every name here must ship with a fully-green three-SF row in the
-    * committed CORRECTNESS_multi.json (VerifyMultiSpec pins it); reset to
-    * the new additions at the start of each round. */
-  def newThisRound: Set[String] =
-    Set("q_corpus_curated_v4", "q_mask_vs_drop_yield",
-        "q_corpus_curated_v4_inc", "q_curation_funnel_inc",
-        "q_quote_heavy_docs_inc", "q_corpus_stats_v4")
 }

@@ -6,20 +6,17 @@ import java.nio.file.{Files, Paths}
   * SFs" rule: an sf0.01-only green can be coincidental (r12 found
   * q_knn_mutual green at sf0.01 and red at sf0.1 because a serving-path
   * default happened to coincide with the exact-baseline k inside the
-  * smaller top-k lists), so every NEW query must carry a committed
-  * three-SF record before it ships.
+  * smaller top-k lists), so every query carries a committed three-SF
+  * record.
   *
-  * Usage: `runMain graft.VerifyMulti <outRoot> [query ... | ALL]` —
-  * queries default to [[SparkEntry.newThisRound]]; the literal `ALL`
-  * selects the ENTIRE registry (the r14-verdict full-registry gate:
-  * rounds 1–12's queries were only ever correctness-checked at sf0.01,
-  * so the whole surface runs the three-SF gate once and the artifact —
-  * CORRECTNESS_multi_full.json — is committed). One output dir per SF
-  * (`<outRoot>/sf0.001` …), each in tools/check.py's expected layout, so
-  * `python3 tools/check_multi.py <outRoot> CORRECTNESS_multi.json` can run
-  * the DuckDB compare per SF and merge the per-query statuses into the
-  * committed artifact. VerifyMultiSpec pins that every name in
-  * [[SparkEntry.newThisRound]] has a fully-green three-SF row there.
+  * Usage: `runMain graft.VerifyMulti <outRoot> <query ... | ALL>` — the
+  * named queries, or with the literal `ALL` the ENTIRE registry. One output
+  * dir per SF (`<outRoot>/sf0.001` …), each in tools/check.py's expected
+  * layout, so `python3 tools/check_multi.py <outRoot> <scratch.json>
+  * --merge-into CORRECTNESS_multi_full.json` runs the DuckDB compare per SF
+  * and merges the per-query statuses into the committed full-registry
+  * artifact. VerifyMultiSpec pins that every live query has a fully-green
+  * three-SF row there.
   */
 object VerifyMulti {
 
@@ -30,7 +27,7 @@ object VerifyMulti {
 
   def main(args: Array[String]): Unit = {
     val outRoot = args.headOption.getOrElse(
-      sys.error("usage: VerifyMulti <outRoot> [query ...]"))
+      sys.error("usage: VerifyMulti <outRoot> <query ... | ALL>"))
     val rest = args.drop(1)
     // ALL anywhere in the args selects the whole registry; combining it
     // with explicit names is a usage error, not a query lookup — the
@@ -42,10 +39,8 @@ object VerifyMulti {
             s"query names (got: ${rest.mkString(" ")})")
         SparkEntry.queries.keySet
       }
-      else if (rest.nonEmpty) rest.toSet
-      else SparkEntry.newThisRound
-    require(names.nonEmpty,
-      "no queries to verify: pass names or populate SparkEntry.newThisRound")
+      else rest.toSet
+    require(names.nonEmpty, "no queries to verify: pass names or ALL")
     val unknown = names -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = SparkEntry.localSession(8)

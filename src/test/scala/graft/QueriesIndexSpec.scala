@@ -28,24 +28,21 @@ class QueriesIndexSpec extends AnyFunSuite {
 
   test("probe coverage is total: ratio or explicit exemption per query") {
     // r13 verdict task 4: queries_index.json carried exactly one silent
-    // probe_ratio_8x null. A query must have a measured ratio, a
-    // documented PROBE_EXEMPT marker (probe_exempt field), or be inside
-    // the current round's newThisRound window (its probe runs at round
-    // close) — a null outside those reads as coverage that isn't there.
+    // probe_ratio_8x null. A query must have a measured ratio or a
+    // documented PROBE_EXEMPT marker (probe_exempt field) — a null
+    // reads as coverage that isn't there.
     val text = java.nio.file.Files.readString(
       java.nio.file.Paths.get("queries_index.json"))
     val gaps = "\"(q_\\w+)\"\\s*:\\s*\\{([^}]*)\\}".r
       .findAllMatchIn(text)
       .filter { m =>
-        val name = m.group(1)
         val body = m.group(2)
         body.contains("\"probe_ratio_8x\": null") &&
-          !body.contains("\"probe_exempt\":") &&
-          !SparkEntry.newThisRound.contains(name)
+          !body.contains("\"probe_exempt\":")
       }
       .map(_.group(1)).toSeq.sorted
     assert(gaps.isEmpty,
-      s"silent probe gaps (no ratio, no exemption, not new this round): " +
+      s"silent probe gaps (no ratio, no exemption): " +
         gaps.mkString(", "))
   }
 
@@ -213,6 +210,30 @@ class QueriesIndexSpec extends AnyFunSuite {
     } yield s"$name.$field $loc: $why"
     assert(bad.isEmpty, "stale queries_index.json anchors (rerun " +
       "python3 tools/gen_index.py):\n  " + bad.mkString("\n  "))
+  }
+
+  test("every spec anchor names the query or its impl's declared name") {
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("queries_index.json"))
+    def read(file: String) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(file))
+    val bad = for {
+      m <- "\"(q_\\w+)\"\\s*:\\s*\\{([^}]*)\\}".r.findAllMatchIn(text).toSeq
+      name = m.group(1)
+      spec <- "\"spec\": \"([^\"]+)\"".r.findFirstMatchIn(m.group(2))
+        .map(_.group(1))
+      impl <- "\"impl\": \"([^\"]+)\"".r.findFirstMatchIn(m.group(2))
+        .map(_.group(1))
+      (file, line) = impl.span(_ != ':')
+      declared = "\\b(?:def|(?:lazy\\s+)?val)\\s+(\\w+)\\b".r
+        .findFirstMatchIn(read(file).split("\n")(line.drop(1).toInt - 1))
+        .map(_.group(1))
+      specText = read(spec)
+      if !specText.contains("\"" + name + "\"") &&
+        !declared.exists(d => ("\\b" + d + "\\b").r.findFirstIn(specText).isDefined)
+    } yield s"$name: $spec names neither \"$name\" nor ${declared.getOrElse("(no declaration)")}"
+    assert(bad.isEmpty, "spec anchors that follow an incidental mention " +
+      "(rerun python3 tools/gen_index.py):\n  " + bad.mkString("\n  "))
   }
 
   test("ScaleProbe covers every SparkEntry query exactly once") {

@@ -1,29 +1,28 @@
 #!/usr/bin/env python3
-"""Merge VerifyMulti's per-SF dumps into the committed multi-SF
-correctness artifact.
+"""Compare VerifyMulti's per-SF dumps against the DuckDB oracle and merge
+them into the committed multi-SF correctness artifact.
 
 Usage: python3 tools/check_multi.py <outRoot> <artifact.json> [round]
-                                    [--merge-into <full_artifact.json>]
+                                    [--merge-into CORRECTNESS_multi_full.json]
 
-<outRoot> is `runMain graft.VerifyMulti <outRoot> ...`'s output root: one
-check.py-layout dir per scale factor (sf0.001/sf0.01/sf0.1). Each SF's
-DuckDB compare runs via check.compare; the merged statuses land in
-<artifact.json> as one row per query:
+<outRoot> is `runMain graft.VerifyMulti <outRoot> <names | ALL>`'s output
+root: one check.py-layout dir per scale factor (sf0.001/sf0.01/sf0.1).
+Each SF's DuckDB compare runs via check.compare; this run's statuses land
+in <artifact.json> — a scratch path, not a committed file — as one row
+per query:
 
     {"round": 13,
      "sfs": ["sf0.001", "sf0.01", "sf0.1"],
      "queries": {"q_x": {"sf0.001": "ok", "sf0.01": "ok", "sf0.1": "ok"}},
      "summary": {"n_queries": 1, "n_green": 1, "all_ok": true}}
 
---merge-into additionally folds this run's per-query rows into the
-cumulative full-registry artifact (CORRECTNESS_multi_full.json): existing
-rows for the same queries are replaced, the summary recomputed, and the
-round stamp updated — the one-command form of the per-round merge that
-used to be a separate python step (r15 verdict task 6).
+--merge-into folds this run's per-query rows into the committed
+full-registry artifact (CORRECTNESS_multi_full.json): existing rows for
+the same queries are replaced, the summary recomputed, and the round
+stamp updated.
 
 Exit 1 unless every query is "ok" at every SF. VerifyMultiSpec pins that
-each round's SparkEntry.newThisRound names have fully-green rows in the
-committed artifact.
+every live query has a fully-green row in CORRECTNESS_multi_full.json.
 """
 import json, os, sys
 import check

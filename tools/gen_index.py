@@ -61,7 +61,8 @@ tier for the densification-artifact families.
   calls (resolved by scanning main sources for `def`/`val` declarations);
   falls back to the entry line for inline compositions.
 - oracle: the `"q_x" ->` line in Oracle.scala.
-- spec: the first test source mentioning the impl method (or query name).
+- spec: the test source naming the query (quoted) or the impl's declared
+  name, preferring the one named after the impl's module (find_spec).
 - probe_ratio_8x: cross-run MIN of the query's ratio over the `[scale]`
   lines of the probe logs passed via --probe (null when no log given).
 
@@ -73,10 +74,9 @@ import json, os, re, subprocess, sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Queries deliberately carrying NO probe ratio, each with its reason —
-# QueriesIndexSpec requires every query (outside the current round's
-# newThisRound window) to have either a measured probe_ratio_8x or an
-# entry here; a silent null can no longer read as coverage (r13 verdict
-# task 4). Currently empty: the probe list is derived from the registry,
+# QueriesIndexSpec requires every query to have either a measured
+# probe_ratio_8x or an entry here; a silent null can no longer read as
+# coverage (r13 verdict task 4). Currently empty: the probe list is derived from the registry,
 # so every query gets a ratio at round close.
 PROBE_EXEMPT = {}
 
@@ -189,28 +189,28 @@ def parse_oracle_lines():
             out.setdefault(m.group(1), f"{ORACLE_FILE}:{i + 1}")
     return out
 
-def find_spec(name, impl_loc, rhs, test_texts):
-    # candidate tokens: the impl declaration's name, then every method the
-    # entry's lambda calls (and its `*Of` core sibling), then the query name
-    tokens = []
-    m = re.search(r"/(\w+)\.scala:(\d+)$", impl_loc)
-    if m:
-        path = impl_loc.split(":")[0]
-        line_no = int(impl_loc.split(":")[1])
-        line = read(path).split("\n")[line_no - 1]
-        d = re.search(r"\b(?:def|(?:lazy\s+)?val)\s+(\w+)\b", line)
-        if d:
-            tokens.append(d.group(1))
-    for obj, meth in re.findall(r"\b([A-Z]\w+)\.(\w+)", rhs):
-        if (obj, meth) != ("Pipeline", "of"):
-            tokens += [meth + "Of", meth]
-    tokens.append(name)
-    for tok in tokens:
-        pat = re.compile(r"\b" + re.escape(tok) + r"\b")
-        for path, text in test_texts:
-            if pat.search(text):
-                return path
-    return None
+def declared_name(loc):
+    """The name the `def`/`val` at `file:line` declares, or None."""
+    path, line_no = loc.rsplit(":", 1)
+    d = re.search(r"\b(?:def|(?:lazy\s+)?val)\s+(\w+)\b",
+                  read(path).split("\n")[int(line_no) - 1])
+    return d.group(1) if d else None
+
+def find_spec(name, impl_loc, test_texts):
+    """The test file that names the impl's declared name or the query
+    (quoted). When several do, the one named after the impl's module
+    (`ops/Dedup.scala` -> `DedupSpec.scala`) wins, then a file naming the
+    impl (it calls the code) over one that only quotes the query name,
+    each in walk order. A test that only calls one of the entry's helpers
+    is no anchor."""
+    decl = declared_name(impl_loc)
+    by_decl = [p for p, text in test_texts
+               if decl and re.search(r"\b" + re.escape(decl) + r"\b", text)]
+    by_name = [p for p, text in test_texts if f'"{name}"' in text]
+    module = os.path.basename(impl_loc.split(":")[0])[:-len(".scala")]
+    named = [p for p in by_decl + by_name
+             if os.path.basename(p) == module + "Spec.scala"]
+    return (named + by_decl + by_name + [None])[0]
 
 def parse_probe_logs(paths, tag="scale"):
     """Cross-run MIN ratio per query over `[<tag>] q_x  t1 tN ratio` rows."""
@@ -335,7 +335,7 @@ def main():
             "entry": entry_loc,
             "impl": impl,
             "oracle": oracle.get(name),
-            "spec": find_spec(name, impl, rhs, test_texts),
+            "spec": find_spec(name, impl, test_texts),
             "probe_ratio_8x": ratios.get(name, prev.get("probe_ratio_8x")),
         }
         def round_stamp(tier, fresh_hit):
