@@ -21,12 +21,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    one map throws "Recursive update".
   *  - [[track]] registers a persisted or checkpointed frame that has no
   *    key of its own (a dense-id sort, a CC loop's final round). Inside a
-  *    build it belongs to that build's grain, outside to (session, dir).
+  *    build it belongs to that build's grain, outside to (session, dir),
+  *    once per plan.
   *  - [[invalidate]] drops one dir's entries, [[invalidateAll]] a whole
   *    session's.
   *
-  * The registry imposes no storage policy: each build chooses truncation,
-  * persist or both ([[graft.Memo]]). Every release follows one rule — a
+  * The storage policy is [[graft.Memo]]'s; everything it stores for the
+  * registry is released here. Every release follows one rule — a
   * frame's cache entry (`unpersist(false)`) and the blocks behind its
   * checkpoint leaves ([[graft.Memo.release]]) —
   * except storage some remaining entry still reaches.
@@ -87,14 +88,24 @@ object Caches {
   /** Register `df`, already persisted or checkpointed, for release: with
     * the grain whose build is running on this thread, else under (spark,
     * dir). Callers below the dir layer pass `""`; outside a build their
-    * frames are released by [[invalidateAll]] only. */
+    * frames are released by [[invalidateAll]] only. Outside a build, a
+    * plan that an entry under (spark, dir) already holds adds no entry:
+    * release is by plan, so that entry releases this frame's storage
+    * too, and a query called again does not grow the registry. */
   def track[T](spark: SparkSession, dir: String,
                df: Dataset[T]): Dataset[T] = {
     building.get match {
       case frames :: outer => building.set((df :: frames) :: outer)
-      case Nil =>
-        entries.put(Key(spark, dir, s"track#${trackSeq.incrementAndGet()}"),
-                    Entry(df, Nil))
+      case Nil => synchronized {
+        val plan = df.queryExecution.analyzed
+        val known = entries.asScala.exists { case (k, e) =>
+          (k.spark eq spark) && k.dir == dir &&
+            e.frames.exists(_.queryExecution.analyzed.sameResult(plan))
+        }
+        if (!known)
+          entries.put(Key(spark, dir, s"track#${trackSeq.incrementAndGet()}"),
+                      Entry(df, Nil))
+      }
     }
     df
   }

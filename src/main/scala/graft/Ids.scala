@@ -31,15 +31,14 @@ object Ids {
     val cols = sortCols.map(df.col)
     // Persisted: zipWithIndex runs a light counting job before the main
     // pass — without the cache the whole upstream plan would execute twice.
-    // Tracked in the memo registry, or each call would leak one persisted
-    // FACT-SIZED frame for the JVM lifetime (at the 8× scale probe the
-    // previous pass's sorted facts evicted the current pass's staging
-    // cache). Ids sits below the dir layer: inside a grain build (the
-    // Pipeline's dims and facts) the sort is released with that grain,
-    // elsewhere at session teardown.
-    val sorted = graft.Caches.track(df.sparkSession, "",
-      df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // Registry-owned, or each call would leak one persisted FACT-SIZED
+    // frame for the JVM lifetime (at the 8× scale probe the previous
+    // pass's sorted facts evicted the current pass's staging cache). Ids
+    // sits below the dir layer: inside a grain build (the Pipeline's dims
+    // and facts) the sort is released with that grain, elsewhere at
+    // session teardown.
+    val sorted = Memo.pin(
+      df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*))
     val schema = StructType(
       StructField(idCol, LongType, nullable = false) +: sorted.schema.fields)
     val rdd = sorted.rdd.zipWithIndex().map { case (r, i) =>

@@ -3,42 +3,71 @@ package graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Deployment-mode lineage truncation for the session memo grains.
+/** The engine's one storage policy: the only code in `src/main` that
+  * persists or checkpoints a frame (StorageLintSpec keeps it so).
   *
-  * Most grains in the memo registry ([[graft.Caches]]: Pipeline staging,
-  * Dedup bands/runs, TextOps shingles/tf/stats, Basket graph grains,
-  * Vectors serving grains, Corpus curation grains, the CC-loop round
-  * frames) truncate their frame's logical plan eagerly — Catalyst
-  * re-analyzing a multi-hundred-node persisted lineage per consumer action
-  * was the r18 heavy tail (guide
-  * §3.3/§7.3). HOW the truncation materializes is a deployment decision:
+  * OWNERSHIP. Every frame stored here has one owner that releases it:
+  * [[graft.Caches]] (the grain being built on this thread, else the
+  * session under a dir), or the call that stored it. A persisted frame is
+  * a session-wide CacheManager entry until someone unpersists it, so a
+  * persist without an owner is held until `clearCache`.
+  *
+  * FOUR FORMS, each site keeping the one it was measured with:
+  *
+  *  - [[truncate]] (`.truncated`): eager checkpoint, no persist. The
+  *    caller's grain or loop owns the blocks ([[release]]).
+  *  - [[stage]] (`.staged`): truncate, then persist the truncated frame.
+  *    For the staging-sized grains (the Pipeline staging frames, Dedup
+  *    bands/pairs/runs, TextOps stats/shingles/tf): the checkpoint flattens
+  *    the plan, the persist on top serves a COLUMNAR in-memory scan (the
+  *    warehouse materialize read row-RDD checkpoints ~1.7× slower than the
+  *    columnar cache; with the persist alone the planning cost returns).
+  *  - [[pin]]: persist, then [[graft.Caches.track]] — for a frame that a
+  *    lazily returned result still reads. Inside a grain build it belongs
+  *    to that grain, outside to (session, dir); a plan already tracked
+  *    under that (session, dir) adds no entry, so repeated calls do not
+  *    grow the registry.
+  *  - [[scoped]]: persist for the length of one call — the body runs its
+  *    actions over the held frames, which are unpersisted in a `finally`.
+  *    A frame some other owner already stores is used, never unpersisted.
+  *
+  * WHY TRUNCATE. A persisted frame keeps its whole logical lineage inside
+  * every consumer's plan. With ~80 ETL queries over the synthesized-feed
+  * tree and graph grains nested five deep, Catalyst re-analyzing those
+  * multi-hundred-node trees per action — not execution — was the warm
+  * cost (4-5 s of planning for a 3-row join at sf0.1). An eager checkpoint
+  * cuts each consumer's plan to a LogicalRDD leaf: the in-session
+  * equivalent of the materialized staging table the reference keeps in
+  * PostgreSQL. Frames whose callers rely on CacheManager's canonical
+  * dedup of repeated registrations ([[pin]]) stay persists; checkpoints
+  * are distinct RDDs per call and would not dedup.
+  *
+  * DURABILITY is a deployment mode, not a code path:
   *
   *  - `local` (default): eager `localCheckpoint` — blocks live in executor
-  *    storage with NO lineage to recompute. Fastest, and exactly right for
-  *    `local[n]` (executor == driver == the process; if it dies, the whole
-  *    run dies anyway). WRONG as a cluster stance at scale: one lost
-  *    executor kills every consumer of the grain.
-  *  - `reliable`: eager reliable `checkpoint` — blocks written to the
-  *    checkpoint directory (`spark.graft.memo.checkpointDir`, or an
-  *    existing `sparkContext.checkpointDir`, or a temp dir). Survives
-  *    executor loss; the cluster stance for fact-sized grains, which model
-  *    materialized staging tables in production anyway (the
-  *    [[graft.etl.Catchup.warehouseMaterializer]] argument).
+  *    storage with no lineage to recompute. Exactly right for `local[n]`
+  *    (executor == driver); on a cluster one lost executor kills every
+  *    consumer of the grain.
+  *  - `reliable`: eager reliable `checkpoint` into the context's checkpoint
+  *    directory (Spark's own `spark.checkpoint.dir`, read at context
+  *    start), else a temp dir. File-backed, constant-depth, and it
+  *    survives executor loss: the cluster stance for fact-sized grains and
+  *    long catchups ([[graft.etl.Catchup.applyAll]]).
   *
-  * Mode resolution: session conf `spark.graft.memo.mode` first (explicit
-  * per-session), env `SPARK_GRAFT_MEMO_MODE` second (deployment default),
-  * else `local`. The bench/driver contract is unaffected — the default
-  * keeps the r17/r18 behavior bit-for-bit, so cross-round numbers stay
-  * comparable; `reliable` is proven equivalent by MemoSpec and an
-  * oracle run (OPTIMIZATION_r19.md).
+  * Mode resolution: session conf `spark.graft.memo.mode` first, env
+  * `SPARK_GRAFT_MEMO_MODE` second, else `local`. Both modes are
+  * row-identical (MemoSpec, and the oracle under `reliable`).
   *
-  * Release: [[release]], a safe no-op on a reliable checkpoint (its RDD
-  * is not block-persisted; files go with the checkpoint dir, or with
+  * Release: [[release]] frees checkpoint blocks, a safe no-op on a
+  * reliable checkpoint (its files go with the checkpoint dir, or with
   * `spark.cleaner.referenceTracking.cleanCheckpoints` on long-lived
   * clusters).
   */
 object Memo {
+
+  private val Level = StorageLevel.MEMORY_AND_DISK
 
   private[graft] def mode(spark: org.apache.spark.sql.SparkSession): String =
     spark.conf.getOption("spark.graft.memo.mode")
@@ -51,18 +80,49 @@ object Memo {
   def truncate[T](df: Dataset[T]): Dataset[T] = mode(df.sparkSession) match {
     case "reliable" =>
       val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) {
-        val dir = df.sparkSession.conf
-          .getOption("spark.graft.memo.checkpointDir")
-          .getOrElse(java.nio.file.Files
-            .createTempDirectory("graft_memo_ckpt").toString)
-        sc.setCheckpointDir(dir)
-      }
+      if (sc.getCheckpointDir.isEmpty)
+        sc.setCheckpointDir(java.nio.file.Files
+          .createTempDirectory("graft_memo_ckpt").toString)
       df.checkpoint(eager = true)
     case other =>
       require(other == "local",
         s"spark.graft.memo.mode must be local|reliable, got '$other'")
       df.localCheckpoint(eager = true)
+  }
+
+  /** [[truncate]], then persist the truncated frame (columnar reads). */
+  def stage[T](df: Dataset[T]): Dataset[T] = {
+    val cp = truncate(df)
+    cp.persist(Level)
+    cp
+  }
+
+  /** Persist `df` and register it with the memo registry under `dir`
+    * (`""` below the dir layer), or with the grain being built. */
+  def pin[T](df: Dataset[T], dir: String = ""): Dataset[T] =
+    Caches.track(df.sparkSession, dir, df.persist(Level))
+
+  /** Run `body` with a [[Scope]] whose held frames are unpersisted when
+    * it returns or throws. */
+  def scoped[R](body: Scope => R): R = {
+    val scope = new Scope
+    try body(scope) finally scope.close()
+  }
+
+  /** The frames one [[scoped]] call persisted. */
+  final class Scope private[Memo] {
+    private var held = List.empty[Dataset[_]]
+
+    /** `df`, persisted until the scope ends unless already stored. */
+    def apply[T](df: Dataset[T]): Dataset[T] = {
+      if (df.storageLevel == StorageLevel.NONE) {
+        df.persist(Level)
+        held ::= df
+      }
+      df
+    }
+
+    private[Memo] def close(): Unit = held.foreach(_.unpersist(false))
   }
 
   /** The RDDs behind the LogicalRDD leaves [[truncate]] left in `df`. */
@@ -74,9 +134,10 @@ object Memo {
   def release(df: Dataset[_], keep: Set[Int] = Set.empty): Unit =
     checkpointRdds(df).filterNot(r => keep(r.id)).foreach(_.unpersist(false))
 
-  /** Postfix form — `df.truncated` reads like the `localCheckpoint(true)`
-    * call sites it replaces (import graft.Memo.TruncateOps). */
+  /** Postfix forms: `df.truncated`, `df.staged`
+    * (import graft.Memo.TruncateOps). */
   implicit class TruncateOps[T](private val ds: Dataset[T]) extends AnyVal {
     def truncated: Dataset[T] = truncate(ds)
+    def staged: Dataset[T] = stage(ds)
   }
 }

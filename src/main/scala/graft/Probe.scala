@@ -67,13 +67,15 @@ object Probe {
       op.error.fold("")(e => s""","error":${Verify.q(e)}""") + "}"
   }
 
-  /** Recursive delete of a local temp directory. */
-  private[graft] def deleteRecursively(root: Path): Unit = {
-    val walk = Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
-  }
+  /** Recursive delete of a local temp directory; a missing one is
+    * already deleted. */
+  private[graft] def deleteRecursively(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
 
   /** Checks the arguments, and only then builds the session. */
   private[graft] def run(args: Array[String], session: => SparkSession): Unit = {

@@ -7,7 +7,6 @@ import graft.streaming.SubstringIngest
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Scale-stress harness: synthesizes N× datasets from sf0.1 by key-shifted
   * self-union (keys shifted per copy so cardinalities genuinely grow;
@@ -90,7 +89,8 @@ object ScaleProbe {
   /** One N× dataset: each `shifted` table as `copies` shifted copies, each
     * `once` table copied once (dimensions the grown tables join on
     * unshifted keys; N copies would match every row N times). Written to
-    * `/tmp/graft_sf_<prefix>x<copies>`. */
+    * `/tmp/graft_sf_<prefix>x<copies>` for one family's run
+    * ([[withReplica]]). */
   final case class Shape(prefix: String, shifted: Seq[(String, Shift)],
                          once: Seq[String] = Nil) {
     def dir(copies: Int): String = s"/tmp/graft_sf_${prefix}x$copies"
@@ -138,8 +138,16 @@ object ScaleProbe {
     for (t <- shape.once) write(t, SourceReader.table(spark, src, t))
   }
 
-  def makeBig(spark: SparkSession, src: String, dst: String, copies: Int): Unit =
-    replicate(spark, src, dst, copies, Default)
+  /** `f` on `shape` replicated at `copies` copies of `src`; the N×
+    * dataset is deleted afterwards, as every run rebuilds it. */
+  private def withReplica[A](spark: SparkSession, src: String, copies: Int,
+                             shape: Shape)(f: String => A): A = {
+    val dst = shape.dir(copies)
+    try {
+      replicate(spark, src, dst, copies, shape)
+      f(dst)
+    } finally Probe.deleteRecursively(Paths.get(dst))
+  }
 
   /** Drops both cache layers so the next pass recomputes from parquet:
     * CacheManager data (persist frames) and every memo entry of the WHOLE
@@ -335,23 +343,26 @@ object ScaleProbe {
     * read-backs and the daily cycle, where the r5 small-file regression
     * hid — and the guard, custkey and partkey families. */
   private def fullProbe(spark: SparkSession, copies: Int, only: Set[String]): Unit = {
-    val dst = Default.dir(copies)
-    makeBig(spark, Src, dst, copies)
-    println(s"[scale] built ${copies}x dataset at $dst")
-    val probed = probeQueries.filter(q => only.isEmpty || only(q))
-    val (t1, tN) = pair(spark, Src, dst)(timeCounts(spark, _, probed))
-    header("scale", "query", copies)
-    probed.foreach(q => row("scale", q, t1(q), tN(q)))
-    total("TOTAL", t1.values, tN.values, copies)
-    if (only.nonEmpty) return
-    val ((m1, w1), (mN, wN)) = pair(spark, Src, dst)(runWh(spark, _))
-    header("scale", "warehouse", copies)
-    row("scale", "materialize", m1, mN)
-    w1.keys.toSeq.sorted.foreach(q => row("scale", q, w1(q), wN(q)))
-    total("WH TOTAL", w1.values, wN.values, copies)
-    guardProbe(spark, Src, dst, copies)
-    custProbe(spark, Src, copies)
-    graphProbe(spark, Src, copies)
+    withReplica(spark, Src, copies, Default) { dst =>
+      println(s"[scale] built ${copies}x dataset at $dst")
+      val probed = probeQueries.filter(q => only.isEmpty || only(q))
+      val (t1, tN) = pair(spark, Src, dst)(timeCounts(spark, _, probed))
+      header("scale", "query", copies)
+      probed.foreach(q => row("scale", q, t1(q), tN(q)))
+      total("TOTAL", t1.values, tN.values, copies)
+      if (only.isEmpty) {
+        val ((m1, w1), (mN, wN)) = pair(spark, Src, dst)(runWh(spark, _))
+        header("scale", "warehouse", copies)
+        row("scale", "materialize", m1, mN)
+        w1.keys.toSeq.sorted.foreach(q => row("scale", q, w1(q), wN(q)))
+        total("WH TOTAL", w1.values, wN.values, copies)
+        guardProbe(spark, Src, dst, copies)
+      }
+    }
+    if (only.isEmpty) {
+      custProbe(spark, Src, copies)
+      graphProbe(spark, Src, copies)
+    }
   }
 
   /** The per-customer-depth family on [[CustShifted]]: q_order_gaps'
@@ -359,10 +370,9 @@ object ScaleProbe {
     * factor on the default shape (histories deepen N×, a densification
     * artifact, not a plan defect); here per-customer depth is constant. */
   def custProbe(spark: SparkSession, src: String, copies: Int): Unit = {
-    val dst = CustShifted.dir(copies)
-    replicate(spark, src, dst, copies, CustShifted)
     val qs = Seq("q_order_gaps", "q_cohort_ltv", "q_cohort_retention")
-    val (t1, tN) = pair(spark, src, dst)(timeCounts(spark, _, qs))
+    val (t1, tN) = withReplica(spark, src, copies, CustShifted)(
+      pair(spark, src, _)(timeCounts(spark, _, qs)))
     qs.foreach { q =>
       println(f"[scale-cust] $q (o_custkey shifted) 1x=${t1(q)}%.2fs " +
         f"${copies}x=${tN(q)}%.2fs ratio=${tN(q) / t1(q)}%.1f " +
@@ -374,12 +384,11 @@ object ScaleProbe {
     * queries (triangle census, local cc) read far above N on the default
     * shape's densified graph and must probe ~linear here. */
   def graphProbe(spark: SparkSession, src: String, copies: Int): Unit = {
-    val dst = PartShifted.dir(copies)
-    replicate(spark, src, dst, copies, PartShifted)
     val qs = Seq("q_basket_pairs", "q_triangle_stats",
       "q_local_cc_hist", "q_copurchase_partners", "q_pagerank",
       "q_basket_components", "q_degree_dist")
-    val (t1, tN) = pair(spark, src, dst)(timeCounts(spark, _, qs))
+    val (t1, tN) = withReplica(spark, src, copies, PartShifted)(
+      pair(spark, src, _)(timeCounts(spark, _, qs)))
     header("scale-part", "query", copies,
       " (l_partkey shifted: constant per-part co-purchase degree)")
     qs.foreach(q => row("scale-part", q, t1(q), tN(q)))
@@ -441,29 +450,30 @@ object ScaleProbe {
     // streamed ingest cycle (w_ss_ingest): a 3-batch AvailableNow drain
     // on a 1× vs N× corpus — index AND increments both grow, the honest
     // "ingest cost tracks corpus size" number for the stream path
-    val dst = Documents.dir(copies)
-    replicate(spark, src, dst, copies, Documents)
-    val (d1, dN) = pair(spark, src, dst)(dir =>
-      inTempDir("graft_ssi")(root => secs(ssIngestCycle(spark, dir, root))))
-    row("scale-ss-w", "w_ss_ingest", d1, dN)
-    // per-phase split of the same 3-batch cycle (direct ingestBatch with
-    // the timer hook): shingling is expected linear (the payload IS N×
-    // bigger), the check and the append/commit should stay far below it.
-    // Also times the post-drain compaction (the nightly maintenance slot).
-    def phases(dir: String): (Map[String, Double], Double) =
-      inTempDir("graft_ssh") { root =>
-        val wh = new Warehouse(spark, root)
-        val acc = scala.collection.mutable.Map[String, Double]()
-          .withDefaultValue(0.0)
-        for ((b, i) <- thirds(SourceReader.table(spark, dir, "documents")).zipWithIndex)
-          SubstringIngest.ingestBatch(wh, b, i.toLong,
-            timer = (phase, sec) => acc(phase) += sec)
-        (acc.toMap, secs(SubstringIngest.compactState(wh)))
-      }
-    val ((p1, k1), (pN, kN)) = pair(spark, src, dst)(phases)
-    for (ph <- Seq("shingle", "check", "commit"))
-      row("scale-ss-w", s"w_ss_ingest_$ph", p1(ph), pN(ph))
-    row("scale-ss-w", "w_ss_compact", k1, kN)
+    withReplica(spark, src, copies, Documents) { dst =>
+      val (d1, dN) = pair(spark, src, dst)(dir =>
+        inTempDir("graft_ssi")(root => secs(ssIngestCycle(spark, dir, root))))
+      row("scale-ss-w", "w_ss_ingest", d1, dN)
+      // per-phase split of the same 3-batch cycle (direct ingestBatch with
+      // the timer hook): shingling is expected linear (the payload IS N×
+      // bigger), the check and the append/commit should stay far below
+      // it. Also times the post-drain compaction (the nightly maintenance
+      // slot).
+      def phases(dir: String): (Map[String, Double], Double) =
+        inTempDir("graft_ssh") { root =>
+          val wh = new Warehouse(spark, root)
+          val acc = scala.collection.mutable.Map[String, Double]()
+            .withDefaultValue(0.0)
+          for ((b, i) <- thirds(SourceReader.table(spark, dir, "documents")).zipWithIndex)
+            SubstringIngest.ingestBatch(wh, b, i.toLong,
+              timer = (phase, sec) => acc(phase) += sec)
+          (acc.toMap, secs(SubstringIngest.compactState(wh)))
+        }
+      val ((p1, k1), (pN, kN)) = pair(spark, src, dst)(phases)
+      for (ph <- Seq("shingle", "check", "commit"))
+        row("scale-ss-w", s"w_ss_ingest_$ph", p1(ph), pN(ph))
+      row("scale-ss-w", "w_ss_compact", k1, kN)
+    }
   }
 
   /** Per-phase split of q_copurchase_partners on [[PartShifted]]: the
@@ -473,20 +483,18 @@ object ScaleProbe {
     * probe ~linear; the pair list is persisted between the phases so the
     * window's timing doesn't re-pay the build. */
   def copurchaseSplit(spark: SparkSession, src: String, copies: Int): Unit = {
-    val dst = PartShifted.dir(copies)
-    replicate(spark, src, dst, copies, PartShifted)
-    def run(dir: String): (Double, Double) = {
+    def run(dir: String): (Double, Double) = Memo.scoped { hold =>
       val li = SourceReader.table(spark, dir, "lineitem")
       val (pairs, tPairs) = timed {
-        val p = ops.Basket.partPairsOf(li).persist(StorageLevel.MEMORY_AND_DISK)
+        val p = hold(ops.Basket.partPairsOf(li))
         p.count()
         p
       }
       val tWin = secs(ops.Basket.topPartnersOfPairs(pairs, 3).count())
-      pairs.unpersist()
       (tPairs, tWin)
     }
-    val ((p1, w1), (pN, wN)) = pair(spark, src, dst)(run)
+    val ((p1, w1), (pN, wN)) = withReplica(spark, src, copies, PartShifted)(
+      pair(spark, src, _)(run))
     row("scale-split", "q_copurchase_partners:pairs", p1, pN)
     row("scale-split", "q_copurchase_partners:window", w1, wN)
   }
@@ -511,23 +519,21 @@ object ScaleProbe {
           .withColumn("text",
             when(col("doc_id") % 100 === 0, lit(boiler))
               .otherwise(col("text")))))
-    def run(dir: String): String = {
-      val bands = ops.Dedup.minhashBandsFastOf(seeded(dir))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    def run(dir: String): String = Memo.scoped { hold =>
+      val bands = hold(ops.Dedup.minhashBandsFastOf(seeded(dir)))
       bands.count()
       val docsNorm = seeded(dir).select("doc_id", "norm")
-      def measured(pairs: DataFrame): (Long, Double, Double) = {
-        val (n, tp) = timed(pairs.persist().count())
-        val tv = secs(ops.Dedup.minhashPairsEditVerifiedOf(pairs, docsNorm).count())
-        pairs.unpersist()
-        (n, tp, tv)
-      }
+      def measured(pairs: DataFrame): (Long, Double, Double) =
+        Memo.scoped { hold =>
+          val (n, tp) = timed(hold(pairs).count())
+          val tv = secs(ops.Dedup.minhashPairsEditVerifiedOf(pairs, docsNorm).count())
+          (n, tp, tv)
+        }
       val (ng, tg, vg) = measured(ops.Dedup.minhashPairsOf(bands, 256))
       // denseGate off: this probe MEASURES the dense blowup the gate exists
       // to prevent — the seeded boilerplate bucket must be allowed to run
       val (nd, td, vd) = measured(
         ops.Dedup.minhashPairsOf(bands, Int.MaxValue, Int.MaxValue))
-      bands.unpersist()
       f"guarded pairs=$ng%9d (${tg}%6.2fs, editdist ${vg}%6.2fs)  " +
         f"dense pairs=$nd%9d (${td}%6.2fs, editdist ${vd}%6.2fs)  " +
         f"dense/guarded=${nd.toDouble / ng}%6.1fx"

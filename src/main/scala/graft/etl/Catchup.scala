@@ -25,42 +25,23 @@ object Catchup {
   /** Assign ids to `history` and fold the dated `increments` over it in
     * order. All inputs carry `uniq_id` + `date_time` and identical schemas.
     *
-    * `materialize` truncates the accumulator's lineage once per step —
-    * without it every fold step re-executes the whole accumulated plan
+    * The accumulator is truncated once per step ([[graft.Memo.truncate]])
+    * — without it every fold step re-executes the whole accumulated plan
     * (the offset count AND the anti-join probe), O(batches²) work with
-    * ever-deepening plans. Default: eager localCheckpoint (fine
-    * single-JVM). For long cluster catchups use [[warehouseMaterializer]]
-    * (durable parquet, constant-depth per-step plans, survives executor
-    * loss).
-    *
-    * `release` frees the PREVIOUS step's materialization once the next one
-    * exists — the default pairs with the default materializer and
-    * unpersists the superseded checkpoint's blocks, so a long catchup
-    * holds O(1) executor storage, not O(#increments). */
-  def applyAll(history: DataFrame, increments: Seq[DataFrame],
-               materialize: DataFrame => DataFrame = _.truncated,
-               release: DataFrame => Unit = Memo.release(_))
-      : DataFrame = {
-    var acc = materialize(Ids.dense(history, sortCols, "id"))
+    * ever-deepening plans. Each step's plan is then one leaf deep; under
+    * the `reliable` memo mode that leaf is a file-backed checkpoint, which
+    * survives executor loss on a long cluster catchup. The previous
+    * step's blocks are released once the next step exists, so a long
+    * catchup holds O(1) executor storage, not O(#increments). */
+  def applyAll(history: DataFrame, increments: Seq[DataFrame]): DataFrame = {
+    var acc = Ids.dense(history, sortCols, "id").truncated
     increments.foreach { inc =>
-      val next = materialize(applyOne(acc, inc))
-      release(acc) // next is fully materialized; acc's blocks are dead
+      val next = applyOne(acc, inc).truncated
+      Memo.release(acc) // next is fully materialized; acc's blocks are dead
       acc = next
     }
     acc
   }
-
-  /** Durable per-step materializer: overwrite a warehouse table with the
-    * accumulator and read it back. Each fold step's plan is then a
-    * constant-depth parquet scan (no lineage growth, nothing pinned in
-    * executor storage, survives executor loss — the long-catchup shape on a
-    * real cluster). [[graft.catalog.Warehouse.overwrite]] writes the new
-    * copy to a temp path BEFORE swapping it in, so the write that reads the
-    * current table never clears files out from under its own scan. Pair
-    * with `release = _ => ()` (nothing to unpersist). */
-  def warehouseMaterializer(wh: graft.catalog.Warehouse, db: String,
-                            table: String): DataFrame => DataFrame =
-    df => { wh.overwrite(db, table, df); wh.read(db, table) }
 
   /** One catchup step: drop rows the accumulated log already has (re-run
     * idempotency), id the rest from the accumulated count, append. The

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.Caches
+import graft.{Caches, Memo}
 import graft.Memo.TruncateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -27,38 +27,19 @@ object Pipeline {
 
 class Pipeline(spark: SparkSession, dir: String) {
 
-  import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  // r18: the STAGING frames are eager localCheckpoints, not persists — a
-  // persisted frame keeps its full logical lineage inside every consumer's
-  // plan, and with ~80 ETL queries re-analyzing the synthesized-feed tree
-  // per action, Catalyst planning (not execution) dominated their warm
-  // cost (guide §3.3/§7.3). A checkpoint truncates each consumer's plan to
-  // a LogicalRDD leaf — the in-session equivalent of the materialized
-  // staging table these frames model anyway. registerCached keeps persist
-  // semantics: its callers rely on CacheManager canonical-dedup of
-  // repeated registrations, which checkpoints (distinct RDDs per call)
-  // would break.
-  // Composite: eager localCheckpoint truncates every consumer's LOGICAL
-  // plan to a LogicalRDD leaf (planning over the nested staging lineage —
-  // not execution — dominated the ETL tail's warm cost, guide §3.3/§7.3),
-  // and the persist on top serves consumers a COLUMNAR in-memory scan
-  // (measured: warehouse materialize reads row-RDD checkpoints ~1.7×
-  // slower than the columnar cache; with persist alone the planning cost
-  // returns). Releasing the grain releases both layers.
+  /** A staging frame: truncated and persisted ([[graft.Memo.stage]] —
+    * the in-session equivalent of the reference's staging tables), one
+    * grain per (session, dir, name). */
   private def materialized(name: String)(df: => DataFrame): DataFrame =
-    Caches.grain(spark, dir, s"etl.$name") {
-      val cp = df.truncated; cp.persist(MEMORY_AND_DISK); cp
-    }
+    Caches.grain(spark, dir, s"etl.$name")(df.staged)
 
   /** Register an externally-built shared subplan for release with this
     * pipeline's dir (operators like Analytics.salesCubeOf take this as
-    * their `share` hook instead of persisting unilaterally — an
-    * unregistered persist leaks across bench invocations). CacheManager
-    * dedupes by canonicalized plan, so repeated registration of the same
-    * derived frame caches its data only once. */
-  def registerCached(df: DataFrame): DataFrame =
-    Caches.track(spark, dir, df.persist(MEMORY_AND_DISK))
+    * their `share` hook instead of persisting unilaterally). A persist,
+    * not a checkpoint: CacheManager dedupes by canonicalized plan, so
+    * repeated registration of the same derived frame caches its data
+    * only once. */
+  def registerCached(df: DataFrame): DataFrame = Memo.pin(df, dir)
 
   /** Shared subplans consumed more than once within a single query are
     * persisted (spill-safe MEMORY_AND_DISK): the synthesized order feed

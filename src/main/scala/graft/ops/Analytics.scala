@@ -682,7 +682,7 @@ object Analytics {
     * the final rollup has ≤ k³ rows. Monetary sums in DECIMAL (exact —
     * a double sum's floor could flip on a .99̄ boundary). */
   def customerRfmOf(orders: DataFrame, k: Int = 5): DataFrame = {
-    val base = orders
+    val base = graft.Memo.pin(orders
       .groupBy(col("o_custkey"))
       .agg(max(to_date(col("o_orderdate"))).as("last_day"),
            count(lit(1)).as("n_orders"),
@@ -693,8 +693,7 @@ object Analytics {
       .select(col("o_custkey"),
         datediff(col("max_day"), col("last_day")).cast("long")
           .as("recency_days"),
-        col("n_orders"), col("monetary"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("n_orders"), col("monetary")))
     def quintile(metric: Column, name: String): DataFrame = {
       val ranked = graft.Ids.dense(
         base.withColumn("mneg", metric), Seq("mneg", "o_custkey"), "rn")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Memo
 import graft.Memo.TruncateOps
 import graft.etl.Feeds
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,22 +26,12 @@ object Basket {
   // The graph ops persist per-call intermediates (edge lists, degree
   // tables) whose consumers are lazy, so the frames cannot be unpersisted
   // before return ([[graphHopsOf]]'s bounded-output collect trick doesn't
-  // apply to node-/pair-sized outputs); tracking them in the memo registry
-  // releases them with the grain being built (or at session teardown).
-  // Query-level entry points memoize their RESULT per (session, dir), so
-  // a long-lived session re-running a query reuses the first call's
-  // persisted intermediates instead of accreting new ones.
-  private def persistTracked(df: DataFrame): DataFrame =
-    graft.Caches.track(df.sparkSession, "",
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  // r18: the SMALL shared grains are eager localCheckpoints. persist()
-  // keeps the full logical lineage in every consumer's plan, and with the
-  // graph grains nested five deep Catalyst re-analyzes a
-  // multi-thousand-node tree per action — measured 4-5 s PLANNING for a
-  // 3-row join at sf0.1 (guide §3.3/§7.3: planning time as the
-  // bottleneck). A checkpoint truncates the consumer-side plan to a flat
-  // LogicalRDD leaf. Memoized queries compose (topPartners builds on
+  // apply to node-/pair-sized outputs): they are registry-owned
+  // ([[graft.Memo.pin]]), released with the grain being built (or at
+  // session teardown). Query-level entry points memoize their RESULT per
+  // (session, dir), truncated ([[graft.Memo]]), so a long-lived session
+  // re-running a query reuses the first call's intermediates instead of
+  // accreting new ones. Memoized queries compose (topPartners builds on
   // partPairs) — the registry's grains nest.
 
   /** Distinct (order, part) pairs — basket semantics are set-based: a part
@@ -59,7 +50,7 @@ object Basket {
     // shared-subplan pattern, see Dedup.minhashPairsOf). Tracked: the
     // lazy result frame references it, so its release waits for the
     // caller's grain or the session teardown (r13 verdict task 2).
-    val items = persistTracked(itemsOf(lineitem))
+    val items = Memo.pin(itemsOf(lineitem))
     val nOrders = items.select(countDistinct("l_orderkey").as("n_orders"))
     val freq = items.groupBy("l_partkey").agg(count(lit(1)).as("n"))
 
@@ -193,10 +184,10 @@ object Basket {
     * double division.
     */
   def triangleStatsOf(edges0: DataFrame): DataFrame = {
-    val edges = persistTracked(edges0) // feeds degrees + orient + close
-    val deg = persistTracked(degreesOf(edges))
+    val edges = Memo.pin(edges0) // feeds degrees + orient + close
+    val deg = Memo.pin(degreesOf(edges))
     val corners = triCornersOf(orientedOf(
-      persistTracked(withDegOf(edges, deg))))
+      Memo.pin(withDegOf(edges, deg))))
     triangleStatsFrom(edges, deg, corners)
   }
 
@@ -262,10 +253,10 @@ object Basket {
     * round — the fixed-round form is what production topic-rank jobs
     * run). */
   def pageRankOf(edges0: DataFrame, iters: Int = 3): DataFrame = {
-    val sym = persistTracked(
+    val sym = Memo.pin(
       edges0.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(edges0.select(col("v").as("src"), col("u").as("dst"))))
-    val deg = persistTracked(
+    val deg = Memo.pin(
       sym.groupBy("src").agg(count(lit(1)).as("deg")))
     var rank = deg.select(col("src").as("node"),
       lit(1000000L).as("rank_ppm"))
@@ -316,9 +307,9 @@ object Basket {
     * edges (bounded ×3) into a partial-agg rollup and one left join onto
     * the edge list. Never a neighbor-list crossJoin on a hub. */
   def neighborJaccardOf(edges0: DataFrame): DataFrame = {
-    val edges = persistTracked(edges0)
-    val deg = persistTracked(degreesOf(edges))
-    val withDeg = persistTracked(withDegOf(edges, deg))
+    val edges = Memo.pin(edges0)
+    val deg = Memo.pin(degreesOf(edges))
+    val withDeg = Memo.pin(withDegOf(edges, deg))
     neighborJaccardFrom(withDeg, triCornersOf(orientedOf(withDeg)))
   }
 
@@ -363,46 +354,41 @@ object Basket {
     * final min() collapses it (no exponential path blowup).
     *
     * Persist hygiene: the per-call frames (symmetrized edges + one
-    * frontier per hop) are EAGER-scoped — the final rollup is at most
-    * `maxHops + 1` rows, so it is materialized here (a bounded collect,
-    * same stance as Layout's scalar metrics) and every per-call frame is
-    * unpersisted before returning. A long-lived session can call this
-    * repeatedly without accreting ~4 cached frames per invocation. */
-  def graphHopsOf(edges0: DataFrame, maxHops: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges0.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges0.select(col("v").as("src"), col("u").as("dst")))
-      .persist(MEMORY_AND_DISK)
-    val seed = sym.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .orderBy(col("deg").desc, col("node"))
-      .limit(1)
-      .select(col("node"))
-    // no broadcast hint: hop-0 is one row but later frontiers grow —
-    // AQE picks broadcast vs shuffle per round from actual sizes
-    var frontier = seed.persist(MEMORY_AND_DISK)
-    var frontiers = List(frontier)
-    var reached = frontier.select(col("node"), lit(0L).as("hops"))
-    for (h <- 1 to maxHops) {
-      frontier = sym
-        .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .persist(MEMORY_AND_DISK)
-      frontiers ::= frontier
-      reached = reached.unionAll(
-        frontier.select(col("node"), lit(h.toLong).as("hops")))
+    * frontier per hop) are call-scoped ([[graft.Memo.scoped]]) — the
+    * final rollup is at most `maxHops + 1` rows, so it is materialized
+    * here (a bounded collect, same stance as Layout's scalar metrics) and
+    * every per-call frame is unpersisted before returning. A long-lived
+    * session can call this repeatedly without accreting ~4 cached frames
+    * per invocation. */
+  def graphHopsOf(edges0: DataFrame, maxHops: Int = 3): DataFrame =
+    Memo.scoped { hold =>
+      val sym = hold(edges0.select(col("u").as("src"), col("v").as("dst"))
+        .unionAll(edges0.select(col("v").as("src"), col("u").as("dst"))))
+      val seed = sym.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("deg"))
+        .orderBy(col("deg").desc, col("node"))
+        .limit(1)
+        .select(col("node"))
+      // no broadcast hint: hop-0 is one row but later frontiers grow —
+      // AQE picks broadcast vs shuffle per round from actual sizes
+      var frontier = hold(seed)
+      var reached = frontier.select(col("node"), lit(0L).as("hops"))
+      for (h <- 1 to maxHops) {
+        frontier = hold(sym
+          .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+          .select(col("dst").as("node")).distinct())
+        reached = reached.unionAll(
+          frontier.select(col("node"), lit(h.toLong).as("hops")))
+      }
+      val rollup = reached
+        .groupBy("node").agg(min("hops").as("min_hops"))
+        .groupBy(col("min_hops").as("hops"))
+        .agg(count(lit(1)).as("n_items"))
+      val rows = rollup.collect() // ≤ maxHops + 1 rows by construction
+      rollup.sparkSession.createDataFrame(
+        rollup.sparkSession.sparkContext.parallelize(rows.toIndexedSeq, 1),
+        rollup.schema)
     }
-    val rollup = reached
-      .groupBy("node").agg(min("hops").as("min_hops"))
-      .groupBy(col("min_hops").as("hops"))
-      .agg(count(lit(1)).as("n_items"))
-    val rows = rollup.collect() // ≤ maxHops + 1 rows by construction
-    frontiers.foreach(_.unpersist())
-    sym.unpersist()
-    rollup.sparkSession.createDataFrame(
-      rollup.sparkSession.sparkContext.parallelize(rows.toIndexedSeq, 1),
-      rollup.schema)
-  }
 
   def graphHops(spark: SparkSession, dir: String): DataFrame =
     // r18: memoized — graphHopsOf runs its BFS rounds and collects the
@@ -490,10 +476,10 @@ object Basket {
     * their three corners (×3), one partial-agg per-node rollup, one
     * ~11-key histogram groupBy. */
   def localCcHistOf(edges0: DataFrame): DataFrame = {
-    val edges = persistTracked(edges0)
-    val deg = persistTracked(degreesOf(edges))
+    val edges = Memo.pin(edges0)
+    val deg = Memo.pin(degreesOf(edges))
     val corners = triCornersOf(orientedOf(
-      persistTracked(withDegOf(edges, deg))))
+      Memo.pin(withDegOf(edges, deg))))
     localCcHistFrom(deg, nodeTriOf(corners))
   }
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Memo
 import graft.Memo.TruncateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -188,8 +189,7 @@ object Dedup {
     * `denseGate = Int.MaxValue`. */
   def minhashPairsOf(bands0: DataFrame, maxBucket: Int = 256,
                      denseGate: Int = DenseBucketGate): DataFrame = {
-    val bands = bands0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bands = Memo.pin(bands0)
     if (maxBucket == Int.MaxValue) {
       // exact dense bucket join — plain plan, no stats join (the gate
       // window reuses the join's own (band, band_hash) partitioning)
@@ -294,21 +294,11 @@ object Dedup {
       .withColumn("pairs_dropped", expr("bsz * (bsz - 1) DIV 2 - (bsz - 1)"))
 
   // Memoized per (session, dir) in [[graft.Caches]]: the banded-signature
-  // pipeline (and its persist) is shared by every consumer — pairs at any
-  // guard level, clusters — instead of re-running per query construction.
-  // Same stale-read contract as every registry grain.
-  //
-  // r18: all the grain memos are eager localCheckpoints, not persists — a
-  // persisted grain keeps its full build lineage inside every consumer's
-  // plan, and Catalyst re-analyzing those multi-hundred-node trees per
-  // action dominated the dedup families' warm cost (measured: the span
-  // family's 3-row folds cost seconds of pure planning; guide §3.3/§7.3).
+  // pipeline (staged, [[graft.Memo]]) is shared by every consumer — pairs
+  // at any guard level, clusters — instead of re-running per query
+  // construction. Same stale-read contract as every registry grain.
   private[graft] def bandsCached(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.grain(spark, dir, "dedup.bands") {
-      val cp = minhashBands(spark, dir).truncated
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp
-    }
+    graft.Caches.grain(spark, dir, "dedup.bands")(minhashBands(spark, dir).staged)
 
   // The pair list itself is persisted too (it is tiny next to its inputs):
   // one guard level's pairs are computed ONCE and shared by every consumer —
@@ -319,9 +309,7 @@ object Dedup {
   def minhashPairs(spark: SparkSession, dir: String,
                    maxBucket: Int = 256): DataFrame =
     graft.Caches.grain(spark, dir, s"dedup.pairs/$maxBucket") {
-      val cp = minhashPairsOf(bandsCached(spark, dir), maxBucket).truncated
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp
+      minhashPairsOf(bandsCached(spark, dir), maxBucket).staged
     }
 
   /** Track a checkpoint that a lazily returned frame still reads: it is
@@ -447,53 +435,46 @@ object Dedup {
     * group size by definition and stays the documented exact baseline. */
   def hammingSpanningEdgesOf(hashes0: DataFrame, hashCol: String,
                              chunkBits: Int, maxHamming: Int = 3,
-                             maxBucket: Int = 256): DataFrame = {
-    // hashes feeds three consumers (distinct values, reps, star sides).
-    // Persist only when the caller hasn't: clobbering an already-persisted
-    // input's registration would silently un-cache a memoized frame for
-    // every other consumer (latent today — the sole caller passes a fresh
-    // frame — but the ownership check costs nothing).
-    val owned =
-      hashes0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val hashes =
-      if (owned)
-        hashes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else hashes0
-    val vals = hashes.select(col(hashCol).as("sh")).distinct()
-    val valPairs = hammingValuePairs(vals, chunkBits, maxHamming,
-                                     maxBucket, denseGate = Int.MaxValue)
-    // one independent rep groupBy per plan position (CacheManager dedupes
-    // the canonicalized subplan over the persisted `hashes`); a single
-    // shared `reps` frame trips Spark 4's union-constraint rewrite when
-    // this edge list later feeds a Union-based consumer (clustersFastOf)
-    def reps(shCol: String, repCol: String) =
-      hashes.groupBy(col(hashCol).as(shCol)).agg(min("doc_id").as(repCol))
-    val within = hashes
-      .select(col("doc_id"), col(hashCol).as("sh"))
-      .join(reps("sh", "rep"), "sh")
-      .where(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-    val crossRep = valPairs
-      .join(reps("sh_a", "doc_a"), "sh_a")
-      .join(reps("sh_b", "doc_b"), "sh_b")
-      .select("doc_a", "doc_b")
-    val out = within.unionAll(crossRep)
-    // Row-RDD rebuild = constraint barrier: this plan's constraint set
-    // trips Spark 4.1's UnionBase.rewriteConstraints (key-not-found on a
-    // downstream union attribute) when the edge list feeds the CC loop's
-    // star unions — see Round14OpsSpec "spanning edges".
-    val barrier = hashes0.sparkSession.createDataFrame(out.rdd, out.schema)
-    // Eager tracked checkpoint: (a) materializes the linear edge list
-    // ONCE, so multi-consumer callers (frameNearDupClustersOf derives
-    // both `nodes` and the CC input from it) re-read blocks instead of
-    // re-running the banded bucket join; (b) lets the input persist be
-    // released HERE instead of leaking for the session lifetime (r14
-    // advice) — the checkpoint itself is tracked in the memo registry,
-    // so it is released with the caller's grain (or at teardown).
-    val edges = tracked(barrier.truncated)
-    if (owned) hashes.unpersist(false)
-    edges
-  }
+                             maxBucket: Int = 256): DataFrame =
+    // hashes feeds three consumers (distinct values, reps, star sides):
+    // held for this call only, and left alone when the caller already
+    // stores it (unpersisting an already-persisted input would silently
+    // un-cache a memoized frame for every other consumer).
+    Memo.scoped { hold =>
+      val hashes = hold(hashes0)
+      val vals = hashes.select(col(hashCol).as("sh")).distinct()
+      val valPairs = hammingValuePairs(vals, chunkBits, maxHamming,
+                                       maxBucket, denseGate = Int.MaxValue)
+      // one independent rep groupBy per plan position (CacheManager dedupes
+      // the canonicalized subplan over the persisted `hashes`); a single
+      // shared `reps` frame trips Spark 4's union-constraint rewrite when
+      // this edge list later feeds a Union-based consumer (clustersFastOf)
+      def reps(shCol: String, repCol: String) =
+        hashes.groupBy(col(hashCol).as(shCol)).agg(min("doc_id").as(repCol))
+      val within = hashes
+        .select(col("doc_id"), col(hashCol).as("sh"))
+        .join(reps("sh", "rep"), "sh")
+        .where(col("doc_id") =!= col("rep"))
+        .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
+      val crossRep = valPairs
+        .join(reps("sh_a", "doc_a"), "sh_a")
+        .join(reps("sh_b", "doc_b"), "sh_b")
+        .select("doc_a", "doc_b")
+      val out = within.unionAll(crossRep)
+      // Row-RDD rebuild = constraint barrier: this plan's constraint set
+      // trips Spark 4.1's UnionBase.rewriteConstraints (key-not-found on a
+      // downstream union attribute) when the edge list feeds the CC loop's
+      // star unions — see Round14OpsSpec "spanning edges".
+      val barrier = hashes0.sparkSession.createDataFrame(out.rdd, out.schema)
+      // Eager tracked checkpoint: (a) materializes the linear edge list
+      // ONCE, so multi-consumer callers (frameNearDupClustersOf derives
+      // both `nodes` and the CC input from it) re-read blocks instead of
+      // re-running the banded bucket join; (b) lets the input persist be
+      // released at the end of this call instead of leaking for the session
+      // lifetime — the checkpoint itself is tracked in the memo registry,
+      // so it is released with the caller's grain (or at teardown).
+      tracked(barrier.truncated)
+    }
 
   /** STRICT (sh_a < sh_b) near-hash value pairs within `maxHamming`, from
     * the pigeonhole (band, chunk) bucket join over DISTINCT hash values.
@@ -571,15 +552,13 @@ object Dedup {
     import org.apache.spark.sql.functions.{greatest, least}
     // the hash frame feeds THREE scans (distinct values + both doc-expansion
     // sides) — persist so the per-doc hash expression evaluates once, not 3×
-    val hashes = hashes0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hashes = Memo.pin(hashes0)
     // Band over DISTINCT hash values, not docs: corpora are full of exact
     // and near-exact duplicates that share a hash, so the quadratic bucket
     // join runs on |distinct hashes| and the (cheap, linear-per-output)
     // doc expansion happens only for value pairs that already passed the
     // hamming filter.
-    val vals = hashes.select(col(hashCol).as("sh")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vals = Memo.pin(hashes.select(col(hashCol).as("sh")).distinct())
     val valPairs =
       hammingValuePairs(vals, chunkBits, maxHamming, maxBucket, denseGate)
     val d1 = hashes.select(col("doc_id").as("da"), col(hashCol).as("sh_a"))
@@ -651,41 +630,45 @@ object Dedup {
     * expressed as a recursive CTE over the same edges. */
   def clustersOf(docIds: DataFrame, pairs: DataFrame,
                  maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(MEMORY_AND_DISK)
-    // Only nodes that appear in the pair graph can ever change label;
-    // the (overwhelming) singleton majority never enters the loop.
-    // localCheckpoint (eager) truncates lineage each round — without it the
-    // plan nests one join deeper per iteration and analysis/canonicalization
-    // cost grows superlinearly (the standard iterative-algorithm pitfall).
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster", col("doc_id"))
-      .truncated
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val viaEdges = labels.join(edges, labels("doc_id") === edges("src"))
-        .select(col("dst").as("doc_id"), col("cluster"))
-      val next = labels.unionAll(viaEdges)
-        .groupBy("doc_id").agg(min("cluster").as("cluster"))
+    // the edge list is read by every round: held for the loop only
+    val labels = Memo.scoped { hold =>
+      val edges = hold(
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+      // Only nodes that appear in the pair graph can ever change label;
+      // the (overwhelming) singleton majority never enters the loop.
+      // localCheckpoint (eager) truncates lineage each round — without it
+      // the plan nests one join deeper per iteration and analysis/
+      // canonicalization cost grows superlinearly (the standard
+      // iterative-algorithm pitfall).
+      var labels = edges.select(col("src").as("doc_id")).distinct()
+        .withColumn("cluster", col("doc_id"))
         .truncated
-      changed = next.join(labels.withColumnRenamed("cluster", "prev"), "doc_id")
-        .where(col("cluster") =!= col("prev")).count()
-      // prev labels' checkpoint blocks are dead once `changed` is counted
-      graft.Memo.release(labels)
-      labels = next
-      iter += 1
+      var changed = 1L
+      var iter = 0
+      while (changed > 0 && iter < maxIters) {
+        val viaEdges = labels.join(edges, labels("doc_id") === edges("src"))
+          .select(col("dst").as("doc_id"), col("cluster"))
+        val next = labels.unionAll(viaEdges)
+          .groupBy("doc_id").agg(min("cluster").as("cluster"))
+          .truncated
+        changed = next.join(labels.withColumnRenamed("cluster", "prev"), "doc_id")
+          .where(col("cluster") =!= col("prev")).count()
+        // prev labels' checkpoint blocks are dead once `changed` is counted
+        Memo.release(labels)
+        labels = next
+        iter += 1
+      }
+      tracked(labels) // final checkpoint backs the returned labels
+      // Silent non-convergence would return WRONG cluster labels
+      // (components with diameter > maxIters) while still matching row
+      // counts — fail loudly.
+      if (changed > 0) throw new IllegalStateException(
+        s"clustersOf: label propagation did not converge after $maxIters " +
+        s"iterations ($changed labels still changing); raise maxIters — the " +
+        s"component diameter exceeds it")
+      labels
     }
-    edges.unpersist()
-    tracked(labels) // final checkpoint backs the returned labels
-    // Silent non-convergence would return WRONG cluster labels (components
-    // with diameter > maxIters) while still matching row counts — fail loudly.
-    if (changed > 0) throw new IllegalStateException(
-      s"clustersOf: label propagation did not converge after $maxIters " +
-      s"iterations ($changed labels still changing); raise maxIters — the " +
-      s"component diameter exceeds it")
     // singletons keep their own id as cluster
     docIds.join(labels, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
@@ -884,7 +867,7 @@ object Dedup {
       // does not reference the previous round — release the superseded
       // round's blocks NOW instead of accreting one checkpoint per round
       // for the session lifetime (r13 verdict task 2's hygiene class)
-      graft.Memo.release(edges)
+      Memo.release(edges)
       edges = next
       cur = nextSig
       iter += 1
@@ -1150,11 +1133,10 @@ object Dedup {
     val spark = scored.sparkSession
     val thr = spark.sql(
       "SELECT explode(array(500000L, 700000L, 900000L)) AS t_ppm")
-    val flat = scored
+    val flat = Memo.pin(scored
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("n_union"))
       .crossJoin(broadcast(thr))
-      .where(col("n_common") * lit(1000000L) >= col("t_ppm") * col("n_union"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(col("n_common") * lit(1000000L) >= col("t_ppm") * col("n_union")))
     val pairs = flat.groupBy("t_ppm").agg(count(lit(1)).as("n_pairs"))
     val docs = flat
       .select(col("t_ppm"), explode(array(col("doc_a"), col("doc_b"))).as("doc"))
@@ -1370,10 +1352,7 @@ object Dedup {
   private[ops] def substringRunsCached(spark: SparkSession,
                                        dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "dedup.runs") {
-      val cp = substringRunsOf(TextOps.posShingles(spark, dir), 8, 64)
-        .truncated
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp
+      substringRunsOf(TextOps.posShingles(spark, dir), 8, 64).staged
     }
 
   private[graft] def spansFromRuns(runs: DataFrame): DataFrame =
@@ -1619,10 +1598,8 @@ object Dedup {
       val inc = tagged.where(col("doc_id") > col("cutoff"))
         .select("doc_id", "pos", "sh")
       val census = substringCensusOf(idx)
-      val cp = substringIncRunsOf(substringIndexOf(idx, census), census,
-                                  inc, 8, 64).truncated
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp
+      substringIncRunsOf(substringIndexOf(idx, census), census,
+                         inc, 8, 64).staged
     }
 
   /** Query form: the top decile of doc_ids plays the "new batch"; rides

@@ -33,8 +33,7 @@ object Fuzzy {
   def fuzzyPartPairsOf(part: DataFrame, maxDist: Int = 3): DataFrame = {
     // the distinct-name aggregate feeds both join sides — persist so the
     // part scan + name rollup runs once
-    val names = namesOf(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val names = graft.Memo.pin(namesOf(part))
     val a = names.select(col("block"), col("name").as("name_a"), col("n_parts").as("n_a"))
     val b = names.select(col("block"), col("name").as("name_b"), col("n_parts").as("n_b"))
     a.join(b, Seq("block"))

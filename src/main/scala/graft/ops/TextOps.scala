@@ -60,9 +60,7 @@ object TextOps {
   // tiny to hold, expensive to recompute. Same contract as shingles.
   def textStats(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "text.stats") {
-      val cp = textStatsOf(docsWords(spark, dir)).truncated
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp
+      textStatsOf(docsWords(spark, dir)).staged
     }
 
   /** Composite quality score in [0,1]: length, punctuation-density and
@@ -215,9 +213,7 @@ object TextOps {
   // the full explode + md5 per call without the memo.
   def posShingles(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "text.pos-shingles") {
-      val cp = posShinglesOf(docsWords(spark, dir)).truncated
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp
+      posShinglesOf(docsWords(spark, dir)).staged
     }
 
   // The distinct-shingle set feeds five query families (jaccard,
@@ -227,12 +223,7 @@ object TextOps {
   // every [[graft.Caches]] grain.
   def shingles(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "text.shingles") {
-      // eager checkpoint, not persist: truncates every consumer's plan at
-      // the shingle leaf (r18 — planning over the nested explode tree
-      // dominated the dedup/verify tail's warm cost, guide §3.3)
-      val cp = shinglesOf(docsWords(spark, dir)).truncated
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp
+      shinglesOf(docsWords(spark, dir)).staged
     }
 
   // The (doc, word) term-frequency frame feeds four plan positions in the
@@ -243,12 +234,10 @@ object TextOps {
     * tokens. */
   def tf(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "text.tf") {
-      val cp = docsWords(spark, dir)
+      docsWords(spark, dir)
         .select(col("doc_id"), explode(col("words")).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-        .truncated
-      cp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cp
+        .staged
     }
 
   /** Full-doc md5 + min-shingle-hash fingerprint (rolling-hash-style
@@ -925,14 +914,13 @@ object TextOps {
     * fold to doc grain is a final partial agg. Surprisal < 64 per
     * pair — no overflow. */
   def bigramSurprisalOf(docsWords: DataFrame): DataFrame = {
-    val pairs = docsWords.select(col("doc_id"), explode(expr(
+    val pairs = graft.Memo.pin(docsWords.select(col("doc_id"), explode(expr(
       """CASE WHEN size(words) >= 2
            THEN transform(sequence(0, size(words) - 2),
                   i -> struct(words[i] AS w1, words[i+1] AS w2))
            ELSE CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>)
          END""")).as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2")))
     val biCnt = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
     val headCnt = pairs.groupBy("w1").agg(count(lit(1)).as("n_head"))
     pairs

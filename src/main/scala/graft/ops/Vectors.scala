@@ -164,11 +164,9 @@ object Vectors {
 
   // Memoized per (session, dir) in [[graft.Caches]], like Dedup's grains:
   // the quantized frame, the IVF cell ranking, the LSH-bucketed frame and
-  // the trained PQ codebook are each built (and persisted) ONCE and shared
-  // by every ANN consumer — previously each query call-site carried its
-  // own persist() and none could unpersist it (the frame outlives the
-  // call), so repeated invocations accumulated cached copies for the
-  // session lifetime. Same STALE-READ CONTRACT as every registry grain.
+  // the trained PQ codebook are each built ONCE, persisted and owned by
+  // their grain ([[graft.Memo.pin]]), and shared by every ANN consumer.
+  // Same STALE-READ CONTRACT as every registry grain.
   //
   // Names are `vectors.<what>/<dial>` — the tag names WHAT the frame is
   // (exact top-k, trained centroids, ADC ranking, sampled grain) and the
@@ -176,16 +174,14 @@ object Vectors {
   // r18 packed these into one hand-offset Int (9·2^20+iters, ...), where
   // an out-of-range caller value silently collided into a frame with a
   // different schema (r18 ADVICE).
-  private def mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
   private def quantizedCached(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "vectors.quantized") {
-      quantized(spark, dir).persist(mem)
+      graft.Memo.pin(quantized(spark, dir))
     }
 
   private def ivfCellsCached(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "vectors.ivf-cells") {
-      ivfCellsOf(quantizedCached(spark, dir)).persist(mem)
+      graft.Memo.pin(ivfCellsOf(quantizedCached(spark, dir)))
     }
 
   private def scored(q: DataFrame, c: DataFrame): DataFrame =
@@ -383,11 +379,10 @@ object Vectors {
       // keyed by sampleN: the memoized frame IS the sample, so two
       // budgets must not alias to one entry
       val samp = graft.Caches.grain(spark, dir, s"vectors.km-sample/$sampleN") {
-        emb.select(col("vec_id"), col("qv"), col("n2"),
+        graft.Memo.pin(emb.select(col("vec_id"), col("qv"), col("n2"),
                    md5(col("vec_id").cast("string")).as("h"))
           .orderBy(col("h"), col("vec_id")).limit(sampleN)
-          .select("vec_id", "qv", "n2")
-          .persist(mem)
+          .select("vec_id", "qv", "n2"))
       }
       lloydTrain(samp, samp, iters).truncated
     }
@@ -652,8 +647,8 @@ object Vectors {
     // the interpreted HOF bucket expression is the expensive part — built
     // once per (session, dir) and shared by both join sides
     val emb = graft.Caches.grain(spark, dir, "vectors.lsh") {
-      quantizedCached(spark, dir)
-        .withColumn("bucket", expr(rhBucketExpr)).persist(mem)
+      graft.Memo.pin(quantizedCached(spark, dir)
+        .withColumn("bucket", expr(rhBucketExpr)))
     }
     val q = emb.select(col("vec_id").as("query_id"), col("bucket"),
                        col("qv").as("q_qv"), col("n2").as("qa2"))
@@ -796,7 +791,7 @@ object Vectors {
     * re-running the training chain per use. */
   private def pqCbCached(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "vectors.pq-codebook") {
-      pqCodebookTrainedOf(pqSubOf(quantizedCached(spark, dir))).persist(mem)
+      graft.Memo.pin(pqCodebookTrainedOf(pqSubOf(quantizedCached(spark, dir))))
     }
 
   // r18: the PQ code table and the per-query distance table are THE

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Memo
 import graft.Memo.TruncateOps
 import graft.catalog.Warehouse
 import graft.ops.{Dedup, TextOps}
@@ -163,18 +164,19 @@ object SubstringIngest {
     val st = state(wh)
     if (batchId <= st.hwm) return None
     val t0 = System.nanoTime()
-    val newPs = TextOps.posShinglesOf(
-        TextOps.withWords(TextOps.normalize(docs)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // when phase-timing, force the shingle materialization boundary so
-    // "shingle" measures the scan+normalize+explode and "check" the joins
-    if (timer != null) {
-      newPs.count()
-      timer("shingle", (System.nanoTime() - t0) / 1e9)
+    // held for this batch only — released also on a mid-window crash
+    Memo.scoped { hold =>
+      val newPs = hold(TextOps.posShinglesOf(
+        TextOps.withWords(TextOps.normalize(docs))))
+      // when phase-timing, force the shingle materialization boundary so
+      // "shingle" measures the scan+normalize+explode and "check" the joins
+      if (timer != null) {
+        newPs.count()
+        timer("shingle", (System.nanoTime() - t0) / 1e9)
+      }
+      ingestBody(wh, st, newPs, batchId, maxOcc, sink, maskSink,
+                 failpoint, timer)
     }
-    try ingestBody(wh, st, newPs, batchId, maxOcc, sink, maskSink,
-                   failpoint, timer)
-    finally newPs.unpersist(false) // also on a mid-window crash
   }
 
   private def ingestBody(wh: Warehouse, st: State, newPs: DataFrame,
@@ -197,22 +199,22 @@ object SubstringIngest {
         .groupBy("sh").agg(sum("occ_i").as("occ_i"))
     val tCheck = System.nanoTime()
     // ONE run grain feeds both per-batch artifacts (span rollup + mask
-    // ranges) — persisted so the match join runs once, not per artifact
-    val runs = Dedup.substringIncRunsOf(index, censusRead, newPs,
-                                        maxOcc = maxOcc)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager localCheckpoint, still REQUIRED despite the manifest filter:
-    // uncommitted appends are invisible to a lazy re-evaluation (the
-    // semi-join drops the new attempt), but once commitState runs the
-    // manifest INCLUDES this batch — a caller evaluating the returned
-    // frame after that would see the batch's own shingles in the index
-    // and self-match. Materialize while the committed state is still the
-    // pre-batch one.
-    val spans = Dedup.spansFromRuns(runs).truncated
-    val masks = Dedup.maskRangesIncFromRuns(runs,
-        newPs.select("doc_id").distinct())
-      .truncated
-    runs.unpersist(false)
+    // ranges) — held for the check so the match join runs once, not per
+    // artifact
+    val (spans, masks) = Memo.scoped { hold =>
+      val runs = hold(Dedup.substringIncRunsOf(index, censusRead, newPs,
+                                               maxOcc = maxOcc))
+      // eager truncation, still REQUIRED despite the manifest filter:
+      // uncommitted appends are invisible to a lazy re-evaluation (the
+      // semi-join drops the new attempt), but once commitState runs the
+      // manifest INCLUDES this batch — a caller evaluating the returned
+      // frame after that would see the batch's own shingles in the index
+      // and self-match. Materialize while the committed state is still
+      // the pre-batch one.
+      (Dedup.spansFromRuns(runs).truncated,
+       Dedup.maskRangesIncFromRuns(runs, newPs.select("doc_id").distinct())
+         .truncated)
+    }
     if (timer != null) timer("check", (System.nanoTime() - tCheck) / 1e9)
     val tCommit = System.nanoTime()
     // results artifacts FIRST: once the manifest moves past this batch a
@@ -280,19 +282,19 @@ object SubstringIngest {
     def stamp(df: DataFrame): DataFrame = df
       .withColumn("batch_id", lit(st.hwm))
       .withColumn("attempt", lit(attempt))
-    val census = committedRows(wh, st, "ss_census")
-      .groupBy("sh").agg(sum("occ_i").as("occ_i"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = committedRows(wh, st, "ss_index")
-      .join(census.where(col("occ_i") <= maxOcc.toLong).select("sh"),
-            Seq("sh"))
-      .select("doc_id", "pos", "sh")
-    wh.bucketedOverwrite(Db, tableName("ss_census", gen2), stamp(census),
-                         "sh", 16)
-    wh.bucketedOverwrite(Db, tableName("ss_index", gen2), stamp(live),
-                         "sh", 16)
-    commitState(wh, State(gen2, Seq(st.hwm -> attempt)))
-    census.unpersist(false)
+    Memo.scoped { hold =>
+      val census = hold(committedRows(wh, st, "ss_census")
+        .groupBy("sh").agg(sum("occ_i").as("occ_i")))
+      val live = committedRows(wh, st, "ss_index")
+        .join(census.where(col("occ_i") <= maxOcc.toLong).select("sh"),
+              Seq("sh"))
+        .select("doc_id", "pos", "sh")
+      wh.bucketedOverwrite(Db, tableName("ss_census", gen2), stamp(census),
+                           "sh", 16)
+      wh.bucketedOverwrite(Db, tableName("ss_index", gen2), stamp(live),
+                           "sh", 16)
+      commitState(wh, State(gen2, Seq(st.hwm -> attempt)))
+    }
     // the just-superseded generation is garbage now, plus one more back
     // to absorb a crash that died between the previous compaction's
     // commit and ITS sweep — older generations were swept long ago, so

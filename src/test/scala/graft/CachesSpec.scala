@@ -13,8 +13,9 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * entries vanish while other sessions' are untouched (without it a
   * long-lived multi-session JVM pins every retired session's frames for
   * its own lifetime — the r7 ADVICE finding), per-dir invalidation
-  * releases exactly one dir's storage, and the loser of a concurrent
-  * first build is released at once. */
+  * releases exactly one dir's storage, the loser of a concurrent first
+  * build is released at once, teardown releases everything the engine
+  * stored, and calling a query again does not grow the registry. */
 class CachesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -53,6 +54,40 @@ class CachesSpec extends SparkSpec {
     etl.Pipeline.of(s2, dir)
     assert(Caches.size(s2, "etl.pipeline") == 1)
     Caches.invalidateAll(s2)
+  }
+
+  test("invalidateAll releases every frame the queries stored: no " +
+       "CacheManager entry and no persisted RDD outlives teardown") {
+    Caches.invalidateAll(spark)
+    spark.catalog.clearCache()
+    def cached(): Int = org.apache.spark.sql.SpecCacheManager.entries(spark)
+    assert(cached() == 0)
+    val before = persistentIds()
+    // each of these persists a frame that its lazy result reads
+    for (q <- Seq("q_fuzzy_part_pairs", "q_customer_rfm",
+                  "q_bigram_surprisal", "q_dedup_threshold_sweep"))
+      SparkEntry.queries(q)(spark, dir).write.format("noop")
+        .mode("overwrite").save()
+    assert(cached() > 0)
+    Caches.invalidateAll(spark)
+    assert(cached() == 0,
+      "CacheManager entries outlived the registry's teardown")
+    val left = persistentIds() -- before
+    assert(left.isEmpty, s"persisted RDDs outlived the teardown: $left")
+  }
+
+  test("calling a query again adds no registry entry") {
+    val s2 = spark.newSession()
+    try {
+      def rfm(): Int = {
+        SparkEntry.queries("q_customer_rfm")(s2, dir)
+        Caches.size(s2)
+      }
+      val once = rfm()
+      assert(once > 0)
+      assert(Seq(rfm(), rfm()) == Seq(once, once),
+        "each call of the query grew the registry")
+    } finally Caches.invalidateAll(s2)
   }
 
   test("Ids.dense registers its sorted persist; invalidateAll drops it") {

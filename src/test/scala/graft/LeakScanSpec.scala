@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import java.nio.file.{Files, Path, Paths}
 
 /** Makes `sbt test` the leak gate (r10 verdict item 3): `tools/
@@ -25,7 +23,7 @@ import java.nio.file.{Files, Path, Paths}
   * address, line-wrapped mid-domain, and the gate flagged its own spec
   * file — the red path works on tracked sources too.)
   */
-class LeakScanSpec extends AnyFunSuite {
+class LeakScanSpec extends SparkSpec {
 
   /** sbt runs tests with user.dir = the build base; assert the marker so
     * a future fork/cwd change fails loudly instead of scanning nothing. */
@@ -53,28 +51,26 @@ class LeakScanSpec extends AnyFunSuite {
   }
 
   test("a seeded credential turns the gate red; subdomain fixture emails stay exempt") {
-    val tmp = Files.createTempDirectory("graft_leakscan_seed")
-    try {
-      def sh(cmd: String*): String = {
-        val (c, o) = run(cmd, tmp); assert(c == 0, s"${cmd.head} failed: $o"); o
-      }
-      sh("git", "init", "-q")
-      val key = "AKIA" + "Q" * 16             // aws_key_id shape, assembled
-      val fixtureMail = "user@" + "mail.example.com" // RFC 2606 subdomain
-      val realMail = "leak@" + "gmail.com"
-      Files.write(tmp.resolve("seeded.txt"),
-        s"key_id: $key\ncontact: $fixtureMail\nauthor: $realMail\n"
-          .getBytes("UTF-8"))
-      sh("git", "add", "seeded.txt")
-      sh("git", "-c", "user.email=t@example.com", "-c", "user.name=t",
-        "-c", "commit.gpgsign=false", "commit", "-qm", "seed")
-      val script = repoRoot.resolve("tools/leakscan.py").toString
-      val (code, out) = run(Seq("python3", script, "--stdout"), tmp)
-      assert(code == 1, s"seeded credential not detected:\n$out")
-      assert(out.contains("aws_key_id"), s"category not named:\n$out")
-      assert(out.contains(realMail), s"real-domain email not flagged:\n$out")
-      assert(!out.contains(fixtureMail),
-        s"RFC 2606 subdomain fixture wrongly flagged:\n$out")
-    } finally Probe.deleteRecursively(tmp)
+    val tmp = Paths.get(tempDir("graft_leakscan_seed"))
+    def sh(cmd: String*): String = {
+      val (c, o) = run(cmd, tmp); assert(c == 0, s"${cmd.head} failed: $o"); o
+    }
+    sh("git", "init", "-q")
+    val key = "AKIA" + "Q" * 16             // aws_key_id shape, assembled
+    val fixtureMail = "user@" + "mail.example.com" // RFC 2606 subdomain
+    val realMail = "leak@" + "gmail.com"
+    Files.write(tmp.resolve("seeded.txt"),
+      s"key_id: $key\ncontact: $fixtureMail\nauthor: $realMail\n"
+        .getBytes("UTF-8"))
+    sh("git", "add", "seeded.txt")
+    sh("git", "-c", "user.email=t@example.com", "-c", "user.name=t",
+      "-c", "commit.gpgsign=false", "commit", "-qm", "seed")
+    val script = repoRoot.resolve("tools/leakscan.py").toString
+    val (code, out) = run(Seq("python3", script, "--stdout"), tmp)
+    assert(code == 1, s"seeded credential not detected:\n$out")
+    assert(out.contains("aws_key_id"), s"category not named:\n$out")
+    assert(out.contains(realMail), s"real-domain email not flagged:\n$out")
+    assert(!out.contains(fixtureMail),
+      s"RFC 2606 subdomain fixture wrongly flagged:\n$out")
   }
 }

@@ -58,36 +58,34 @@ class ScaleProbeSpec extends SparkSpec {
   for ((name, shape, grown) <- shapes)
     test(s"the $name shape at 2 copies doubles its grown tables and keys " +
          "and copies the rest once") {
-      val root = java.nio.file.Files.createTempDirectory("graft_shape")
-      try {
-        val dst = root.toString
-        ScaleProbe.replicate(spark, src, dst, 2, shape)
-        assert(shape.shifted.map(_._1).toSet == grown.keySet)
-        for ((t, keys) <- grown) {
-          val (one, two) = (table(src, t), table(dst, t))
-          assert(two.count() == 2 * one.count(), t)
-          for (k <- keys) {
-            def distinct(df: DataFrame) = df.agg(countDistinct(k)).head().getLong(0)
-            assert(distinct(two) == 2 * distinct(one), s"$t.$k")
-          }
+      val root = tempDir("graft_shape")
+      val dst = root.toString
+      ScaleProbe.replicate(spark, src, dst, 2, shape)
+      assert(shape.shifted.map(_._1).toSet == grown.keySet)
+      for ((t, keys) <- grown) {
+        val (one, two) = (table(src, t), table(dst, t))
+        assert(two.count() == 2 * one.count(), t)
+        for (k <- keys) {
+          def distinct(df: DataFrame) = df.agg(countDistinct(k)).head().getLong(0)
+          assert(distinct(two) == 2 * distinct(one), s"$t.$k")
         }
-        for (t <- shape.once) {
-          val (one, copied) = (table(src, t), table(dst, t))
-          assert(copied.count() == one.count(), t)
-          assert(copied.exceptAll(one).isEmpty && one.exceptAll(copied).isEmpty, t)
-        }
-        if (grown.contains("documents")) {
-          val docs = table(dst, "documents")
-          val lastId = table(src, "documents").agg(max("doc_id")).head().getLong(0)
-          val shared = words(docs.where(col("doc_id") <= lastId))
-            .intersect(words(docs.where(col("doc_id") > lastId)))
-          assert(shared.isEmpty, shared.head(5).mkString(", "))
-        }
-        if (name == "customer-shifted") {
-          def depth(dir: String) = table(dir, "orders").groupBy("o_custkey")
-            .count().agg(max("count")).head().getLong(0)
-          assert(depth(dst) == depth(src))
-        }
-      } finally Probe.deleteRecursively(root)
+      }
+      for (t <- shape.once) {
+        val (one, copied) = (table(src, t), table(dst, t))
+        assert(copied.count() == one.count(), t)
+        assert(copied.exceptAll(one).isEmpty && one.exceptAll(copied).isEmpty, t)
+      }
+      if (grown.contains("documents")) {
+        val docs = table(dst, "documents")
+        val lastId = table(src, "documents").agg(max("doc_id")).head().getLong(0)
+        val shared = words(docs.where(col("doc_id") <= lastId))
+          .intersect(words(docs.where(col("doc_id") > lastId)))
+        assert(shared.isEmpty, shared.head(5).mkString(", "))
+      }
+      if (name == "customer-shifted") {
+        def depth(dir: String) = table(dir, "orders").groupBy("o_custkey")
+          .count().agg(max("count")).head().getLong(0)
+        assert(depth(dst) == depth(src))
+      }
     }
 }

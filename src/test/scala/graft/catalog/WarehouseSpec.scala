@@ -8,7 +8,7 @@ class WarehouseSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("graft_wh").toString
+    tempDir("graft_wh")
 
   test("overwrite/append/read roundtrip + schema evolution by projection") {
     val wh = new Warehouse(spark, tmp())

@@ -60,32 +60,32 @@ class CatchupSpec extends SparkSpec {
       })
     }
 
-  test("durable warehouse materializer: 20 batches, constant-depth plans") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cwh").toString
-    val wh = new graft.catalog.Warehouse(spark, root)
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(2),
-      Prop.forAll(rowsGen) { data =>
-        val rows = data.zipWithIndex.map { case ((day, amt), i) =>
-          (s"u$i", ts(day), amt)
-        }
-        val batches = rows.sortBy(_._2.getTime)
-          .grouped(math.max(1, (rows.size + 19) / 20)).toList.take(20)
-          .map(_.toDF("uniq_id", "date_time", "amount"))
-        val durable = Catchup.applyAll(batches.head, batches.tail,
-          materialize = Catchup.warehouseMaterializer(wh, "stg", "acc"),
-          release = _ => ())
-        // constant-depth per-step plans: after any number of folds the
-        // accumulator is ONE bare parquet scan, not a nested union tree
-        val flatPlan = durable.queryExecution.analyzed.collectLeaves().size == 1
-        val want = Catchup.applyAll(batches.head, batches.tail)
-          .select("id", "uniq_id").as[(Long, String)].collect().sorted.toSeq
-        val got = durable
-          .select("id", "uniq_id").as[(Long, String)].collect().sorted.toSeq
-        flatPlan && got == want && got.nonEmpty
-      })
-    assert(res.passed, res.status.toString)
-  }
+  for (mode <- Seq("local", "reliable"))
+    test(s"20 batches, constant-depth plans ($mode memo mode)") {
+      val res = SCTest.check(
+        SCTest.Parameters.default.withMinSuccessfulTests(2),
+        Prop.forAll(rowsGen) { data =>
+          val rows = data.zipWithIndex.map { case ((day, amt), i) =>
+            (s"u$i", ts(day), amt)
+          }
+          val batches = rows.sortBy(_._2.getTime)
+            .grouped(math.max(1, (rows.size + 19) / 20)).toList.take(20)
+            .map(_.toDF("uniq_id", "date_time", "amount"))
+          def ids(df: org.apache.spark.sql.DataFrame) =
+            df.select("id", "uniq_id").as[(Long, String)].collect().sorted.toSeq
+          val want = ids(Catchup.applyAll(batches.head, batches.tail))
+          def fold() = {
+            val acc = Catchup.applyAll(batches.head, batches.tail)
+            // after any number of folds the accumulator is ONE leaf, not
+            // a nested union tree
+            (acc.queryExecution.analyzed.collectLeaves().size, ids(acc))
+          }
+          val (leaves, got) =
+            if (mode == "reliable") withReliableMemo(fold()) else fold()
+          leaves == 1 && got == want && got.nonEmpty
+        })
+      assert(res.passed, res.status.toString)
+    }
 
   test("re-applying an already-applied increment is a no-op (idempotency)") {
     check(Prop.forAll(rowsGen) { data =>

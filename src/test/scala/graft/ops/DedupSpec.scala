@@ -167,7 +167,7 @@ class DedupSpec extends SparkSpec {
 
   test("bucketed band index: increment check joins without any Exchange") {
     val d = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft_incidx").toString
+    val root = tempDir("graft_incidx")
     val wh = new graft.catalog.Warehouse(spark, root)
     val bands = Dedup.minhashBands(spark, d)
     val cutoff = bands.agg(expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)"))

@@ -118,7 +118,7 @@ class PassagePqSpec extends SparkSpec {
   test("ivfPqTopK equals all-pairs ADC when every vector shares one cell") {
     // centroid sample (vec_id % 40 == 0) is {0} here, so IVF blocks nothing
     // and the composition must reproduce the plain ADC ranking at k=3
-    val evDir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val evDir = tempDir("graft_pq")
     embDF.write.mode("overwrite").parquet(s"$evDir/embeddings.parquet")
     val got = Vectors.ivfPqTopK(spark, evDir, k = 3)
       .as[(Long, Long, Long, Long)].collect().sorted.toSeq
@@ -131,7 +131,7 @@ class PassagePqSpec extends SparkSpec {
     // single cell (centroid sample = {0}) and kCand >= every candidate:
     // the ADC shortlist is the whole candidate set, so the exact rerank
     // must reproduce brute-force cosine top-3 bit-for-bit
-    val evDir = java.nio.file.Files.createTempDirectory("graft_rr").toString
+    val evDir = tempDir("graft_rr")
     embDF.write.mode("overwrite").parquet(s"$evDir/embeddings.parquet")
     val got = Vectors.ivfPqRerank(spark, evDir, kCand = 10, k = 3)
       .as[(Long, Long, Double, Long)].collect().sorted.toSeq
@@ -164,7 +164,7 @@ class PassagePqSpec extends SparkSpec {
 
   test("bucketed PQ index: probe join has no Exchange, matches ivfPqTopK") {
     val d = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft_pqi").toString
+    val root = tempDir("graft_pqi")
     val wh = new graft.catalog.Warehouse(spark, root)
     Vectors.pqIndexTo(wh, spark, d)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

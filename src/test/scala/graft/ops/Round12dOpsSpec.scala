@@ -50,7 +50,7 @@ class Round12dOpsSpec extends SparkSpec {
   test("chunk frames: 256-char slicing and per-slice fingerprints") {
     val docs = Seq((1L, "x" * 300), (2L, "y" * 10))
       .toDF("doc_id", "text")
-    val tmp = s"${java.nio.file.Files.createTempDirectory("mm").toString}"
+    val tmp = tempDir("mm")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val r = Multimodal.chunkFrames(spark, tmp)
       .as[(Long, Long, String)].collect().groupBy(_._1)

@@ -92,7 +92,7 @@ class Round16OpsSpec extends SparkSpec {
   test("bucketed substring index: the incremental match grain builds " +
        "with no Exchange (index side never shuffles)") {
     val d = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft_ssidx").toString
+    val root = tempDir("graft_ssidx")
     val wh = new graft.catalog.Warehouse(spark, root)
     val all = TextOps.posShingles(spark, d)
     val cutoff = graft.etl.Feeds.table(spark, d, "documents")

@@ -36,7 +36,7 @@ class Round17OpsSpec extends SparkSpec {
   test("ingest-debt ledger equals the streamed ingest's physical appends " +
        "and compaction reclaims exactly n_dead") {
     val wh = new graft.catalog.Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft_r17").toString)
+      tempDir("graft_r17"))
     val ledger = Dedup.substringIngestDebtOf(
         TextOps.posShinglesOf(TextOps.withWords(TextOps.normalize(fixture))),
         maxOcc = 2)

@@ -36,7 +36,7 @@ class SkewBucketSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+    val root = tempDir("graft_bkt")
     val wh = new Warehouse(spark, root)
     val facts = (1 to 10000).map(i => (i.toLong % 500, i.toLong))
       .toDF("key", "v")

@@ -96,7 +96,7 @@ class VectorsMultimodalSpec extends SparkSpec {
 
   test("bucketed IVF index: probe join has no Exchange, matches ivfTopK") {
     val d = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val root = tempDir("graft_ivf")
     val wh = new graft.catalog.Warehouse(spark, root)
     Vectors.ivfIndexTo(wh, spark, d)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -120,7 +120,7 @@ class VectorsMultimodalSpec extends SparkSpec {
     // (vec_id % 50 == 0) for the probe-append half to be a real test —
     // at sf0.001 the only query id (0) can never be in the increment
     val d = "/root/testdata/sf0.01"
-    val root = java.nio.file.Files.createTempDirectory("graft_ivfi").toString
+    val root = tempDir("graft_ivfi")
     val wh = new graft.catalog.Warehouse(spark, root)
     val emb = graft.etl.Feeds.table(spark, d, "embeddings")
     val cutoff = emb.agg(expr("CAST(max(vec_id) * 9 DIV 10 AS BIGINT)"))

@@ -1,13 +1,13 @@
 package graft.sources
 
 import graft.SparkSpec
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 class CsvSourceSpec extends SparkSpec {
 
   private def write(name: String, content: String): String = {
-    val d = Files.createTempDirectory("graft_csv")
+    val d = Paths.get(tempDir("graft_csv"))
     val f = d.resolve(name)
     Files.writeString(f, content)
     f.toString

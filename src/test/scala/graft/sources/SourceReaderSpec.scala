@@ -26,12 +26,8 @@ class SourceReaderSpec extends SparkSpec {
   }
 
   private def withTmp[T](body: String => T): T = {
-    val tmp = Files.createTempDirectory("graft_src")
-    try body(tmp.toString)
-    finally {
-      graft.Caches.invalidate(spark, tmp.toString)
-      graft.Probe.deleteRecursively(tmp)
-    }
+    val tmp = tempDir("graft_src")
+    try body(tmp) finally graft.Caches.invalidate(spark, tmp)
   }
 
   test("the reader's schema is inference's for all ten tables") {

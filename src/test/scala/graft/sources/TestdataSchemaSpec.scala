@@ -44,72 +44,66 @@ class TestdataSchemaSpec extends SparkSpec {
   }
 
   test("preflight names table and column on seeded drift") {
-    val tmp = java.nio.file.Files.createTempDirectory("contract_spec")
-    try {
-      import org.apache.spark.sql.functions._
-      // orders with o_orderkey as STRING — a type outside the pinned set
-      spark.range(3)
-        .select(col("id").cast("string").as("o_orderkey"),
-          col("id").as("o_custkey"), lit("O").as("o_orderstatus"),
-          lit(1.0).as("o_totalprice"),
-          current_timestamp().as("o_orderdate"),
-          lit("1-URGENT").as("o_orderpriority"))
-        .write.parquet(s"$tmp/orders.parquet")
-      val drift = TestdataContract.checkTable(spark, tmp.toString, "orders")
-      assert(drift.size == 1)
-      val (t, c, detail) = drift.head
-      assert(t == "orders" && c == "o_orderkey")
-      assert(detail.contains("orders.o_orderkey") &&
-        detail.contains("StringType") && detail.contains("expects"))
-      // an unreadable table reports (table, "*", why), not an exception
-      val unread = TestdataContract.checkTable(spark, tmp.toString, "nation")
-      assert(unread.size == 1 && unread.head._1 == "nation" &&
-        unread.head._2 == "*")
-    } finally graft.Probe.deleteRecursively(tmp)
+    val tmp = tempDir("contract_spec")
+    import org.apache.spark.sql.functions._
+    // orders with o_orderkey as STRING — a type outside the pinned set
+    spark.range(3)
+      .select(col("id").cast("string").as("o_orderkey"),
+        col("id").as("o_custkey"), lit("O").as("o_orderstatus"),
+        lit(1.0).as("o_totalprice"),
+        current_timestamp().as("o_orderdate"),
+        lit("1-URGENT").as("o_orderpriority"))
+      .write.parquet(s"$tmp/orders.parquet")
+    val drift = TestdataContract.checkTable(spark, tmp, "orders")
+    assert(drift.size == 1)
+    val (t, c, detail) = drift.head
+    assert(t == "orders" && c == "o_orderkey")
+    assert(detail.contains("orders.o_orderkey") &&
+      detail.contains("StringType") && detail.contains("expects"))
+    // an unreadable table reports (table, "*", why), not an exception
+    val unread = TestdataContract.checkTable(spark, tmp, "nation")
+    assert(unread.size == 1 && unread.head._1 == "nation" &&
+      unread.head._2 == "*")
   }
 
   test("preflight names a MISSING pinned column (r10 ADVICE: the branch was untested)") {
-    val tmp = java.nio.file.Files.createTempDirectory("contract_spec_miss")
-    try {
-      import org.apache.spark.sql.functions._
-      // orders WITHOUT o_orderpriority — a dropped pinned column must be
-      // reported via checkTable's `case None` arm, which the retyped-only
-      // fixture above never reaches
-      spark.range(3)
-        .select(col("id").as("o_orderkey"), col("id").as("o_custkey"),
-          lit("O").as("o_orderstatus"), lit(1.0).as("o_totalprice"),
-          current_timestamp().as("o_orderdate"))
-        .write.parquet(s"$tmp/orders.parquet")
-      val drift = TestdataContract.checkTable(spark, tmp.toString, "orders")
-      assert(drift.size == 1, drift)
-      assert(drift.head._1 == "orders" && drift.head._2 == "o_orderpriority")
-      assert(drift.head._3.contains("missing"), drift.head._3)
-    } finally graft.Probe.deleteRecursively(tmp)
+    val tmp = tempDir("contract_spec_miss")
+    import org.apache.spark.sql.functions._
+    // orders WITHOUT o_orderpriority — a dropped pinned column must be
+    // reported via checkTable's `case None` arm, which the retyped-only
+    // fixture above never reaches
+    spark.range(3)
+      .select(col("id").as("o_orderkey"), col("id").as("o_custkey"),
+        lit("O").as("o_orderstatus"), lit(1.0).as("o_totalprice"),
+        current_timestamp().as("o_orderdate"))
+      .write.parquet(s"$tmp/orders.parquet")
+    val drift = TestdataContract.checkTable(spark, tmp, "orders")
+    assert(drift.size == 1, drift)
+    assert(drift.head._1 == "orders" && drift.head._2 == "o_orderpriority")
+    assert(drift.head._3.contains("missing"), drift.head._3)
   }
 
   test("year-window preflight names a decade-shifted regeneration") {
-    val tmp = java.nio.file.Files.createTempDirectory("contract_spec_shift")
-    try {
-      import org.apache.spark.sql.functions._
-      // orders that are TYPE-correct but sit in the 2070s — the schema
-      // check passes, the value-window check must name the drift
-      spark.range(3)
-        .select(col("id").as("o_orderkey"), col("id").as("o_custkey"),
-          lit("O").as("o_orderstatus"), lit(1.0).as("o_totalprice"),
-          (current_timestamp() + expr("INTERVAL '50' YEAR"))
-            .as("o_orderdate"),
-          lit("1-URGENT").as("o_orderpriority"))
-        .write.parquet(s"$tmp/orders.parquet")
-      assert(TestdataContract.checkTable(spark, tmp.toString, "orders").isEmpty,
-        "fixture must be schema-clean; only its VALUES drift")
-      val drift = TestdataContract.yearWindowViolations(spark, tmp.toString)
-      val hit = drift.find(d => d._1 == "orders" && d._2 == "o_orderdate")
-      assert(hit.isDefined, s"shifted o_orderdate not reported: $drift")
-      assert(hit.get._3.contains("outside the pinned window"), hit.get._3)
-      // the other pinned columns are absent in this dir — they must
-      // report unreadable/missing, not crash the preflight
-      assert(drift.forall(_._3.nonEmpty))
-    } finally graft.Probe.deleteRecursively(tmp)
+    val tmp = tempDir("contract_spec_shift")
+    import org.apache.spark.sql.functions._
+    // orders that are TYPE-correct but sit in the 2070s — the schema
+    // check passes, the value-window check must name the drift
+    spark.range(3)
+      .select(col("id").as("o_orderkey"), col("id").as("o_custkey"),
+        lit("O").as("o_orderstatus"), lit(1.0).as("o_totalprice"),
+        (current_timestamp() + expr("INTERVAL '50' YEAR"))
+          .as("o_orderdate"),
+        lit("1-URGENT").as("o_orderpriority"))
+      .write.parquet(s"$tmp/orders.parquet")
+    assert(TestdataContract.checkTable(spark, tmp, "orders").isEmpty,
+      "fixture must be schema-clean; only its VALUES drift")
+    val drift = TestdataContract.yearWindowViolations(spark, tmp)
+    val hit = drift.find(d => d._1 == "orders" && d._2 == "o_orderdate")
+    assert(hit.isDefined, s"shifted o_orderdate not reported: $drift")
+    assert(hit.get._3.contains("outside the pinned window"), hit.get._3)
+    // the other pinned columns are absent in this dir — they must
+    // report unreadable/missing, not crash the preflight
+    assert(drift.forall(_._3.nonEmpty))
   }
 
   test("year-window preflight is clean on the current testdata") {

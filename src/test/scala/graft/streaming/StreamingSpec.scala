@@ -10,7 +10,7 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def stage(src: String): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val d = tempDir("graft_stream")
     val name = new java.io.File(src).getName
     java.nio.file.Files.copy(java.nio.file.Paths.get(src),
       java.nio.file.Paths.get(d, name))
@@ -41,9 +41,9 @@ class StreamingSpec extends SparkSpec {
 
   test("AvailableNow drains deliveries incrementally and matches batch") {
     val dir = "/root/testdata/sf0.001"
-    val watch = java.nio.file.Files.createTempDirectory("graft_anw").toString
-    val sink = java.nio.file.Files.createTempDirectory("graft_ans").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_anc").toString
+    val watch = tempDir("graft_anw")
+    val sink = tempDir("graft_ans")
+    val ckpt = tempDir("graft_anc")
     def deliver(name: String): Unit =
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$dir/lineitem.parquet"),
@@ -68,14 +68,14 @@ class StreamingSpec extends SparkSpec {
 
   test("streamed increments merged into the warehouse reproduce batch marts") {
     val dir = "/root/testdata/sf0.001"
-    val watch = java.nio.file.Files.createTempDirectory("graft_e2w").toString
-    val sink = java.nio.file.Files.createTempDirectory("graft_e2s").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_e2c").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_e2wh").toString
+    val watch = tempDir("graft_e2w")
+    val sink = tempDir("graft_e2s")
+    val ckpt = tempDir("graft_e2c")
+    val root = tempDir("graft_e2wh")
     val wh = new graft.catalog.Warehouse(spark, root)
     // two DISJOINT daily increments: lineitem split by orderkey parity
     def deliver(name: String, parity: Int): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e2d").toString
+      val tmp = tempDir("graft_e2d")
       spark.read.parquet(s"$dir/lineitem.parquet")
         .where(pmod(col("l_orderkey"), lit(2)) === parity)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -111,13 +111,13 @@ class StreamingSpec extends SparkSpec {
 
   test("daily cycle: 3 increments leave <=1 file per touched partition") {
     val dir = "/root/testdata/sf0.001"
-    val watch = java.nio.file.Files.createTempDirectory("graft_dcw").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dcc").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_dcwh").toString
+    val watch = tempDir("graft_dcw")
+    val ckpt = tempDir("graft_dcc")
+    val root = tempDir("graft_dcwh")
     val wh = new graft.catalog.Warehouse(spark, root)
     import graft.catalog.Warehouse.PartCol
     def deliver(name: String, rem: Int): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dcd").toString
+      val tmp = tempDir("graft_dcd")
       spark.read.parquet(s"$dir/lineitem.parquet")
         .where(pmod(col("l_orderkey"), lit(3)) === rem)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -130,7 +130,7 @@ class StreamingSpec extends SparkSpec {
     // the new delivery (shared sink + checkpoint, the day's rows = the
     // drain's file delta), merges into the month-partitioned fact and
     // compacts the touched months
-    val sink = java.nio.file.Files.createTempDirectory("graft_dcs").toString
+    val sink = tempDir("graft_dcs")
     var allTouched = Set[String]()
     for (day <- 0 to 2) {
       deliver(s"inc_day$day.parquet", day)
@@ -190,10 +190,10 @@ class StreamingSpec extends SparkSpec {
     // each cycle's merge reads from history stay bounded by its touched
     // months.
     val dir = "/root/testdata/sf0.001"
-    val watch = java.nio.file.Files.createTempDirectory("graft_skw").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_skc").toString
-    val sink = java.nio.file.Files.createTempDirectory("graft_sks").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_skwh").toString
+    val watch = tempDir("graft_skw")
+    val ckpt = tempDir("graft_skc")
+    val sink = tempDir("graft_sks")
+    val root = tempDir("graft_skwh")
     val wh = new graft.catalog.Warehouse(spark, root)
     import graft.catalog.Warehouse.PartCol
     val months = spark.read.parquet(s"$dir/orders.parquet")
@@ -201,7 +201,7 @@ class StreamingSpec extends SparkSpec {
       .distinct().orderBy("m").as[String].collect().take(30)
     assert(months.length == 30, s"only ${months.length} months in the feed")
     def deliver(name: String, month: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_skd").toString
+      val tmp = tempDir("graft_skd")
       spark.read.parquet(s"$dir/lineitem.parquet")
         .join(spark.read.parquet(s"$dir/orders.parquet")
             .where(date_format(col("o_orderdate"), "yyyy-MM") === month)
@@ -395,8 +395,8 @@ class StreamingSpec extends SparkSpec {
       (102L, 10L, ts("2024-01-20 00:00:00")), // same day as event 2
       (103L, 20L, ts("2023-12-01 00:00:00"))) // >7 days before event 3
       .toDF("o_orderkey", "o_custkey", "o_orderdate")
-    val evDir = java.nio.file.Files.createTempDirectory("graft_ssj_e").toString
-    val ordDir = java.nio.file.Files.createTempDirectory("graft_ssj_o").toString
+    val evDir = tempDir("graft_ssj_e")
+    val ordDir = tempDir("graft_ssj_o")
     events.write.mode("overwrite").parquet(evDir)
     orders.write.mode("overwrite").parquet(ordDir)
     val q = IncrementStream.eventOrderJoin(

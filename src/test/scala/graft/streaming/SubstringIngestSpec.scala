@@ -20,7 +20,7 @@ class SubstringIngestSpec extends SparkSpec {
     TextOps.posShinglesOf(TextOps.withWords(TextOps.normalize(docs)))
 
   private def freshWh() = new graft.catalog.Warehouse(spark,
-    java.nio.file.Files.createTempDirectory("graft_ssw").toString)
+    tempDir("graft_ssw"))
 
   private def collectSpans(df: DataFrame): Seq[(Long, Long, Long, Long, Long)] =
     df.as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq
@@ -46,9 +46,9 @@ class SubstringIngestSpec extends SparkSpec {
 
   test("streamed ingest: each batch's spans equal a fresh-index batch " +
        "check, which equals the rebuild restricted to the batch") {
-    val watch = java.nio.file.Files.createTempDirectory("graft_ssw").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssc").toString
-    val results = java.nio.file.Files.createTempDirectory("graft_ssr").toString
+    val watch = tempDir("graft_ssw")
+    val ckpt = tempDir("graft_ssc")
+    val results = tempDir("graft_ssr")
     val wh = freshWh()
     val docs = graft.etl.Feeds.table(spark, dir, "documents")
     val n = docs.agg(max("doc_id")).as[Long].head()
@@ -60,7 +60,7 @@ class SubstringIngestSpec extends SparkSpec {
     }
     // drop one file per drain: three daily crawler deliveries
     def deliver(i: Int): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ssd").toString
+      val tmp = tempDir("graft_ssd")
       batch(i).coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -250,12 +250,12 @@ class SubstringIngestSpec extends SparkSpec {
     val docs = graft.etl.Feeds.table(spark, dir, "documents")
     def batch(i: Int) = docs.where($"doc_id" % 4 === i)
     def drive(compactEvery: Int): (graft.catalog.Warehouse, String) = {
-      val watch = java.nio.file.Files.createTempDirectory("graft_cw").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_cc").toString
-      val results = java.nio.file.Files.createTempDirectory("graft_cr").toString
+      val watch = tempDir("graft_cw")
+      val ckpt = tempDir("graft_cc")
+      val results = tempDir("graft_cr")
       val wh = freshWh()
       for (i <- 0 to 3) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cd").toString
+        val tmp = tempDir("graft_cd")
         batch(i).coalesce(1).write.mode("overwrite").parquet(tmp)
         val part = new java.io.File(tmp).listFiles()
           .filter(_.getName.endsWith(".parquet")).head
