@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -52,9 +56,10 @@ import org.apache.spark.storage.StorageLevel
   *    consumer of the grain.
   *  - `reliable`: eager reliable `checkpoint` into the context's checkpoint
   *    directory (Spark's own `spark.checkpoint.dir`, read at context
-  *    start), else a temp dir. File-backed, constant-depth, and it
-  *    survives executor loss: the cluster stance for fact-sized grains and
-  *    long catchups ([[graft.etl.Catchup.applyAll]]).
+  *    start), else a temp dir deleted when the context stops.
+  *    File-backed, constant-depth, and it survives executor loss: the
+  *    cluster stance for fact-sized grains and long catchups
+  *    ([[graft.etl.Catchup.applyAll]]).
   *
   * Mode resolution: session conf `spark.graft.memo.mode` first, env
   * `SPARK_GRAFT_MEMO_MODE` second, else `local`. Both modes are
@@ -79,15 +84,25 @@ object Memo {
     * modes (it IS `df`'s result, stored). */
   def truncate[T](df: Dataset[T]): Dataset[T] = mode(df.sparkSession) match {
     case "reliable" =>
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(java.nio.file.Files
-          .createTempDirectory("graft_memo_ckpt").toString)
+      ensureCheckpointDir(df.sparkSession.sparkContext)
       df.checkpoint(eager = true)
     case other =>
       require(other == "local",
         s"spark.graft.memo.mode must be local|reliable, got '$other'")
       df.localCheckpoint(eager = true)
+  }
+
+  /** A context without a checkpoint dir gets a temp dir, deleted with
+    * everything checkpointed into it when the context stops. */
+  private def ensureCheckpointDir(sc: SparkContext): Unit = sc.synchronized {
+    if (sc.getCheckpointDir.isEmpty) {
+      val dir = Files.createTempDirectory("graft_memo_ckpt")
+      sc.setCheckpointDir(dir.toString)
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+          Probe.deleteRecursively(dir)
+      })
+    }
   }
 
   /** [[truncate]], then persist the truncated frame (columnar reads). */

@@ -153,26 +153,8 @@ class Warehouse(spark: SparkSession, root: String) {
     * metadata requires a catalog entry, not a bare path; the name carries
     * this warehouse's root hash so multi-root sessions don't collide). */
   def bucketedOverwrite(db: String, table: String, df: DataFrame,
-                        bucketCol: String, n: Int,
-                        moreCols: String*): Unit = {
-    begin(db, table)
-    df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .option("path", path(db, table))
-      .bucketBy(n, bucketCol, moreCols: _*)
-      .sortBy(bucketCol, moreCols: _*)
-      .saveAsTable(catalogName(db, table))
-    refreshOwnCatalog(db, table)
-  }
-
-  /** Drop THIS session's cached relation for the table. The write above
-    * refreshes the catalog of `df`'s session — which inside a streaming
-    * foreachBatch is a CLONE, not this warehouse's session, so without
-    * this a readTable here would keep serving the pre-write file list
-    * (the round-16 substring-ingest stream read only its bootstrap batch
-    * until this fix; SubstringIngestSpec pins the multi-batch state). */
-  private def refreshOwnCatalog(db: String, table: String): Unit =
-    spark.catalog.refreshTable(catalogName(db, table))
+                        bucketCol: String, n: Int, moreCols: String*): Unit =
+    bucketedWrite(SaveMode.Overwrite, db, table, df, bucketCol, n, moreCols)
 
   /** Bucketed APPEND — incremental ingest into a [[bucketedOverwrite]]
     * table: Spark validates the bucket spec against the catalog entry, so
@@ -180,10 +162,15 @@ class Warehouse(spark: SparkSession, root: String) {
     * stay Exchange-free across the union of original and appended files
     * (spec-asserted in VectorsMultimodalSpec). */
   def bucketedAppend(db: String, table: String, df: DataFrame,
-                     bucketCol: String, n: Int,
-                     moreCols: String*): Unit = {
+                     bucketCol: String, n: Int, moreCols: String*): Unit =
+    bucketedWrite(SaveMode.Append, db, table, df, bucketCol, n, moreCols)
+
+  /** The one bucketed writer behind both verbs. */
+  private def bucketedWrite(mode: SaveMode, db: String, table: String,
+                            df: DataFrame, bucketCol: String, n: Int,
+                            moreCols: Seq[String]): Unit = {
     begin(db, table)
-    df.write.mode(SaveMode.Append)
+    df.write.mode(mode)
       .format("parquet")
       .option("path", path(db, table))
       .bucketBy(n, bucketCol, moreCols: _*)
@@ -191,6 +178,15 @@ class Warehouse(spark: SparkSession, root: String) {
       .saveAsTable(catalogName(db, table))
     refreshOwnCatalog(db, table)
   }
+
+  /** Drop THIS session's cached relation for the table. The bucketed write
+    * refreshes the catalog of `df`'s session — which inside a streaming
+    * foreachBatch is a CLONE, not this warehouse's session, so without
+    * this a readTable here would keep serving the pre-write file list
+    * (the round-16 substring-ingest stream read only its bootstrap batch
+    * until this fix; SubstringIngestSpec pins the multi-batch state). */
+  private def refreshOwnCatalog(db: String, table: String): Unit =
+    spark.catalog.refreshTable(catalogName(db, table))
 
   def readTable(db: String, table: String): DataFrame =
     spark.table(catalogName(db, table))

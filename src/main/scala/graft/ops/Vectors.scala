@@ -24,12 +24,113 @@ import org.apache.spark.sql.functions._
   */
 object Vectors {
 
-  // codegen int-dot (exactly the HOF aggregate(zip_with(...)) semantics,
-  // compiled — see expr/VecDotQ); keeps oracle determinism, drops the
-  // interpreted higher-order evaluation from the hot path
-  private def dotCol = graft.expr.VecDotQ(col("q_qv"), col("c_qv"))
-  private val scoreExpr =
-    "CAST(dot AS DOUBLE) / sqrt(CAST(qa2 AS DOUBLE) * CAST(ca2 AS DOUBLE))"
+  // -------------------------------------------------------------------
+  // The scoring core. Every ANN, IVF, PQ, near-dup and monitor path
+  // composes these helpers, so each rule the oracle pins — the cosine
+  // score, the rank rule, what reaches a rank window — is written once.
+  // They are plain DataFrame functions, so Catalyst optimizes the same
+  // composed plan the inline copies built.
+  // -------------------------------------------------------------------
+
+  /** A scorer's query side: (query_id, extra…, q_qv, qa2). */
+  private def querySide(emb: DataFrame, extra: Column*): DataFrame =
+    side(emb, "query_id", "q_qv", "qa2", extra)
+
+  /** A scorer's candidate side: (cand_id, extra…, c_qv, ca2). */
+  private def candSide(emb: DataFrame, extra: Column*): DataFrame =
+    side(emb, "cand_id", "c_qv", "ca2", extra)
+
+  private def side(emb: DataFrame, id: String, qv: String, n2: String,
+                   extra: Seq[Column]): DataFrame =
+    emb.select((col("vec_id").as(id) +: extra) ++
+               Seq(col("qv").as(qv), col("n2").as(n2)): _*)
+
+  /** A cell list (vec_id, centroid_id) as a query side with vectors. */
+  private def queryCells(cells: DataFrame, emb: DataFrame): DataFrame =
+    cells.select(col("vec_id").as("query_id"), col("centroid_id"))
+      .join(querySide(emb), Seq("query_id"))
+
+  /** A cell list (vec_id, centroid_id) as a candidate side with vectors. */
+  private def candCells(cells: DataFrame, emb: DataFrame): DataFrame =
+    cells.select(col("vec_id").as("cand_id"), col("centroid_id"))
+      .join(candSide(emb), Seq("cand_id"))
+
+  /** The cosine score of (q_qv, qa2) × (c_qv, ca2) pairs: the codegen
+    * int-dot ([[graft.expr.VecDotQ]] — exactly the HOF
+    * aggregate(zip_with(...)) semantics, compiled, so the interpreted
+    * higher-order evaluation stays off the hot path), then the one
+    * floating-point step, which the oracle repeats bit for bit. */
+  private def cosine(pairs: DataFrame): DataFrame =
+    pairs.withColumn("dot", graft.expr.VecDotQ(col("q_qv"), col("c_qv")))
+      .withColumn("score", expr(
+        "CAST(dot AS DOUBLE) / sqrt(CAST(qa2 AS DOUBLE) * CAST(ca2 AS DOUBLE))"))
+
+  /** Brute force: every `queries` vector (broadcast) scored against every
+    * `cands` vector but itself. */
+  private def exactScores(queries: DataFrame, cands: DataFrame): DataFrame =
+    cosine(broadcast(querySide(queries))
+      .join(candSide(cands), col("cand_id") =!= col("query_id")))
+
+  /** Blocked search: query and candidate sides that share `key` (an IVF
+    * cell, an LSH bucket, a label) scored pairwise, self excluded. */
+  private def blockScores(q: DataFrame, c: DataFrame, key: String): DataFrame =
+    cosine(q.join(c, Seq(key)).where(col("cand_id") =!= col("query_id")))
+
+  /** The rank rule: per query, the best `by` first, ties to the smaller
+    * `id` — the tiebreak the oracle's windows use. */
+  private def rankOf(by: Column, id: String): Column =
+    row_number().over(Window.partitionBy("query_id").orderBy(by, col(id)))
+
+  /** What reaches a score window: the query id, the ranked `id`, the
+    * `keep` columns and the score — never a vector. Scoring is map-side,
+    * so the window's shuffle then moves ~24-byte rows instead of two
+    * 64-long arrays (~1 KB); with the arrays carried through, the N·k
+    * ranking shuffled ~40 GB at 8× and q_ivfpq_topk ran 28× instead of
+    * ~2×. */
+  private def shed(scored: DataFrame, id: String, keep: Seq[String]): DataFrame =
+    scored.select(("query_id" +: id +: keep :+ "score").map(col): _*)
+
+  /** Every scored `id` with its rank `rn` under its query. */
+  private def ranked(scored: DataFrame, id: String, keep: String*): DataFrame =
+    shed(scored, id, keep).withColumn("rn", rankOf(col("score").desc, id))
+
+  /** Each query's best-scoring `id` (rn = 1). */
+  private[graft] def nearest(scored: DataFrame, id: String,
+                             keep: String*): DataFrame =
+    ranked(scored, id, keep: _*).where(col("rn") === 1)
+
+  /** Each query's `k` best-scoring candidates:
+    * (query_id, cand_id, keep…, score, rnk). */
+  private[graft] def topK(scored: DataFrame, k: Int, keep: String*): DataFrame =
+    shed(scored, "cand_id", keep)
+      .withColumn("rnk", rankOf(col("score").desc, "cand_id").cast("long"))
+      .where(col("rnk") <= k)
+
+  /** ADC ranking: per (query, candidate) the sum of its `d2` table
+    * lookups, each query's `k` smallest: (query_id, cand_id, adc_d2, rnk).
+    * Only codes and distances reach it, never a vector. */
+  private def adcTopK(lookups: DataFrame, k: Int): DataFrame =
+    lookups.groupBy("query_id", "cand_id")
+      .agg(sum("d2").as("adc_d2"))
+      .withColumn("rnk", rankOf(col("adc_d2"), "cand_id").cast("long"))
+      .where(col("rnk") <= k)
+
+  /** Near-dup flag over each vector's nearest candidate. */
+  private def dupsOf(scored: DataFrame, threshold: Double,
+                     keep: String*): DataFrame =
+    nearest(scored, "cand_id", keep: _*)
+      .select((col("query_id").as("vec_id") +: col("cand_id").as("nn_vec_id")
+               +: keep.map(col)) :+ col("score"): _*)
+      .withColumn("is_dup", col("score") >= threshold)
+
+  /** The deterministic fixed-budget draw: the `n` vectors with the
+    * smallest md5(vec_id). Order-free and cross-engine stable — both
+    * engines render the bigint and hash it identically. */
+  private def md5Sample(emb: DataFrame, n: Int): DataFrame =
+    emb.select(col("vec_id"), col("qv"), col("n2"),
+               md5(col("vec_id").cast("string")).as("h"))
+      .orderBy(col("h"), col("vec_id")).limit(n)
+      .select("vec_id", "qv", "n2")
 
   // -------------------------------------------------------------------
   // Hyperparameters PINNED IN LOCKSTEP with the DuckDB oracle. The oracle
@@ -90,26 +191,15 @@ object Vectors {
     * store ships (search only `lang='en'`, only this tenant, …). The
     * filter lives in the JOIN CONDITION, not a post-filter, so the
     * blocked/IVF variants inherit it as a label-partitioned candidate
-    * set; ranks shed the vectors before the window like every other
-    * scorer here. */
+    * set; it ranks through [[topK]] like every other scorer here. */
   def annCosineTopKFiltered(spark: SparkSession, dir: String,
                             k: Int = 5): DataFrame = {
     val emb = quantizedCached(spark, dir)
-    val q = broadcast(emb.where(isQuery(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-              col("qv").as("q_qv"), col("n2").as("qa2")))
-    val c = emb.select(col("vec_id").as("cand_id"),
-                       col("label").as("c_label"),
-                       col("qv").as("c_qv"), col("n2").as("ca2"))
-    q.join(c, col("cand_id") =!= col("query_id") &&
-              col("q_label") === col("c_label"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "q_label", "cand_id", "score")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
+    val q = broadcast(querySide(emb.where(isQuery(col("vec_id"))),
+                                col("label").as("q_label")))
+    val c = candSide(emb, col("label").as("c_label"))
+    topK(cosine(q.join(c, col("cand_id") =!= col("query_id") &&
+                          col("q_label") === col("c_label"))), k, "q_label")
       .select(col("query_id"), col("q_label").as("label"),
               col("cand_id"), col("score"), col("rnk"))
   }
@@ -184,11 +274,6 @@ object Vectors {
       graft.Memo.pin(ivfCellsOf(quantizedCached(spark, dir)))
     }
 
-  private def scored(q: DataFrame, c: DataFrame): DataFrame =
-    q.join(c, col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-
   /** Brute-force cosine top-5 for the deterministic query subset
     * (vec_id % 50 == 0). */
   // r18: the exact brute-force top-k grain, keyed by k — the ground-truth
@@ -204,38 +289,21 @@ object Vectors {
     }
 
   /** Frame-based core of [[annCosineTopK]] (fixture-testable). */
-  def annCosineTopKOf(emb: DataFrame, k: Int = 5): DataFrame = {
-    val q = broadcast(emb.where(isQuery(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-              col("n2").as("qa2")))
-    val c = emb.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                       col("n2").as("ca2"))
-    scored(q, c)
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "score", "rnk")
-  }
+  def annCosineTopKOf(emb: DataFrame, k: Int = 5): DataFrame =
+    topK(exactScores(emb.where(isQuery(col("vec_id"))), emb), k)
 
-  /** Per-vector centroid ranking (broadcast centroids, deterministic subset
-    * vec_id % 40 == 0; ties broken by centroid id). rn = 1 is the IVF cell
-    * assignment; rn ≤ nprobe is the probe list.
-    *
-    * The vectors are PROJECTED AWAY before the ranking window: scoring is
-    * map-side (broadcast centroids), so the window's shuffle moves only
-    * (query_id, centroid_id, score) — 24-byte rows instead of two 64-long
-    * arrays (~1 KB). The 8× probe caught exactly this: with the arrays
-    * carried through, the N·k ranking shuffled ~40 GB at 8× and
-    * q_ivfpq_topk ran 28× instead of ~2× (every rank window in this file
-    * projects first for the same reason). */
-  /** The deterministic coarse-quantizer set (vec_id % 40 == 0). */
+  /** The deterministic seed centroids (vec_id % 40 == 0) as an `id`-keyed
+    * centroid set (id, c_qv, ca2). */
+  private def seedCentroids(emb: DataFrame, id: String): DataFrame =
+    side(emb.where(col("vec_id") % 40 === 0), id, "c_qv", "ca2", Nil)
+
+  /** The deterministic coarse-quantizer set. */
   private def ivfCentroidsOf(emb: DataFrame): DataFrame =
-    emb.where(col("vec_id") % 40 === 0)
-      .select(col("vec_id").as("centroid_id"), col("qv").as("c_qv"),
-              col("n2").as("ca2"))
+    seedCentroids(emb, "centroid_id")
 
+  /** Per-vector centroid ranking (broadcast centroids, ties broken by
+    * centroid id). rn = 1 is the IVF cell assignment; rn ≤ nprobe is the
+    * probe list. */
   private def ivfCellsOf(emb: DataFrame): DataFrame =
     ivfCellsOf(emb, ivfCentroidsOf(emb))
 
@@ -243,15 +311,7 @@ object Vectors {
     * ingest path assigns new vectors against the persisted quantizer
     * rather than re-deriving centroids from the (unavailable) corpus. */
   private def ivfCellsOf(emb: DataFrame, cents: DataFrame): DataFrame =
-    emb.select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-               col("n2").as("qa2"))
-      .join(broadcast(cents))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "centroid_id", "score")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("centroid_id"))))
+    ranked(cosine(querySide(emb).join(broadcast(cents))), "centroid_id")
 
   /** IVF cell assignment: each vector's nearest centroid. */
   def ivfAssign(spark: SparkSession, dir: String): DataFrame =
@@ -264,38 +324,13 @@ object Vectors {
     // both consumed twice (query side + candidate side) — memoized frames
     val assign = ivfAssign(spark, dir).select("vec_id", "centroid_id")
     val emb = quantizedCached(spark, dir)
-    val q = assign.where(isQuery(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-      .join(emb.select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-                       col("n2").as("qa2")), Seq("query_id"))
-    val c = assign
-      .select(col("vec_id").as("cand_id"), col("centroid_id"))
-      .join(emb.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                       col("n2").as("ca2")), Seq("cand_id"))
-    broadcast(q).join(c, Seq("centroid_id"))
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "score", "rnk")
+    val q = queryCells(assign.where(isQuery(col("vec_id"))), emb)
+    topK(blockScores(broadcast(q), candCells(assign, emb), "centroid_id"), k)
   }
 
   /** Nearest-centroid assignment for a (cell, c_qv, ca2) centroid set. */
   private def assignTo(emb: DataFrame, cents: DataFrame): DataFrame =
-    emb.select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-               col("n2").as("qa2"))
-      .join(broadcast(cents))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "cell", "score") // shed vectors pre-window
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cell"))))
-      .where(col("rn") === 1)
+    nearest(cosine(querySide(emb).join(broadcast(cents))), "cell")
       .select(col("query_id").as("vec_id"), col("cell"), col("score"))
 
   /** IVF centroid TRAINING: `iters` Lloyd rounds from the deterministic
@@ -329,9 +364,7 @@ object Vectors {
     * training sets). */
   private def lloydTrain(train: DataFrame, seedFrom: DataFrame,
                          iters: Int): DataFrame = {
-    var cents = seedFrom.where(col("vec_id") % 40 === 0)
-      .select(col("vec_id").as("cell"), col("qv").as("c_qv"),
-              col("n2").as("ca2"))
+    var cents = seedCentroids(seedFrom, "cell")
     for (_ <- 1 to iters) {
       val assign = assignTo(train, cents).select("vec_id", "cell")
       val sums = assign
@@ -379,10 +412,7 @@ object Vectors {
       // keyed by sampleN: the memoized frame IS the sample, so two
       // budgets must not alias to one entry
       val samp = graft.Caches.grain(spark, dir, s"vectors.km-sample/$sampleN") {
-        graft.Memo.pin(emb.select(col("vec_id"), col("qv"), col("n2"),
-                   md5(col("vec_id").cast("string")).as("h"))
-          .orderBy(col("h"), col("vec_id")).limit(sampleN)
-          .select("vec_id", "qv", "n2"))
+        graft.Memo.pin(md5Sample(emb, sampleN))
       }
       lloydTrain(samp, samp, iters).truncated
     }
@@ -423,25 +453,10 @@ object Vectors {
     val cells = ivfCellsCached(spark, dir)
       .select(col("query_id").as("vec_id"), col("centroid_id"), col("rn"))
     val emb = quantizedCached(spark, dir)
-    val q = cells.where(col("rn") <= nprobe)
-      .where(isQuery(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-      .join(emb.select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-                       col("n2").as("qa2")), Seq("query_id"))
-    val c = cells.where(col("rn") === 1)
-      .select(col("vec_id").as("cand_id"), col("centroid_id"))
-      .join(emb.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                       col("n2").as("ca2")), Seq("cand_id"))
-    broadcast(q).join(c, Seq("centroid_id"))
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "score", "rnk")
+    val q = queryCells(cells.where(col("rn") <= nprobe)
+      .where(isQuery(col("vec_id"))), emb)
+    val c = candCells(cells.where(col("rn") === 1), emb)
+    topK(blockScores(broadcast(q), c, "centroid_id"), k)
   }
 
   /** Brute-force cosine top-k on the RAW float vectors via the native
@@ -465,15 +480,10 @@ object Vectors {
               col("n2").as("qa2")))
     val c = emb.select(col("vec_id").as("cand_id"),
                        col("embedding").as("c_emb"), col("n2").as("ca2"))
-    q.join(c, col("cand_id") =!= col("query_id"))
+    val scored = q.join(c, col("cand_id") =!= col("query_id"))
       .withColumn("score",
         vec_dot(col("q_emb"), col("c_emb")) / sqrt(col("qa2") * col("ca2")))
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "rnk")
+    topK(scored, k).select("query_id", "cand_id", "rnk")
   }
 
   /** Persist the IVF index in the warehouse, bucketed on `centroid_id` —
@@ -498,20 +508,24 @@ object Vectors {
   def ivfIndexToOf(wh: graft.catalog.Warehouse, emb: DataFrame,
                    db: String = "ann", nBuckets: Int = 8): Unit = {
     val cents = ivfCentroidsOf(emb)
+    wh.overwrite(db, "ivf_centroids", cents)
+    for ((table, rows) <- ivfIndexRows(emb, cents))
+      wh.bucketedOverwrite(db, table, rows, "centroid_id", nBuckets)
+  }
+
+  /** The two served IVF tables for `emb` assigned against `cents`, in
+    * write order: every vector's `ivf_index` row (cand_id, centroid_id,
+    * c_qv, ca2) and the query subset's `ivf_probes` row (query_id,
+    * centroid_id, q_qv, qa2). */
+  private def ivfIndexRows(emb: DataFrame,
+                           cents: DataFrame): Seq[(String, DataFrame)] = {
     val assign = ivfCellsOf(emb, cents).where(col("rn") === 1)
       .select(col("query_id").as("vec_id"), col("centroid_id"))
-    wh.overwrite(db, "ivf_centroids", cents)
-    wh.bucketedOverwrite(db, "ivf_index",
-      assign.join(emb.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
-        .select(col("vec_id").as("cand_id"), col("centroid_id"),
-                col("qv").as("c_qv"), col("n2").as("ca2")),
-      "centroid_id", nBuckets)
-    wh.bucketedOverwrite(db, "ivf_probes",
-      assign.where(isQuery(col("vec_id")))
-        .join(emb.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
-        .select(col("vec_id").as("query_id"), col("centroid_id"),
-                col("qv").as("q_qv"), col("n2").as("qa2")),
-      "centroid_id", nBuckets)
+    def withVectors(a: DataFrame): DataFrame =
+      a.join(emb.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
+    Seq("ivf_index" -> candSide(withVectors(assign), col("centroid_id")),
+        "ivf_probes" -> querySide(withVectors(assign.where(isQuery(col("vec_id")))),
+                                  col("centroid_id")))
   }
 
   /** INCREMENTAL vector ingest — the ANN analog of the dedup band-index
@@ -530,21 +544,8 @@ object Vectors {
     * centroid set, for BOTH tables (spec-asserted). */
   def ivfIndexAppend(wh: graft.catalog.Warehouse, inc: DataFrame,
                      db: String = "ann", nBuckets: Int = 8): Unit = {
-    val emb = quantizedOf(inc)
-    val cents = wh.read(db, "ivf_centroids")
-    val assign = ivfCellsOf(emb, cents).where(col("rn") === 1)
-      .select(col("query_id").as("vec_id"), col("centroid_id"))
-    wh.bucketedAppend(db, "ivf_index",
-      assign.join(emb.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
-        .select(col("vec_id").as("cand_id"), col("centroid_id"),
-                col("qv").as("c_qv"), col("n2").as("ca2")),
-      "centroid_id", nBuckets)
-    wh.bucketedAppend(db, "ivf_probes",
-      assign.where(isQuery(col("vec_id")))
-        .join(emb.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
-        .select(col("vec_id").as("query_id"), col("centroid_id"),
-                col("qv").as("q_qv"), col("n2").as("qa2")),
-      "centroid_id", nBuckets)
+    for ((table, rows) <- ivfIndexRows(quantizedOf(inc), wh.read(db, "ivf_centroids")))
+      wh.bucketedAppend(db, table, rows, "centroid_id", nBuckets)
   }
 
   /** The co-located probe join over the persisted bucketed index — both
@@ -554,24 +555,15 @@ object Vectors {
     * query_id). */
   def ivfProbeJoin(wh: graft.catalog.Warehouse,
                    db: String = "ann"): DataFrame =
-    wh.readTable(db, "ivf_probes")
-      .join(wh.readTable(db, "ivf_index"), Seq("centroid_id"))
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
+    blockScores(wh.readTable(db, "ivf_probes"), wh.readTable(db, "ivf_index"),
+                "centroid_id")
 
   /** IVF top-k served from the bucketed warehouse index — same results as
     * [[ivfTopK]], but candidate generation reads pre-bucketed parquet with
     * zero shuffle before scoring. */
   def ivfTopKIndexed(wh: graft.catalog.Warehouse, db: String = "ann",
                      k: Int = DefaultK): DataFrame =
-    ivfProbeJoin(wh, db)
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "score", "rnk")
+    topK(ivfProbeJoin(wh, db), k)
 
   /** Embedding near-dup blocked by IVF cell — the corpus-scale shape of
     * [[nearDup]]: every vector's candidates are the vectors sharing its
@@ -585,26 +577,8 @@ object Vectors {
                  threshold: Double = 0.90): DataFrame = {
     val assign = ivfAssign(spark, dir).select("vec_id", "centroid_id")
     val emb = quantizedCached(spark, dir)
-    val q = assign
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-      .join(emb.select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-                       col("n2").as("qa2")), Seq("query_id"))
-    val c = assign
-      .select(col("vec_id").as("cand_id"), col("centroid_id"))
-      .join(emb.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                       col("n2").as("ca2")), Seq("cand_id"))
-    q.join(c, Seq("centroid_id"))
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))))
-      .where(col("rn") === 1)
-      .select(col("query_id").as("vec_id"), col("cand_id").as("nn_vec_id"),
-              col("score"))
-      .withColumn("is_dup", col("score") >= threshold)
+    dupsOf(blockScores(queryCells(assign, emb), candCells(assign, emb),
+                       "centroid_id"), threshold)
   }
 
   /** Deterministic random-hyperplane coefficients for cosine LSH: 8
@@ -650,22 +624,8 @@ object Vectors {
       graft.Memo.pin(quantizedCached(spark, dir)
         .withColumn("bucket", expr(rhBucketExpr)))
     }
-    val q = emb.select(col("vec_id").as("query_id"), col("bucket"),
-                       col("qv").as("q_qv"), col("n2").as("qa2"))
-    val c = emb.select(col("vec_id").as("cand_id"), col("bucket"),
-                       col("qv").as("c_qv"), col("n2").as("ca2"))
-    q.join(c, Seq("bucket"))
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))))
-      .where(col("rn") === 1)
-      .select(col("query_id").as("vec_id"), col("cand_id").as("nn_vec_id"),
-              col("score"))
-      .withColumn("is_dup", col("score") >= threshold)
+    dupsOf(blockScores(querySide(emb, col("bucket")), candSide(emb, col("bucket")),
+                       "bucket"), threshold)
   }
 
   /** Embedding near-dup: nearest same-label neighbor per vector with an
@@ -675,22 +635,8 @@ object Vectors {
   def nearDup(spark: SparkSession, dir: String,
               threshold: Double = 0.90): DataFrame = {
     val emb = quantizedCached(spark, dir)
-    val a = emb.select(col("vec_id").as("query_id"), col("label"),
-                       col("qv").as("q_qv"), col("n2").as("qa2"))
-    val b = emb.select(col("vec_id").as("cand_id"), col("label"),
-                       col("qv").as("c_qv"), col("n2").as("ca2"))
-    a.join(b, Seq("label"))
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "cand_id", "label", "score") // shed vectors
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))))
-      .where(col("rn") === 1)
-      .select(col("query_id").as("vec_id"), col("cand_id").as("nn_vec_id"),
-              col("label"), col("score"))
-      .withColumn("is_dup", col("score") >= threshold)
+    dupsOf(blockScores(querySide(emb, col("label")), candSide(emb, col("label")),
+                       "label"), threshold, "label")
   }
 
   // ---------------------------------------------------------------------
@@ -831,15 +777,8 @@ object Vectors {
 
   private def adcRank(codes: DataFrame, dtab: DataFrame,
                       k: Int): DataFrame =
-    codes.join(broadcast(dtab), Seq("cm", "code"))
-      .where(col("cand_id") =!= col("query_id"))
-      .groupBy("query_id", "cand_id")
-      .agg(sum("d2").as("adc_d2"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("adc_d2"), col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "adc_d2", "rnk")
+    adcTopK(codes.join(broadcast(dtab), Seq("cm", "code"))
+      .where(col("cand_id") =!= col("query_id")), k)
 
   def pqAdcTopKOf(emb: DataFrame, k: Int = 5): DataFrame = {
     // one sub/codebook lineage shared by the encode and the distance table
@@ -886,18 +825,11 @@ object Vectors {
       .select(col("query_id"), col("centroid_id"))
     val cCell = cells.where(col("rn") === 1)
       .select(col("query_id").as("cand_id"), col("centroid_id"))
-    broadcast(qCell).join(cCell, Seq("centroid_id"))
+    adcTopK(broadcast(qCell).join(cCell, Seq("centroid_id"))
       .where(col("cand_id") =!= col("query_id"))
       .select("query_id", "cand_id")
       .join(codes, Seq("cand_id"))
-      .join(broadcast(dtab), Seq("query_id", "cm", "code"))
-      .groupBy("query_id", "cand_id")
-      .agg(sum("d2").as("adc_d2"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("adc_d2"), col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "adc_d2", "rnk")
+      .join(broadcast(dtab), Seq("query_id", "cm", "code")), k)
   }
 
   /** Two-stage serving: ADC SHORTLIST → EXACT RERANK — the production
@@ -915,19 +847,8 @@ object Vectors {
     val shortlist = ivfPqTopK(spark, dir, kCand, nprobe = DefaultNProbe)
       .select("query_id", "cand_id")
     val emb = quantizedCached(spark, dir)
-    shortlist
-      .join(emb.select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-                       col("n2").as("qa2")), Seq("query_id"))
-      .join(emb.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                       col("n2").as("ca2")), Seq("cand_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "score", "rnk")
+    topK(cosine(shortlist.join(querySide(emb), Seq("query_id"))
+                         .join(candSide(emb), Seq("cand_id"))), k)
   }
 
   /** Persist the IVF-PQ index in the warehouse: codes (one row per
@@ -977,15 +898,8 @@ object Vectors {
                        k: Int = DefaultK): DataFrame = {
     val sub = pqSubOf(quantizedCached(spark, dir))
     val dtab = pqDtabOf(sub, pqCbCached(spark, dir))
-    pqProbeJoin(wh, db)
-      .join(broadcast(dtab), Seq("query_id", "cm", "code"))
-      .groupBy("query_id", "cand_id")
-      .agg(sum("d2").as("adc_d2"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("adc_d2"), col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "adc_d2", "rnk")
+    adcTopK(pqProbeJoin(wh, db)
+      .join(broadcast(dtab), Seq("query_id", "cm", "code")), k)
   }
 
   /** Recall@k of the IVF index against exact brute force, per query — the
@@ -1107,34 +1021,10 @@ object Vectors {
     val assign = ivfCellsOf(idx, ivfCentroidsOf(emb))
       .where(col("rn") <= nprobe)
       .select(col("query_id").as("vec_id"), col("centroid_id"), col("rn"))
-    val q = assign.where(isMonitorQuery)
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-      .join(idx.select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-                       col("n2").as("qa2")), Seq("query_id"))
-    val c = assign.where(col("rn") === 1)
-      .select(col("vec_id").as("cand_id"), col("centroid_id"))
-      .join(idx.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                       col("n2").as("ca2")), Seq("cand_id"))
-    val served = broadcast(q).join(c, Seq("centroid_id"))
-      .where(col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))))
-      .where(col("rnk") <= k)
-    val truth = scored(
-      broadcast(v2All.where(isMonitorQuery)
-        .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-                col("n2").as("qa2"))),
-      v2All.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                   col("n2").as("ca2")))
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))))
-      .where(col("rnk") <= k)
+    val q = queryCells(assign.where(isMonitorQuery), idx)
+    val c = candCells(assign.where(col("rn") === 1), idx)
+    val served = topK(blockScores(broadcast(q), c, "centroid_id"), k)
+    val truth = topK(exactScores(v2All.where(isMonitorQuery), v2All), k)
     recallOf(truth, served, k)
   }
 
@@ -1419,21 +1309,8 @@ object Vectors {
     * the corpus-wide exact grain. */
   private def sampledMutualTopkOf(emb: DataFrame, k: Int,
                                   sampleN: Int): DataFrame = {
-    val s = emb.where(isQuery(col("vec_id")))
-      .select(col("vec_id"), col("qv"), col("n2"),
-              md5(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(sampleN)
-    val q = broadcast(s.select(col("vec_id").as("query_id"),
-      col("qv").as("q_qv"), col("n2").as("qa2")))
-    val c = s.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                     col("n2").as("ca2"))
-    scored(q, c)
-      .select("query_id", "cand_id", "score") // shed vectors pre-window
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= k)
-      .select("query_id", "cand_id", "score", "rnk")
+    val s = md5Sample(emb.where(isQuery(col("vec_id"))), sampleN)
+    topK(exactScores(s, s), k)
   }
 
   def knnComponentsSampled(spark: SparkSession, dir: String): DataFrame =
@@ -1456,19 +1333,11 @@ object Vectors {
     * queries-sized partial agg. Queries with an empty ball emit no row
     * (mirrored in the oracle). At corpus scale the same count composes
     * on the IVF-blocked scorer instead of the exact scan. */
-  def annRangeCountOf(quantized: DataFrame, tau: Double): DataFrame = {
-    val q = broadcast(quantized.where(isQuery(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-              col("n2").as("qa2")))
-    val c = quantized.select(col("vec_id").as("cand_id"),
-                             col("qv").as("c_qv"), col("n2").as("ca2"))
-    q.join(c, col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
+  def annRangeCountOf(quantized: DataFrame, tau: Double): DataFrame =
+    exactScores(quantized.where(isQuery(col("vec_id"))), quantized)
       .where(col("score") >= tau)
       .groupBy("query_id")
       .agg(count(lit(1)).as("n_in_range"))
-  }
 
   def annRangeCount(spark: SparkSession, dir: String,
                     tau: Double = 0.25): DataFrame =
@@ -1484,19 +1353,11 @@ object Vectors {
     *
     * Scale shape: same broadcast eval × one corpus scan as the exact
     * baseline; the rollup is a ≤41-bucket partial agg. */
-  def cosScoreHistOf(quantized: DataFrame): DataFrame = {
-    val q = broadcast(quantized.where(isQuery(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-              col("n2").as("qa2")))
-    val c = quantized.select(col("vec_id").as("cand_id"),
-                             col("qv").as("c_qv"), col("n2").as("ca2"))
-    q.join(c, col("cand_id") =!= col("query_id"))
-      .withColumn("dot", dotCol)
-      .withColumn("score", expr(scoreExpr))
+  def cosScoreHistOf(quantized: DataFrame): DataFrame =
+    exactScores(quantized.where(isQuery(col("vec_id"))), quantized)
       .select(floor(col("score") * lit(20)).cast("long").as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_pairs"))
-  }
 
   def cosScoreHist(spark: SparkSession, dir: String): DataFrame =
     cosScoreHistOf(quantizedCached(spark, dir))
@@ -1547,21 +1408,8 @@ object Vectors {
   def rankStabilitySampled(spark: SparkSession, dir: String,
                            sampleN: Int = 256): DataFrame = {
     val emb = quantizedCached(spark, dir)
-    val squery = emb.where(isQuery(col("vec_id")))
-      .select(col("vec_id"), col("qv"), col("n2"),
-              md5(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(sampleN)
-      .select("vec_id", "qv", "n2")
-    val q = broadcast(squery.select(col("vec_id").as("query_id"),
-      col("qv").as("q_qv"), col("n2").as("qa2")))
-    val c = emb.select(col("vec_id").as("cand_id"), col("qv").as("c_qv"),
-                       col("n2").as("ca2"))
-    val exact = scored(q, c)
-      .select("query_id", "cand_id", "score")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("cand_id"))).cast("long"))
-      .where(col("rnk") <= 5)
+    val squery = md5Sample(emb.where(isQuery(col("vec_id"))), sampleN)
+    val exact = topK(exactScores(squery, emb), 5)
     // r18: rides the memoized code + distance-table grains (identical
     // frames — same sub/codebook lineage) instead of re-encoding per call
     val codes = pqCodes(spark, dir)

@@ -1,5 +1,11 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+import scala.sys.process.{Process, ProcessLogger}
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -85,5 +91,41 @@ class MemoSpec extends SparkSpec {
     spark.conf.set("spark.graft.memo.mode", "bogus")
     try intercept[IllegalArgumentException](Memo.truncate(base))
     finally spark.conf.unset("spark.graft.memo.mode")
+  }
+
+  test("reliable mode's fallback checkpoint dir is deleted when its " +
+       "context stops") {
+    // one SparkContext per JVM, and this suite's has a checkpoint dir:
+    // the fallback runs in a child JVM whose temp root is this test's
+    val tmp = tempDir("memo_fallback")
+    val jvm = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(a => Seq("-Xmx", "-Djava.io.tmpdir", "-agentlib",
+                          "-javaagent").exists(a.startsWith))
+    val (out, err) = (new StringBuilder, new StringBuilder)
+    val exit = Process(Seq(s"${sys.props("java.home")}/bin/java") ++ jvm ++
+      Seq("-Xmx512m", s"-Djava.io.tmpdir=$tmp",
+          "-cp", sys.props("java.class.path"), "graft.MemoFallbackMain"))
+      .!(ProcessLogger(l => out.append(l).append('\n'),
+                       l => err.append(l).append('\n')))
+    assert(exit == 0, err.takeRight(4000).toString)
+    val used = out.toString.linesIterator.collectFirst {
+      case l if l.startsWith("ckpt=") => l.stripPrefix("ckpt=")
+    }
+    assert(used.exists(_.contains(tmp)), out)
+    val left = new java.io.File(tmp).list().filter(_.startsWith("graft_memo_ckpt"))
+    assert(left.isEmpty, left.mkString(", "))
+  }
+}
+
+/** The child JVM of the fallback-dir test: one reliable truncate on a
+  * context with no checkpoint dir, then a stop. */
+object MemoFallbackMain {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.conf.set("spark.graft.memo.mode", "reliable")
+    Memo.truncate(spark.range(10).toDF()).collect()
+    println("ckpt=" + spark.sparkContext.getCheckpointDir.getOrElse(""))
+    spark.stop()
   }
 }

@@ -1,7 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Pins the plan-shape claims the architecture notes make about scans:
   * column pruning reaching the parquet reader and predicate pushdown
@@ -203,5 +210,83 @@ class PlanShapeSpec extends SparkSpec {
       case n: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => n
     }
     assert(cart.isEmpty, s"non-equi join in frame-dedup plan: $cart")
+  }
+
+  /** The registry queries whose SparkEntry entry calls ops.Vectors. */
+  private def vectorsQueries: Seq[String] = {
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
+    val starts = "\"(q_\\w+)\"\\s*->".r.findAllMatchIn(src).toSeq
+    starts.zip(starts.drop(1).map(_.start) :+ src.length).collect {
+      case (m, end) if src.substring(m.start, end).contains("ops.Vectors.") =>
+        m.group(1)
+    }.distinct.sorted
+  }
+
+  /** The input schema of every window in `plan`, looking through cached
+    * relations into their physical plans (and through the adaptive
+    * wrappers there, as [[allScans]] does). */
+  private def windowInputs(plan: LogicalPlan): Seq[StructType] =
+    plan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
+        Seq(w.child.schema)
+      case m: InMemoryRelation => physicalWindowInputs(m.cacheBuilder.cachedPlan)
+    }.flatten
+
+  private def physicalWindowInputs(
+      p: org.apache.spark.sql.execution.SparkPlan): Seq[StructType] =
+    p.collect {
+      case w: WindowExec => Seq(w.child.schema)
+      case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        physicalWindowInputs(im.relation.cachedPlan)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        physicalWindowInputs(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        physicalWindowInputs(q.plan)
+    }.flatten
+
+  test("no rank window of a Vectors query carries a vector column") {
+    val names = vectorsQueries
+    assert(names.nonEmpty && names.forall(SparkEntry.queries.contains), names)
+    // grains are checkpointed, so their windows are only in the plans that
+    // BUILD them: drop the dir's grains and record every action's plan
+    Caches.invalidate(spark, d)
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        built.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val seen = try names.map { n =>
+      n -> windowInputs(SparkEntry.queries(n)(spark, d).queryExecution.optimizedPlan)
+    } finally {
+      org.apache.spark.SpecListenerBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    val all = seen ++ built.toArray(Array.empty[LogicalPlan]).toSeq
+      .map(p => "(grain build)" -> windowInputs(p))
+    val carrying = for {
+      (n, schemas) <- all
+      s <- schemas if s.fields.exists(_.dataType.isInstanceOf[ArrayType])
+    } yield s"$n: ${s.fieldNames.mkString(",")}"
+    // the exact top-k grain's window is seen in its build, the IVF cell
+    // ranking's in the cached relation the IVF paths read
+    assert(all.count(_._2.nonEmpty) > names.size / 2 &&
+      Seq("(grain build)", "q_ann_ivf_assign")
+        .forall(n => all.exists(a => a._1 == n && a._2.nonEmpty)),
+      all.map(a => s"${a._1}=${a._2.size}").mkString(" "))
+    assert(carrying.isEmpty, carrying.mkString("\n"))
+  }
+
+  test("equal scores rank the smaller cand_id first, in topK and nearest") {
+    import spark.implicits._
+    // the larger id first, so input order cannot be what decides
+    val scored = Seq((0L, 7L, 0.5), (0L, 3L, 0.5), (0L, 9L, 0.25))
+      .toDF("query_id", "cand_id", "score")
+    assert(ops.Vectors.topK(scored, 2).as[(Long, Long, Double, Long)]
+      .collect().toSeq.sortBy(_._4) == Seq((0L, 3L, 0.5, 1L), (0L, 7L, 0.5, 2L)))
+    assert(ops.Vectors.nearest(scored, "cand_id").select("cand_id")
+      .as[Long].collect().toSeq == Seq(3L))
   }
 }

@@ -4,9 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 
 /** Round-15 additions: the substring-tier dedup (maximal duplicated word
-  * spans at arbitrary offsets — r14 verdict task 4), the fixed-budget
-  * sampled kNN-components monitor (task 2) and the sampled-training
-  * k-means assignment (task 5).
+  * spans at arbitrary offsets — r14 verdict task 4) and the sampled
+  * k-means trainer's drift monitor (task 5). The sampled-vs-full checks
+  * of the fixed-budget vector monitors are in VectorsMultimodalSpec.
   */
 class Round15OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -88,23 +88,6 @@ class Round15OpsSpec extends SparkSpec {
       ("blog", "wiki", 1L, 1L, 20L)))  // 2->3 (quote shared transitively)
   }
 
-  test("sampled kNN components == full components when the budget covers " +
-       "the whole eval set and candidates are all queries") {
-    // every vec_id % 50 == 0 -> eval set = corpus = sample; the sampled
-    // form's in-sample candidate restriction coincides with the full
-    // form's, so the two must agree exactly
-    val emb = (1 to 12).map { i =>
-      val v = Array.tabulate(8)(d => if (d == i % 3) 1.0f else 0.001f * i)
-      (i * 50L, "en", v)
-    }.toDF("vec_id", "label", "embedding")
-    val q = Vectors.quantizedOf(emb)
-    val sampled = Vectors.knnComponentsSampledOf(q)
-      .as[(Long, Long)].collect().toSet
-    val full = Vectors.knnComponentsOf(
-      Vectors.annCosineTopKOf(q)).as[(Long, Long)].collect().toSet
-    assert(sampled == full && sampled.nonEmpty)
-  }
-
   test("span histogram buckets the planted quote by ⌊log2 words⌋") {
     val docs = Seq(
       (1L, s"a1 a2 a3 $quote z1 z2"),
@@ -138,24 +121,5 @@ class Round15OpsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSeq
     assert(out.size == 1 && out.head._1 == out.head._2 &&
       out.head._3 == 1000000L)
-  }
-
-  test("sampled rank-stability == full monitor when the budget covers " +
-       "the eval set (per-query ranks unchanged by the restriction)") {
-    val dir = "/root/testdata/sf0.001"
-    val a = Vectors.rankStabilitySampled(spark, dir)
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    val b = Vectors.rankStability(spark, dir)
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    assert(a.toSeq == b.toSeq && a.nonEmpty)
-  }
-
-  test("sampled k-means == full trainer when the budget covers the corpus") {
-    val dir = "/root/testdata/sf0.001"
-    val a = Vectors.kmeansAssignSampled(spark, dir)
-      .as[(Long, Long, Double)].collect().sortBy(_._1)
-    val b = Vectors.kmeansAssign(spark, dir)
-      .as[(Long, Long, Double)].collect().sortBy(_._1)
-    assert(a.toSeq == b.toSeq && a.nonEmpty)
   }
 }

@@ -270,4 +270,40 @@ class VectorsMultimodalSpec extends SparkSpec {
     assert(r == Seq(
       (0, 2L, 2L, 5L, 6L), (0, 3L, 1L, 8L, 8L), (1, 0L, 1L, 1L, 1L)))
   }
+
+  test("sampled kNN components == full components when the budget covers " +
+       "the whole eval set and candidates are all queries") {
+    // every vec_id % 50 == 0 -> eval set = corpus = sample; the sampled
+    // form's in-sample candidate restriction coincides with the full
+    // form's, so the two must agree exactly
+    val emb = (1 to 12).map { i =>
+      val v = Array.tabulate(8)(d => if (d == i % 3) 1.0f else 0.001f * i)
+      (i * 50L, "en", v)
+    }.toDF("vec_id", "label", "embedding")
+    val q = Vectors.quantizedOf(emb)
+    val sampled = Vectors.knnComponentsSampledOf(q)
+      .as[(Long, Long)].collect().toSet
+    val full = Vectors.knnComponentsOf(
+      Vectors.annCosineTopKOf(q)).as[(Long, Long)].collect().toSet
+    assert(sampled == full && sampled.nonEmpty)
+  }
+
+  test("sampled rank-stability == full monitor when the budget covers " +
+       "the eval set (per-query ranks unchanged by the restriction)") {
+    val dir = "/root/testdata/sf0.001"
+    val a = Vectors.rankStabilitySampled(spark, dir)
+      .as[(Long, Long, Long)].collect().sortBy(_._1)
+    val b = Vectors.rankStability(spark, dir)
+      .as[(Long, Long, Long)].collect().sortBy(_._1)
+    assert(a.toSeq == b.toSeq && a.nonEmpty)
+  }
+
+  test("sampled k-means == full trainer when the budget covers the corpus") {
+    val dir = "/root/testdata/sf0.001"
+    val a = Vectors.kmeansAssignSampled(spark, dir)
+      .as[(Long, Long, Double)].collect().sortBy(_._1)
+    val b = Vectors.kmeansAssign(spark, dir)
+      .as[(Long, Long, Double)].collect().sortBy(_._1)
+    assert(a.toSeq == b.toSeq && a.nonEmpty)
+  }
 }
