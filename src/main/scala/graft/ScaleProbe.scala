@@ -406,14 +406,9 @@ object ScaleProbe {
   def ssProbe(spark: SparkSession, src: String, copies: Int): Unit = {
     import ops.{Dedup, TextOps}
     val docs = SourceReader.table(spark, src, "documents")
-    val cut = docs.agg(expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)")
-      .as("cutoff"))
-    val tagged = docs.crossJoin(broadcast(cut))
-    val idxDocs1 = tagged.where(col("doc_id") <= col("cutoff"))
-      .drop("cutoff")
     // increment ids sit BELOW the shifted copies' id ranges (i*K), so
     // doc-disjointness holds at both scales
-    val incDocs = tagged.where(col("doc_id") > col("cutoff")).drop("cutoff")
+    val (idxDocs1, incDocs) = Dedup.decileSplit(docs, docs)
     // word-suffixed copies: cloned text would push every shingle over the
     // combined cap and the check would measure an empty-match degenerate
     val idxDocsN = copiesOf(idxDocs1, copies)(docCopy)
@@ -500,28 +495,38 @@ object ScaleProbe {
   }
 
   /** Measured (not asserted) payoff of the giant-bucket star guard: seed
-    * 1% of docs with one identical boilerplate string — the degenerate
-    * bucket a boilerplate-heavy web corpus produces — and count/time the
-    * guarded (maxBucket=256) vs dense (guard off) candidate lists, plus
-    * the edit-distance verify tier composed on each. The boilerplate
-    * bucket holds B docs (B grows linearly with corpus copies), so dense
-    * candidates grow B²/2 while star pairing emits B-1: the dense/guarded
-    * pair ratio at Nx vs 1x is the quadratic blow-up the guard removes,
-    * and the verify timings show the O(len²) Levenshtein cost that would
-    * ride on it. Results cited in ARCHITECTURE.md §giant-bucket guard. */
+    * every `stride`-th doc with one identical boilerplate string — the
+    * degenerate bucket a boilerplate-heavy web corpus produces — and
+    * count/time the guarded (maxBucket=256) vs dense (guard off) candidate
+    * lists, plus the edit-distance verify tier composed on each. The
+    * stride comes from `src`'s doc count so the 1× bucket holds about
+    * 1.25 × maxBucket docs, and a run whose largest bucket is at or under
+    * maxBucket fails before timing (both lists would be the same list).
+    * The boilerplate bucket holds B docs (B grows linearly with corpus
+    * copies), so dense candidates grow B²/2 while star pairing emits
+    * B-1: the dense/guarded pair ratio at Nx vs 1x is the quadratic
+    * blow-up the guard removes, and the verify timings show the O(len²)
+    * Levenshtein cost that would ride on it. Results cited in ARCHITECTURE.md §giant-bucket guard. */
   def guardProbe(spark: SparkSession, src: String, dst: String,
                  copies: Int): Unit = {
     val boiler = "all rights reserved terms of service privacy policy " +
       "cookie notice subscribe to our newsletter contact us about"
+    val maxBucket = 256
+    val stride = math.max(1L,
+      SourceReader.table(spark, src, "documents").count() / (maxBucket * 5 / 4))
     def seeded(dir: String): DataFrame =
       ops.TextOps.withWords(ops.TextOps.normalize(
         SourceReader.table(spark, dir, "documents")
           .withColumn("text",
-            when(col("doc_id") % 100 === 0, lit(boiler))
+            when(col("doc_id") % stride === 0, lit(boiler))
               .otherwise(col("text")))))
     def run(dir: String): String = Memo.scoped { hold =>
       val bands = hold(ops.Dedup.minhashBandsFastOf(seeded(dir)))
-      bands.count()
+      val biggest = bands.groupBy("band", "band_hash").count()
+        .agg(max("count")).head().getLong(0)
+      require(biggest > maxBucket, s"guard probe on $dir: the largest " +
+        s"bucket holds $biggest docs, at or under maxBucket=$maxBucket, so " +
+        "the guarded and dense lists would be the same list")
       val docsNorm = seeded(dir).select("doc_id", "norm")
       def measured(pairs: DataFrame): (Long, Double, Double) =
         Memo.scoped { hold =>
@@ -529,7 +534,7 @@ object ScaleProbe {
           val tv = secs(ops.Dedup.minhashPairsEditVerifiedOf(pairs, docsNorm).count())
           (n, tp, tv)
         }
-      val (ng, tg, vg) = measured(ops.Dedup.minhashPairsOf(bands, 256))
+      val (ng, tg, vg) = measured(ops.Dedup.minhashPairsOf(bands, maxBucket))
       // denseGate off: this probe MEASURES the dense blowup the gate exists
       // to prevent — the seeded boilerplate bucket must be allowed to run
       val (nd, td, vd) = measured(

@@ -2,7 +2,8 @@ package graft.ops
 
 import graft.Memo
 import graft.Memo.TruncateOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over `documents` — exact, MinHash+LSH, SimHash,
@@ -68,11 +69,8 @@ object Dedup {
     * Same verify-the-candidates composition as [[minhashPairsVerified]]. */
   def minhashPairsEditVerifiedOf(pairs: DataFrame, docsNorm: DataFrame,
                                  maxDist: Long = 16L): DataFrame =
-    pairs.select("doc_a", "doc_b")
-      .join(docsNorm.select(col("doc_id").as("doc_a"),
-                            col("norm").as("norm_a")), Seq("doc_a"))
-      .join(docsNorm.select(col("doc_id").as("doc_b"),
-                            col("norm").as("norm_b")), Seq("doc_b"))
+    withSides(pairs.select("doc_a", "doc_b"), docsNorm, "norm", "norm_a",
+              "norm_b")
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("norm_a"), col("norm_b")).cast("long")
           .as("editdist"))
@@ -164,65 +162,73 @@ object Dedup {
     * frame feeds both join sides — persist so the signature pipeline runs
     * once (and is reused by cluster queries in the same session).
     *
-    * Giant-bucket guard: a degenerate bucket of B identical/boilerplate
-    * docs would materialize B² join rows — the classic 100 TB blowup.
-    * Buckets larger than `maxBucket` instead emit a linear STAR pairing
-    * (each member ↔ the bucket's min doc_id). A bucket is a clique in the
-    * candidate graph and a star spans the same connected component, so
-    * downstream clustering ([[clustersOf]]) is EXACTLY unchanged; only the
-    * explicit pair list degrades (documented) to the spanning subset for
-    * pathological buckets — `maxBucket = Int.MaxValue` gives the exact
-    * dense pair list (the oracle-checked parity form, no stats join in the
-    * plan). The guard is entirely LAZY — no Spark job runs at query
-    * construction; use [[minhashGiantBuckets]] to inspect/log what a guard
-    * run would degrade.
+    * Giant-bucket guard ([[bucketPairs]]): a degenerate bucket of B
+    * identical/boilerplate docs would materialize B² join rows — the
+    * classic 100 TB blowup — so buckets larger than `maxBucket` emit a
+    * linear STAR pairing (each member ↔ the bucket's min doc_id). A bucket
+    * is a clique in the candidate graph and a star spans the same
+    * connected component, so downstream clustering ([[clustersOf]]) is
+    * EXACTLY unchanged; only the explicit pair list degrades (documented)
+    * to the spanning subset for pathological buckets — `maxBucket =
+    * Int.MaxValue` gives the exact dense pair list (the oracle-checked
+    * parity form, no stats join in the plan). The guard is entirely LAZY —
+    * no Spark job runs at query construction; the bucket-size histogram
+    * [[minhashBandStatsOf]] (`q_minhash_band_stats`) is the audit of what
+    * a guarded run degrades.
     *
     * The exact form is additionally gated: `denseGate` is an IN-PLAN
-    * assertion (window count per bucket + `raise_error` filter) that makes
-    * a run over a corpus with any bucket larger than the gate fail loudly
-    * instead of running O(C(bucket,2)) quadratic — the dense list is a
-    * driver-SF oracle baseline, not a production path, and a future
-    * larger-SF run must not silently pay the blowup. The gate does not
-    * change the output (the filter passes every row of a compliant
-    * corpus); measurement harnesses that deliberately probe the dense
-    * blowup ([[graft.ScaleProbe.guardProbe]]) pass
+    * assertion that makes a run over a corpus with any bucket larger than
+    * the gate fail loudly instead of running O(C(bucket,2)) quadratic —
+    * the dense list is the oracle baseline at the verified scale
+    * factors, not a production path, and a future larger-SF run must not
+    * silently pay the blowup.
+    * The gate does not change the output (the filter passes every row of
+    * a compliant corpus); measurement harnesses that deliberately probe
+    * the dense blowup ([[graft.ScaleProbe.guardProbe]]) pass
     * `denseGate = Int.MaxValue`. */
   def minhashPairsOf(bands0: DataFrame, maxBucket: Int = 256,
-                     denseGate: Int = DenseBucketGate): DataFrame = {
-    val bands = Memo.pin(bands0)
+                     denseGate: Int = DenseBucketGate): DataFrame =
+    bucketPairs(Memo.pin(bands0), Seq("band", "band_hash"), "doc_id",
+      maxBucket, denseGate, "minhash", s" exceeds denseGate=$denseGate — " +
+        "the exact dense form is O(C(bucket,2)); use the guarded pair list " +
+        "(maxBucket=256)").distinct()
+
+  /** The giant-bucket guard, once for every banded pair list: `rows`
+    * holds an `id` column and the bucket `keys`; the output is the strict
+    * (`<id>_a` < `<id>_b`) candidate pairs (`doc_id` pairs as doc_a/doc_b),
+    * before the caller's own filter and `distinct`.
+    *
+    * `maxBucket = Int.MaxValue` is the EXACT dense bucket join, gated
+    * in-plan: a window count per bucket (it reuses the join's own key
+    * partitioning — no extra exchange) and a `raise_error` filter whose
+    * message is "dense `label` pair list: bucket size N" + `advice`. Any
+    * finite `maxBucket` pairs buckets at or under it densely and stars
+    * each larger one to its minimum id. */
+  private def bucketPairs(rows: DataFrame, keys: Seq[String], id: String,
+                          maxBucket: Int, denseGate: Int, label: String,
+                          advice: String): DataFrame = {
+    val Seq(a, b) = Seq("_a", "_b").map(id.stripSuffix("_id") + _)
+    def side(df: DataFrame, as: String) =
+      df.select(col(id).as(as) +: keys.map(col): _*)
+    def dense(sideA: DataFrame, df: DataFrame) =
+      sideA.join(side(df, b), keys).where(col(a) < col(b)).select(a, b)
     if (maxBucket == Int.MaxValue) {
-      // exact dense bucket join — plain plan, no stats join (the gate
-      // window reuses the join's own (band, band_hash) partitioning)
-      val byBucket = org.apache.spark.sql.expressions.Window
-        .partitionBy("band", "band_hash")
-      val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
-        .withColumn("_bsz", count(lit(1)).over(byBucket))
+      val bsz = count(lit(1)).over(Window.partitionBy(keys.map(col): _*))
+      dense(side(rows, a).withColumn("_bsz", bsz)
         .where(when(col("_bsz") > lit(denseGate.toLong),
-          raise_error(concat(
-            lit(s"dense minhash pair list: bucket size "),
-            col("_bsz").cast("string"),
-            lit(s" exceeds denseGate=$denseGate — the exact dense form is " +
-              "O(C(bucket,2)); use the guarded pair list (maxBucket=256)"))))
+          raise_error(concat(lit(s"dense $label pair list: bucket size "),
+            col("_bsz").cast("string"), lit(advice))))
           .otherwise(lit(true)))
-        .drop("_bsz")
-      val c = bands.select(col("doc_id").as("doc_b"), col("band"), col("band_hash"))
-      return a.join(c, Seq("band", "band_hash"))
-        .where(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
+        .drop("_bsz"), rows)
+    } else {
+      val stats = rows.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("bsz"), min(id).as("bmin"))
+      val tagged = rows.join(stats, keys)
+      val small = tagged.where(col("bsz") <= maxBucket)
+      dense(side(small, a), small).unionAll(tagged
+        .where(col("bsz") > maxBucket).where(col(id) =!= col("bmin"))
+        .select(col("bmin").as(a), col(id).as(b)))
     }
-    val stats = bands.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("bsz"), min("doc_id").as("bmin"))
-    val tagged = bands.join(stats, Seq("band", "band_hash"))
-    val small = tagged.where(col("bsz") <= maxBucket)
-    val a = small.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
-    val c = small.select(col("doc_id").as("doc_b"), col("band"), col("band_hash"))
-    val dense = a.join(c, Seq("band", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    val star = tagged.where(col("bsz") > maxBucket)
-      .where(col("doc_id") =!= col("bmin"))
-      .select(col("bmin").as("doc_a"), col("doc_id").as("doc_b"))
-    dense.unionAll(star).distinct()
   }
 
   /** INCREMENTAL near-dup check — the 100 TB ingest shape: a new batch of
@@ -251,7 +257,6 @@ object Dedup {
     * must be doc-disjoint (caller contract). */
   def incrementalCandidatesOf(indexBands: DataFrame,
                               newBands: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{greatest, least}
     val n = newBands.select(col("doc_id").as("doc_n"),
                             col("band"), col("band_hash"))
     val vsIndex = n
@@ -270,28 +275,26 @@ object Dedup {
   }
 
   /** Query form: the top decile of doc_ids plays the "new batch"
-    * (deterministic cutoff = max(doc_id)*9/10, broadcast as a 1-row
-    * cross join — no driver-side action). */
+    * ([[decileSplit]] over the bands). */
   def minhashPairsIncremental(spark: SparkSession, dir: String): DataFrame = {
     val bands = bandsCached(spark, dir)
-    val cut = bands.agg(expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)")
-      .as("cutoff"))
-    val tagged = bands.crossJoin(broadcast(cut))
-    incrementalPairsOf(
-      tagged.where(col("doc_id") <= col("cutoff"))
-        .select("doc_id", "band", "band_hash"),
-      tagged.where(col("doc_id") > col("cutoff"))
-        .select("doc_id", "band", "band_hash"))
+    val (history, batch) = decileSplit(bands, bands)
+    incrementalPairsOf(history, batch)
   }
 
-  /** Buckets the giant-bucket guard would star-pair at `maxBucket`, with
-    * the number of dense pairs each would NOT materialize — the "no silent
-    * caps" audit view for guarded runs. */
-  def minhashGiantBuckets(bands: DataFrame, maxBucket: Int = 256): DataFrame =
-    bands.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") > maxBucket)
-      .withColumn("pairs_dropped", expr("bsz * (bsz - 1) DIV 2 - (bsz - 1)"))
+  /** (history, batch): `df`'s rows whose `idCol` is at or under, and
+    * above, the "new batch" cutoff — the top decile of `cutFrom`'s doc_ids
+    * (max(doc_id)·9 div 10), the one convention of every incremental query
+    * form. Deterministic, and read from a broadcast 1-row cross join: no
+    * Spark action runs at construction. */
+  private[graft] def decileSplit(df: DataFrame, cutFrom: DataFrame,
+                                 idCol: String = "doc_id")
+      : (DataFrame, DataFrame) = {
+    val tagged = df.crossJoin(broadcast(cutFrom.agg(
+      expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)").as("cutoff"))))
+    (tagged.where(col(idCol) <= col("cutoff")).drop("cutoff"),
+     tagged.where(col(idCol) > col("cutoff")).drop("cutoff"))
+  }
 
   // Memoized per (session, dir) in [[graft.Caches]]: the banded-signature
   // pipeline (staged, [[graft.Memo]]) is shared by every consumer — pairs
@@ -479,12 +482,12 @@ object Dedup {
   /** STRICT (sh_a < sh_b) near-hash value pairs within `maxHamming`, from
     * the pigeonhole (band, chunk) bucket join over DISTINCT hash values.
     *
-    * Giant-bucket guard (r13 verdict task 1 — the same two-mode treatment
-    * as [[minhashPairsOf]]): `maxBucket = Int.MaxValue` is the EXACT dense
-    * bucket join, additionally gated in-plan — a (band, chunk) bucket with
-    * more than `denseGate` distinct values raises loudly instead of paying
-    * the O(bucket²) join silently (a 32-bit hash space saturates as the
-    * corpus grows — the fix at that scale is the 64-bit/16-bit-chunk
+    * Giant-bucket guard (r13 verdict task 1 — the same two-mode
+    * [[bucketPairs]] as [[minhashPairsOf]]): `maxBucket = Int.MaxValue` is
+    * the EXACT dense bucket join, gated in-plan — a (band, chunk) bucket
+    * with more than `denseGate` distinct values raises loudly instead of
+    * paying the O(bucket²) join silently (a 32-bit hash space saturates as
+    * the corpus grows — the fix at that scale is the 64-bit/16-bit-chunk
     * banding, not a bigger gate). Any finite `maxBucket` degrades buckets
     * over it to a linear STAR against the bucket's min value. Unlike the
     * minhash star (whose bucket is a clique by construction), star value
@@ -496,60 +499,24 @@ object Dedup {
   private def hammingValuePairs(vals: DataFrame, chunkBits: Int,
                                 maxHamming: Int, maxBucket: Int,
                                 denseGate: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{greatest, least}
-    val nBands = maxHamming + 1
-    val mask = (1L << chunkBits) - 1
     val banded = vals
-      .withColumn("band", explode(expr(s"sequence(0, ${nBands - 1})")))
-      .withColumn("chunk",
-        expr(s"shiftright(sh, CAST(band * $chunkBits AS INT)) & $mask"))
-    def hammingOk(p: DataFrame): DataFrame = p
+      .withColumn("band", explode(expr(s"sequence(0, $maxHamming)")))
+      .withColumn("chunk", expr(s"shiftright(sh, CAST(band * $chunkBits " +
+        s"AS INT)) & ${(1L << chunkBits) - 1}"))
+    bucketPairs(banded, Seq("band", "chunk"), "sh", maxBucket, denseGate,
+      "hamming", s" distinct values exceeds denseGate=$denseGate — the " +
+        "exact dense form is O(bucket²); use the guarded form " +
+        "(maxBucket=256) or the wider 64-bit/16-bit-chunk banding")
       .select(col("sh_a"), col("sh_b"),
               expr("CAST(bit_count(sh_a ^ sh_b) AS BIGINT)").as("hamming"))
       .where(col("hamming") <= maxHamming)
-    val candidates =
-      if (maxBucket == Int.MaxValue) {
-        // exact dense bucket join, gated in-plan (the window reuses the
-        // join's own (band, chunk) partitioning — no extra exchange)
-        val byBucket = org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "chunk")
-        val a = banded.select(col("sh").as("sh_a"), col("band"), col("chunk"))
-          .withColumn("_bsz", count(lit(1)).over(byBucket))
-          .where(when(col("_bsz") > lit(denseGate.toLong),
-            raise_error(concat(
-              lit("dense hamming pair list: bucket size "),
-              col("_bsz").cast("string"),
-              lit(s" distinct values exceeds denseGate=$denseGate — the " +
-                "exact dense form is O(bucket²); use the guarded form " +
-                "(maxBucket=256) or the wider 64-bit/16-bit-chunk banding"))))
-            .otherwise(lit(true)))
-          .drop("_bsz")
-        val b = banded.select(col("sh").as("sh_b"), col("band"), col("chunk"))
-        a.join(b, Seq("band", "chunk")).where(col("sh_a") < col("sh_b"))
-      } else {
-        val stats = banded.groupBy("band", "chunk")
-          .agg(count(lit(1)).as("bsz"), min("sh").as("bmin"))
-        val tagged = banded.join(stats, Seq("band", "chunk"))
-        val small = tagged.where(col("bsz") <= maxBucket)
-        val dense = small
-          .select(col("sh").as("sh_a"), col("band"), col("chunk"))
-          .join(small.select(col("sh").as("sh_b"), col("band"), col("chunk")),
-                Seq("band", "chunk"))
-          .where(col("sh_a") < col("sh_b"))
-        val star = tagged.where(col("bsz") > maxBucket)
-          .where(col("sh") =!= col("bmin"))
-          .select(least(col("bmin"), col("sh")).as("sh_a"),
-                  greatest(col("bmin"), col("sh")).as("sh_b"))
-        dense.select("sh_a", "sh_b").unionAll(star)
-      }
-    hammingOk(candidates).distinct()
+      .distinct()
   }
 
   private def hammingPairs(hashes0: DataFrame, hashCol: String,
                            chunkBits: Int, maxHamming: Int,
                            maxBucket: Int = Int.MaxValue,
                            denseGate: Int = DenseBucketGate): DataFrame = {
-    import org.apache.spark.sql.functions.{greatest, least}
     // the hash frame feeds THREE scans (distinct values + both doc-expansion
     // sides) — persist so the per-doc hash expression evaluates once, not 3×
     val hashes = Memo.pin(hashes0)
@@ -754,28 +721,19 @@ object Dedup {
   private def clustersIncrementalBuild(spark: SparkSession,
                                        dir: String): DataFrame = {
     val docs = TextOps.docs(spark, dir).select("doc_id")
-    val cut = docs.agg(expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)")
-      .as("cutoff"))
-    val d = docs.crossJoin(broadcast(cut))
-    val p = minhashPairs(spark, dir).crossJoin(broadcast(cut))
+    val (oldDocs, newDocs) = decileSplit(docs, docs)
+    val (oldPairs, newPairs) = decileSplit(minhashPairs(spark, dir), docs, "doc_b")
     // history labels are MEMOIZED like every cluster frame (in production
     // they would be READ from the previous load, not recomputed — the
     // memo plays that role here, so repeat calls pay only the merge)
     val oldLabels = graft.Caches.grain(spark, dir, "dedup.minlabel-history") {
-      clustersOf(
-        d.where(col("doc_id") <= col("cutoff")).select("doc_id"),
-        p.where(col("doc_b") <= col("cutoff"))
-          .select("doc_a", "doc_b"))
+      clustersOf(oldDocs, oldPairs)
     }
     // Eager checkpoint: the pass-through anti-join + affected-subgraph
     // merge is evaluated once and its three consumers read materialized
     // blocks — production WRITES the merged labels, it does not re-derive
     // them.
-    clustersIncrementalOf(
-      oldLabels,
-      d.where(col("doc_id") > col("cutoff")).select("doc_id"),
-      p.where(col("doc_b") > col("cutoff")).select("doc_a", "doc_b"))
-      .truncated
+    clustersIncrementalOf(oldLabels, newDocs, newPairs).truncated
   }
 
   /** Clusters over the VERIFIED pair graph — the full production
@@ -812,8 +770,6 @@ object Dedup {
     * global structure; lineage is truncated per round (localCheckpoint). */
   def clustersFastOf(docIds: DataFrame, pairs: DataFrame,
                      maxIters: Int = 50): DataFrame = {
-    import org.apache.spark.sql.functions.{greatest, least}
-
     // canonical undirected edges (hi, lo), self-loops dropped
     var edges = pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
@@ -884,25 +840,61 @@ object Dedup {
               coalesce(col("cluster"), col("doc_id")).as("cluster"))
   }
 
-  /** Exact word-3-gram Jaccard for given candidate pairs (doc_a, doc_b). */
-  def ngramJaccardFor(pairs: DataFrame, shingles: DataFrame): DataFrame = {
-    val sizes = shingles.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+  /** The shingle-overlap grain under every set-similarity verify: per
+    * candidate pair (doc_a, doc_b), the shared word-3-gram count
+    * `n_shared` (0 for a pair sharing none) and both set sizes `n_a`,
+    * `n_b`. The intersection join is per-candidate work over the shingle
+    * frame (collision-bounded under the bucket guard), never corpus².
+    * Jaccard ([[ngramJaccardFor]]) and containment ([[containmentFor]])
+    * are projections of it. */
+  private def overlapFor(pairs: DataFrame, shingles: DataFrame): DataFrame = {
     val inter = pairs
-      .join(shingles.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
+      .join(shingles.select(col("doc_id").as("doc_a"), col("shingle")),
+            Seq("doc_a"))
       .join(shingles.select(col("doc_id").as("doc_b"), col("shingle")),
             Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
+    withSizes(pairs.join(inter, Seq("doc_a", "doc_b"), "left_outer"), shingles)
+      .select(col("doc_a"), col("doc_b"),
+        coalesce(col("n_shared"), lit(0L)).as("n_shared"),
+        col("n_a"), col("n_b"))
+  }
+
+  /** `pairs` with both ends' shingle-set sizes attached, as n_a and n_b. */
+  private def withSizes(pairs: DataFrame, shingles: DataFrame): DataFrame =
+    withSides(pairs, shingles.groupBy("doc_id").agg(count(lit(1)).as("n_sh")),
+              "n_sh", "n_a", "n_b")
+
+  /** `pairs` with the doc-keyed column `c` of `byDoc` attached to both
+    * ends, as `ca` on doc_a and `cb` on doc_b: two doc_id equi-joins,
+    * whose output is pair-sized whatever the size of `byDoc`. */
+  private def withSides(pairs: DataFrame, byDoc: DataFrame, c: String,
+                        ca: String, cb: String): DataFrame =
     pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left_outer")
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), Seq("doc_b"))
-      .select(
-        col("doc_a"), col("doc_b"),
-        coalesce(col("i"), lit(0L)).as("n_common"),
-        (col("na") + col("nb") - coalesce(col("i"), lit(0L))).as("n_union"))
+      .join(byDoc.select(col("doc_id").as("doc_a"), col(c).as(ca)), Seq("doc_a"))
+      .join(byDoc.select(col("doc_id").as("doc_b"), col(c).as(cb)), Seq("doc_b"))
+
+  // Jaccard and containment ADD columns to an overlap frame, so the one
+  // memoized grain carries both and each tier reads it by a plain select
+  // (no new alias per call: a repeat call's plan is the same plan).
+  private def withJaccard(overlap: DataFrame): DataFrame =
+    overlap
+      .withColumn("n_common", col("n_shared"))
+      .withColumn("n_union", col("n_a") + col("n_b") - col("n_shared"))
       .withColumn("jaccard",
         expr("CAST(n_common AS DOUBLE) / CAST(n_union AS DOUBLE)"))
-  }
+
+  private def withContainment(overlap: DataFrame): DataFrame =
+    overlap
+      .withColumn("contain_a_ppm", expr("n_shared * 1000000L div n_a"))
+      .withColumn("contain_b_ppm", expr("n_shared * 1000000L div n_b"))
+
+  private val jaccardCols =
+    Seq("doc_a", "doc_b", "n_common", "n_union", "jaccard").map(col)
+
+  /** Exact word-3-gram Jaccard for given candidate pairs (doc_a, doc_b). */
+  def ngramJaccardFor(pairs: DataFrame, shingles: DataFrame): DataFrame =
+    withJaccard(overlapFor(pairs, shingles)).select(jaccardCols: _*)
 
   /** LSH candidates VERIFIED — the pipeline step between candidate
     * generation and clustering: exact n-gram Jaccard over the (guarded)
@@ -916,64 +908,40 @@ object Dedup {
                            threshold: Double = 0.7): DataFrame =
     verifiedJaccardCached(spark, dir).where(col("jaccard") >= threshold)
 
-  /** r18: the exact-Jaccard verification grain over the guarded
-    * candidates, memoized + checkpointed — THREE query families consume
-    * it (pairs-verified/clusters-verified/split-leakage, the est-error
-    * calibration, the threshold sweep), each of which re-ran the
-    * per-candidate intersection join per call. Threshold-independent (the
-    * consumers filter), candidate-sized (907 rows at sf0.1). */
-  private def verifiedJaccardCached(spark: SparkSession,
-                                    dir: String): DataFrame =
-    graft.Caches.grain(spark, dir, "dedup.verified-jaccard") {
-      ngramJaccardFor(minhashPairs(spark, dir), TextOps.shingles(spark, dir))
+  /** The overlap grain over the guarded candidates, memoized +
+    * checkpointed with its Jaccard and containment columns: the
+    * verified-Jaccard family (pairs-verified/clusters-verified/
+    * split-leakage, the est-error calibration, the threshold sweep) and
+    * the containment family (the containment tier, the Jaccard
+    * histogram) select from it, so the per-candidate intersection join
+    * runs once per (session, dir). Threshold-independent (the consumers
+    * filter), candidate-sized (907 rows at sf0.1). */
+  private def overlapCached(spark: SparkSession, dir: String): DataFrame =
+    graft.Caches.grain(spark, dir, "dedup.overlap") {
+      withContainment(withJaccard(
+        overlapFor(minhashPairs(spark, dir), TextOps.shingles(spark, dir))))
         .truncated
     }
+
+  private def verifiedJaccardCached(spark: SparkSession,
+                                    dir: String): DataFrame =
+    overlapCached(spark, dir).select(jaccardCols: _*)
 
   /** ASYMMETRIC containment tier over the guarded candidate pairs:
     * |A∩B|/|A| and |A∩B|/|B| as exact ppm integers. Jaccard misses
     * SUB-document duplication (a short doc fully quoted inside a long
     * one scores low Jaccard but containment 1.0 on the short side) —
     * the case that matters for press-release/boilerplate syndication
-    * and train/eval quote contamination. Same verify-the-candidates
-    * composition as [[ngramJaccardFor]]: the intersection join is
-    * per-candidate work over the memoized shingle frame (collision-
-    * bounded under the bucket guard), never corpus².
+    * and train/eval quote contamination. A projection of
+    * [[overlapFor]], like [[ngramJaccardFor]].
     *
     * ppm fields are exact integer arithmetic (shared-count · 10⁶ div
     * set-size) — bit-stable cross-engine, no double division. */
-  def containmentFor(pairs: DataFrame, shingles: DataFrame): DataFrame = {
-    val sizes = shingles.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val inter = pairs
-      .join(shingles.select(col("doc_id").as("doc_a"), col("shingle")),
-            Seq("doc_a"))
-      .join(shingles.select(col("doc_id").as("doc_b"), col("shingle")),
-            Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left_outer")
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")),
-            Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")),
-            Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-        col("n_a"), col("n_b"))
-      .withColumn("contain_a_ppm",
-        expr("n_shared * 1000000L div n_a"))
-      .withColumn("contain_b_ppm",
-        expr("n_shared * 1000000L div n_b"))
-  }
+  def containmentFor(pairs: DataFrame, shingles: DataFrame): DataFrame =
+    withContainment(overlapFor(pairs, shingles))
 
-  // The containment frame feeds two queries (the containment tier itself
-  // and the Jaccard histogram derived from its exact counts) — memoized +
-  // persisted per (session, dir) so the shingle-intersection join runs
-  // once, not per consumer. Same stale-read contract as the other grains.
   def minhashContainment(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.grain(spark, dir, "dedup.containment") {
-      containmentFor(minhashPairs(spark, dir).select("doc_a", "doc_b"),
-                     TextOps.shingles(spark, dir))
-        .truncated
-    }
+    overlapCached(spark, dir).drop("n_common", "n_union", "jaccard")
 
   /** Candidate-pair Jaccard HISTOGRAM in tenth buckets — the
     * banding-threshold tuning readout: where the guarded candidates'
@@ -1158,12 +1126,8 @@ object Dedup {
     * then a ≤(maxHamming+1)-row rollup. */
   def simhashPrecisionCurveOf(pairs: DataFrame, docsNorm: DataFrame)
       : DataFrame = {
-    val fps = docsNorm.select(col("doc_id"), md5(col("norm")).as("fp"))
-    pairs
-      .join(fps.select(col("doc_id").as("doc_a"), col("fp").as("fp_a")),
-            Seq("doc_a"))
-      .join(fps.select(col("doc_id").as("doc_b"), col("fp").as("fp_b")),
-            Seq("doc_b"))
+    withSides(pairs, docsNorm.select(col("doc_id"), md5(col("norm")).as("fp")),
+              "fp", "fp_a", "fp_b")
       .groupBy("hamming")
       .agg(count(lit(1)).as("n_pairs"),
            sum(when(col("fp_a") === col("fp_b"), 1L).otherwise(0L))
@@ -1182,17 +1146,11 @@ object Dedup {
     * Scale shape: reuses the memoized guarded pair list (collision- and
     * guard-bounded); two doc_id equi-joins attach languages; the rollup
     * key is |langs|² at most. */
-  def dupLangPairsOf(pairs: DataFrame, docs: DataFrame): DataFrame = {
-    val langs = docs.select(col("doc_id"), col("lang"))
-    pairs
-      .join(langs.select(col("doc_id").as("doc_a"), col("lang").as("la")),
-            Seq("doc_a"))
-      .join(langs.select(col("doc_id").as("doc_b"), col("lang").as("lb")),
-            Seq("doc_b"))
+  def dupLangPairsOf(pairs: DataFrame, docs: DataFrame): DataFrame =
+    withSides(pairs, docs, "lang", "la", "lb")
       .groupBy(least(col("la"), col("lb")).as("lang_a"),
                greatest(col("la"), col("lb")).as("lang_b"))
       .agg(count(lit(1)).as("n_pairs"))
-  }
 
   def dupLangPairs(spark: SparkSession, dir: String): DataFrame =
     dupLangPairsOf(minhashPairs(spark, dir),
@@ -1219,18 +1177,15 @@ object Dedup {
   /** [[bagCosinePairs]] over `pairs` with a precomputed (doc_id, w, tf)
     * frame. */
   def bagCosinePairsWithTf(pairs: DataFrame, tf: DataFrame): DataFrame = {
-    val nn = tf.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("n2"))
-    pairs.select("doc_a", "doc_b")
+    val dots = pairs.select("doc_a", "doc_b")
       .join(tf.select(col("doc_id").as("doc_a"), col("w"),
                       col("tf").as("tfa")), Seq("doc_a"))
       .join(tf.select(col("doc_id").as("doc_b"), col("w"),
                       col("tf").as("tfb")), Seq("doc_b", "w"))
       .groupBy("doc_a", "doc_b")
       .agg(sum(col("tfa") * col("tfb")).as("dot"))
-      .join(nn.select(col("doc_id").as("doc_a"), col("n2").as("na2")),
-            Seq("doc_a"))
-      .join(nn.select(col("doc_id").as("doc_b"), col("n2").as("nb2")),
-            Seq("doc_b"))
+    withSides(dots, tf.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("n2")),
+              "n2", "na2", "nb2")
       .where(expr("""25.0 * CAST(dot AS DOUBLE) * CAST(dot AS DOUBLE)
                      >= 16.0 * CAST(na2 AS DOUBLE) * CAST(nb2 AS DOUBLE)"""))
       .select("doc_a", "doc_b", "dot", "na2", "nb2")
@@ -1250,18 +1205,13 @@ object Dedup {
   def lshRecallSampledOf(shingles: DataFrame, captured: DataFrame,
                          mod: Int = 2): DataFrame = {
     val s = shingles.where(col("doc_id") % mod === 0)
-    val sizes = s.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inter = s.select(col("doc_id").as("doc_a"), col("shingle"))
       .join(s.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
       .where(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("na")),
-            Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")),
-            Seq("doc_b"))
-      .where(col("inter") * 4 >= col("na") + col("nb"))
+      .agg(count(lit(1)).as("n_shared"))
+    withSizes(inter, s)
+      .where(col("n_shared") * 4 >= col("n_a") + col("n_b"))
       .join(captured.select(col("doc_a"), col("doc_b"),
               lit(1L).as("hit")), Seq("doc_a", "doc_b"), "left")
       .agg(count(lit(1)).as("n_truth"),
@@ -1328,7 +1278,6 @@ object Dedup {
     * the incremental check ([[substringSpansIncOf]]). The window is
     * partitioned by (pair, diagonal) — never global. */
   private def runsFromMatches(matches: DataFrame, minRun: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     matches
       .withColumn("isl", col("pos_a") - row_number().over(
         Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")))
@@ -1450,19 +1399,13 @@ object Dedup {
                          documents)
 
   private def sourceMatrixFromRuns(runs: DataFrame,
-                                   documents: DataFrame): DataFrame = {
-    val src = documents.select(col("doc_id"), col("source"))
-    runs
-      .join(src.select(col("doc_id").as("doc_a"),
-                       col("source").as("source_a")), Seq("doc_a"))
-      .join(src.select(col("doc_id").as("doc_b"),
-                       col("source").as("source_b")), Seq("doc_b"))
+                                   documents: DataFrame): DataFrame =
+    withSides(runs, documents, "source", "source_a", "source_b")
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_spans"),
            countDistinct(concat_ws("_", col("doc_a"), col("doc_b")))
              .as("n_pairs"),
            sum(col("run_len") + lit(2)).cast("long").as("span_words"))
-  }
 
   def spanSourceMatrix(spark: SparkSession, dir: String): DataFrame =
     sourceMatrixFromRuns(substringRunsCached(spark, dir),
@@ -1563,22 +1506,12 @@ object Dedup {
     spansFromRuns(substringIncRunsOf(index, census, newShingles, minRun,
                                      maxOcc))
 
-  /** The decile-batch cutoff as a broadcastable 1-row frame — the shared
-    * "new batch" convention of every incremental query form
-    * ([[minhashPairsIncremental]]'s treatment: deterministic, no
-    * driver-side action). */
-  private[ops] def batchCutoff(spark: SparkSession, dir: String): DataFrame =
-    graft.etl.Feeds.table(spark, dir, "documents")
-      .agg(expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)").as("cutoff"))
-
-  /** `df` restricted to batch rows (`idCol` above the decile cutoff) —
-    * broadcast 1-row cross join, never a collect. */
+  /** `df` restricted to batch rows: `idCol` above the [[decileSplit]]
+    * cutoff of the documents table. */
   private[ops] def batchOnly(df: DataFrame, spark: SparkSession,
                              dir: String,
                              idCol: String = "doc_id"): DataFrame =
-    df.crossJoin(broadcast(batchCutoff(spark, dir)))
-      .where(col(idCol) > col("cutoff"))
-      .drop("cutoff")
+    decileSplit(df, graft.etl.Feeds.table(spark, dir, "documents"), idCol)._2
 
   /** Memoized incremental run grain at the production defaults and the
     * decile-batch convention — the shared upstream of
@@ -1591,12 +1524,8 @@ object Dedup {
   private[ops] def substringIncRunsCached(spark: SparkSession,
                                           dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "dedup.inc-runs") {
-      val tagged = TextOps.posShingles(spark, dir)
-        .crossJoin(broadcast(batchCutoff(spark, dir)))
-      val idx = tagged.where(col("doc_id") <= col("cutoff"))
-        .select("doc_id", "pos", "sh")
-      val inc = tagged.where(col("doc_id") > col("cutoff"))
-        .select("doc_id", "pos", "sh")
+      val (idx, inc) = decileSplit(TextOps.posShingles(spark, dir),
+        graft.etl.Feeds.table(spark, dir, "documents"))
       val census = substringCensusOf(idx)
       substringIncRunsOf(substringIndexOf(idx, census), census,
                          inc, 8, 64).staged
@@ -1622,11 +1551,11 @@ object Dedup {
               spark, dir)
 
   /** Index-build audit view — the substring tier's "no silent caps"
-    * readout ([[minhashGiantBuckets]]'s sibling): ONE row saying how much
-    * the occurrence cap removed — distinct shingle values vs over-cap
-    * values, total position rows vs rows kept in the index — plus the
-    * hottest shingle's occurrence count (how degenerate the worst
-    * template run is). A capped index that silently dropped half the
+    * readout (the bucket guard's is [[minhashBandStatsOf]]): ONE row
+    * saying how much the occurrence cap removed — distinct shingle
+    * values vs over-cap values, total position rows vs rows kept in the
+    * index — plus the hottest shingle's occurrence count (how
+    * degenerate the worst template run is). A capped index that silently dropped half the
     * corpus would be invisible without this; with it the drop is a
     * committed number per ingest. */
   def substringIndexStatsOf(posShingles: DataFrame,
@@ -1661,13 +1590,9 @@ object Dedup {
     * rows (bounded, never corpus-wide), and a 3-row final fold. */
   def substringIngestDebtOf(posShingles: DataFrame,
                             maxOcc: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val mx = posShingles.agg(max("doc_id").as("mx"))
-    val perShBatch = posShingles.crossJoin(broadcast(mx))
-      .withColumn("batch",
-        when(col("doc_id") <= expr("mx DIV 3"), lit(0L))
-          .when(col("doc_id") <= expr("(2 * mx) DIV 3"), lit(1L))
-          .otherwise(lit(2L)))
+    val perShBatch = posShingles
+      .crossJoin(broadcast(posShingles.agg(max("doc_id").as("mx"))))
+      .withColumn("batch", thirdOf("doc_id"))
       .groupBy("sh", "batch").agg(count(lit(1)).as("occ_b"))
     val cap = lit(maxOcc.toLong)
     perShBatch
@@ -1685,6 +1610,14 @@ object Dedup {
 
   def substringIngestDebt(spark: SparkSession, dir: String): DataFrame =
     substringIngestDebtOf(TextOps.posShingles(spark, dir))
+
+  /** The crawl-replay batch (0, 1, 2) of id column `c`: ascending thirds
+    * of `mx`, the max doc_id a broadcast 1-row frame puts in scope — the
+    * three-batch grain of [[substringIngestDebtOf]] and [[dupRateByBatch]]. */
+  private def thirdOf(c: String): Column =
+    when(col(c) <= expr("mx DIV 3"), lit(0L))
+      .when(col(c) <= expr("(2 * mx) DIV 3"), lit(1L))
+      .otherwise(lit(2L))
 
   /** The APPLY step of the substring tier: per document, the merged word
     * ranges covered by duplicated spans — exactly the byte ranges a
@@ -1723,7 +1656,6 @@ object Dedup {
       .distinct()
 
   private def mergeSides(sides: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("doc_id").orderBy("s", "e")
     sides
       .withColumn("prev_max", max("e").over(
@@ -1789,13 +1721,9 @@ object Dedup {
   def dupRateByBatch(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.etl.Feeds.table(spark, dir, "documents")
     val mx = docs.agg(max("doc_id").as("mx"))
-    def batchOf(c: String) =
-      when(col(c) <= expr("mx DIV 3"), lit(0L))
-        .when(col(c) <= expr("(2 * mx) DIV 3"), lit(1L))
-        .otherwise(lit(2L))
     val p = minhashPairs(spark, dir).crossJoin(broadcast(mx))
-      .select(batchOf("doc_a").as("ba"), col("doc_a"),
-              batchOf("doc_b").as("bb"), col("doc_b"))
+      .select(thirdOf("doc_a").as("ba"), col("doc_a"),
+              thirdOf("doc_b").as("bb"), col("doc_b"))
     val prior = p.where(col("ba") < col("bb"))
       .groupBy(col("bb").as("batch"))
       .agg(countDistinct("doc_b").as("n_dup_prior"))
@@ -1806,7 +1734,7 @@ object Dedup {
                                   col("doc_b").as("d")))
       .groupBy("batch").agg(countDistinct("d").as("n_dup_intra"))
     docs.crossJoin(broadcast(mx))
-      .select(batchOf("doc_id").as("batch"))
+      .select(thirdOf("doc_id").as("batch"))
       .groupBy("batch").agg(count(lit(1)).as("n_docs"))
       .join(prior, Seq("batch"), "left")
       .join(intra, Seq("batch"), "left")

@@ -800,23 +800,17 @@ object TextOps {
     * batch twin of [[ngramNoveltyOf]], which scores df=1 against the
     * whole corpus; here the reference set is history only, so a batch
     * of mutual near-dups still scores high if none of it was seen
-    * before). Batch = top decile of doc_ids, same deterministic
-    * cutoff convention as the incremental dedup queries (broadcast
-    * 1-row cross join, no driver action).
+    * before). Batch = top decile of doc_ids ([[Dedup.decileSplit]],
+    * the incremental dedup queries' cutoff).
     *
     * Scale shape: history collapses to a DISTINCT shingle-key frame
     * once (partial-agg distinct); the batch's shingles left-join it on
     * the shingle key — work is O(batch shingles + history distinct),
     * both hash-partitioned, never corpus × batch. */
   def ngramNoveltyIncOf(shingles: DataFrame): DataFrame = {
-    val cut = shingles.agg(
-      expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)").as("cutoff"))
-    val tagged = shingles.crossJoin(broadcast(cut))
-    val hist = tagged.where(col("doc_id") <= col("cutoff"))
-      .select("shingle").distinct()
-      .withColumn("seen", lit(1))
-    tagged.where(col("doc_id") > col("cutoff"))
-      .select("doc_id", "shingle")
+    val (history, batch) = Dedup.decileSplit(shingles, shingles)
+    val hist = history.select("shingle").distinct().withColumn("seen", lit(1))
+    batch.select("doc_id", "shingle")
       .join(hist, Seq("shingle"), "left_outer")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_sh"),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -235,6 +236,21 @@ class DedupSpec extends SparkSpec {
            "nested verified-jaccard grain must be the memoized instance")
   }
 
+  test("verified pairs, containment and the Jaccard histogram share one " +
+       "stored shingle-overlap grain") {
+    // the guarded-pairs x shingles intersection is one grain; Jaccard and
+    // containment are selects of it, so these three queries leave the dir
+    // with three dedup grains: the bands, the guarded pairs and the overlap
+    val d = "/root/testdata/sf0.001"
+    graft.Caches.invalidate(spark, d)
+    val before = graft.Caches.size(spark, "dedup.")
+    for (q <- Seq("q_dedup_pairs_verified", "q_minhash_containment",
+                  "q_jaccard_hist"))
+      graft.SparkEntry.queries(q)(spark, d).collect()
+    assert(graft.Caches.size(spark, "dedup.") - before == 3,
+      "expected the dir's dedup grains to be bands, pairs/256 and one overlap")
+  }
+
   test("bag dedup groups reordered token multisets; multiset still counts") {
     val dw = TextOps.withWords(TextOps.normalize(Seq(
       (0L, "alpha beta gamma"),
@@ -292,5 +308,107 @@ class DedupSpec extends SparkSpec {
     val r = Dedup.minhashPairsEditVerifiedOf(pairs, d)
       .as[(Long, Long, Long)].collect().toSeq
     assert(r == Seq((1L, 0L, 2L)) || r == Seq((0L, 1L, 2L)), r.toString)
+  }
+
+  private def bandsOf(rows: Seq[(Long, Int, String)]) =
+    rows.toDF("doc_id", "band", "band_hash")
+
+  test("dense-pair gate: degenerate bucket raises loudly") {
+    // one 5-doc bucket, gate 3 -> the exact dense form must fail, not
+    // run C(5,2) silently
+    val bands = bandsOf((1L to 5L).map(i => (i, 0, "h0")))
+    val ex = intercept[Exception] {
+      Dedup.minhashPairsOf(bands, Int.MaxValue, denseGate = 3).count()
+    }
+    def messages(t: Throwable): List[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toList ++ messages(t.getCause)
+    assert(messages(ex).exists(_.contains("denseGate")),
+      s"expected the denseGate raise, got: $ex")
+  }
+
+  test("dense-pair gate: compliant corpus output is unchanged") {
+    val bands = bandsOf(
+      (1L to 5L).map(i => (i, 0, "h0")) ++ Seq((6L, 1, "h1"), (7L, 1, "h1")))
+    val gated = Dedup.minhashPairsOf(bands, Int.MaxValue, denseGate = 5)
+      .as[(Long, Long)].collect().toSet
+    val exact = Dedup.minhashPairsOf(bands, Int.MaxValue, Int.MaxValue)
+      .as[(Long, Long)].collect().toSet
+    assert(gated == exact)
+    assert(gated.size == 11) // C(5,2) + 1
+  }
+
+  // six 32-bit hash values sharing their low byte (band-0 chunk 0) AND
+  // their bytes 2/3 (band-2/3 chunks 0) — a degenerate boilerplate-ish
+  // bucket; all pairwise hamming ≤ 3 (i ^ j ≤ 7 on the second byte)
+  private def degenerateHashes: DataFrame =
+    (1L to 6L).map(i => (i, i * 256L)).toDF("doc_id", "simhash")
+
+  test("hamming guard: oversized bucket degrades to a star, not a clique") {
+    val guarded = Dedup.simhashPairsOf(degenerateHashes, maxBucket = 4)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    // star pairs: min value (doc 1) against each other member — linear
+    assert(guarded == (2L to 6L).map(i => (1L, i)).toSet)
+    val exact = Dedup.simhashPairsOf(degenerateHashes)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(exact.size == 15) // C(6,2): every pair is within hamming 3
+  }
+
+  test("hamming guard: dense form raises loudly over the gate") {
+    val ex = intercept[Exception] {
+      Dedup.simhashPairsOf(degenerateHashes, maxBucket = Int.MaxValue,
+                           denseGate = 4).count()
+    }
+    def messages(t: Throwable): List[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toList ++ messages(t.getCause)
+    assert(messages(ex).exists(_.contains("denseGate")),
+      s"expected the denseGate raise, got: $ex")
+  }
+
+  test("hamming guard: compliant corpus output unchanged at any level") {
+    // two clone groups (hash A: docs 1-3, hash B: docs 4-5, hamming(A,B)=1)
+    // plus a far value (doc 6) — no bucket over 4 distinct values
+    val hashes = Seq((1L, 1024L), (2L, 1024L), (3L, 1024L),
+                     (4L, 1025L), (5L, 1025L), (6L, -1L))
+      .toDF("doc_id", "simhash")
+    val exact = Dedup.simhashPairsOf(hashes)
+      .as[(Long, Long, Long)].collect().toSet
+    val guarded = Dedup.simhashPairsOf(hashes, maxBucket = 4)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(guarded == exact)
+    assert(exact.map(p => (p._1, p._2)) ==
+      Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L),
+          (1L, 4L), (1L, 5L), (2L, 4L), (2L, 5L), (3L, 4L), (3L, 5L)))
+  }
+
+  // ---- containment -------------------------------------------------------
+
+  test("containment catches sub-document duplication Jaccard misses") {
+    // doc 1 = a 4-word quote; doc 0 = a long doc containing it verbatim.
+    val quote = "alpha beta gamma delta"
+    val docs = TextOps.withWords(TextOps.normalize(Seq(
+      (0L, s"intro words here $quote closing words trail off now"),
+      (1L, quote)).toDF("doc_id", "text")))
+    val sh = TextOps.shinglesOf(docs)
+    val pairs = Seq((0L, 1L)).toDF("doc_a", "doc_b")
+    val r = Dedup.containmentFor(pairs, sh)
+      .select("n_shared", "n_a", "n_b", "contain_a_ppm", "contain_b_ppm")
+      .as[(Long, Long, Long, Long, Long)].head()
+    // doc 1 has 2 shingles (4 words -> 2 3-grams), both inside doc 0
+    assert(r._3 == 2L && r._1 == 2L)
+    assert(r._5 == 1000000L)         // fully contained on the short side
+    assert(r._4 < 300000L)           // Jaccard-like symmetric view is low
+  }
+
+  test("containment keeps zero-overlap candidate pairs at 0 ppm") {
+    val docs = TextOps.withWords(TextOps.normalize(Seq(
+      (0L, "one two three four"), (1L, "five six seven eight"))
+      .toDF("doc_id", "text")))
+    val r = Dedup.containmentFor(
+        Seq((0L, 1L)).toDF("doc_a", "doc_b"), TextOps.shinglesOf(docs))
+      .select("n_shared", "contain_a_ppm", "contain_b_ppm")
+      .as[(Long, Long, Long)].head()
+    assert(r == ((0L, 0L, 0L)))
   }
 }

@@ -3,41 +3,12 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-12 operators: containment tier, n-gram novelty, token-budget
-  * selection, curriculum ordering, weighted sampling, bucketed packing,
-  * and the embedding-health readouts. */
+/** Round-12 operators: n-gram novelty, token-budget selection,
+  * curriculum ordering, weighted sampling, bucketed packing, and the
+  * embedding-health readouts. The containment tier's tests are in
+  * DedupSpec. */
 class Round12OpsSpec extends SparkSpec {
   import spark.implicits._
-
-  // ---- containment -------------------------------------------------------
-
-  test("containment catches sub-document duplication Jaccard misses") {
-    // doc 1 = a 4-word quote; doc 0 = a long doc containing it verbatim.
-    val quote = "alpha beta gamma delta"
-    val docs = TextOps.withWords(TextOps.normalize(Seq(
-      (0L, s"intro words here $quote closing words trail off now"),
-      (1L, quote)).toDF("doc_id", "text")))
-    val sh = TextOps.shinglesOf(docs)
-    val pairs = Seq((0L, 1L)).toDF("doc_a", "doc_b")
-    val r = Dedup.containmentFor(pairs, sh)
-      .select("n_shared", "n_a", "n_b", "contain_a_ppm", "contain_b_ppm")
-      .as[(Long, Long, Long, Long, Long)].head()
-    // doc 1 has 2 shingles (4 words -> 2 3-grams), both inside doc 0
-    assert(r._3 == 2L && r._1 == 2L)
-    assert(r._5 == 1000000L)         // fully contained on the short side
-    assert(r._4 < 300000L)           // Jaccard-like symmetric view is low
-  }
-
-  test("containment keeps zero-overlap candidate pairs at 0 ppm") {
-    val docs = TextOps.withWords(TextOps.normalize(Seq(
-      (0L, "one two three four"), (1L, "five six seven eight"))
-      .toDF("doc_id", "text")))
-    val r = Dedup.containmentFor(
-        Seq((0L, 1L)).toDF("doc_a", "doc_b"), TextOps.shinglesOf(docs))
-      .select("n_shared", "contain_a_ppm", "contain_b_ppm")
-      .as[(Long, Long, Long)].head()
-    assert(r == ((0L, 0L, 0L)))
-  }
 
   // ---- novelty -----------------------------------------------------------
 

@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Round-13 hardening: graphHops persist hygiene (no orphaned cached RDDs
-  * after a call in a long-lived session) and the dense-pair bucket gate
-  * (loud raise on a degenerate bucket instead of a silent quadratic run).
+  * after a call in a long-lived session). The dense-pair bucket gate
+  * tests are in DedupSpec.
   */
 class Round13OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -21,23 +21,6 @@ class Round13OpsSpec extends SparkSpec {
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
       s"graphHopsOf leaked cached RDDs: ${after -- before}")
-  }
-
-  private def bandsOf(rows: Seq[(Long, Int, String)]) =
-    rows.toDF("doc_id", "band", "band_hash")
-
-  test("dense-pair gate: degenerate bucket raises loudly") {
-    // one 5-doc bucket, gate 3 -> the exact dense form must fail, not
-    // run C(5,2) silently
-    val bands = bandsOf((1L to 5L).map(i => (i, 0, "h0")))
-    val ex = intercept[Exception] {
-      Dedup.minhashPairsOf(bands, Int.MaxValue, denseGate = 3).count()
-    }
-    def messages(t: Throwable): List[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toList ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("denseGate")),
-      s"expected the denseGate raise, got: $ex")
   }
 
   test("q2 shape: min-cost tie keeps BOTH suppliers, region prunes") {
@@ -149,16 +132,5 @@ class Round13OpsSpec extends SparkSpec {
     val r = Multimodal.frameNearDupOf(docs)
       .as[(Long, Long, Long)].collect().toSet
     assert(r == Set((1L, 2L, 4L)))
-  }
-
-  test("dense-pair gate: compliant corpus output is unchanged") {
-    val bands = bandsOf(
-      (1L to 5L).map(i => (i, 0, "h0")) ++ Seq((6L, 1, "h1"), (7L, 1, "h1")))
-    val gated = Dedup.minhashPairsOf(bands, Int.MaxValue, denseGate = 5)
-      .as[(Long, Long)].collect().toSet
-    val exact = Dedup.minhashPairsOf(bands, Int.MaxValue, Int.MaxValue)
-      .as[(Long, Long)].collect().toSet
-    assert(gated == exact)
-    assert(gated.size == 11) // C(5,2) + 1
   }
 }

@@ -4,57 +4,13 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit}
 
-/** Round-14 hardening: the hamming-LSH giant-bucket guard (maxBucket star
-  * degradation + in-plan denseGate — the treatment minhashPairsOf got in
-  * r13), the guarded frame-near-dup clustered sibling, and Basket/CC
-  * persist hygiene (tracked frames reclaimed by Caches.invalidateAll).
+/** Round-14 hardening: the guarded frame-near-dup clustered sibling and
+  * Basket/CC persist hygiene (tracked frames reclaimed by
+  * Caches.invalidateAll). The hamming giant-bucket guard tests are in
+  * DedupSpec.
   */
 class Round14OpsSpec extends SparkSpec {
   import spark.implicits._
-
-  // six 32-bit hash values sharing their low byte (band-0 chunk 0) AND
-  // their bytes 2/3 (band-2/3 chunks 0) — a degenerate boilerplate-ish
-  // bucket; all pairwise hamming ≤ 3 (i ^ j ≤ 7 on the second byte)
-  private def degenerateHashes: DataFrame =
-    (1L to 6L).map(i => (i, i * 256L)).toDF("doc_id", "simhash")
-
-  test("hamming guard: oversized bucket degrades to a star, not a clique") {
-    val guarded = Dedup.simhashPairsOf(degenerateHashes, maxBucket = 4)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    // star pairs: min value (doc 1) against each other member — linear
-    assert(guarded == (2L to 6L).map(i => (1L, i)).toSet)
-    val exact = Dedup.simhashPairsOf(degenerateHashes)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(exact.size == 15) // C(6,2): every pair is within hamming 3
-  }
-
-  test("hamming guard: dense form raises loudly over the gate") {
-    val ex = intercept[Exception] {
-      Dedup.simhashPairsOf(degenerateHashes, maxBucket = Int.MaxValue,
-                           denseGate = 4).count()
-    }
-    def messages(t: Throwable): List[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toList ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("denseGate")),
-      s"expected the denseGate raise, got: $ex")
-  }
-
-  test("hamming guard: compliant corpus output unchanged at any level") {
-    // two clone groups (hash A: docs 1-3, hash B: docs 4-5, hamming(A,B)=1)
-    // plus a far value (doc 6) — no bucket over 4 distinct values
-    val hashes = Seq((1L, 1024L), (2L, 1024L), (3L, 1024L),
-                     (4L, 1025L), (5L, 1025L), (6L, -1L))
-      .toDF("doc_id", "simhash")
-    val exact = Dedup.simhashPairsOf(hashes)
-      .as[(Long, Long, Long)].collect().toSet
-    val guarded = Dedup.simhashPairsOf(hashes, maxBucket = 4)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(guarded == exact)
-    assert(exact.map(p => (p._1, p._2)) ==
-      Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L),
-          (1L, 4L), (1L, 5L), (2L, 4L), (2L, 5L), (3L, 4L), (3L, 5L)))
-  }
 
   private def componentsOf(edges: DataFrame): Set[(Long, Long)] = {
     val nodes = edges.select(col("doc_a").as("doc_id"))
