@@ -39,16 +39,13 @@ object Analytics {
       .agg(sum(discPrice).cast("double").as("revenue"))
   }
 
-  /** Top-k customers by revenue. Scale pattern: `orderBy(...).limit(k)`
-    * plans as TakeOrderedAndProject (per-partition top-k + driver merge of
-    * k·P rows — no global sort); the rank window then runs over k rows. */
+  /** Top-k customers by revenue through the [[topKHead]] (TakeOrdered, no
+    * global sort; the rank window runs over k rows). */
   def topCustomers(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val rev = Feeds.table(spark, dir, "orders")
       .groupBy("o_custkey")
       .agg(sum(col("o_totalprice").cast(DecimalType(14, 2))).as("revenue"))
-    val top = rev.orderBy(col("revenue").desc, col("o_custkey")).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("revenue").desc, col("o_custkey"))).cast("long"))
+    val top = topKHead(rev, k, "rnk")(col("revenue").desc, col("o_custkey"))
     val c = Feeds.table(spark, dir, "customer")
     top.join(c, col("o_custkey") === col("c_custkey"))
       .select(col("o_custkey").as("custkey"), col("c_name"),
@@ -310,17 +307,6 @@ object Analytics {
   def revenueAnomaly(spark: SparkSession, dir: String): DataFrame =
     revenueAnomalyOf(Feeds.table(spark, dir, "orders"))
 
-  /** Point-in-time (time-travel) lookup against the SCD2 customer-city
-    * history: each sale is attributed to the city the customer was in
-    * `lagDays` BEFORE the sale — the as-of join every SCD2 dimension
-    * exists to serve. Sales predating the customer's first recorded city
-    * fall in the NULL-city bucket (kept visible via left join).
-    *
-    * Scale shape: equi-join on customer_id (sort-merge co-partition) with
-    * the validity-range predicate as a residual filter; SCD2 intervals are
-    * disjoint per customer so the join multiplicity is ≤1 — no fanout. The
-    * per-customer history is dimension-sized; the output rollup is one
-    * partial-agg groupBy on city. */
   /** Inter-order gap histogram: per-customer consecutive-order gaps in
     * days, bucketed into reorder-latency bands — the churn-analysis rollup
     * behind "days since last order" alerting.
@@ -453,6 +439,17 @@ object Analytics {
           .as("hhi"))
   }
 
+  /** Point-in-time (time-travel) lookup against the SCD2 customer-city
+    * history: each sale is attributed to the city the customer was in
+    * `lagDays` BEFORE the sale — the as-of join every SCD2 dimension
+    * exists to serve. Sales predating the customer's first recorded city
+    * fall in the NULL-city bucket (kept visible via left join).
+    *
+    * Scale shape: equi-join on customer_id (sort-merge co-partition) with
+    * the validity-range predicate as a residual filter; SCD2 intervals are
+    * disjoint per customer so the join multiplicity is ≤1 — no fanout. The
+    * per-customer history is dimension-sized; the output rollup is one
+    * partial-agg groupBy on city. */
   def scdPointInTimeOf(uolV2: DataFrame, scd: DataFrame,
                        lagDays: Int = 30): DataFrame = {
     val sales = uolV2
@@ -827,11 +824,10 @@ object Analytics {
     *
     * Scale shape: the quarter filter prunes orders at the scan and the
     * returnflag filter prunes lineitem at the scan BEFORE the join; the
-    * per-customer rollup is a partial-agg groupBy; the top-k is
-    * sort-LIMIT (Spark's TakeOrderedAndProject — k·partitions rows to
-    * the driver-side heap, never a global sort), and the rank window
-    * then runs over k rows. Customer attributes join AFTER the limit —
-    * k rows against the dimension, broadcast-side reversed by AQE.
+    * per-customer rollup is a partial-agg groupBy; the top-k is the
+    * [[topKHead]] (never a global sort). Customer attributes join AFTER
+    * the limit — k rows against the dimension, broadcast-side reversed by
+    * AQE.
     * DECIMAL revenue makes the (revenue, custkey) order engine-exact. */
   def returnedTopOf(lineitem: DataFrame, orders: DataFrame,
                     customer: DataFrame, nation: DataFrame,
@@ -846,10 +842,7 @@ object Analytics {
             col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_custkey")
       .agg(sum("rev").as("revenue"))
-    val top = rev.orderBy(col("revenue").desc, col("o_custkey")).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("revenue").desc, col("o_custkey"))).cast("long"))
-    top
+    topKHead(rev, k, "rnk")(col("revenue").desc, col("o_custkey"))
       .join(customer.select("c_custkey", "c_name", "c_nationkey"),
             col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation.select("n_nationkey", "n_name")),

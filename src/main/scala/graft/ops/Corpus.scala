@@ -863,8 +863,7 @@ object Corpus {
   def dedupLengthShiftOf(stats: DataFrame, curatedV2: DataFrame): DataFrame =
     stats
       .select(col("doc_id"),
-        expr("CAST(length(bin(greatest(n_tokens, 1))) - 1 AS BIGINT)")
-          .as("bucket"))
+        ilog2(greatest(col("n_tokens"), lit(1))).as("bucket"))
       .join(curatedV2.select(col("doc_id")).withColumn("kept", lit(1L)),
             Seq("doc_id"), "left")
       .groupBy("bucket")

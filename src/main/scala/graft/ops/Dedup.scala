@@ -90,7 +90,7 @@ object Dedup {
     bands
       .groupBy("band", "band_hash").agg(count(lit(1)).as("sz"))
       .select(col("band"),
-        expr("CAST(length(bin(sz)) - 1 AS BIGINT)").as("bucket"),
+        ilog2(col("sz")).as("bucket"),
         col("sz"))
       .groupBy("band", "bucket")
       .agg(count(lit(1)).as("n_buckets"), sum("sz").as("n_docs"),
@@ -973,8 +973,7 @@ object Dedup {
   def clusterSizesHistOf(clusters: DataFrame): DataFrame =
     clusters
       .groupBy("cluster").agg(count(lit(1)).as("sz"))
-      .select(expr("CAST(length(bin(sz)) - 1 AS BIGINT)").as("bucket"),
-              col("sz"))
+      .select(ilog2(col("sz")).as("bucket"), col("sz"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_clusters"),
            sum("sz").as("n_docs"),
@@ -995,8 +994,7 @@ object Dedup {
     pairs.select(col("doc_a").as("doc_id"))
       .unionAll(pairs.select(col("doc_b").as("doc_id")))
       .groupBy("doc_id").agg(count(lit(1)).as("deg"))
-      .select(expr("CAST(length(bin(deg)) - 1 AS BIGINT)").as("bucket"),
-              col("deg"))
+      .select(ilog2(col("deg")).as("bucket"), col("deg"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_docs"),
            sum("deg").as("sum_deg"))
@@ -1319,7 +1317,7 @@ object Dedup {
     spansFromRuns(substringRunsCached(spark, dir))
 
   /** Corpus-level duplicated-span LENGTH histogram in power-of-2 word
-    * buckets (bucket = ⌊log₂ span_words⌋, bin-length trick) — the one-page
+    * buckets (bucket = [[ilog2]] of span_words) — the one-page
     * quote-contamination readout over [[substringRunsOf]]: a long tail of
     * big buckets says whole passages circulate verbatim (trim or dedup at
     * the span tier); mass at the minimum bucket says short-quote noise.
@@ -1330,8 +1328,7 @@ object Dedup {
     runs
       .select((col("run_len") + lit(2)).as("w"),
               concat_ws("_", col("doc_a"), col("doc_b")).as("pair"))
-      .select(expr("CAST(length(bin(w)) - 1 AS BIGINT)").as("bucket"),
-              col("w"), col("pair"))
+      .select(ilog2(col("w")).as("bucket"), col("w"), col("pair"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_spans"),
            countDistinct(col("pair")).as("n_pairs"),
@@ -1804,29 +1801,22 @@ object Dedup {
     dedupTierOverlapOf(minhashPairs(spark, dir),
                        spansFromRuns(substringRunsCached(spark, dir)))
 
-  /** Per-band bucket-occupancy ENTROPY surrogate: n·⌊log2 n⌋ − Σ s·⌊log2 s⌋
-    * over the band's bucket sizes (the house integer-entropy formula, see
-    * charEntropy) plus count/max — one number per band saying whether the
-    * hash spreads signatures (entropy near n·log2(buckets)) or collapses
-    * them (entropy → 0 ⇒ the band is one giant bucket and the pair join
-    * under it is quadratic). The SUMMARY tier above
+  /** Per-band bucket-occupancy ENTROPY surrogate ([[entropySurrOf]] over
+    * the band's bucket sizes) plus count/max — one number per band saying
+    * whether the hash spreads signatures (entropy near n·log2(buckets)) or
+    * collapses them (entropy → 0 ⇒ the band is one giant bucket and the
+    * pair join under it is quadratic). The SUMMARY tier above
     * [[minhashBandStatsOf]]'s size histogram: a monitor alert thresholds
     * one number, then pulls the histogram.
     *
     * Scale shape: one partial-agg groupBy per (band, hash) over the
     * memoized bands, one |bands|-key fold. */
   def bandEntropyOf(bands: DataFrame): DataFrame =
-    bands
-      .groupBy("band", "band_hash").agg(count(lit(1)).as("s"))
-      .groupBy("band")
-      .agg(count(lit(1)).as("n_buckets"),
-           sum("s").as("n_sigs"),
-           max("s").as("max_bucket"),
-           sum(expr("s * (length(bin(s)) - 1)")).as("sum_slog"))
-      .select(col("band"), col("n_buckets"), col("n_sigs"),
-        col("max_bucket"),
-        expr("""CAST(n_sigs * (length(bin(n_sigs)) - 1) - sum_slog
-                AS BIGINT)""").as("entropy_surr"))
+    entropySurrOf(
+      bands.groupBy("band", "band_hash").agg(count(lit(1)).as("s")),
+      "band", "s", "n_sigs")(
+      count(lit(1)).as("n_buckets"), sum("s").as("n_sigs"),
+      max("s").as("max_bucket"))
 
   def bandEntropy(spark: SparkSession, dir: String): DataFrame =
     bandEntropyOf(bandsCached(spark, dir))

@@ -195,8 +195,7 @@ object Multimodal {
     * groupBy on a ~30-value bucket key. */
   def sizeHistOf(meta: DataFrame): DataFrame =
     meta
-      .select(expr("CAST(length(bin(greatest(byte_len, 1))) - 1 AS BIGINT)")
-                .as("bucket"),
+      .select(ilog2(greatest(col("byte_len"), lit(1))).as("bucket"),
               col("byte_len"), col("n_frames"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_docs"),

@@ -90,7 +90,7 @@ object Pack {
       (col("doc_id") % nShards).as("shard"),
       expr(s"least(CAST(size(words) AS BIGINT), ${capacity.toLong})")
         .as("t"))
-      .withColumn("bucket", expr("CAST(length(bin(t)) - 1 AS BIGINT)"))
+      .withColumn("bucket", ilog2(col("t")))
       .withColumn("k", expr(s"CAST(${capacity.toLong} div " +
         "shiftleft(1, CAST(bucket AS INT)) AS BIGINT)"))
     val w = Window.partitionBy("bucket", "shard").orderBy("doc_id")

@@ -237,15 +237,14 @@ object Sessions {
     debounceOf(Feeds.events(spark, dir))
 
   /** Per-user event-rate histogram in power-of-2 buckets (bucket =
-    * ⌊log₂ events-per-user⌋, bin-length trick) — the bot/outlier readout:
+    * [[ilog2]] of events-per-user) — the bot/outlier readout:
     * a heavy tail of users thousands of buckets above the median is
     * scripted traffic. Two partial-agg groupBys (user → count, bucket →
     * rollup); output is ~64 rows at any scale. */
   def eventRateHistOf(events: DataFrame): DataFrame =
     events.select(col("user_id").cast("long").as("user_id"))
       .groupBy("user_id").agg(count(lit(1)).as("n_events"))
-      .select(expr("CAST(length(bin(n_events)) - 1 AS BIGINT)").as("bucket"),
-              col("n_events"))
+      .select(ilog2(col("n_events")).as("bucket"), col("n_events"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_users"), sum("n_events").as("sum_events"),
            min("n_events").as("min_events"), max("n_events").as("max_events"))
@@ -390,11 +389,8 @@ object Sessions {
 
   /** Per-user event-type diversity entropy — the bot / stuck-client
     * detector: a user whose events concentrate on one type scores 0, a
-    * user spread evenly across the catalog scores high. Integer
-    * surrogate of Shannon entropy·n (the charEntropy formula, exact and
-    * bit-stable cross-engine):
-    *   surr = n·⌊log₂ n⌋ − Σ_t n_t·⌊log₂ n_t⌋
-    * via the bin-string-length ⌊log₂⌋.
+    * user spread evenly across the catalog scores high: the integer
+    * entropy surrogate [[entropySurrOf]] over the per-type counts.
     *
     * Scale shape: per-(user, type) counts are a partial-agg groupBy
     * whose exchange carries ≤ |event-type catalog| rows per user, folded
@@ -402,26 +398,18 @@ object Sessions {
     * the first combine. The per-user output is the monitoring mart a
     * downstream percentile/fence pass reads; no driver-side state. */
   def eventEntropyOf(events: DataFrame): DataFrame =
-    events
+    entropySurrOf(events
       .select(col("user_id").cast("long").as("user_id"), col("event_type"))
       .groupBy("user_id", "event_type")
-      .agg(count(lit(1)).as("n_t"))
-      .groupBy("user_id")
-      .agg(sum("n_t").as("n_events"),
-           count(lit(1)).as("n_types"),
-           expr("CAST(sum(n_t * (length(bin(n_t)) - 1)) AS BIGINT)")
-             .as("sum_t_ilog2"))
-      .select(col("user_id"), col("n_events"), col("n_types"),
-        expr("""CAST(n_events * (length(bin(n_events)) - 1) - sum_t_ilog2
-                AS BIGINT)""").as("entropy_surr"))
+      .agg(count(lit(1)).as("n_t")), "user_id", "n_t", "n_events")(
+      sum("n_t").as("n_events"), count(lit(1)).as("n_types"))
 
   def eventEntropy(spark: SparkSession, dir: String): DataFrame =
     eventEntropyOf(Feeds.events(spark, dir))
 
-  /** Session-DURATION histogram in power-of-2 second buckets (the
-    * doclen-hist trick: bucket = ⌊log₂ max(dur,1)⌋ via bin-string
-    * length — zero-length single-event sessions land in bucket 0) —
-    * the engagement-shape card a product team reads next to the
+  /** Session-DURATION histogram in power-of-2 second buckets (bucket =
+    * [[ilog2]] of max(dur, 1) — zero-length single-event sessions land in
+    * bucket 0) — the engagement-shape card a product team reads next to the
     * concurrency profile: a bimodal histogram here means bots or a
     * broken gap threshold.
     *
@@ -430,10 +418,9 @@ object Sessions {
     * partial agg on a ~20-value bucket key. */
   def sessionDurationHistOf(sessions: DataFrame): DataFrame =
     sessions
-      .select(expr(
-        """CAST(length(bin(greatest(
-              unix_timestamp(session_end) - unix_timestamp(session_start),
-              1))) - 1 AS BIGINT)""").as("bucket"),
+      .select(ilog2(greatest(expr(
+        "unix_timestamp(session_end) - unix_timestamp(session_start)"),
+        lit(1))).as("bucket"),
         (unix_timestamp(col("session_end")) -
           unix_timestamp(col("session_start"))).as("dur_sec"))
       .groupBy("bucket")
@@ -465,9 +452,7 @@ object Sessions {
       .where(col("gap_sec").isNotNull)
     gaps.groupBy("user_id")
       .agg(count(lit(1)).as("n_gaps"), sum(col("gap_sec")).as("sum_gap"))
-      .select(expr(
-        s"""CAST(length(bin(greatest(sum_gap DIV n_gaps, 1))) - 1
-            AS BIGINT)""").as("bucket"),
+      .select(ilog2(greatest(expr("sum_gap DIV n_gaps"), lit(1))).as("bucket"),
         col("n_gaps"), col("sum_gap"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_users"),
@@ -481,7 +466,7 @@ object Sessions {
   /** Per-user event-sequence surprisal under the corpus's first-order
     * Markov model, as a quarter-bit mean histogram: each transition
     * (prev→next) contributes ⌊log₂ c(prev,*)⌋ − ⌊log₂ c(prev,next)⌋
-    * bits (the integer-log2 surrogate of −log₂ P(next|prev) the text
+    * bits (the [[ilog2]] surrogate of −log₂ P(next|prev) the text
     * stack standardizes on), and users land in buckets of
     * (4·total_bits) DIV n_transitions. High-surprisal users follow
     * paths the population never takes — the behavioral-anomaly twin of
@@ -511,8 +496,7 @@ object Sessions {
       .agg(sum(col("c_pair")).as("c_from"))
     val model = broadcast(pairModel.join(fromModel, "from_type")
       .select(col("from_type"), col("to_type"),
-        expr("""CAST(length(bin(c_from)) - length(bin(c_pair))
-                AS BIGINT)""").as("bits_per")))
+        (ilog2(col("c_from")) - ilog2(col("c_pair"))).as("bits_per")))
     trans.join(model, Seq("from_type", "to_type"))
       .groupBy("user_id")
       .agg(sum(col("n_ut")).as("n_trans"),
@@ -608,8 +592,7 @@ object Sessions {
           .cast("long"))
       .where(col("gap_s").isNotNull)
       .groupBy(col("event_type"),
-        expr("CAST(length(bin(greatest(gap_s, 1))) - 1 AS BIGINT)")
-          .as("bucket"))
+        ilog2(greatest(col("gap_s"), lit(1))).as("bucket"))
       .agg(count(lit(1)).as("n_gaps"))
   }
 

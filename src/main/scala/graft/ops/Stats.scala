@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  private def ilog2(c: String) = s"CAST(length(bin(greatest($c, 1))) - 1 AS BIGINT)"
-
   /** Zipf-law fit of the word-frequency distribution as EXACT integer
     * least-squares moments over (x=⌊log2 rank⌋, y=⌊log2 freq⌋): a healthy
     * natural-language corpus has slope ≈ −1; boilerplate floods or
@@ -48,7 +46,8 @@ object Stats {
       .withColumn("rank_lo",
         (coalesce(sum(col("n_words")).over(byFreqDesc), lit(0L)) + 1L))
       .select(col("n_words"),
-        expr(ilog2("rank_lo")).as("x"), expr(ilog2("n")).as("y"))
+        ilog2(greatest(col("rank_lo"), lit(1))).as("x"),
+        ilog2(greatest(col("n"), lit(1))).as("y"))
     blocks.agg(
         sum(col("n_words")).as("n_vocab"),
         sum(col("n_words") * col("x")).as("sx"),
@@ -170,16 +169,11 @@ object Stats {
     *
     * Scale: reuses the memoized distinct-shingle frame (one shuffle,
     * shared with the dedup/contamination family); the df rollup is a
-    * partial-agg groupBy; the head is TakeOrdered (per-partition top-k +
-    * driver merge of k·P rows, no global sort); the rank window runs
-    * over k rows. */
+    * partial-agg groupBy; the head is the [[topKHead]]. */
   def boilerplateShinglesOf(shingles: DataFrame, nDocs: DataFrame,
                             k: Int = 20): DataFrame = {
     val df = shingles.groupBy("shingle").agg(count(lit(1)).as("n_docs"))
-    val top = df.orderBy(col("n_docs").desc, col("shingle")).limit(k)
-    top
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("n_docs").desc, col("shingle"))).cast("long"))
+    topKHead(df, k, "rank")(col("n_docs").desc, col("shingle"))
       .crossJoin(broadcast(nDocs))
       .select(col("rank"), col("shingle"), col("n_docs"),
         expr("CAST(n_docs * 1000000 DIV n_total AS BIGINT)").as("df_ppm"))
@@ -285,7 +279,7 @@ object Stats {
     shardSkewOf(Sampling.shuffleShards(spark, dir))
 
   /** Document-frequency histogram: vocabulary words bucketed by
-    * ⌊log₂ df⌋ (bin-string-length trick — exact integers), with the word
+    * [[ilog2]] of df, with the word
     * and posting counts per bucket — the IDF-side readout that sizes
     * stopword cutoffs and inverted-index tiers.
     *
@@ -295,8 +289,7 @@ object Stats {
   def tokenDocFreqOf(wordsDist: DataFrame): DataFrame =
     wordsDist
       .groupBy("w").agg(count(lit(1)).as("df"))
-      .select(expr("CAST(length(bin(greatest(df, 1))) - 1 AS BIGINT)")
-                .as("bucket"), col("df"))
+      .select(ilog2(greatest(col("df"), lit(1))).as("bucket"), col("df"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_words"), sum("df").as("sum_df"))
 
@@ -316,8 +309,7 @@ object Stats {
   def heapsLawOf(wordsDist: DataFrame): DataFrame = {
     val buckets = wordsDist
       .groupBy("w").agg(min("doc_id").as("min_doc"))
-      .select(expr("CAST(length(bin(greatest(min_doc, 1))) - 1 AS BIGINT)")
-                .as("bucket"))
+      .select(ilog2(greatest(col("min_doc"), lit(1))).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("new_words"))
     buckets.withColumn("cum_vocab",
@@ -345,8 +337,7 @@ object Stats {
       .select(col("doc_id"), floor(col("quality") * lit(1000000))
         .cast("long").as("qppm"))
       .join(stats.select(col("doc_id"),
-        expr("CAST(length(bin(greatest(n_tokens, 1))) - 1 AS BIGINT)")
-          .as("lbits")), Seq("doc_id"))
+        ilog2(greatest(col("n_tokens"), lit(1))).as("lbits")), Seq("doc_id"))
     qv.agg(count(lit(1)).as("n"),
            sum("qppm").as("s_q"),
            sum("lbits").as("s_l"),

@@ -3,6 +3,7 @@ package graft.ops
 import graft.Memo.TruncateOps
 import graft.etl.Feeds
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over the `documents` table — the
@@ -82,9 +83,8 @@ object TextOps {
     qualityScoreOf(textStats(spark, dir))
 
   /** Corpus length distribution in power-of-2 token buckets (bucket =
-    * ⌊log₂ n_tokens⌋ via the bin-string-length trick the tf-idf scorer
-    * uses — exact integers, no floating-point log) — the length histogram
-    * every dataset card ships and every packing/truncation decision reads.
+    * [[ilog2]] of n_tokens) — the length histogram every dataset card
+    * ships and every packing/truncation decision reads.
     *
     * Scale shape: map-side bucket assignment fused into the stats scan,
     * then one partial-agg groupBy on the ~30-value bucket key — output is
@@ -92,8 +92,7 @@ object TextOps {
   def docLenHistOf(stats: DataFrame): DataFrame =
     stats
       .select(
-        expr("CAST(length(bin(greatest(n_tokens, 1))) - 1 AS BIGINT)")
-          .as("bucket"),
+        ilog2(greatest(col("n_tokens"), lit(1))).as("bucket"),
         col("n_tokens"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_docs"),
@@ -104,29 +103,40 @@ object TextOps {
   def docLenHist(spark: SparkSession, dir: String): DataFrame =
     docLenHistOf(textStats(spark, dir))
 
-  /** Marker-word (1-gram) language scoring with a pinned argmax order
-    * (en ≥ de ≥ fr ≥ es). Real-world accuracy needs real marker lists; the
+  /** Per-language scores `<p>_en` … `<p>_es`, one `score(marker)` per
+    * language, and their pinned argmax: a tie goes to the language listed
+    * first (en ≥ de ≥ fr ≥ es), so an all-zero doc predicts `en`. Both
+    * language-ID forms rank through it. Input needs doc_id and lang. */
+  private def langArgmaxOf(frame: DataFrame, p: String,
+                           markers: Seq[(String, String)])
+                          (score: String => String): DataFrame = {
+    val cols = markers.map { case (l, _) => s"${p}_$l" }
+    val arms = cols.indices.init.map { i =>
+      val beats = cols.drop(i + 1).map(o => s"${cols(i)} >= $o")
+      s"WHEN ${beats.mkString(" AND ")} THEN '${markers(i)._1}'"
+    }
+    frame
+      .select(col("doc_id") +: col("lang") +: markers.map { case (l, m) =>
+        expr(score(m)).cast("long").as(s"${p}_$l") }: _*)
+      .select(col("doc_id") +: cols.map(col) :+
+        expr(s"CASE ${arms.mkString(" ")} ELSE '${markers.last._1}' END")
+          .as("pred_lang") :+ col("lang"): _*)
+      .withColumn("correct", col("pred_lang") === col("lang"))
+  }
+
+  private val wordMarkers = Seq(
+    "en" -> "'the','a','of','and','to','is'",
+    "de" -> "'der','die','das','und','ist','nicht'",
+    "fr" -> "'le','la','les','et','est','dans'",
+    "es" -> "'el','los','las','y','es','en'")
+
+  /** Marker-word (1-gram) language scoring with the pinned argmax of
+    * [[langArgmaxOf]]. Real-world accuracy needs real marker lists; the
     * operator shape — per-language counts + deterministic argmax — is what
     * scales. Input needs doc_id, lang, words. */
   def langIdOf(docsWords: DataFrame): DataFrame =
-    docsWords.select(
-      col("doc_id"), col("lang"),
-      expr("size(filter(words, w -> w IN ('the','a','of','and','to','is')))")
-        .cast("long").as("s_en"),
-      expr("size(filter(words, w -> w IN ('der','die','das','und','ist','nicht')))")
-        .cast("long").as("s_de"),
-      expr("size(filter(words, w -> w IN ('le','la','les','et','est','dans')))")
-        .cast("long").as("s_fr"),
-      expr("size(filter(words, w -> w IN ('el','los','las','y','es','en')))")
-        .cast("long").as("s_es"))
-      .select(
-        col("doc_id"), col("s_en"), col("s_de"), col("s_fr"), col("s_es"),
-        expr(
-          """CASE WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-                  WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-                  WHEN s_fr >= s_es THEN 'fr' ELSE 'es' END""").as("pred_lang"),
-        col("lang"))
-      .withColumn("correct", col("pred_lang") === col("lang"))
+    langArgmaxOf(docsWords, "s", wordMarkers)(
+      ws => s"size(filter(words, w -> w IN ($ws)))")
 
   def langId(spark: SparkSession, dir: String): DataFrame =
     langIdOf(docsWords(spark, dir))
@@ -147,7 +157,8 @@ object TextOps {
     * at its minimum: per-language counts of characteristic character
     * trigrams over the normalized text (regexp alternation = one
     * non-overlapping scan per language), argmax with the same pinned
-    * order as [[langIdOf]]. Map-side only, like every text operator.
+    * order as [[langIdOf]] ([[langArgmaxOf]]). Map-side only, like every
+    * text operator.
     * Real systems use ranked profile distance over the top-k corpus
     * n-grams; the shape — per-language feature counts + deterministic
     * argmax — is identical. */
@@ -157,34 +168,40 @@ object TextOps {
     "fr" -> "(les|ent|des|une)",
     "es" -> "(los|ado|una|ción)")
 
-  def langIdNgramOf(docsNorm: DataFrame): DataFrame = {
-    val scored = triMarkers.foldLeft(docsNorm.select(col("doc_id"),
-        col("lang"), col("norm"))) { case (acc, (l, pat)) =>
-      acc.withColumn(s"t_$l",
-        expr(s"regexp_count(norm, '$pat')").cast("long"))
-    }
-    scored.select(
-      col("doc_id"), col("t_en"), col("t_de"), col("t_fr"), col("t_es"),
-      expr(
-        """CASE WHEN t_en >= t_de AND t_en >= t_fr AND t_en >= t_es THEN 'en'
-                WHEN t_de >= t_fr AND t_de >= t_es THEN 'de'
-                WHEN t_fr >= t_es THEN 'fr' ELSE 'es' END""").as("pred_lang"),
-      col("lang"))
-      .withColumn("correct", col("pred_lang") === col("lang"))
-  }
+  def langIdNgramOf(docsNorm: DataFrame): DataFrame =
+    langArgmaxOf(docsNorm, "t", triMarkers)(
+      pat => s"regexp_count(norm, '$pat')")
 
   def langIdNgram(spark: SparkSession, dir: String): DataFrame =
     langIdNgramOf(docs(spark, dir))
+
+  /** The adjacent-word window over `words`: for each start offset i in
+    * 0..size(words) − n, one element `gram(words[i], …, words[i+n−1])`
+    * (SQL fragments in, one SQL fragment out). Under n words `sequence`
+    * would count down from 0 and index outside `words`, so every caller
+    * guards with `size(words) >= n` and picks its own short-doc fallback. */
+  private def ngramWindow(n: Int)(gram: Seq[String] => String): String = {
+    val ws = "words[i]" +: (1 until n).map(j => s"words[i+$j]")
+    s"transform(sequence(0, size(words) - $n), i -> ${gram(ws)})"
+  }
+
+  private def joined(ws: Seq[String]) = s"concat_ws(' ', ${ws.mkString(", ")})"
+
+  /** Word-bigram strings `w1 w2`; docs under 2 words give none. */
+  private def bigrams = expr(s"""CASE WHEN size(words) >= 2
+    THEN ${ngramWindow(2)(joined)} ELSE CAST(array() AS ARRAY<STRING>) END""")
+
+  /** Word-bigram `(w1, w2)` structs; docs under 2 words give none. */
+  private def bigramPairs = expr(s"""CASE WHEN size(words) >= 2
+    THEN ${ngramWindow(2)(ws => s"struct(${ws(0)} AS w1, ${ws(1)} AS w2)")}
+    ELSE CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>) END""")
 
   /** Word-3-gram shingles (fallback: the whole normalized doc when shorter
     * than 3 words), deduplicated per doc. The base of MinHash / Jaccard. */
   def shinglesOf(docsWords: DataFrame): DataFrame =
     docsWords
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(words) >= 3
-             THEN transform(sequence(0, size(words) - 3),
-                    i -> concat_ws(' ', words[i], words[i+1], words[i+2]))
-             ELSE array(norm) END""")).as("shingle"))
+      .select(col("doc_id"), explode(expr(s"""CASE WHEN size(words) >= 3
+        THEN ${ngramWindow(3)(joined)} ELSE array(norm) END""")).as("shingle"))
       .distinct()
 
   /** POSITIONAL word-3-gram shingle hashes — (doc_id, pos, sh) with the
@@ -202,8 +219,7 @@ object TextOps {
     docsWords
       .where(expr("size(words) >= 3"))
       .select(col("doc_id"), posexplode(expr(
-        """transform(sequence(0, size(words) - 3),
-             i -> unhex(md5(concat_ws(' ', words[i], words[i+1], words[i+2]))))"""))
+        ngramWindow(3)(ws => s"unhex(md5(${joined(ws)}))")))
         .as(Seq("pos", "sh")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("sh"))
 
@@ -255,19 +271,13 @@ object TextOps {
 
   /** Corpus word-frequency top-k — the vocabulary/Zipf profile a tokenizer
     * build starts from. Two-phase count (map-side partial agg on word),
-    * then a global top-k that plans as TakeOrdered (no full sort): rank by
+    * then the global [[topKHead]] (TakeOrdered, no full sort): rank by
     * (count desc, word) for a deterministic tiebreak. Integer-only output —
     * trivially cross-engine. */
-  def wordFreqOf(docsWords: DataFrame, k: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val top = docsWords
-      .select(explode(col("words")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("w")).limit(k) // TakeOrdered, no full sort
-    // rank window runs over k rows only — never the full vocabulary
-    top.withColumn("rank", row_number().over(
-      Window.orderBy(col("n").desc, col("w"))).cast("long"))
-  }
+  def wordFreqOf(docsWords: DataFrame, k: Int = 100): DataFrame =
+    topKHead(docsWords.select(explode(col("words")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("n")), k, "rank")(
+      col("n").desc, col("w"))
 
   def wordFreq(spark: SparkSession, dir: String): DataFrame =
     wordFreqOf(docsWords(spark, dir))
@@ -276,11 +286,8 @@ object TextOps {
     * keyword extraction / topic labeling in a curation pipeline.
     *
     * Scoring is ALL-INTEGER for bit-stable cross-engine results (same rule
-    * as the quantized cosine scores): idf is the integer log2 of N/df,
-    * computed as `length(bin(N div df)) - 1` — `bin` is exact integer
-    * bit-arithmetic in both engines, with none of libm-`ln`'s last-ulp
-    * ambiguity that could flip a rank at a rounding boundary. score =
-    * tf * ilog2(N/df); ties break by term.
+    * as the quantized cosine scores): idf is [[ilog2]] of N div df, and
+    * score = tf * ilog2(N/df); ties break by term.
     *
     * Scale: tf is a (doc, term) partial-agg groupBy; df rides a COUNT
     * window partitioned by term over the SAME aggregate — tf's grain is
@@ -292,7 +299,6 @@ object TextOps {
     * already determines). N joins as a 1-row broadcast. The top-k window
     * partitions by doc — bounded by terms-per-doc, never global. */
   def tfidfTopOf(docsWords: DataFrame, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wf = docsWords.select(col("doc_id"), explode(col("words")).as("w"))
     val tf = wf.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
     val n = docsWords.select(countDistinct("doc_id").as("n_docs"))
@@ -300,7 +306,7 @@ object TextOps {
       .withColumn("df", count(lit(1)).over(Window.partitionBy("w")))
       .crossJoin(broadcast(n))
       .withColumn("score",
-        col("tf") * (length(bin(expr("n_docs div df"))) - 1).cast("long"))
+        col("tf") * ilog2(expr("n_docs div df")))
     scored
       .withColumn("rank", row_number().over(
         Window.partitionBy("doc_id")
@@ -327,7 +333,7 @@ object TextOps {
     * would be uniformly zero and rank nothing, while the linear weight
     * keeps the same rarer-counts-more monotonicity at full integer
     * resolution. (At a real corpus's df spread, swap w_t for the tfidf
-    * operator's `length(bin(N div df))-1` log — one line, same plan.)
+    * operator's `ilog2(N div df)` — one line, same plan.)
     *
     * Determinism: every operand is a BIGINT and `div` floors exactly like
     * DuckDB's `//` on these non-negative values; the per-doc sum is an
@@ -337,11 +343,10 @@ object TextOps {
     * shuffle carries ≤|terms| rows per doc, with the doc length riding
     * the grouping key — no per-doc-length join); df re-aggregates the
     * collapsed tf rows; df and the corpus stats join as |terms|-row /
-    * 1-row broadcasts; the final top-k plans as TakeOrdered — no global
+    * 1-row broadcasts; the final top-k is the [[topKHead]] — no global
     * sort, no global window. */
   def bm25TopOf(docsWords: DataFrame, terms: Seq[String],
                 k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(terms.nonEmpty, "BM25 needs at least one query term")
     val stats = docsWords.agg(
       count(lit(1)).cast("long").as("n_docs"),
@@ -366,10 +371,7 @@ object TextOps {
       .groupBy("doc_id")
       .agg(sum(col("term_score")).as("score"),
            count(lit(1)).as("n_terms_hit"))
-    val top = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
-    // rank window runs over the k collected rows only — never the corpus
-    top.withColumn("rank", row_number().over(
-      Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+    topKHead(scored, k, "rank")(col("score").desc, col("doc_id"))
   }
 
   /** Query form: a fixed 3-term probe present in the synthetic corpus. */
@@ -483,19 +485,11 @@ object TextOps {
   /** Corpus word-BIGRAM top-k — the adjacent-pair statistics a BPE-style
     * tokenizer merge step starts from (here at word granularity: the most
     * frequent pair is the first merge candidate). Same two-phase
-    * count + TakeOrdered shape as [[wordFreqOf]]. */
-  def bigramFreqOf(docsWords: DataFrame, k: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bi = docsWords.select(explode(expr(
-      """CASE WHEN size(words) >= 2
-           THEN transform(sequence(0, size(words) - 2),
-                  i -> concat_ws(' ', words[i], words[i+1]))
-           ELSE CAST(array() AS ARRAY<STRING>) END""")).as("bigram"))
-    val top = bi.groupBy("bigram").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("bigram")).limit(k)
-    top.withColumn("rank", row_number().over(
-      Window.orderBy(col("n").desc, col("bigram"))).cast("long"))
-  }
+    * count + [[topKHead]] shape as [[wordFreqOf]]. */
+  def bigramFreqOf(docsWords: DataFrame, k: Int = 50): DataFrame =
+    topKHead(docsWords.select(explode(bigrams).as("bigram"))
+      .groupBy("bigram").agg(count(lit(1)).as("n")), k, "rank")(
+      col("n").desc, col("bigram"))
 
   def bigramFreq(spark: SparkSession, dir: String): DataFrame =
     bigramFreqOf(docsWords(spark, dir))
@@ -510,8 +504,7 @@ object TextOps {
     * overflows int64 at corpus scale and float log2 is not bit-stable
     * across engines, so the score is the SUM-OF-INTEGER-LOG2 surrogate
     *   pmi = ⌊log2 n_pair⌋ + ⌊log2 N⌋ − ⌊log2 n_w1⌋ − ⌊log2 n_w2⌋
-    * (⌊log2 x⌋ = length(bin(x))−1, the same codegen'd bin-length trick as
-    * the tf-idf scorer) — within ±2 bits of the true value, exact integer
+    * ([[ilog2]]) — within ±2 bits of the true value, exact integer
     * arithmetic at ANY corpus size, negative for under-associated pairs.
     * A min-support floor (`minCount`) drops the noise pairs whose PMI is
     * inflated by tiny denominators, the standard collocation guard.
@@ -519,18 +512,10 @@ object TextOps {
     * Scale shape: bigram and unigram rollups are partial-agg groupBys
     * (map-side combine before each exchange); the support filter prunes
     * the pair table BEFORE the two vocabulary equi-joins; the grand total
-    * folds in as a 1-row broadcast; the top-k head is TakeOrdered, never a
-    * full sort; the rank window runs over k rows only. */
+    * folds in as a 1-row broadcast; the top-k head is the [[topKHead]]. */
   def collocPmiOf(docsWords: DataFrame, k: Int = 50,
                   minCount: Long = 5L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def ilog2(c: String) = s"CAST(length(bin($c)) - 1 AS BIGINT)"
-    val pairs = docsWords.select(explode(expr(
-      """CASE WHEN size(words) >= 2
-           THEN transform(sequence(0, size(words) - 2),
-                  i -> struct(words[i] AS w1, words[i+1] AS w2))
-           ELSE CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>)
-         END""")).as("p"))
+    val pairs = docsWords.select(explode(bigramPairs).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
     val biCnt = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
       .where(col("n_pair") >= minCount)
@@ -542,14 +527,10 @@ object TextOps {
       .join(uni.select(col("w").as("w2"), col("n_w").as("n_w2")), "w2")
       .crossJoin(broadcast(total))
       .select(col("w1"), col("w2"), col("n_pair"),
-        expr(s"${ilog2("n_pair")} + ${ilog2("n_total")}" +
-             s" - ${ilog2("n_w1")} - ${ilog2("n_w2")}").as("pmi"))
-    val top = scored
-      .orderBy(col("pmi").desc, col("n_pair").desc, col("w1"), col("w2"))
-      .limit(k)
-    top.withColumn("rank", row_number().over(
-        Window.orderBy(col("pmi").desc, col("n_pair").desc,
-                       col("w1"), col("w2"))).cast("long"))
+        (ilog2(col("n_pair")) + ilog2(col("n_total"))
+          - ilog2(col("n_w1")) - ilog2(col("n_w2"))).as("pmi"))
+    topKHead(scored, k, "rank")(
+        col("pmi").desc, col("n_pair").desc, col("w1"), col("w2"))
       .select(col("rank"), col("w1"), col("w2"), col("n_pair"), col("pmi"))
   }
 
@@ -561,24 +542,22 @@ object TextOps {
     * curve a tokenizer/vocab designer reads to size a vocabulary.
     *
     * Scale shape: the vocab rollup is one partial-agg groupBy; the top-k
-    * head is TakeOrdered (never a full vocab sort); the cumulative window
-    * runs over k rows only; the token total folds in as a 1-row broadcast.
+    * head is the [[topKHead]] (never a full vocab sort); the cumulative
+    * window runs over k rows only; the token total folds in as a 1-row
+    * broadcast.
     * Coverage = exact integer counts, one double division per row. */
   def vocabCoverageOf(docsWords: DataFrame, k: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val words = docsWords.select(explode(col("words")).as("w"))
-    val top = words.groupBy("w").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("w")).limit(k)
-    val byRank = Window.orderBy(col("n").desc, col("w"))
+    val byN = Seq(col("n").desc, col("w"))
+    val top = topKHead(docsWords.select(explode(col("words")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("n")), k, "rank")(byN: _*)
     // token total WITHOUT a second explode: sum of array sizes map-side
     // (== count of exploded rows; the 8× probe showed the doubled explode
     // scan as this query's whole excess over its linear ideal)
     val total = docsWords
       .agg(sum(size(col("words")).cast("long")).as("n_total"))
     top
-      .withColumn("rank", row_number().over(byRank).cast("long"))
-      .withColumn("cum_n", sum("n").over(
-        byRank.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("cum_n", sum("n").over(Window.orderBy(byN: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .crossJoin(broadcast(total))
       .select(col("rank"), col("w"), col("n"), col("cum_n"),
         (col("cum_n").cast("double") / col("n_total").cast("double"))
@@ -600,7 +579,6 @@ object TextOps {
     * realistic language skew the per-group sort is fine. All-integer
     * window arithmetic, one double division. */
   def qualityPctRankOf(stats: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byLang = Window.partitionBy("lang")
     val q = qualityScoreOf(stats)
       .join(stats.select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -624,21 +602,17 @@ object TextOps {
     * how many DISTINCT query terms they contain, then total term frequency,
     * then doc_id — the boolean-ish second signal a hybrid retrieval stack
     * fuses with a weighted scorer. Same tf pipeline shape as BM25 (map-side
-    * term filter, partial-agg rollup, TakeOrdered top-k). */
+    * term filter, partial-agg rollup, [[topKHead]]). */
   def coverageTopOf(docsWords: DataFrame, terms: Seq[String],
                     k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(terms.nonEmpty, "coverage ranking needs at least one query term")
     val perDoc = docsWords
       .select(col("doc_id"), explode(col("words")).as("w"))
       .where(col("w").isin(terms: _*))
       .groupBy("doc_id")
       .agg(countDistinct("w").as("n_hit"), count(lit(1)).as("tot_tf"))
-    val top = perDoc.orderBy(col("n_hit").desc, col("tot_tf").desc,
-                             col("doc_id")).limit(k)
-    top.withColumn("rank_cov", row_number().over(
-      Window.orderBy(col("n_hit").desc, col("tot_tf").desc, col("doc_id")))
-      .cast("long"))
+    topKHead(perDoc, k, "rank_cov")(
+      col("n_hit").desc, col("tot_tf").desc, col("doc_id"))
   }
 
   /** Reciprocal-rank fusion of the BM25 and coverage rankings — the
@@ -653,7 +627,6 @@ object TextOps {
     * summed in a fixed two-term tree — bit-identical cross-engine. */
   def rrfFusionOf(docsWords: DataFrame, terms: Seq[String], k: Int = 10,
                   c: Int = 60): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val bm = bm25TopOf(docsWords, terms, k)
       .select(col("doc_id"), col("rank").as("rank_bm25"))
     val cov = coverageTopOf(docsWords, terms, k)
@@ -704,9 +677,8 @@ object TextOps {
   /** Per-doc unigram surprisal under the corpus's own unigram LM — the
     * cheap perplexity proxy quality filters use before any neural scorer
     * (a doc of globally-rare tokens scores high; boilerplate scores low).
-    * surprisal(w) = ilog2(N) − ilog2(count(w)) with the same bin-length
-    * integer log2 as the PMI/tf-idf scorers (bit-stable cross-engine; the
-    * −1s of true ⌊log2⌋ cancel in the difference).
+    * surprisal(w) = [[ilog2]](N) − ilog2(count(w)) (bit-stable
+    * cross-engine).
     *
     * Scale shape: one vocab rollup (partial-agg groupBy on word), an
     * equi-join of the exploded tokens against it (AQE broadcasts it while
@@ -724,8 +696,7 @@ object TextOps {
     flat.join(vocab, "w")
       .crossJoin(broadcast(total))
       .select(col("doc_id"),
-        expr("CAST(length(bin(n_total)) - length(bin(n_w)) AS BIGINT)")
-          .as("s"))
+        (ilog2(col("n_total")) - ilog2(col("n_w"))).as("s"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"), sum("s").as("surprisal"))
       .withColumn("mean_ppm",
@@ -737,11 +708,9 @@ object TextOps {
 
   /** Per-doc character-diversity entropy surrogate — the gibberish /
     * binary-junk detector that runs before any tokenizer: a doc whose
-    * characters concentrate on a few symbols scores near zero. Integer
-    * surrogate of Shannon entropy·n (exact, bit-stable):
-    *   surr = n·⌊log₂ n⌋ − Σ_c n_c·⌊log₂ n_c⌋
-    * (0 when one character dominates entirely, grows with spread; the
-    * bin-length ⌊log₂⌋ of the PMI/tf-idf scorers).
+    * characters concentrate on a few symbols scores near zero. The score
+    * is the integer entropy surrogate [[entropySurrOf]] over the
+    * per-character counts.
     *
     * Scale shape: per-(doc, char) counts are a partial-agg groupBy whose
     * key fanout is ≤ alphabet-size per doc, folded back to doc grain in a
@@ -754,18 +723,12 @@ object TextOps {
     * DuckDB's `string_split(s, '')` (verified empirically; pinned by
     * CharEntropySpec's non-BMP case). */
   def charEntropyOf(docsNorm: DataFrame): DataFrame =
-    docsNorm
+    entropySurrOf(docsNorm
       .select(col("doc_id"), explode(split(col("norm"), "")).as("c"))
       .where(col("c") =!= "") // Java split keeps a trailing empty token
-      .groupBy("doc_id", "c").agg(count(lit(1)).as("n_c"))
-      .groupBy("doc_id")
-      .agg(sum("n_c").as("n_chars"),
-           count(lit(1)).as("n_distinct_chars"),
-           expr("CAST(sum(n_c * (length(bin(n_c)) - 1)) AS BIGINT)")
-             .as("sum_c_ilog2"))
-      .select(col("doc_id"), col("n_chars"), col("n_distinct_chars"),
-        expr("""CAST(n_chars * (length(bin(n_chars)) - 1) - sum_c_ilog2
-                AS BIGINT)""").as("entropy_surr"))
+      .groupBy("doc_id", "c").agg(count(lit(1)).as("n_c")),
+      "doc_id", "n_c", "n_chars")(
+      sum("n_c").as("n_chars"), count(lit(1)).as("n_distinct_chars"))
 
   def charEntropy(spark: SparkSession, dir: String): DataFrame =
     charEntropyOf(docs(spark, dir))
@@ -854,12 +817,11 @@ object TextOps {
     *
     * Scale shape: one (split, word) partial-agg rollup feeds both sides,
     * split totals fold in as 1-row broadcasts, the train top-k head is
-    * TakeOrdered, and the test lookup joins k rows. Frequencies are
+    * the [[topKHead]], and the test lookup joins k rows. Frequencies are
     * exact-integer ppm (n_w · 1e6 ⫽ total — overflow past ~9e12 tokens
     * per split; widen to DECIMAL(38,0) there). */
   def tokenFreqDriftOf(docsWords: DataFrame, split: DataFrame,
                        k: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val words = docsWords.join(split.select("doc_id", "split"), Seq("doc_id"))
       .select(col("split"), explode(col("words")).as("w"))
       .where(col("split") =!= "val")
@@ -869,12 +831,9 @@ object TextOps {
       .select(col("tot").as("tot_train")))
     val teTot = broadcast(totals.where(col("split") === "test")
       .select(col("tot").as("tot_test")))
-    val top = counts.where(col("split") === "train")
-      .select(col("w"), col("n").as("n_train"))
-      .orderBy(col("n_train").desc, col("w")).limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("n_train").desc, col("w"))).cast("long"))
-    top
+    topKHead(counts.where(col("split") === "train")
+        .select(col("w"), col("n").as("n_train")), k, "rank")(
+        col("n_train").desc, col("w"))
       .join(counts.where(col("split") === "test")
               .select(col("w"), col("n").as("n_test")), Seq("w"), "left")
       .na.fill(0L, Seq("n_test"))
@@ -894,9 +853,9 @@ object TextOps {
 
   /** Per-doc BIGRAM surprisal under the corpus's own bigram LM — one
     * order up from [[unigramSurprisalOf]]: the conditional surprisal of
-    * each adjacent pair, s(w₁w₂) = ilog2(n(w₁·)) − ilog2(n(w₁w₂)), where
-    * n(w₁·) counts w₁ as a bigram HEAD (so the ratio is the conditional
-    * P(w₂|w₁) and the −1s of true ⌊log₂⌋ cancel). Boilerplate whose
+    * each adjacent pair, s(w₁w₂) = [[ilog2]](n(w₁·)) − ilog2(n(w₁w₂)),
+    * where n(w₁·) counts w₁ as a bigram HEAD (so the ratio is the
+    * conditional P(w₂|w₁)). Boilerplate whose
     * pairs repeat corpus-wide scores near zero; incoherent word salad
     * scores high — the bigram-perplexity proxy that separates "rare
     * words" (unigram) from "rare transitions" (this).
@@ -908,12 +867,8 @@ object TextOps {
     * fold to doc grain is a final partial agg. Surprisal < 64 per
     * pair — no overflow. */
   def bigramSurprisalOf(docsWords: DataFrame): DataFrame = {
-    val pairs = graft.Memo.pin(docsWords.select(col("doc_id"), explode(expr(
-      """CASE WHEN size(words) >= 2
-           THEN transform(sequence(0, size(words) - 2),
-                  i -> struct(words[i] AS w1, words[i+1] AS w2))
-           ELSE CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>)
-         END""")).as("p"))
+    val pairs = graft.Memo.pin(docsWords
+      .select(col("doc_id"), explode(bigramPairs).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2")))
     val biCnt = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
     val headCnt = pairs.groupBy("w1").agg(count(lit(1)).as("n_head"))
@@ -921,8 +876,7 @@ object TextOps {
       .join(biCnt, Seq("w1", "w2"))
       .join(headCnt, Seq("w1"))
       .select(col("doc_id"),
-        expr("CAST(length(bin(n_head)) - length(bin(n_pair)) AS BIGINT)")
-          .as("s"))
+        (ilog2(col("n_head")) - ilog2(col("n_pair"))).as("s"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("s").as("surprisal"))
       .withColumn("mean_ppm",
@@ -962,7 +916,6 @@ object TextOps {
     * fences collapse to a lang-cardinality frame that broadcasts back
     * onto the same partitioning for the side counts. */
   def lengthTrimOf(docsWords: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byLang = Window.partitionBy("lang").orderBy("n_tokens", "doc_id")
     val ranked = docsWords
       .select(col("lang"), col("doc_id"),
@@ -1003,11 +956,7 @@ object TextOps {
     * map-side combine absorbs the repeats that make templated sources
     * cheap — then a source-grain fold. Exact integers + one ppm div. */
   def sourceBigramDiversityOf(docsWords: DataFrame): DataFrame =
-    docsWords.select(col("source"), explode(expr(
-      """CASE WHEN size(words) >= 2
-           THEN transform(sequence(0, size(words) - 2),
-                  i -> concat_ws(' ', words[i], words[i+1]))
-           ELSE CAST(array() AS ARRAY<STRING>) END""")).as("bg"))
+    docsWords.select(col("source"), explode(bigrams).as("bg"))
       .groupBy("source", "bg")
       .agg(count(lit(1)).as("n"))
       .groupBy("source")
@@ -1022,11 +971,10 @@ object TextOps {
   /** CONTRASTIVE source vocabulary: per source, the top-`k` words that
     * are frequent IN this source relative to the rest of the corpus —
     * the log-odds keyword readout ("what is source A actually about")
-    * behind corpus cards and domain labeling. Score is the bin-length
-    * integer log-odds surrogate ilog2(n_in) − ilog2(n_rest+1) (+1
-    * smooths source-exclusive words; same bit-stable trick as
-    * PMI/tf-idf); a min-count floor drops the noise tail whose odds are
-    * inflated by tiny denominators.
+    * behind corpus cards and domain labeling. Score is the integer
+    * log-odds surrogate [[ilog2]](n_in) − ilog2(n_rest+1) (+1 smooths
+    * source-exclusive words); a min-count floor drops the noise tail
+    * whose odds are inflated by tiny denominators.
     *
     * Scale shape: one (source, word) partial-agg rollup, one vocab
     * rollup, the support filter prunes BEFORE the vocabulary equi-join,
@@ -1034,7 +982,6 @@ object TextOps {
     * rewrites to WindowGroupLimit (never a full per-source sort). */
   def contrastiveTermsOf(docsWords: DataFrame, k: Int = 5,
                          minCount: Long = 10L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sw = docsWords.select(col("source"), explode(col("words")).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("n_sw"))
     val tot = sw.groupBy("w").agg(sum("n_sw").cast("long").as("n_w"))
@@ -1042,8 +989,7 @@ object TextOps {
       .join(tot, "w")
       .select(col("source"), col("w"), col("n_sw"),
         (col("n_w") - col("n_sw")).as("n_rest"))
-      .withColumn("score", expr(
-        "CAST(length(bin(n_sw)) - length(bin(n_rest + 1)) AS BIGINT)"))
+      .withColumn("score", ilog2(col("n_sw")) - ilog2(col("n_rest") + 1))
     scored
       .withColumn("rank", row_number().over(
         Window.partitionBy("source")

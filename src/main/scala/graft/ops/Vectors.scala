@@ -168,7 +168,7 @@ object Vectors {
     quantizedOf(Feeds.table(spark, dir, "embeddings"))
 
   /** Per-label squared-norm histogram in power-of-2 buckets (bucket =
-    * ⌊log₂ n2⌋, bin-length trick) — the embedding-space health check an
+    * [[ilog2]] of n2) — the embedding-space health check an
     * ANN serving stack watches for norm drift: a re-embedded batch whose
     * norms land in different buckets than the index means the quantizer
     * (and every cached dot-product threshold) is stale. Purely map-side
@@ -177,7 +177,7 @@ object Vectors {
   def normHistOf(quantized: DataFrame): DataFrame =
     quantized
       .select(col("label"),
-        expr("CAST(length(bin(n2)) - 1 AS BIGINT)").as("bucket"),
+        ilog2(col("n2")).as("bucket"),
         col("n2"))
       .groupBy("label", "bucket")
       .agg(count(lit(1)).as("n_vecs"),

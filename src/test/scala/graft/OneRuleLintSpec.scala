@@ -44,4 +44,13 @@ class OneRuleLintSpec extends AnyFunSuite {
   test("the new-batch decile cutoff is written once in src/main") {
     once("max(doc_id) * 9 DIV 10", "", "Dedup.decileSplit")
   }
+
+  test("the bin-length integer log2 is written once under graft/ops") {
+    once("length(bin(", "graft/ops", "graft.ops.ilog2")
+  }
+
+  test("the word n-gram window is written once in ops/TextOps") {
+    once("sequence(0, size(words) -", "graft/ops/TextOps.scala",
+      "TextOps.ngramWindow")
+  }
 }

@@ -3,28 +3,12 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-12 operators: n-gram novelty, token-budget selection,
-  * curriculum ordering, weighted sampling, bucketed packing, and the
-  * embedding-health readouts. The containment tier's tests are in
-  * DedupSpec. */
+/** Round-12 operators: token-budget selection, curriculum ordering,
+  * weighted sampling, bucketed packing, and the embedding-health
+  * readouts. The containment tier's tests are in DedupSpec, n-gram
+  * novelty's in TextOpsSpec. */
 class Round12OpsSpec extends SparkSpec {
   import spark.implicits._
-
-  // ---- novelty -----------------------------------------------------------
-
-  test("ngram novelty: shared shingles are not novel, df=1 shingles are") {
-    val docs = TextOps.withWords(TextOps.normalize(Seq(
-      (0L, "alpha beta gamma delta"),   // shingles: ab-g, b-g-d
-      (1L, "alpha beta gamma epsilon"), // shares "alpha beta gamma"
-      (2L, "zeta eta theta iota"))      // fully novel
-      .toDF("doc_id", "text")))
-    val r = TextOps.ngramNoveltyOf(TextOps.shinglesOf(docs))
-      .as[(Long, Long, Long, Long)].collect()
-      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
-    assert(r(2L) == ((2L, 2L, 1000000L)))          // all df=1
-    assert(r(0L) == ((2L, 1L, 500000L)))           // one shared, one unique
-    assert(r(1L) == ((2L, 1L, 500000L)))
-  }
 
   // ---- token budget ------------------------------------------------------
 

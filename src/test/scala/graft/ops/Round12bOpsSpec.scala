@@ -4,7 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Round-12b operators: quality↔dup calibration, Jaccard histogram,
-  * incremental novelty, charset profile, label cohesion, user lifecycle. */
+  * label cohesion, user lifecycle. Incremental novelty and the charset
+  * profile are tested in TextOpsSpec. */
 class Round12bOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,29 +33,6 @@ class Round12bOpsSpec extends SparkSpec {
       .select("bucket", "n_pairs", "sum_shared")
       .as[(Long, Long, Long)].collect().toSet
     assert(r == Set((5L, 1L, 5L), (9L, 1L, 4L), (0L, 1L, 0L)))
-  }
-
-  test("incremental novelty: history shingles are not novel") {
-    // cutoff = max(9)*9 div 10 = 8 -> doc 9 is the batch
-    val sh = Seq(
-      (0L, "a b c"), (5L, "d e f"),           // history
-      (9L, "a b c"), (9L, "x y z"), (9L, "p q r")) // batch doc 9
-      .toDF("doc_id", "shingle")
-    val r = TextOps.ngramNoveltyIncOf(sh)
-      .as[(Long, Long, Long, Long)].head()
-    assert(r == ((9L, 3L, 2L, 666666L)))
-  }
-
-  test("charset profile counts code points, non-BMP chars included") {
-    val docs = TextOps.normalize(Seq(
-      (0L, "src1", "abc"), (1L, "src1", "a😀b"), (2L, "src2", "xyz"))
-      .toDF("doc_id", "source", "text"))
-    val r = TextOps.charsetProfileOf(docs)
-      .as[(String, Long, Long, Long, Long)].collect()
-      .map(t => t._1 -> ((t._2, t._3, t._4, t._5))).toMap
-    // src1: 5 ascii + 1 emoji (ONE code point, not two surrogate halves)
-    assert(r("src1") == ((2L, 5L, 1L, 166666L)))
-    assert(r("src2") == ((1L, 3L, 0L, 0L)))
   }
 
   test("label cohesion: identical vectors 1e6, orthogonal pair 5e5") {

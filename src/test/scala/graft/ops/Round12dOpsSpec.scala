@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Round-12d operators: Benford digit profile, IQR outlier fences, BFS
-  * hop histogram, frame-chunk dedup, bigram surprisal, lexical
-  * diversity, token Gini, cluster source purity. */
+  * hop histogram, frame-chunk dedup, token Gini, cluster source purity.
+  * Bigram surprisal and lexical diversity are tested in TextOpsSpec. */
 class Round12dOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -72,28 +72,6 @@ class Round12dOpsSpec extends SparkSpec {
     // cap 2: bucket 'a' (3 docs) is dropped, so no pair reaches >= 2
     val guarded = Multimodal.frameDedupPairsOf(chunks, maxBucket = 2)
     assert(guarded.count() == 0L)
-  }
-
-  test("bigram surprisal: conditional ilog2 difference per doc") {
-    val dw = Seq(
-      (1L, Seq("a", "b")), (2L, Seq("a", "b")), (3L, Seq("a", "c")))
-      .toDF("doc_id", "words")
-    val r = TextOps.bigramSurprisalOf(dw)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
-    // heads: a=3; pairs: (a,b)=2, (a,c)=1
-    assert(r(1L) == ((1L, 0L, 0L)))       // ilog2-len(3)-len(2) = 2-2
-    assert(r(3L) == ((1L, 1L, 1000000L))) // len(bin 3)-len(bin 1) = 2-1
-  }
-
-  test("lexical diversity: map-side token/type counts") {
-    val dw = Seq((1L, Seq("a", "b", "a")), (2L, Seq("x")))
-      .toDF("doc_id", "words")
-    val r = TextOps.lexicalDiversityOf(dw)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
-    assert(r(1L) == ((3L, 2L, 666666L)))
-    assert(r(2L) == ((1L, 1L, 1000000L)))
   }
 
   test("token gini: zero for uniform sizes, positive under skew") {

@@ -3,8 +3,9 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-12e operators: threshold sweep, split leakage, length trim,
-  * source bigram diversity, session concurrency. */
+/** Round-12e operators: threshold sweep, split leakage, session
+  * concurrency. Length trim and source bigram diversity are tested in
+  * TextOpsSpec. */
 class Round12eOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,26 +30,6 @@ class Round12eOpsSpec extends SparkSpec {
       .map(t => (t._1, t._2) -> t._3).toMap
     assert(r == Map(("test", "train") -> 1L, ("train", "train") -> 1L,
                     ("train", "val") -> 1L))
-  }
-
-  test("length trim: discrete p5/p95 picks and side counts") {
-    val dw = (1 to 20).map(i => (i.toLong, "en", Seq.fill(i)("w")))
-      .toDF("doc_id", "lang", "words")
-    val r = TextOps.lengthTrimOf(dw)
-      .as[(String, Long, Long, Long, Long, Long, Long)].head()
-    // n=20: p5 at rank ceil(20/20)=1 -> 1; p95 at ceil(380/20)=19 -> 19
-    assert(r == (("en", 20L, 1L, 19L, 0L, 1L, 19L)))
-  }
-
-  test("source bigram diversity: repeats collapse, ratio in ppm") {
-    val dw = Seq((1L, "s1", Seq("a", "b", "a", "b")),
-                 (2L, "s2", Seq("x", "y")))
-      .toDF("doc_id", "source", "words")
-    val r = TextOps.sourceBigramDiversityOf(dw)
-      .as[(String, Long, Long, Long)].collect()
-      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
-    assert(r("s1") == ((3L, 2L, 666666L))) // ab, ba, ab
-    assert(r("s2") == ((1L, 1L, 1000000L)))
   }
 
   test("session concurrency: sweep-line max; touching sessions don't stack") {

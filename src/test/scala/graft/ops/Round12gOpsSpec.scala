@@ -3,25 +3,10 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-12g operators: contrastive source terms, ANN MRR, funnel
-  * time-to-convert. */
+/** Round-12g operators: ANN MRR, funnel time-to-convert. Contrastive
+  * source terms are tested in TextOpsSpec. */
 class Round12gOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("contrastive terms: log-odds surrogate ranks source-exclusive up") {
-    val dw = Seq(
-      (1L, "s1", Seq("apple", "apple", "apple", "pear", "pear")),
-      (2L, "s2", Seq("apple", "zebra", "zebra", "zebra")))
-      .toDF("doc_id", "source", "words")
-    val r = TextOps.contrastiveTermsOf(dw, k = 2, minCount = 2L)
-      .as[(String, Long, String, Long, Long, Long)].collect()
-      .map(t => (t._1, t._2) -> ((t._3, t._4, t._5, t._6))).toMap
-    // s2/zebra: n_sw=3 exclusive -> ilog2(3)-ilog2(0+1) = 1
-    assert(r(("s2", 1L)) == (("zebra", 3L, 0L, 1L)))
-    // s1/pear: n_sw=2 exclusive -> ilog2(2)-ilog2(1) = 1; beats apple's 0
-    assert(r(("s1", 1L)) == (("pear", 2L, 0L, 1L)))
-    assert(r(("s1", 2L)) == (("apple", 3L, 1L, 0L)))
-  }
 
   test("mrr: rank-1 hit, deep hit, and miss average in ppm") {
     val exact = Seq((1L, 10L, 1L), (1L, 11L, 2L), (2L, 20L, 1L),

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-12h operators: the TPC-H classic shapes (Q7 volume shipping,
   * Q8 market share, Q10 returned top, Q14 promo share, Q18 bulk orders,
-  * Q22 idle balances) + hapax tail profile + event-type entropy. */
+  * Q22 idle balances) + event-type entropy. The hapax tail profile is
+  * tested in TextOpsSpec. */
 class Round12hOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -113,21 +114,6 @@ class Round12hOpsSpec extends SparkSpec {
     val r = Analytics.idleBalanceOf(cust, orders, nation)
       .as[(String, Long, Double)].collect()
     assert(r.toSeq == Seq(("OTHER", 1L, 300.0)))
-  }
-
-  test("hapax: per-source once-words and ppm ratios") {
-    val dw = Seq(
-      (1L, "s1", Seq("a", "a", "b", "c")),
-      (2L, "s1", Seq("a", "d")),
-      (3L, "s2", Seq("x", "x")))
-      .toDF("doc_id", "source", "words")
-    val r = TextOps.hapaxRateOf(dw)
-      .as[(String, Long, Long, Long, Long, Long)].collect()
-      .map(t => t._1 -> ((t._2, t._3, t._4, t._5, t._6))).toMap
-    // s1: tokens 6, vocab {a:3,b:1,c:1,d:1} -> 4, hapax 3
-    assert(r("s1") == ((6L, 4L, 3L, 750000L, 500000L)))
-    // s2: tokens 2, vocab {x:2}, hapax 0
-    assert(r("s2") == ((2L, 1L, 0L, 0L, 0L)))
   }
 
   test("event entropy: concentrated user scores 0, spread user above") {

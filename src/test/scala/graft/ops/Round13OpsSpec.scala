@@ -81,17 +81,6 @@ class Round13OpsSpec extends SparkSpec {
     assert(dom == Set(("S100", 1L)))
   }
 
-  test("readability: integer centiratios per language") {
-    // en: norm "ab cd. ef" -> 9 chars, 3 tokens, 2 sentences
-    val docs = Seq((1L, "ab cd. ef", "en"), (2L, "x y", "de"))
-      .toDF("doc_id", "text", "lang")
-    val r = TextOps.readabilityOf(TextOps.withWords(TextOps.normalize(docs)))
-      .as[(String, Long, Long, Long)].collect()
-      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
-    assert(r("en") == ((1L, 300L, 150L))) // 9*100/3, 3*100/2
-    assert(r("de") == ((1L, 150L, 200L))) // 3*100/2, 2*100/1
-  }
-
   test("heaps law: first-occurrence buckets and cumulative vocab") {
     // words: a first at doc 1 (bucket 0), b at doc 2 (bucket 1),
     // c at doc 5 (bucket 2)

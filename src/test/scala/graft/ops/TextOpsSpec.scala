@@ -80,14 +80,58 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("bigram top-k: counts, rank tiebreak, short docs contribute none") {
-    val d = TextOps.withWords(TextOps.normalize(Seq(
-      (0L, "a b a b c"), (1L, "a b"), (2L, "solo"))
-      .toDF("doc_id", "text")))
+    // 5-, 2-, 1- and 0-word docs: only the first two have a bigram
+    val d = Seq((0L, "s1", Seq("a", "b", "a", "b", "c")),
+                (1L, "s1", Seq("a", "b")),
+                (2L, "s2", Seq("solo")),
+                (3L, "s2", Seq.empty[String]))
+      .toDF("doc_id", "source", "words")
     val got = TextOps.bigramFreqOf(d, k = 10)
       .select("bigram", "n", "rank").as[(String, Long, Long)]
       .collect().sortBy(_._3).toSeq
     // "a b": doc0 twice + doc1 once = 3; "b a", "b c" once each
     assert(got == Seq(("a b", 3L, 1L), ("b a", 1L, 2L), ("b c", 1L, 3L)))
+    // N=5 pairs; unigrams a 3, b 3, c 1: pmi(a,b) = 1+2-1-1 = 1,
+    // pmi(b,c) = 0+2-1-0 = 1, pmi(b,a) = 0+2-1-1 = 0
+    val pmi = TextOps.collocPmiOf(d, k = 10, minCount = 1L)
+      .as[(Long, String, String, Long, Long)].collect().toSeq
+    assert(pmi == Seq((1L, "a", "b", 3L, 1L), (2L, "b", "c", 1L, 1L),
+                      (3L, "b", "a", 1L, 0L)))
+    // heads a 3, b 2; doc0: ab 0 + ba (1-0) + ab 0 + bc (1-0) = 2
+    val sur = TextOps.bigramSurprisalOf(d)
+      .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(sur == Seq((0L, 4L, 2L, 500000L), (1L, 1L, 0L, 0L)))
+    // s2's docs have no bigram, so s2 has no row
+    val div = TextOps.sourceBigramDiversityOf(d)
+      .as[(String, Long, Long, Long)].collect().toSeq
+    assert(div == Seq(("s1", 5L, 3L, 600000L)))
+  }
+
+  test("a 2-word doc is its own one shingle and has no positional shingle") {
+    val d = TextOps.withWords(TextOps.normalize(Seq(
+      (0L, "Hello   World"), (1L, "one two three"))
+      .toDF("doc_id", "text")))
+    val sh = TextOps.shinglesOf(d).as[(Long, String)].collect().sortBy(_._1)
+    assert(sh.toSeq == Seq((0L, "hello world"), (1L, "one two three")))
+    val pos = TextOps.posShinglesOf(d).select("doc_id", "pos")
+      .as[(Long, Long)].collect().toSeq
+    assert(pos == Seq((1L, 0L)))
+  }
+
+  test("language ID ties: all-zero scores pick en, a de = fr tie picks de") {
+    val d = TextOps.withWords(TextOps.normalize(Seq(
+      (0L, "xx", "qqq zzz"),          // no marker word, no marker trigram
+      (1L, "xx", "der le"),           // one de and one fr marker word
+      (2L, "xx", "sch les"))          // one de and one fr marker trigram
+      .toDF("doc_id", "lang", "text")))
+    def pred(f: org.apache.spark.sql.DataFrame) =
+      f.select("doc_id", "pred_lang").as[(Long, String)].collect().toMap
+    val words = pred(TextOps.langIdOf(d))
+    assert(words(0L) == "en")
+    assert(words(1L) == "de")
+    val grams = pred(TextOps.langIdNgramOf(d))
+    assert(grams(0L) == "en")
+    assert(grams(2L) == "de")
   }
 
   test("contamination: docs sharing needle shingles are counted, others not") {
@@ -243,5 +287,125 @@ class TextOpsSpec extends SparkSpec {
     val r = TextOps.charEntropyOf(d)
       .as[(Long, Long, Long, Long)].head()
     assert(r == ((0L, 3L, 2L, 1L)))
+  }
+
+  test("ngram novelty: shared shingles are not novel, df=1 shingles are") {
+    val docs = TextOps.withWords(TextOps.normalize(Seq(
+      (0L, "alpha beta gamma delta"),   // shingles: ab-g, b-g-d
+      (1L, "alpha beta gamma epsilon"), // shares "alpha beta gamma"
+      (2L, "zeta eta theta iota"))      // fully novel
+      .toDF("doc_id", "text")))
+    val r = TextOps.ngramNoveltyOf(TextOps.shinglesOf(docs))
+      .as[(Long, Long, Long, Long)].collect()
+      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
+    assert(r(2L) == ((2L, 2L, 1000000L)))          // all df=1
+    assert(r(0L) == ((2L, 1L, 500000L)))           // one shared, one unique
+    assert(r(1L) == ((2L, 1L, 500000L)))
+  }
+
+  test("incremental novelty: history shingles are not novel") {
+    // cutoff = max(9)*9 div 10 = 8 -> doc 9 is the batch
+    val sh = Seq(
+      (0L, "a b c"), (5L, "d e f"),           // history
+      (9L, "a b c"), (9L, "x y z"), (9L, "p q r")) // batch doc 9
+      .toDF("doc_id", "shingle")
+    val r = TextOps.ngramNoveltyIncOf(sh)
+      .as[(Long, Long, Long, Long)].head()
+    assert(r == ((9L, 3L, 2L, 666666L)))
+  }
+
+  test("charset profile counts code points, non-BMP chars included") {
+    val docs = TextOps.normalize(Seq(
+      (0L, "src1", "abc"), (1L, "src1", "a😀b"), (2L, "src2", "xyz"))
+      .toDF("doc_id", "source", "text"))
+    val r = TextOps.charsetProfileOf(docs)
+      .as[(String, Long, Long, Long, Long)].collect()
+      .map(t => t._1 -> ((t._2, t._3, t._4, t._5))).toMap
+    // src1: 5 ascii + 1 emoji (ONE code point, not two surrogate halves)
+    assert(r("src1") == ((2L, 5L, 1L, 166666L)))
+    assert(r("src2") == ((1L, 3L, 0L, 0L)))
+  }
+
+  test("bigram surprisal: conditional ilog2 difference per doc") {
+    val dw = Seq(
+      (1L, Seq("a", "b")), (2L, Seq("a", "b")), (3L, Seq("a", "c")))
+      .toDF("doc_id", "words")
+    val r = TextOps.bigramSurprisalOf(dw)
+      .as[(Long, Long, Long, Long)].collect()
+      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
+    // heads: a=3; pairs: (a,b)=2, (a,c)=1
+    assert(r(1L) == ((1L, 0L, 0L)))       // ilog2-len(3)-len(2) = 2-2
+    assert(r(3L) == ((1L, 1L, 1000000L))) // len(bin 3)-len(bin 1) = 2-1
+  }
+
+  test("lexical diversity: map-side token/type counts") {
+    val dw = Seq((1L, Seq("a", "b", "a")), (2L, Seq("x")))
+      .toDF("doc_id", "words")
+    val r = TextOps.lexicalDiversityOf(dw)
+      .as[(Long, Long, Long, Long)].collect()
+      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
+    assert(r(1L) == ((3L, 2L, 666666L)))
+    assert(r(2L) == ((1L, 1L, 1000000L)))
+  }
+
+  test("length trim: discrete p5/p95 picks and side counts") {
+    val dw = (1 to 20).map(i => (i.toLong, "en", Seq.fill(i)("w")))
+      .toDF("doc_id", "lang", "words")
+    val r = TextOps.lengthTrimOf(dw)
+      .as[(String, Long, Long, Long, Long, Long, Long)].head()
+    // n=20: p5 at rank ceil(20/20)=1 -> 1; p95 at ceil(380/20)=19 -> 19
+    assert(r == (("en", 20L, 1L, 19L, 0L, 1L, 19L)))
+  }
+
+  test("source bigram diversity: repeats collapse, ratio in ppm") {
+    val dw = Seq((1L, "s1", Seq("a", "b", "a", "b")),
+                 (2L, "s2", Seq("x", "y")))
+      .toDF("doc_id", "source", "words")
+    val r = TextOps.sourceBigramDiversityOf(dw)
+      .as[(String, Long, Long, Long)].collect()
+      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
+    assert(r("s1") == ((3L, 2L, 666666L))) // ab, ba, ab
+    assert(r("s2") == ((1L, 1L, 1000000L)))
+  }
+
+  test("contrastive terms: log-odds surrogate ranks source-exclusive up") {
+    val dw = Seq(
+      (1L, "s1", Seq("apple", "apple", "apple", "pear", "pear")),
+      (2L, "s2", Seq("apple", "zebra", "zebra", "zebra")))
+      .toDF("doc_id", "source", "words")
+    val r = TextOps.contrastiveTermsOf(dw, k = 2, minCount = 2L)
+      .as[(String, Long, String, Long, Long, Long)].collect()
+      .map(t => (t._1, t._2) -> ((t._3, t._4, t._5, t._6))).toMap
+    // s2/zebra: n_sw=3 exclusive -> ilog2(3)-ilog2(0+1) = 1
+    assert(r(("s2", 1L)) == (("zebra", 3L, 0L, 1L)))
+    // s1/pear: n_sw=2 exclusive -> ilog2(2)-ilog2(1) = 1; beats apple's 0
+    assert(r(("s1", 1L)) == (("pear", 2L, 0L, 1L)))
+    assert(r(("s1", 2L)) == (("apple", 3L, 1L, 0L)))
+  }
+
+  test("hapax: per-source once-words and ppm ratios") {
+    val dw = Seq(
+      (1L, "s1", Seq("a", "a", "b", "c")),
+      (2L, "s1", Seq("a", "d")),
+      (3L, "s2", Seq("x", "x")))
+      .toDF("doc_id", "source", "words")
+    val r = TextOps.hapaxRateOf(dw)
+      .as[(String, Long, Long, Long, Long, Long)].collect()
+      .map(t => t._1 -> ((t._2, t._3, t._4, t._5, t._6))).toMap
+    // s1: tokens 6, vocab {a:3,b:1,c:1,d:1} -> 4, hapax 3
+    assert(r("s1") == ((6L, 4L, 3L, 750000L, 500000L)))
+    // s2: tokens 2, vocab {x:2}, hapax 0
+    assert(r("s2") == ((2L, 1L, 0L, 0L, 0L)))
+  }
+
+  test("readability: integer centiratios per language") {
+    // en: norm "ab cd. ef" -> 9 chars, 3 tokens, 2 sentences
+    val docs = Seq((1L, "ab cd. ef", "en"), (2L, "x y", "de"))
+      .toDF("doc_id", "text", "lang")
+    val r = TextOps.readabilityOf(TextOps.withWords(TextOps.normalize(docs)))
+      .as[(String, Long, Long, Long)].collect()
+      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
+    assert(r("en") == ((1L, 300L, 150L))) // 9*100/3, 3*100/2
+    assert(r("de") == ((1L, 150L, 200L))) // 3*100/2, 2*100/1
   }
 }
