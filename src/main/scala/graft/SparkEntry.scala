@@ -1,8 +1,8 @@
 package graft
 
-import graft.etl.Pipeline
+import graft.etl.{Feeds, Pipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, explode, lit}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -84,10 +84,13 @@ object SparkEntry {
     // hamming-banded simhash candidates (pigeonhole LSH, no all-pairs)
     "q_dedup_simhash_pairs" -> ((s, d) => ops.Dedup.simhashPairs(s, d)),
     // 64-bit hash + 16-bit chunks: the corpus-scale banding shape
-    "q_dedup_simhash64"       -> ((s, d) => ops.Dedup.simhash64(s, d)),
-    "q_dedup_simhash64_pairs" -> ((s, d) => ops.Dedup.simhash64Pairs(s, d)),
+    "q_dedup_simhash64"       -> ((s, d) => ops.Dedup.simhash64Of(
+      ops.TextOps.docsWords(s, d))),
+    "q_dedup_simhash64_pairs" -> ((s, d) => ops.Dedup.simhash64PairsOf(
+      ops.Dedup.simhash64Of(ops.TextOps.docsWords(s, d)))),
     // ensemble tier: pairs BOTH hash families agree on (high precision)
-    "q_dedup_consensus"     -> ((s, d) => ops.Dedup.consensusPairs(s, d)),
+    "q_dedup_consensus"     -> ((s, d) => ops.Dedup.consensusPairsOf(
+      ops.Dedup.minhashPairs(s, d), ops.Dedup.simhashPairs(s, d))),
     "q_dedup_ngram_jaccard" -> ((s, d) => ops.Dedup.ngramJaccard(s, d)),
     "q_dedup_embedding"     -> ((s, d) => ops.Vectors.nearDup(s, d)),
     // IVF-cell-blocked near-dup — the corpus-scale blocking (no label oracle)
@@ -96,12 +99,16 @@ object SparkEntry {
     "q_dedup_embedding_lsh" -> ((s, d) => ops.Vectors.nearDupLsh(s, d)),
     "q_text_stats"          -> ((s, d) => ops.TextOps.textStats(s, d)),
     "q_quality_score"       -> ((s, d) => ops.TextOps.qualityScore(s, d)),
-    "q_lang_id"             -> ((s, d) => ops.TextOps.langId(s, d)),
+    "q_lang_id"             -> ((s, d) => ops.TextOps.langIdOf(
+      ops.TextOps.docsWords(s, d))),
     // character-trigram variant of the n-gram language heuristic
-    "q_lang_id_ngram"       -> ((s, d) => ops.TextOps.langIdNgram(s, d)),
-    "q_doc_fingerprint"     -> ((s, d) => ops.TextOps.fingerprint(s, d)),
+    "q_lang_id_ngram"       -> ((s, d) => ops.TextOps.langIdNgramOf(
+      ops.TextOps.docs(s, d))),
+    "q_doc_fingerprint"     -> ((s, d) => ops.TextOps.fingerprintOf(
+      ops.TextOps.docs(s, d), ops.TextOps.shingles(s, d))),
     // vocabulary/Zipf profile: top-100 words, deterministic tiebreak
-    "q_word_freq"           -> ((s, d) => ops.TextOps.wordFreq(s, d)),
+    "q_word_freq"           -> ((s, d) => ops.TextOps.wordFreqOf(
+      ops.TextOps.docsWords(s, d))),
     "q_multimodal_meta"     -> ((s, d) => ops.Multimodal.meta(s, d)),
     "q_multimodal_frames"   -> ((s, d) => ops.Multimodal.frames(s, d)),
     "q_ann_cosine_topk"     -> ((s, d) => ops.Vectors.annCosineTopK(s, d)),
@@ -144,14 +151,17 @@ object SparkEntry {
       ((s, d) => ops.Vectors.kmeansSampleDrift(s, d)),
     // event-stream analytics: gap sessionization (batch twin of the
     // streaming sessionizer) + per-type stats with exact distinct users
-    "q_sessionize"       -> ((s, d) => ops.Sessions.sessions(s, d)),
-    "q_event_type_stats" -> ((s, d) => ops.Sessions.eventTypeStats(s, d)),
+    "q_sessionize"       -> ((s, d) => ops.Sessions.sessionsOf(Feeds.events(s, d))),
+    "q_event_type_stats" -> ((s, d) => ops.Sessions.eventTypeStatsOf(Feeds.events(s, d))),
     // deterministic KMV distinct-user sketch (oracle-checkable, unlike HLL)
-    "q_kmv_users" -> ((s, d) => ops.Sessions.kmvUsers(s, d)),
+    "q_kmv_users" -> ((s, d) => ops.Sessions.kmvUsersOf(Feeds.events(s, d))),
     // first-order Markov transition counts over per-user event streams
-    "q_event_transitions" -> ((s, d) => ops.Sessions.eventTransitions(s, d)),
-    // BM25-shaped retrieval: top-k docs for a fixed query (integer-quantized)
-    "q_bm25_top" -> ((s, d) => ops.TextOps.bm25Top(s, d)),
+    "q_event_transitions" -> ((s, d) => ops.Sessions.eventTransitionsOf(
+      Feeds.events(s, d))),
+    // BM25-shaped retrieval: top-k docs for a fixed 3-term query present in
+    // the synthetic corpus (integer-quantized)
+    "q_bm25_top" -> ((s, d) => ops.TextOps.bm25TopOf(
+      ops.TextOps.docsWords(s, d), Seq("spark", "hash", "join"))),
     // trailing-7-day rolling revenue per item (RANGE window over daily grain)
     "q_sales_rolling_7d" -> ((s, d) => money(
       ops.Analytics.rollingSales7dOf(Pipeline.of(s, d).uol),
@@ -159,7 +169,8 @@ object SparkEntry {
     // referential-integrity audit: orphan keys/rows per FK edge
     "q_fk_audit"         -> ((s, d) => ops.Audit.fkAudit(s, d)),
     // per-doc top-k TF-IDF terms (integer-log2 idf — bit-stable ranks)
-    "q_tfidf_top"        -> ((s, d) => ops.TextOps.tfidfTop(s, d)),
+    "q_tfidf_top"        -> ((s, d) => ops.TextOps.tfidfTopOf(
+      ops.TextOps.docsWords(s, d))),
     // incremental ingest: new-decile docs near-dup-checked against the
     // indexed corpus (no full re-dedup)
     "q_dedup_pairs_inc"  -> ((s, d) => ops.Dedup.minhashPairsIncremental(s, d)),
@@ -180,10 +191,12 @@ object SparkEntry {
     "q_pii_scan"      -> ((s, d) => ops.TextOps.piiScan(s, d)),
     "q_repetition"    -> ((s, d) => ops.TextOps.repetition(s, d)),
     // ordered funnel conversion + BPE-style bigram statistics
-    "q_funnel"        -> ((s, d) => ops.Sessions.funnel(s, d)),
-    "q_bigram_freq"   -> ((s, d) => ops.TextOps.bigramFreq(s, d)),
+    "q_funnel"        -> ((s, d) => ops.Sessions.funnelOf(
+      Feeds.events(s, d), Seq("signup", "view", "purchase"))),
+    "q_bigram_freq"   -> ((s, d) => ops.TextOps.bigramFreqOf(
+      ops.TextOps.docsWords(s, d))),
     // PMI-surrogate collocations (multi-word expression mining)
-    "q_colloc_pmi"    -> ((s, d) => ops.TextOps.collocPmi(s, d)),
+    "q_colloc_pmi"    -> ((s, d) => ops.TextOps.collocPmiOf(ops.TextOps.docsWords(s, d))),
     // full admission pipeline: curation + decontamination + PII +
     // repetition gates
     "q_corpus_curated_v2" -> ((s, d) => ops.Corpus.curatedV2(s, d)),
@@ -211,7 +224,8 @@ object SparkEntry {
     "q_brand_qty_salted"      -> ((s, d) => ops.Skew.brandQtySalted(s, d)),
     // passage-level exact dedup: cross-doc duplicated k-word windows and
     // the per-doc duplicated-passage ratio (sub-document boilerplate signal)
-    "q_dedup_passages"    -> ((s, d) => ops.TextOps.dedupPassages(s, d)),
+    "q_dedup_passages"    -> ((s, d) => ops.TextOps.dedupPassagesOf(
+      ops.TextOps.passagesOf(ops.TextOps.docsWords(s, d)))),
     // substring tier: maximal duplicated word spans at arbitrary offsets
     "q_dedup_substring_spans" -> ((s, d) => ops.Dedup.substringSpans(s, d)),
     // corpus-level span-length histogram (power-of-2 word buckets)
@@ -225,18 +239,20 @@ object SparkEntry {
     "q_dedup_substring_inc" -> ((s, d) => ops.Dedup.dedupSubstringInc(s, d)),
     // index-build audit: what the occurrence cap removed (no silent caps)
     "q_substring_index_stats" ->
-      ((s, d) => ops.Dedup.substringIndexStats(s, d)),
+      ((s, d) => ops.Dedup.substringIndexStatsOf(ops.TextOps.posShingles(s, d))),
     // append-only ingest storage-debt ledger: per replayed batch, the
     // admitted / still-live / stranded-dead index rows (what compaction
     // reclaims, as an oracle-checked number)
     "q_substring_ingest_debt" ->
-      ((s, d) => ops.Dedup.substringIngestDebt(s, d)),
+      ((s, d) => ops.Dedup.substringIngestDebtOf(ops.TextOps.posShingles(s, d))),
     // the tier's APPLY step: per-doc merged word ranges covered by
     // duplicated spans — what a training pipeline masks, overlap-free
     "q_span_mask_ranges" -> ((s, d) => ops.Dedup.spanMaskRanges(s, d)),
     // per-source maskable volume (overlap-free ppm) — curation sizing
     "q_mask_savings_by_source" ->
-      ((s, d) => ops.Dedup.maskSavingsBySource(s, d)),
+      ((s, d) => ops.Dedup.maskSavingsBySourceOf(
+        ops.TextOps.docsWords(s, d),
+        ops.Dedup.maskRangesFromRuns(ops.Dedup.substringRunsCached(s, d)))),
     // ingest-time masking: new-batch docs' ranges off the incremental
     // match grain (== the rebuild's ranges restricted to batch docs)
     "q_span_mask_ranges_inc" ->
@@ -245,15 +261,20 @@ object SparkEntry {
     // earlier batch (wasted crawl) vs within-batch dups
     "q_dup_rate_by_batch" -> ((s, d) => ops.Dedup.dupRateByBatch(s, d)),
     // cross-tier pair overlap: guarded minhash vs substring-span pairs
-    "q_dedup_tier_overlap" -> ((s, d) => ops.Dedup.dedupTierOverlap(s, d)),
+    "q_dedup_tier_overlap" -> ((s, d) => ops.Dedup.dedupTierOverlapOf(
+      ops.Dedup.minhashPairs(s, d),
+      ops.Dedup.spansFromRuns(ops.Dedup.substringRunsCached(s, d)))),
     // v3 admission: v2 plus the substring-tier quote-heavy gate
-    "q_corpus_curated_v3" -> ((s, d) => ops.Corpus.curatedV3(s, d)),
+    "q_corpus_curated_v3" -> ((s, d) => ops.Corpus.curatedV3Of(
+      ops.Corpus.curatedV2(s, d), ops.Dedup.quoteHeavyDocs(s, d))),
     // v4 admission: mask instead of drop — quote-heavy docs kept with
     // their duplicated-span ranges excised from the token count
     "q_corpus_curated_v4" -> ((s, d) => ops.Corpus.curatedV4(s, d)),
     // per-source tokens retained v4 (mask) vs v3 (drop) — the yield
     // readout that justifies the span tier's apply step
-    "q_mask_vs_drop_yield" -> ((s, d) => ops.Corpus.maskVsDropYield(s, d)),
+    "q_mask_vs_drop_yield" -> ((s, d) => ops.Corpus.maskVsDropYieldOf(
+      ops.Corpus.curatedV3Of(ops.Corpus.curatedV2(s, d), ops.Dedup.quoteHeavyDocs(s, d)),
+      ops.Corpus.curatedV4(s, d), ops.TextOps.docsWords(s, d))),
     // incremental curation capstone — per-batch v4 admission off the
     // incremental cluster/substring tiers (≡ rebuild restricted)
     "q_corpus_curated_v4_inc" ->
@@ -266,8 +287,10 @@ object SparkEntry {
     "q_quote_heavy_docs_inc" ->
       ((s, d) => ops.Dedup.quoteHeavyDocsInc(s, d)),
     // v4 release card: per-(lang, source) post-mask token accounting
-    "q_corpus_stats_v4" -> ((s, d) => ops.Corpus.corpusStatsV4(s, d)),
-    "q_passage_dup_ratio" -> ((s, d) => ops.TextOps.passageDupRatio(s, d)),
+    "q_corpus_stats_v4" -> ((s, d) => ops.Corpus.corpusStatsV4Of(
+      ops.Corpus.curatedV4(s, d), ops.TextOps.docs(s, d))),
+    "q_passage_dup_ratio" -> ((s, d) => ops.TextOps.passageDupRatioOf(
+      ops.TextOps.passagesOf(ops.TextOps.docsWords(s, d)))),
     // product quantization: per-subspace encode + ADC table-lookup top-k,
     // and the IVF-PQ composition (cell-blocked candidates, ADC scoring)
     "q_pq_codes"    -> ((s, d) => ops.Vectors.pqCodes(s, d)),
@@ -291,7 +314,9 @@ object SparkEntry {
       ops.Dedup.minhashPairsVerified(s, d)),
     // the corpus card: per-(lang, source) doc/token counts, mean quality,
     // PII incidence, mean repetition — micro-quantized exact means
-    "q_corpus_stats" -> ((s, d) => ops.Corpus.corpusStats(s, d)),
+    "q_corpus_stats" -> ((s, d) => ops.Corpus.corpusStatsOf(
+      ops.TextOps.docs(s, d), ops.TextOps.textStats(s, d), ops.TextOps.qualityScore(s, d),
+      ops.TextOps.piiScan(s, d), ops.TextOps.repetition(s, d))),
     // the full production dedup composition: candidates → exact-Jaccard
     // verification → connected components
     "q_dedup_clusters_verified" -> ((s, d) =>
@@ -299,26 +324,32 @@ object SparkEntry {
     // market-basket co-occurrence: bounded per-order pair fanout + lift
     "q_basket_pairs" -> ((s, d) => ops.Basket.partPairs(s, d)),
     // DAU / trailing-7d WAU / stickiness via bounded window expansion
-    "q_rolling_active_users" -> ((s, d) => ops.Sessions.rollingActiveUsers(s, d)),
+    "q_rolling_active_users" -> ((s, d) => ops.Sessions.rollingActiveUsersOf(
+      Feeds.events(s, d))),
     // blocked fuzzy match: block on head noun, verify by edit distance
-    "q_fuzzy_part_pairs" -> ((s, d) => ops.Fuzzy.fuzzyPartPairs(s, d)),
+    "q_fuzzy_part_pairs" -> ((s, d) => ops.Fuzzy.fuzzyPartPairsOf(
+      Feeds.table(s, d, "part"))),
     // concat-then-chunk sequence packing, sharded for parallelism
-    "q_pack_sequences" -> ((s, d) => ops.Pack.packSequences(s, d)),
+    "q_pack_sequences" -> ((s, d) => ops.Pack.packSequencesOf(
+      ops.TextOps.docsWords(s, d))),
     // rolling z-score anomaly flags over daily revenue (exact-cents window)
-    "q_revenue_anomaly" -> ((s, d) => ops.Analytics.revenueAnomaly(s, d)),
+    "q_revenue_anomaly" -> ((s, d) => ops.Analytics.revenueAnomalyOf(
+      Feeds.table(s, d, "orders"))),
     // SCD2 point-in-time attribution: city as of 30 days before each sale
     "q_scd_pit" -> ((s, d) => { val p = Pipeline.of(s, d)
       ops.Analytics.scdPointInTimeOf(p.uolV2, p.dCustomerScdV2) }),
     // degree-ordered triangle census of the co-purchase graph
     "q_triangle_stats" -> ((s, d) => ops.Basket.triangleStats(s, d)),
     // Zipf head-mass curve: cumulative token coverage of the top-100 vocab
-    "q_vocab_coverage" -> ((s, d) => ops.TextOps.vocabCoverage(s, d)),
+    "q_vocab_coverage" -> ((s, d) => ops.TextOps.vocabCoverageOf(
+      ops.TextOps.docsWords(s, d))),
     // per-language percentile-rank quality normalization (curation filter)
     "q_quality_pct_rank" -> ((s, d) => ops.TextOps.qualityPctRank(s, d)),
     // per-customer inter-order gap histogram (churn latency bands)
-    "q_order_gaps" -> ((s, d) => ops.Analytics.orderGaps(s, d)),
+    "q_order_gaps" -> ((s, d) => ops.Analytics.orderGapsOf(Feeds.table(s, d, "orders"))),
     // reciprocal-rank fusion of BM25 + coverage rankings (hybrid retrieval)
-    "q_rrf_fusion" -> ((s, d) => ops.TextOps.rrfFusion(s, d)),
+    "q_rrf_fusion" -> ((s, d) => ops.TextOps.rrfFusionOf(
+      ops.TextOps.docsWords(s, d), Seq("spark", "hash", "join"))),
     // INCREMENTAL SCD2 maintenance — merge the increment into the history
     // SCD; the oracle is the FULL-REBUILD SQL (merge ≡ rebuild)
     "q_d_customer_scd_inc" -> ((s, d) => { val p = Pipeline.of(s, d)
@@ -330,18 +361,20 @@ object SparkEntry {
     // connected components of the co-purchase graph (star contraction)
     "q_basket_components" -> ((s, d) => ops.Basket.coPurchaseComponents(s, d)),
     // typed extraction from the JSON event-property bag + per-type rollup
-    "q_props_json" -> ((s, d) => ops.Analytics.propsJsonStats(s, d)),
+    "q_props_json" -> ((s, d) => ops.Analytics.propsJsonStatsOf(
+      Feeds.table(s, d, "events"))),
     // weekly cohort-retention matrix (first-purchase week × weeks-since)
     "q_cohort_retention" -> ((s, d) =>
       ops.Analytics.cohortRetentionOf(Pipeline.of(s, d).uol)),
     // per-source admission cap by deterministic md5 lottery (domain mix)
-    "q_domain_quota" -> ((s, d) => ops.Corpus.domainQuota(s, d)),
+    "q_domain_quota" -> ((s, d) => ops.Corpus.domainQuotaOf(ops.TextOps.docs(s, d))),
     // α=1/2 temperature mixture weights (data mixing, ppm-exact)
-    "q_mix_weights"  -> ((s, d) => ops.Corpus.mixWeights(s, d)),
+    "q_mix_weights"  -> ((s, d) => ops.Corpus.mixWeightsOf(ops.TextOps.docs(s, d))),
     // per-cluster canonical doc: highest quality wins, not min doc_id
-    "q_dedup_keep_best" -> ((s, d) => ops.Corpus.keepBest(s, d)),
+    "q_dedup_keep_best" -> ((s, d) => ops.Corpus.keepBestOf(
+      ops.Dedup.clusters(s, d), ops.TextOps.qualityScore(s, d))),
     // power-of-2 token-length histogram (dataset-card length readout)
-    "q_doclen_hist" -> ((s, d) => ops.TextOps.docLenHist(s, d)),
+    "q_doclen_hist" -> ((s, d) => ops.TextOps.docLenHistOf(ops.TextOps.textStats(s, d))),
     // dimension snapshot diff: history-built vs full-feed d_customer (CDC)
     "q_snapshot_diff" -> ((s, d) => ops.Audit.customerSnapshotDiff(s, d)),
     // integer fixed-point PageRank (3 power iterations, damping 17/20)
@@ -353,39 +386,47 @@ object SparkEntry {
     // weekly revenue concentration (HHI from exact integer sums)
     "q_revenue_hhi" -> ((s, d) =>
       ops.Analytics.revenueHhiOf(Pipeline.of(s, d).uol)),
-    // per-column row/null/distinct data-quality profile (one-scan Expand)
-    "q_dq_profile" -> ((s, d) => ops.Audit.dqProfile(s, d)),
+    // per-column row/null/distinct data-quality profile (per-column union)
+    "q_dq_profile" -> ((s, d) => ops.Audit.dqProfileOf(
+      Feeds.table(s, d, "orders"),
+      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate",
+          "o_orderpriority"))),
     // language-ID confusion matrix (predicted vs labeled language)
-    "q_lang_confusion" -> ((s, d) => ops.TextOps.langConfusion(s, d)),
+    "q_lang_confusion" -> ((s, d) => ops.TextOps.langConfusionOf(
+      ops.TextOps.langIdOf(ops.TextOps.docsWords(s, d)))),
     // per-join-key skew ratios (the pre-flight readout behind salting)
     "q_skew_report" -> ((s, d) => ops.Audit.skewReport(s, d)),
     // last-touch attribution: purchases credited to the latest prior
     // non-purchase event within 7 days (as-of machinery reuse)
-    "q_attribution" -> ((s, d) => ops.AsOf.lastTouchAttribution(s, d)),
+    "q_attribution" -> ((s, d) => ops.AsOf.lastTouchAttributionOf(Feeds.events(s, d))),
     // INCREMENTAL near-dup cluster maintenance — affected clusters only;
     // the oracle is the FULL-REBUILD clustering (merge ≡ rebuild)
     "q_dedup_clusters_inc" -> ((s, d) => ops.Dedup.clustersIncremental(s, d)),
     // bag-of-words fingerprint dedup (catches reordered duplicates)
-    "q_dedup_bag" -> ((s, d) => ops.Dedup.bagExact(s, d)),
+    "q_dedup_bag" -> ((s, d) => ops.Dedup.bagExactOf(ops.TextOps.docsWords(s, d))),
     // deterministic global training shuffle: (shard, rank) per doc
-    "q_shuffle_shards" -> ((s, d) => ops.Sampling.shuffleShards(s, d)),
+    "q_shuffle_shards" -> ((s, d) => ops.Sampling.shuffleShardsOf(
+      ops.TextOps.docs(s, d))),
     // per-language chars-per-token fertility (ppm-exact)
-    "q_token_fertility" -> ((s, d) => ops.TextOps.tokenFertility(s, d)),
+    "q_token_fertility" -> ((s, d) => ops.TextOps.tokenFertilityOf(
+      ops.TextOps.docsWords(s, d))),
     // per-doc unigram-LM surprisal (integer-log2 perplexity proxy)
-    "q_unigram_logprob" -> ((s, d) => ops.TextOps.unigramSurprisal(s, d)),
+    "q_unigram_logprob" -> ((s, d) => ops.TextOps.unigramSurprisalOf(
+      ops.TextOps.docsWords(s, d))),
     // pairwise vocabulary Jaccard between sources (mixing redundancy)
-    "q_source_vocab_overlap" -> ((s, d) => ops.Corpus.sourceVocabOverlap(s, d)),
+    "q_source_vocab_overlap" -> ((s, d) => ops.Corpus.sourceVocabOverlapOf(
+      ops.TextOps.docsWords(s, d))),
     // same-(user,type) 300s telemetry debounce (kept events)
-    "q_event_debounce" -> ((s, d) => ops.Sessions.debounce(s, d)),
+    "q_event_debounce" -> ((s, d) => ops.Sessions.debounceOf(Feeds.events(s, d))),
     // month-over-month revenue growth (signed ppm, truncate-toward-zero)
     "q_sales_mom" -> ((s, d) =>
       money(ops.Analytics.salesMomOf(Pipeline.of(s, d).uol), "rev")),
     // per-user event-rate power-of-2 histogram (bot/outlier readout)
-    "q_event_rate_hist" -> ((s, d) => ops.Sessions.eventRateHist(s, d)),
+    "q_event_rate_hist" -> ((s, d) => ops.Sessions.eventRateHistOf(Feeds.events(s, d))),
     // per-label embedding norm histogram (norm-drift health check)
-    "q_emb_norm_hist" -> ((s, d) => ops.Vectors.normHist(s, d)),
+    "q_emb_norm_hist" -> ((s, d) => ops.Vectors.normHistOf(ops.Vectors.quantized(s, d))),
     // per-doc char-diversity entropy surrogate (gibberish detector)
-    "q_char_entropy" -> ((s, d) => ops.TextOps.charEntropy(s, d)),
+    "q_char_entropy" -> ((s, d) => ops.TextOps.charEntropyOf(ops.TextOps.docs(s, d))),
     // per-edge neighbor Jaccard of the co-purchase graph (link strength)
     "q_copurchase_jaccard" -> ((s, d) => ops.Basket.neighborJaccard(s, d)),
     // TPC-H Q5 shape: local-supplier revenue per nation (snowflake joins)
@@ -393,35 +434,43 @@ object SparkEntry {
       ops.Analytics.localSupplierVolume(s, d)),
     // LSH candidates verified by edit distance (near-exact dup tier)
     "q_dedup_pairs_editdist" -> ((s, d) =>
-      ops.Dedup.minhashPairsEditVerified(s, d)),
+      ops.Dedup.minhashPairsEditVerifiedOf(
+        ops.Dedup.minhashPairs(s, d), ops.TextOps.docs(s, d))),
     // per-source exact-duplicate rate (corpus-card dup attribution)
-    "q_dup_rate_by_source" -> ((s, d) => ops.Corpus.dupRateBySource(s, d)),
+    "q_dup_rate_by_source" -> ((s, d) => ops.Corpus.dupRateBySourceOf(
+      ops.TextOps.docs(s, d))),
     // packing fill factor per shard (padding-waste readout)
-    "q_pack_efficiency" -> ((s, d) => ops.Pack.packEfficiency(s, d)),
+    "q_pack_efficiency" -> ((s, d) => ops.Pack.packEfficiencyOf(
+      ops.Pack.packSequencesOf(ops.TextOps.docsWords(s, d)))),
     // label-filtered ANN top-k (metadata-constrained vector search)
     "q_ann_filtered_topk" -> ((s, d) =>
       ops.Vectors.annCosineTopKFiltered(s, d)),
     // IVF cell-size balance report (serving tail-latency health)
     "q_ivf_cell_balance" -> ((s, d) => ops.Vectors.ivfCellBalance(s, d)),
     // LSH band-bucket size distribution (banding health)
-    "q_minhash_band_stats" -> ((s, d) => ops.Dedup.minhashBandStats(s, d)),
+    "q_minhash_band_stats" -> ((s, d) => ops.Dedup.minhashBandStatsOf(
+      ops.Dedup.bandsCached(s, d))),
     // train/test token-frequency drift over top-50 train words
-    "q_token_freq_drift" -> ((s, d) => ops.TextOps.tokenFreqDrift(s, d)),
+    "q_token_freq_drift" -> ((s, d) => ops.TextOps.tokenFreqDriftOf(
+      ops.TextOps.docsWords(s, d), ops.Sampling.trainValTestSplit(s, d))),
     // first-16-token prefix fingerprint dedup (footer-variant duplicates)
-    "q_dedup_prefix" -> ((s, d) => ops.Dedup.prefixExact(s, d)),
+    "q_dedup_prefix" -> ((s, d) => ops.Dedup.prefixExactOf(ops.TextOps.docsWords(s, d))),
     // near-dup cluster membership rate per source (verify-stage sizing)
     "q_near_dup_rate_by_source" -> ((s, d) =>
-      ops.Corpus.nearDupRateBySource(s, d)),
+      ops.Corpus.nearDupRateBySourceOf(ops.TextOps.docs(s, d), ops.Dedup.clusters(s, d))),
     // benchmark-contamination rate per source (leak attribution)
     "q_contam_rate_by_source" -> ((s, d) =>
-      ops.Corpus.contamRateBySource(s, d)),
+      ops.Corpus.contamRateBySourceOf(
+        ops.TextOps.docs(s, d), ops.TextOps.contamination(s, d))),
     // hour-of-day x event-type seasonality profile
-    "q_events_hour_profile" -> ((s, d) => ops.Sessions.hourProfile(s, d)),
+    "q_events_hour_profile" -> ((s, d) => ops.Sessions.hourProfileOf(Feeds.events(s, d))),
     // per-source top-3 docs by quality (corpus-card showcase sample)
-    "q_top_docs_per_source" -> ((s, d) => ops.Corpus.topDocsPerSource(s, d)),
+    "q_top_docs_per_source" -> ((s, d) => ops.Corpus.topDocsPerSourceOf(
+      ops.TextOps.docs(s, d), ops.TextOps.qualityScore(s, d))),
     // cross-source near-dup pair counts (syndication overlap)
     "q_cross_source_dup_pairs" -> ((s, d) =>
-      ops.Corpus.crossSourceDupPairs(s, d)),
+      ops.Corpus.crossSourceDupPairsOf(
+        ops.TextOps.docs(s, d), ops.Dedup.minhashPairs(s, d))),
     // label-agreement@k of the exact top-k (embedding-quality readout)
     "q_ann_label_agreement" -> ((s, d) =>
       ops.Vectors.annLabelAgreement(s, d)),
@@ -430,144 +479,227 @@ object SparkEntry {
     // asymmetric shingle containment over guarded candidates (sub-doc dup)
     "q_minhash_containment" -> ((s, d) => ops.Dedup.minhashContainment(s, d)),
     // ppm fraction of a doc's shingles with corpus df=1 (novelty readout)
-    "q_ngram_novelty" -> ((s, d) => ops.TextOps.ngramNovelty(s, d)),
+    "q_ngram_novelty" -> ((s, d) => ops.TextOps.ngramNoveltyOf(
+      ops.TextOps.shingles(s, d))),
     // best-quality docs per source under a token budget (bucket-pruned)
-    "q_token_budget_select" -> ((s, d) => ops.Corpus.tokenBudgetSelect(s, d)),
+    "q_token_budget_select" -> ((s, d) => ops.Corpus.tokenBudgetSelectOf(
+      ops.TextOps.docs(s, d), ops.TextOps.textStats(s, d),
+      ops.TextOps.qualityScore(s, d))),
     // (stage, shard, pos) curriculum address per doc (decile stages)
-    "q_curriculum_order" -> ((s, d) => ops.Corpus.curriculumOrder(s, d)),
+    "q_curriculum_order" -> ((s, d) => ops.Corpus.curriculumOrderOf(
+      ops.TextOps.qualityScore(s, d))),
     // quality-weighted deterministic hash sampling (importance thinning)
-    "q_weighted_sample" -> ((s, d) => ops.Sampling.weightedSample(s, d)),
+    "q_weighted_sample" -> ((s, d) => ops.Sampling.weightedSampleOf(
+      ops.TextOps.qualityScore(s, d))),
     // length-bucketed packing summary (shuffle-friendly batch builder)
-    "q_pack_buckets" -> ((s, d) => ops.Pack.packBuckets(s, d)),
+    "q_pack_buckets" -> ((s, d) => ops.Pack.packBucketsOf(ops.TextOps.docsWords(s, d))),
     // per-dimension quantized sum/sumsq profile (collapse detector)
-    "q_emb_dim_profile" -> ((s, d) => ops.Vectors.embDimProfile(s, d)),
+    "q_emb_dim_profile" -> ((s, d) => ops.Vectors.embDimProfileOf(
+      ops.Vectors.quantizedCached(s, d))),
     // mean-direction concentration ppm (cone-collapse readout)
-    "q_emb_anisotropy" -> ((s, d) => ops.Vectors.embAnisotropy(s, d)),
+    "q_emb_anisotropy" -> ((s, d) => ops.Vectors.embAnisotropyOf(
+      ops.Vectors.quantizedCached(s, d))),
     // quality-decile vs exact-dup rate calibration (signal cross-check)
     "q_quality_dup_calibration" -> ((s, d) =>
-      ops.Corpus.qualityDupCalibration(s, d)),
+      ops.Corpus.qualityDupCalibrationOf(
+        ops.TextOps.docs(s, d), ops.TextOps.qualityScore(s, d))),
     // integer tenth-bucket Jaccard histogram over guarded candidates
-    "q_jaccard_hist" -> ((s, d) => ops.Dedup.jaccardHist(s, d)),
+    "q_jaccard_hist" -> ((s, d) => ops.Dedup.jaccardHistOf(
+      ops.Dedup.minhashContainment(s, d))),
     // new-batch novelty vs history shingles (daily-admission readout)
-    "q_ngram_novelty_inc" -> ((s, d) => ops.TextOps.ngramNoveltyInc(s, d)),
+    "q_ngram_novelty_inc" -> ((s, d) => ops.TextOps.ngramNoveltyIncOf(
+      ops.TextOps.shingles(s, d))),
     // per-source ASCII/non-ASCII code-point profile (charset junk)
-    "q_charset_profile" -> ((s, d) => ops.TextOps.charsetProfile(s, d)),
+    "q_charset_profile" -> ((s, d) => ops.TextOps.charsetProfileOf(
+      ops.TextOps.docs(s, d))),
     // per-label embedding cohesion ppm (class-cluster tightness)
-    "q_emb_label_cohesion" -> ((s, d) => ops.Vectors.embLabelCohesion(s, d)),
+    "q_emb_label_cohesion" -> ((s, d) => ops.Vectors.embLabelCohesionOf(
+      ops.Vectors.quantizedCached(s, d))),
     // per-user lifecycle mart (first/last/active days/span)
-    "q_user_lifecycle" -> ((s, d) => ops.Sessions.userLifecycle(s, d)),
+    "q_user_lifecycle" -> ((s, d) => ops.Sessions.userLifecycleOf(Feeds.events(s, d))),
     // per-label PQ reconstruction error (compressed-index signal loss)
-    "q_pq_distortion" -> ((s, d) => ops.Vectors.pqDistortion(s, d)),
+    "q_pq_distortion" -> ((s, d) => ops.Vectors.pqDistortionOf(
+      ops.Vectors.pqCodes(s, d), ops.Vectors.quantizedCached(s, d))),
     // power-of-2 near-dup cluster-size histogram (dedup yield forecast)
-    "q_dedup_cluster_sizes" -> ((s, d) => ops.Dedup.clusterSizesHist(s, d)),
+    "q_dedup_cluster_sizes" -> ((s, d) => ops.Dedup.clusterSizesHistOf(
+      ops.Dedup.clusters(s, d))),
     // per-doc candidate-degree histogram (post-join banding health)
-    "q_pair_degree_dist" -> ((s, d) => ops.Dedup.pairDegreeDist(s, d)),
+    "q_pair_degree_dist" -> ((s, d) => ops.Dedup.pairDegreeDistOf(
+      ops.Dedup.minhashPairs(s, d).select("doc_a", "doc_b"))),
     // fractional passes per source implied by the tempered mixture
-    "q_mix_epochs" -> ((s, d) => ops.Corpus.mixEpochs(s, d)),
+    "q_mix_epochs" -> ((s, d) => ops.Corpus.mixEpochsOf(
+      ops.Corpus.mixWeightsOf(ops.TextOps.docs(s, d)))),
     // Benford first-digit DQ profile of order totals (fraud/synth smoke)
-    "q_benford_totalprice" -> ((s, d) => ops.Analytics.benfordTotalprice(s, d)),
+    "q_benford_totalprice" -> ((s, d) => ops.Analytics.benfordTotalpriceOf(
+      Feeds.table(s, d, "orders"))),
     // discrete-quartile Tukey fences + outlier counts per order priority
-    "q_price_outliers_iqr" -> ((s, d) => ops.Analytics.priceOutliersIqr(s, d)),
+    "q_price_outliers_iqr" -> ((s, d) => ops.Analytics.priceOutliersIqrOf(
+      Feeds.table(s, d, "orders"))),
     // fixed-round BFS reachability histogram from the co-purchase hub
     "q_graph_hops" -> ((s, d) => ops.Basket.graphHops(s, d)),
     // payload-chunk fingerprint near-dup pairs (frame-level media dedup)
-    "q_multimodal_frame_dedup" -> ((s, d) => ops.Multimodal.frameDedupPairs(s, d)),
+    "q_multimodal_frame_dedup" -> ((s, d) => ops.Multimodal.frameDedupPairsOf(
+      ops.Multimodal.chunkFramesOf(Feeds.table(s, d, "documents")))),
     // per-doc bigram-LM conditional surprisal (rare-transition detector)
-    "q_bigram_surprisal" -> ((s, d) => ops.TextOps.bigramSurprisal(s, d)),
+    "q_bigram_surprisal" -> ((s, d) => ops.TextOps.bigramSurprisalOf(
+      ops.TextOps.docsWords(s, d))),
     // per-doc type-token ratio (map-side lexical-diversity gate)
-    "q_lexical_diversity" -> ((s, d) => ops.TextOps.lexicalDiversity(s, d)),
+    "q_lexical_diversity" -> ((s, d) => ops.TextOps.lexicalDiversityOf(
+      ops.TextOps.docsWords(s, d))),
     // per-source token-concentration Gini (mixture-design readout)
-    "q_token_gini" -> ((s, d) => ops.Corpus.tokenGiniBySource(s, d)),
+    "q_token_gini" -> ((s, d) => ops.Corpus.tokenGiniBySourceOf(
+      ops.TextOps.docsWords(s, d))),
     // near-dup cluster source-purity (syndication family readout)
-    "q_cluster_purity" -> ((s, d) => ops.Dedup.clusterSourcePurity(s, d)),
+    "q_cluster_purity" -> ((s, d) => ops.Dedup.clusterSourcePurityOf(
+      ops.Dedup.clusters(s, d), ops.TextOps.docs(s, d))),
     // train/test near-dup leakage matrix (eval-integrity readout)
-    "q_split_leakage" -> ((s, d) => ops.Corpus.splitLeakage(s, d)),
+    "q_split_leakage" -> ((s, d) => ops.Corpus.splitLeakageOf(
+      ops.Dedup.minhashPairsVerified(s, d), ops.Sampling.trainValTestSplit(s, d))),
     // dedup yield vs Jaccard threshold (integer cross-multiplied sweep)
-    "q_dedup_threshold_sweep" -> ((s, d) => ops.Dedup.dedupThresholdSweep(s, d)),
+    "q_dedup_threshold_sweep" -> ((s, d) => ops.Dedup.dedupThresholdSweepOf(
+      ops.Dedup.verifiedJaccardCached(s, d))),
     // per-lang discrete p5/p95 token-length trim dry-run
-    "q_length_trim" -> ((s, d) => ops.TextOps.lengthTrim(s, d)),
+    "q_length_trim" -> ((s, d) => ops.TextOps.lengthTrimOf(ops.TextOps.docsWords(s, d))),
     // per-source bigram transition diversity (template detector)
     "q_source_bigram_diversity" -> ((s, d) =>
-      ops.TextOps.sourceBigramDiversity(s, d)),
+      ops.TextOps.sourceBigramDiversityOf(ops.TextOps.docsWords(s, d))),
     // sweep-line daily peak session concurrency (capacity profile)
-    "q_session_concurrency" -> ((s, d) => ops.Sessions.sessionConcurrency(s, d)),
+    "q_session_concurrency" -> ((s, d) => ops.Sessions.sessionConcurrencyOf(
+      ops.Sessions.sessionsOf(Feeds.events(s, d)))),
     // late-order rate per priority (TPC-H Q4 EXISTS/semi-join anchor)
-    "q_late_orders" -> ((s, d) => ops.Analytics.lateOrders(s, d)),
+    "q_late_orders" -> ((s, d) => ops.Analytics.lateOrdersOf(
+      Feeds.table(s, d, "orders"), Feeds.table(s, d, "lineitem"))),
     // customer order-count distribution incl. zero-order (Q13 shape)
-    "q_cust_order_dist" -> ((s, d) => ops.Analytics.custOrderDist(s, d)),
+    "q_cust_order_dist" -> ((s, d) => ops.Analytics.custOrderDistOf(
+      Feeds.table(s, d, "customer"), Feeds.table(s, d, "orders"))),
     // RFM quintile segmentation cube (two-phase ranks, integer ntile)
-    "q_customer_rfm" -> ((s, d) => ops.Analytics.customerRfm(s, d)),
+    "q_customer_rfm" -> ((s, d) => ops.Analytics.customerRfmOf(
+      Feeds.table(s, d, "orders"))),
     // contrastive per-source keywords (integer log-odds surrogate)
-    "q_contrastive_terms" -> ((s, d) => ops.TextOps.contrastiveTerms(s, d)),
+    "q_contrastive_terms" -> ((s, d) => ops.TextOps.contrastiveTermsOf(
+      ops.TextOps.docsWords(s, d))),
     // MRR of the IVF-PQ serving path vs the exact top-1 (rank-aware eval)
-    "q_ann_mrr" -> ((s, d) => ops.Vectors.annMrr(s, d)),
+    "q_ann_mrr" -> ((s, d) => ops.Vectors.annMrrOf(
+      ops.Vectors.annCosineTopK(s, d, ops.Vectors.DefaultK),
+      ops.Vectors.ivfPqTopK(s, d, ops.Vectors.DefaultK))),
     // discrete median/p90 stage-to-stage funnel latency
-    "q_funnel_time" -> ((s, d) => ops.Sessions.funnelTimeToConvert(s, d)),
+    "q_funnel_time" -> ((s, d) => ops.Sessions.funnelTimeToConvertOf(
+      Feeds.events(s, d), Seq("signup", "view", "purchase"))),
     // bilateral nation-pair trade matrix per ship year (TPC-H Q7 shape)
-    "q_q7_volume" -> ((s, d) => ops.Analytics.volumeShipping(s, d)),
+    "q_q7_volume" -> ((s, d) => ops.Analytics.volumeShippingOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "orders"),
+      Feeds.table(s, d, "customer"), Feeds.table(s, d, "supplier"),
+      Feeds.table(s, d, "nation"))),
     // national ppm market share per order year (TPC-H Q8 shape)
-    "q_q8_market_share" -> ((s, d) => ops.Analytics.marketShare(s, d)),
+    "q_q8_market_share" -> ((s, d) => ops.Analytics.marketShareOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "orders"),
+      Feeds.table(s, d, "customer"), Feeds.table(s, d, "supplier"),
+      Feeds.table(s, d, "part"), Feeds.table(s, d, "nation"),
+      Feeds.table(s, d, "region"))),
     // top-20 customers by refunded revenue in a quarter (TPC-H Q10 shape)
-    "q_q10_returned_top" -> ((s, d) => ops.Analytics.returnedTop(s, d)),
+    "q_q10_returned_top" -> ((s, d) => ops.Analytics.returnedTopOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "orders"),
+      Feeds.table(s, d, "customer"), Feeds.table(s, d, "nation"))),
     // monthly promo-revenue ppm share (TPC-H Q14 shape)
-    "q_q14_promo_share" -> ((s, d) => ops.Analytics.promoShare(s, d)),
+    "q_q14_promo_share" -> ((s, d) => ops.Analytics.promoShareOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "part"))),
     // bulk orders over the quantity threshold (TPC-H Q18 shape)
-    "q_q18_bulk_orders" -> ((s, d) => ops.Analytics.bulkOrders(s, d)),
+    "q_q18_bulk_orders" -> ((s, d) => ops.Analytics.bulkOrdersOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "orders"),
+      Feeds.table(s, d, "customer"))),
     // idle above-average balances per nation (TPC-H Q22 shape)
-    "q_q22_idle_balance" -> ((s, d) => ops.Analytics.idleBalance(s, d)),
+    "q_q22_idle_balance" -> ((s, d) => ops.Analytics.idleBalanceOf(
+      Feeds.table(s, d, "customer"), Feeds.table(s, d, "orders"),
+      Feeds.table(s, d, "nation"))),
     // round-13: the remaining TPC-H classic shapes, adapted to the
     // driver tables (no partsupp / shipmode / receipt columns) — with
     // these all 22 classic shapes are covered
-    "q_q2_min_cost_supp" -> ((s, d) => ops.TpchShapes.minCostSupplier(s, d)),
-    "q_q11_important_share" -> ((s, d) => ops.TpchShapes.importantPartValue(s, d)),
-    "q_q12_priority_ship" -> ((s, d) => ops.TpchShapes.priorityShipClasses(s, d)),
-    "q_q16_part_supplier_cnt" -> ((s, d) => ops.TpchShapes.partSupplierCnt(s, d)),
-    "q_q19_disc_revenue" -> ((s, d) => ops.TpchShapes.discountedRevenue(s, d)),
-    "q_q20_dominant_supplier" -> ((s, d) => ops.TpchShapes.dominantSuppliers(s, d)),
-    "q_q21_late_only_supplier" -> ((s, d) => ops.TpchShapes.lateOnlySupplier(s, d)),
+    "q_q2_min_cost_supp" -> ((s, d) => ops.TpchShapes.minCostSupplierOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "supplier"),
+      Feeds.table(s, d, "nation"), Feeds.table(s, d, "region"),
+      Feeds.table(s, d, "part"))),
+    "q_q11_important_share" -> ((s, d) => ops.TpchShapes.importantPartValueOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "supplier"),
+      Feeds.table(s, d, "nation"))),
+    "q_q12_priority_ship" -> ((s, d) => ops.TpchShapes.priorityShipClassesOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "orders"))),
+    "q_q16_part_supplier_cnt" -> ((s, d) => ops.TpchShapes.partSupplierCntOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "part"),
+      Feeds.table(s, d, "supplier"))),
+    "q_q19_disc_revenue" -> ((s, d) => ops.TpchShapes.discountedRevenueOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "part"))),
+    "q_q20_dominant_supplier" -> ((s, d) => ops.TpchShapes.dominantSuppliersOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "supplier"),
+      Feeds.table(s, d, "nation"))),
+    "q_q21_late_only_supplier" -> ((s, d) => ops.TpchShapes.lateOnlySupplierOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "orders"),
+      Feeds.table(s, d, "supplier"), Feeds.table(s, d, "nation"))),
     // round-13 training-data ops: range search, readability, DF/Heaps
     // vocabulary curves, simhash precision curve, cross-lang dup matrix,
     // source-quality grid, supplier lead-time, brand price drift
     "q_ann_range_count" -> ((s, d) => ops.Vectors.annRangeCount(s, d)),
-    "q_readability" -> ((s, d) => ops.TextOps.readability(s, d)),
-    "q_token_doc_freq" -> ((s, d) => ops.Stats.tokenDocFreq(s, d)),
-    "q_heaps_law" -> ((s, d) => ops.Stats.heapsLaw(s, d)),
-    "q_simhash_precision_curve" -> ((s, d) => ops.Dedup.simhashPrecisionCurve(s, d)),
-    "q_dup_lang_pairs" -> ((s, d) => ops.Dedup.dupLangPairs(s, d)),
-    "q_source_quality_matrix" -> ((s, d) => ops.Corpus.sourceQualityMatrix(s, d)),
-    "q_supplier_leadtime" -> ((s, d) => ops.Analytics.supplierLeadtime(s, d)),
-    "q_brand_price_drift" -> ((s, d) => ops.Analytics.brandPriceDrift(s, d)),
+    "q_readability" -> ((s, d) => ops.TextOps.readabilityOf(ops.TextOps.docsWords(s, d))),
+    "q_token_doc_freq" -> ((s, d) => ops.Stats.tokenDocFreqOf(
+      ops.TextOps.docsWords(s, d)
+        .select(col("doc_id"), explode(col("words")).as("w")).distinct())),
+    "q_heaps_law" -> ((s, d) => ops.Stats.heapsLawOf(
+      ops.TextOps.docsWords(s, d)
+        .select(col("doc_id"), explode(col("words")).as("w")).distinct())),
+    "q_simhash_precision_curve" -> ((s, d) => ops.Dedup.simhashPrecisionCurveOf(
+      ops.Dedup.simhashPairs(s, d), ops.TextOps.docs(s, d))),
+    "q_dup_lang_pairs" -> ((s, d) => ops.Dedup.dupLangPairsOf(
+      ops.Dedup.minhashPairs(s, d), Feeds.table(s, d, "documents"))),
+    "q_source_quality_matrix" -> ((s, d) => ops.Corpus.sourceQualityMatrixOf(
+      ops.TextOps.docs(s, d), ops.TextOps.qualityScore(s, d),
+      ops.Dedup.exactOf(ops.TextOps.docs(s, d)))),
+    "q_supplier_leadtime" -> ((s, d) => ops.Analytics.supplierLeadtimeOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "orders"),
+      Feeds.table(s, d, "supplier"), Feeds.table(s, d, "nation"))),
+    "q_brand_price_drift" -> ((s, d) => ops.Analytics.brandPriceDriftOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "part"))),
     // round-13 batch 3: graph assortativity, cosine score mass curve,
     // 3-sigma telemetry outliers, partition-layout planner card
     "q_degree_assortativity" -> ((s, d) => ops.Basket.degreeAssortativity(s, d)),
-    "q_cos_score_hist" -> ((s, d) => ops.Vectors.cosScoreHist(s, d)),
-    "q_value_sigma_outliers" -> ((s, d) => ops.Sessions.valueSigmaOutliers(s, d)),
-    "q_partition_planner" -> ((s, d) => ops.Layout.partitionPlanner(s, d)),
+    "q_cos_score_hist" -> ((s, d) => ops.Vectors.cosScoreHistOf(
+      ops.Vectors.quantizedCached(s, d))),
+    "q_value_sigma_outliers" -> ((s, d) => ops.Sessions.valueSigmaOutliersOf(
+      Feeds.events(s, d))),
+    "q_partition_planner" -> ((s, d) => ops.Layout.partitionPlannerOf(
+      Feeds.table(s, d, "documents"))),
     // bag-cosine verify tier + sampled LSH recall
     "q_dedup_pairs_cosine" -> ((s, d) => ops.Dedup.bagCosinePairs(s, d)),
-    "q_lsh_recall_sampled" -> ((s, d) => ops.Dedup.lshRecallSampled(s, d)),
+    "q_lsh_recall_sampled" -> ((s, d) => ops.Dedup.lshRecallSampledOf(
+      ops.TextOps.shingles(s, d), ops.Dedup.minhashPairs(s, d))),
     // near-dup FRAME pairs (4-gram simhash + hamming banding over chunks)
     // — exact pair list, the oracle baseline (output quadratic in clone
     // group size BY DESIGN; gate raises on oversized value buckets)
-    "q_multimodal_near_dup" -> ((s, d) => ops.Multimodal.frameNearDup(s, d)),
+    "q_multimodal_near_dup" -> ((s, d) => ops.Multimodal.frameNearDupOf(
+      Feeds.table(s, d, "documents"))),
     // guarded clustered sibling — the production entry: spanning edges +
     // CC, linear output, maxBucket star degradation (r13 verdict task 1)
     "q_multimodal_near_dup_clusters" -> ((s, d) =>
       ops.Multimodal.frameNearDupClusters(s, d)),
     // per-source hapax-legomena vocabulary-tail profile
-    "q_hapax_rate" -> ((s, d) => ops.TextOps.hapaxRate(s, d)),
+    "q_hapax_rate" -> ((s, d) => ops.TextOps.hapaxRateOf(ops.TextOps.docsWords(s, d))),
     // per-user event-type diversity entropy (integer surrogate)
-    "q_event_entropy" -> ((s, d) => ops.Sessions.eventEntropy(s, d)),
+    "q_event_entropy" -> ((s, d) => ops.Sessions.eventEntropyOf(Feeds.events(s, d))),
     // no-join filter-scan what-if revenue fold (TPC-H Q6 shape)
-    "q_q6_forecast" -> ((s, d) => ops.Analytics.forecastRevenue(s, d)),
+    "q_q6_forecast" -> ((s, d) => ops.Analytics.forecastRevenueOf(
+      Feeds.table(s, d, "lineitem"))),
     // scalar-max-subquery top supplier(s) by quarter revenue (Q15 shape)
-    "q_q15_top_supplier" -> ((s, d) => ops.Analytics.topSupplier(s, d)),
+    "q_q15_top_supplier" -> ((s, d) => ops.Analytics.topSupplierOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "supplier"))),
     // correlated-average small-quantity revenue, cross-multiplied (Q17)
-    "q_q17_small_qty" -> ((s, d) => ops.Analytics.smallQtyRevenue(s, d)),
+    "q_q17_small_qty" -> ((s, d) => ops.Analytics.smallQtyRevenueOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "part"))),
     // stage-by-stage admission-funnel survivor counts (corpus card)
-    "q_curation_funnel" -> ((s, d) => ops.Corpus.curationFunnel(s, d)),
+    "q_curation_funnel" -> ((s, d) => ops.Corpus.curationFunnelOf(
+      ops.TextOps.docs(s, d), ops.Dedup.clusters(s, d), ops.TextOps.qualityScore(s, d),
+      ops.Dedup.exact(s, d), ops.TextOps.contamination(s, d), ops.TextOps.piiScan(s, d),
+      ops.TextOps.repetition(s, d))),
     // per-log2-length-bucket raw vs curated survivor shift
-    "q_dedup_length_shift" -> ((s, d) => ops.Corpus.dedupLengthShift(s, d)),
+    "q_dedup_length_shift" -> ((s, d) => ops.Corpus.dedupLengthShiftOf(
+      ops.TextOps.textStats(s, d), ops.Corpus.curatedV2(s, d))),
     // kNN-graph reciprocity rate over the exact top-k (hubness monitor)
     "q_knn_mutual" -> ((s, d) => ops.Vectors.knnMutual(s, d)),
     // asymmetric GROUPING SETS ((city,status),(status),()) report
@@ -579,22 +711,31 @@ object SparkEntry {
       Pipeline.of(s, d).dCustomerScdV2)),
     // power-of-2 session-duration histogram (engagement shape card)
     "q_session_duration_hist" -> ((s, d) =>
-      ops.Sessions.sessionDurationHist(s, d)),
+      ops.Sessions.sessionDurationHistOf(ops.Sessions.sessionsOf(Feeds.events(s, d)))),
     // power-of-2 media payload-size histogram (storage planning card)
-    "q_multimodal_size_hist" -> ((s, d) => ops.Multimodal.sizeHist(s, d)),
+    "q_multimodal_size_hist" -> ((s, d) => ops.Multimodal.sizeHistOf(
+      ops.Multimodal.meta(s, d))),
     // top-|y| dimensions of one exact power-iteration step (anisotropy
     // direction profile, all-integer)
-    "q_emb_principal_dims" -> ((s, d) => ops.Vectors.principalDims(s, d)),
+    "q_emb_principal_dims" -> ((s, d) => ops.Vectors.principalDimsOf(
+      ops.Vectors.quantizedCached(s, d))),
     // Zipf-law fit: exact integer least-squares moments + rational slope
-    "q_zipf_fit" -> ((s, d) => ops.Stats.zipfFit(s, d)),
+    "q_zipf_fit" -> ((s, d) => ops.Stats.zipfFitOf(
+      ops.TextOps.docsWords(s, d)
+        .select(col("doc_id"), explode(col("words")).as("w")))),
     // per-source KS drift of doc-length distribution vs the corpus
-    "q_ks_source_drift" -> ((s, d) => ops.Stats.ksSourceDrift(s, d)),
+    "q_ks_source_drift" -> ((s, d) => ops.Stats.ksSourceDriftOf(
+      Feeds.table(s, d, "documents"))),
     // per-source exact (chars, tokens) second-order moments
-    "q_length_token_moments" -> ((s, d) => ops.Stats.lengthTokenMoments(s, d)),
+    "q_length_token_moments" -> ((s, d) => ops.Stats.lengthTokenMomentsOf(
+      ops.TextOps.textStats(s, d), Feeds.table(s, d, "documents"))),
     // per-bit ones-rate of the 64-bit SimHash (sketch health, 64 rows)
-    "q_simhash_bit_balance" -> ((s, d) => ops.Stats.simhashBitBalance(s, d)),
+    "q_simhash_bit_balance" -> ((s, d) => ops.Stats.simhashBitBalanceOf(
+      ops.Dedup.simhash64Of(ops.TextOps.docsWords(s, d)))),
     // top-k shingles by distinct-doc df (boilerplate detector)
-    "q_boilerplate_shingles" -> ((s, d) => ops.Stats.boilerplateShingles(s, d)),
+    "q_boilerplate_shingles" -> ((s, d) => ops.Stats.boilerplateShinglesOf(
+      ops.TextOps.shingles(s, d),
+      Feeds.table(s, d, "documents").agg(count(lit(1)).as("n_total")))),
     // connected components over the mutual-kNN reciprocity graph
     "q_knn_components" -> ((s, d) => ops.Vectors.knnComponents(s, d)),
     // fixed-budget (md5-ranked 1024) sampled sibling — exact in-sample
@@ -604,15 +745,21 @@ object SparkEntry {
     "q_cohort_ltv" -> ((s, d) =>
       ops.Analytics.cohortLtvOf(Pipeline.of(s, d).uol)),
     // TPC-H Q9 shape adapted: nation x product line x year profit
-    "q_q9_profit" -> ((s, d) => ops.Analytics.productTypeProfit(s, d)),
+    "q_q9_profit" -> ((s, d) => ops.Analytics.productTypeProfitOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "orders"),
+      Feeds.table(s, d, "part"), Feeds.table(s, d, "supplier"),
+      Feeds.table(s, d, "nation"))),
     // users bucketed by floor-log2 mean inter-event gap (traffic shape)
-    "q_user_burstiness" -> ((s, d) => ops.Sessions.userBurstiness(s, d)),
+    "q_user_burstiness" -> ((s, d) => ops.Sessions.userBurstinessOf(Feeds.events(s, d))),
     // per-user Markov surprisal histogram (behavioral anomaly card)
-    "q_event_seq_surprisal" -> ((s, d) => ops.Sessions.eventSeqSurprisal(s, d)),
+    "q_event_seq_surprisal" -> ((s, d) => ops.Sessions.eventSeqSurprisalOf(
+      Feeds.events(s, d))),
     // per-source stopword-token rate (register/quality mix card)
-    "q_stopword_profile" -> ((s, d) => ops.Stats.stopwordProfile(s, d)),
+    "q_stopword_profile" -> ((s, d) => ops.Stats.stopwordProfileOf(
+      ops.TextOps.textStats(s, d), Feeds.table(s, d, "documents"))),
     // per-source exact-dup token savings (dedup inflation card)
-    "q_dup_inflation" -> ((s, d) => ops.Stats.dupInflation(s, d)),
+    "q_dup_inflation" -> ((s, d) => ops.Stats.dupInflationOf(
+      ops.TextOps.docs(s, d), ops.TextOps.textStats(s, d))),
     // ISO day-of-week sales seasonality profile
     "q_sales_dow_profile" -> ((s, d) =>
       ops.Analytics.salesDowProfileOf(Pipeline.of(s, d).uol)),
@@ -620,15 +767,21 @@ object SparkEntry {
     "q_customer_gini_monthly" -> ((s, d) =>
       ops.Analytics.customerGiniMonthlyOf(Pipeline.of(s, d).uol)),
     // token BYTE-length histogram (octet_length — engine-neutral)
-    "q_token_len_hist" -> ((s, d) => ops.Stats.tokenLenHist(s, d)),
+    "q_token_len_hist" -> ((s, d) => ops.Stats.tokenLenHistOf(
+      ops.TextOps.docsWords(s, d)
+        .select(col("doc_id"), explode(col("words")).as("w")))),
     // deterministic shard-size skew monitor (one row)
-    "q_shard_skew_profile" -> ((s, d) => ops.Stats.shardSkew(s, d)),
+    "q_shard_skew_profile" -> ((s, d) => ops.Stats.shardSkewOf(
+      ops.Sampling.shuffleShardsOf(ops.TextOps.docs(s, d)))),
     // monthly open-order share + cumulative backlog curve
-    "q_order_backlog" -> ((s, d) => ops.Analytics.orderBacklog(s, d)),
+    "q_order_backlog" -> ((s, d) => ops.Analytics.orderBacklogOf(
+      Feeds.table(s, d, "orders"))),
     // per-product-line exact (quantity, price) moments
-    "q_price_qty_moments" -> ((s, d) => ops.Analytics.priceQtyMoments(s, d)),
+    "q_price_qty_moments" -> ((s, d) => ops.Analytics.priceQtyMomentsOf(
+      Feeds.table(s, d, "lineitem"), Feeds.table(s, d, "part"))),
     // weekly telemetry-value drift card
-    "q_event_value_weekly" -> ((s, d) => ops.Sessions.eventValueWeekly(s, d)),
+    "q_event_value_weekly" -> ((s, d) => ops.Sessions.eventValueWeeklyOf(
+      Feeds.events(s, d))),
     // --- round 14: recommender/graph serving tables, media dup ratio,
     //     corpus-health correlation, order seasonality/churn/sequence,
     //     ANN rank stability, LSH banding entropy ---
@@ -637,27 +790,34 @@ object SparkEntry {
     // local clustering-coefficient decile histogram (community shape)
     "q_local_cc_hist" -> ((s, d) => ops.Basket.localCcHist(s, d)),
     // per-media duplicated-frame share (re-upload detector tier)
-    "q_frame_dup_ratio" -> ((s, d) => ops.Multimodal.frameDupRatio(s, d)),
+    "q_frame_dup_ratio" -> ((s, d) => ops.Multimodal.frameDupRatioOf(
+      ops.Multimodal.chunkFramesOf(Feeds.table(s, d, "documents")))),
     // quality-vs-log-length Pearson (is quality just length?)
-    "q_quality_len_corr" -> ((s, d) => ops.Stats.qualityLenCorr(s, d)),
+    "q_quality_len_corr" -> ((s, d) => ops.Stats.qualityLenCorrOf(
+      ops.TextOps.qualityScore(s, d), ops.TextOps.textStats(s, d))),
     // month-of-year revenue seasonal index (integer ppm)
-    "q_seasonal_index" -> ((s, d) => ops.Analytics.seasonalIndex(s, d)),
+    "q_seasonal_index" -> ((s, d) => ops.Analytics.seasonalIndexOf(
+      Feeds.table(s, d, "orders"))),
     // churned customers (>=90d inactive) per market segment
-    "q_churn_by_segment" -> ((s, d) => ops.Analytics.churnBySegment(s, d)),
+    "q_churn_by_segment" -> ((s, d) => ops.Analytics.churnBySegmentOf(
+      Feeds.table(s, d, "orders"), Feeds.table(s, d, "customer"))),
     // consecutive order-priority Markov transitions per customer
     "q_priority_transitions" -> ((s, d) =>
-      ops.Analytics.priorityTransitions(s, d)),
+      ops.Analytics.priorityTransitionsOf(Feeds.table(s, d, "orders"))),
     // power-of-2-weighted trailing-8-week revenue trend (integer EWMA)
-    "q_ewma_revenue" -> ((s, d) => ops.Analytics.ewmaRevenue(s, d)),
+    "q_ewma_revenue" -> ((s, d) => ops.Analytics.ewmaRevenueOf(
+      Feeds.table(s, d, "orders"))),
     // per-event-type log2 inter-event-gap histogram (debounce sizing)
-    "q_gap_hist_by_type" -> ((s, d) => ops.Sessions.gapHistByType(s, d)),
+    "q_gap_hist_by_type" -> ((s, d) => ops.Sessions.gapHistByTypeOf(Feeds.events(s, d))),
     // exact-vs-ADC top-k inversion count (quantization rank drift)
-    "q_ann_rank_stability" -> ((s, d) => ops.Vectors.rankStability(s, d)),
+    "q_ann_rank_stability" -> ((s, d) => ops.Vectors.rankStabilityOf(
+      ops.Vectors.annCosineTopK(s, d), ops.Vectors.pqAdcTopK(s, d))),
     // fixed-budget (md5-ranked 256) sampled sibling of the monitor
     "q_ann_rank_stability_sampled" ->
       ((s, d) => ops.Vectors.rankStabilitySampled(s, d)),
     // per-band bucket-occupancy entropy (banding health, one row per band)
-    "q_minhash_band_entropy" -> ((s, d) => ops.Dedup.bandEntropy(s, d)))
+    "q_minhash_band_entropy" -> ((s, d) => ops.Dedup.bandEntropyOf(
+      ops.Dedup.bandsCached(s, d))))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

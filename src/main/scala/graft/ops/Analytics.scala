@@ -304,9 +304,6 @@ object Analytics {
       (col("z").isNotNull && abs(col("z")) > zThresh).as("is_anomaly"))
   }
 
-  def revenueAnomaly(spark: SparkSession, dir: String): DataFrame =
-    revenueAnomalyOf(Feeds.table(spark, dir, "orders"))
-
   /** Inter-order gap histogram: per-customer consecutive-order gaps in
     * days, bucketed into reorder-latency bands — the churn-analysis rollup
     * behind "days since last order" alerting.
@@ -338,9 +335,6 @@ object Analytics {
           .as("mean_gap"))
   }
 
-  def orderGaps(spark: SparkSession, dir: String): DataFrame =
-    orderGapsOf(Feeds.table(spark, dir, "orders"))
-
   /** Semi-structured ingestion: typed extraction from the JSON event
     * property bag + per-type rollup — the "parse the payload column"
     * operator every event pipeline starts with. `get_json_object` is a
@@ -362,9 +356,6 @@ object Analytics {
            sum("k").as("sum_k"),
            min("k").as("min_k"),
            max("k").as("max_k"))
-
-  def propsJsonStats(spark: SparkSession, dir: String): DataFrame =
-    propsJsonStatsOf(Feeds.table(spark, dir, "events"))
 
   /** Weekly cohort-retention matrix over the order feed: customers are
     * grouped by first-purchase week (the cohort), then counted in every
@@ -556,9 +547,6 @@ object Analytics {
           .as("benford_bp"))
   }
 
-  def benfordTotalprice(spark: SparkSession, dir: String): DataFrame =
-    benfordTotalpriceOf(Feeds.table(spark, dir, "orders"))
-
   /** Robust outlier fences per order priority: DISCRETE quartiles (the
     * element at rank ⌈n/4⌉ / ⌈3n/4⌉ under a total (price, orderkey)
     * order — exact on both engines, no interpolation) and the Tukey
@@ -600,9 +588,6 @@ object Analytics {
           .as("n_high"))
   }
 
-  def priceOutliersIqr(spark: SparkSession, dir: String): DataFrame =
-    priceOutliersIqrOf(Feeds.table(spark, dir, "orders"))
-
   /** Late-order rate per priority (TPC-H Q4 shape): orders of one quarter
     * that have AT LEAST ONE lineitem shipped > 90 days after the order
     * date — the EXISTS / LEFT-SEMI anchor. The semi join deduplicates by
@@ -628,10 +613,6 @@ object Analytics {
       .agg(count(lit(1)).as("n_orders"))
   }
 
-  def lateOrders(spark: SparkSession, dir: String): DataFrame =
-    lateOrdersOf(Feeds.table(spark, dir, "orders"),
-                 Feeds.table(spark, dir, "lineitem"))
-
   /** Customer order-count distribution (TPC-H Q13 shape): how many
     * customers placed exactly k orders, INCLUDING the zero-order
     * customers — the LEFT OUTER + count(col) NULL-semantics anchor
@@ -648,10 +629,6 @@ object Analytics {
       .agg(count(col("o_orderkey")).as("c_count"))
       .groupBy("c_count")
       .agg(count(lit(1)).as("n_custs"))
-
-  def custOrderDist(spark: SparkSession, dir: String): DataFrame =
-    custOrderDistOf(Feeds.table(spark, dir, "customer"),
-                    Feeds.table(spark, dir, "orders"))
 
   /** SQL-standard ntile over a dense 1..n rank as all-integer `div`
     * arithmetic (bit-exact cross-engine; the [[customerDecilesOf]]
@@ -709,9 +686,6 @@ object Analytics {
            sum("monetary").as("sum_monetary"))
   }
 
-  def customerRfm(spark: SparkSession, dir: String): DataFrame =
-    customerRfmOf(Feeds.table(spark, dir, "orders"))
-
   /** Volume shipping (TPC-H Q7 shape): bilateral trade matrix — revenue
     * between every (supplier nation, customer nation) pair per ship year.
     * The classic two-dimension-table double-join: the same 25-row nation
@@ -749,13 +723,6 @@ object Analytics {
       .groupBy("supp_nation", "cust_nation", "ship_year")
       .agg(sum(col("rev")).cast("double").as("revenue"))
   }
-
-  def volumeShipping(spark: SparkSession, dir: String): DataFrame =
-    volumeShippingOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "orders"),
-      Feeds.table(spark, dir, "customer"),
-      Feeds.table(spark, dir, "supplier"),
-      Feeds.table(spark, dir, "nation"))
 
   /** National market share (TPC-H Q8 shape): per order year, the ppm
     * share of one supplier nation's revenue within a region's consumer
@@ -809,15 +776,6 @@ object Analytics {
         expr("nation_rev_i * 1000000 DIV total_rev_i").cast("long"))
   }
 
-  def marketShare(spark: SparkSession, dir: String): DataFrame =
-    marketShareOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "orders"),
-      Feeds.table(spark, dir, "customer"),
-      Feeds.table(spark, dir, "supplier"),
-      Feeds.table(spark, dir, "part"),
-      Feeds.table(spark, dir, "nation"),
-      Feeds.table(spark, dir, "region"))
-
   /** Returned-item reporting (TPC-H Q10 shape): the top-k customers by
     * refunded revenue inside one order quarter — the "who is returning
     * the most" ops report.
@@ -851,12 +809,6 @@ object Analytics {
               col("revenue").cast("double").as("revenue"), col("rnk"))
   }
 
-  def returnedTop(spark: SparkSession, dir: String): DataFrame =
-    returnedTopOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "orders"),
-      Feeds.table(spark, dir, "customer"),
-      Feeds.table(spark, dir, "nation"))
-
   /** Promotion effect (TPC-H Q14 shape): per ship month, the ppm of
     * revenue coming from promo-type parts — conditional share over a
     * single fact⨝dimension join, all-integer ratio (the Q8
@@ -883,10 +835,6 @@ object Analytics {
            floor(sum(col("rev"))).cast("long").as("total_rev_i"))
       .withColumn("promo_ppm",
         expr("promo_rev_i * 1000000 DIV total_rev_i").cast("long"))
-
-  def promoShare(spark: SparkSession, dir: String): DataFrame =
-    promoShareOf(Feeds.table(spark, dir, "lineitem"),
-                 Feeds.table(spark, dir, "part"))
 
   /** Large-volume customers (TPC-H Q18 shape): orders whose total line
     * quantity reaches a bulk threshold, with their customer — the
@@ -915,11 +863,6 @@ object Analytics {
               col("o_totalprice").cast(DecimalType(14, 2)).cast("double")
                 .as("o_totalprice"),
               col("sum_qty"))
-
-  def bulkOrders(spark: SparkSession, dir: String): DataFrame =
-    bulkOrdersOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "orders"),
-      Feeds.table(spark, dir, "customer"))
 
   /** Idle high-balance accounts (TPC-H Q22 shape): per nation, the
     * customers holding an above-average positive balance who placed NO
@@ -957,11 +900,6 @@ object Analytics {
            sum("bal").cast("double").as("sum_acctbal"))
   }
 
-  def idleBalance(spark: SparkSession, dir: String): DataFrame =
-    idleBalanceOf(Feeds.table(spark, dir, "customer"),
-      Feeds.table(spark, dir, "orders"),
-      Feeds.table(spark, dir, "nation"))
-
   /** Forecast revenue change (TPC-H Q6 shape): the what-if "revenue we
     * would have kept had these discounts not been given" — a pure
     * filter-scan-aggregate with NO join, the canonical predicate-pushdown
@@ -990,9 +928,6 @@ object Analytics {
              .cast("double").as("forecast_revenue"))
   }
 
-  def forecastRevenue(spark: SparkSession, dir: String): DataFrame =
-    forecastRevenueOf(Feeds.table(spark, dir, "lineitem"))
-
   /** Top supplier (TPC-H Q15 shape): the supplier(s) whose quarter
     * revenue equals the global maximum — the scalar-max-subquery
     * pattern, kept exact by DECIMAL revenue (a double sum's max-equality
@@ -1018,10 +953,6 @@ object Analytics {
       .select(col("s_suppkey"), col("s_name"),
               col("total_rev").cast("double").as("total_rev"))
   }
-
-  def topSupplier(spark: SparkSession, dir: String): DataFrame =
-    topSupplierOf(Feeds.table(spark, dir, "lineitem"),
-                  Feeds.table(spark, dir, "supplier"))
 
   /** Small-quantity-order revenue (TPC-H Q17 shape): for one brand's
     * parts, the revenue sitting in lines whose quantity is below 20% of
@@ -1052,10 +983,6 @@ object Analytics {
            coalesce(sum(col("price")), lit(java.math.BigDecimal.ZERO))
              .cast("double").as("small_qty_revenue"))
   }
-
-  def smallQtyRevenue(spark: SparkSession, dir: String): DataFrame =
-    smallQtyRevenueOf(Feeds.table(spark, dir, "lineitem"),
-                      Feeds.table(spark, dir, "part"))
 
   /** ASYMMETRIC `GROUPING SETS ((city,status),(status),())` — the shape
     * CUBE/ROLLUP can't express (a deliberately skipped (city) level),
@@ -1180,12 +1107,6 @@ object Analytics {
                year(col("o_orderdate")).cast("long").as("o_year"))
       .agg(sum(discPrice).cast("double").as("profit"))
 
-  def productTypeProfit(spark: SparkSession, dir: String): DataFrame =
-    productTypeProfitOf(
-      Feeds.table(spark, dir, "lineitem"), Feeds.table(spark, dir, "orders"),
-      Feeds.table(spark, dir, "part"), Feeds.table(spark, dir, "supplier"),
-      Feeds.table(spark, dir, "nation"))
-
   /** Day-of-week sales seasonality (ISO numbering 1=Mon…7=Sun on both
     * engines: Spark weekday()+1 ≡ DuckDB isodow — pinned because the
     * engines' default dow functions disagree on week start). Revenue
@@ -1251,9 +1172,6 @@ object Analytics {
           .as("backlog"))
   }
 
-  def orderBacklog(spark: SparkSession, dir: String): DataFrame =
-    orderBacklogOf(Feeds.table(spark, dir, "orders"))
-
   /** Per-product-line exact moments of (quantity, whole-dollar price):
     * n, Σq, Σp, Σq², Σp², Σqp as BIGINTs — the sufficient statistics
     * for the price/quantity covariance behind any elasticity readout,
@@ -1276,10 +1194,6 @@ object Analytics {
            sum(col("p_i") * col("p_i")).as("syy"),
            sum(col("q_i") * col("p_i")).as("sxy"))
   }
-
-  def priceQtyMoments(spark: SparkSession, dir: String): DataFrame =
-    priceQtyMomentsOf(Feeds.table(spark, dir, "lineitem"),
-                      Feeds.table(spark, dir, "part"))
 
   /** Supplier lead-time profile: per supplier, the order→ship lag
     * distribution (exact integer day sums, min/max, fast/slow bucket
@@ -1313,11 +1227,6 @@ object Analytics {
              .as("n_over_1y"))
   }
 
-  def supplierLeadtime(spark: SparkSession, dir: String): DataFrame =
-    supplierLeadtimeOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "orders"), Feeds.table(spark, dir, "supplier"),
-      Feeds.table(spark, dir, "nation"))
-
   /** Brand unit-price drift: per (brand, ship month), the exact
     * integer-cents unit price (total cents DIV total qty) and its
     * month-over-month delta — the pricing-trend monitor. The lag window
@@ -1344,10 +1253,6 @@ object Analytics {
         (col("unit_c") - lag("unit_c", 1).over(byBrand)).cast("long"))
   }
 
-  def brandPriceDrift(spark: SparkSession, dir: String): DataFrame =
-    brandPriceDriftOf(Feeds.table(spark, dir, "lineitem"),
-                      Feeds.table(spark, dir, "part"))
-
   /** Month-of-year revenue seasonality index: mean (year, month) revenue
     * per calendar month over the overall (year, month) mean, in exact
     * integer ppm (both means are integer DIVs of exact cent sums — no
@@ -1373,9 +1278,6 @@ object Analytics {
         expr("CAST(mean_c * 1000000 DIV o_mean AS BIGINT)").as("index_ppm"))
   }
 
-  def seasonalIndex(spark: SparkSession, dir: String): DataFrame =
-    seasonalIndexOf(Feeds.table(spark, dir, "orders"))
-
   /** Churn candidates per market segment: customers whose LAST order
     * predates the dataset horizon by ≥ 90 days, with their lifetime
     * revenue in exact cents — the retention-campaign sizing card. The
@@ -1400,10 +1302,6 @@ object Analytics {
            sum("ltv_c").as("churned_ltv_c"))
   }
 
-  def churnBySegment(spark: SparkSession, dir: String): DataFrame =
-    churnBySegmentOf(Feeds.table(spark, dir, "orders"),
-                     Feeds.table(spark, dir, "customer"))
-
   /** Consecutive order-priority transition counts per customer — the
     * first-order Markov matrix over the ORDER stream (the event-stream
     * twin is [[graft.ops.Sessions.eventTransitionsOf]]): does an urgent
@@ -1423,9 +1321,6 @@ object Analytics {
       .groupBy("prev_pr", "pr")
       .agg(count(lit(1)).as("n"))
   }
-
-  def priorityTransitions(spark: SparkSession, dir: String): DataFrame =
-    priorityTransitionsOf(Feeds.table(spark, dir, "orders"))
 
   /** Exponentially-weighted weekly revenue trend: weights 2⁷..2⁰ over the
     * trailing 8 OBSERVED weeks (α = 1/2 as exact powers of two,
@@ -1458,8 +1353,5 @@ object Analytics {
       .select(col("week"), col("cents"),
         expr("CAST(wsum DIV 255 AS BIGINT)").as("ewma_c"))
   }
-
-  def ewmaRevenue(spark: SparkSession, dir: String): DataFrame =
-    ewmaRevenueOf(Feeds.table(spark, dir, "orders"))
 
 }

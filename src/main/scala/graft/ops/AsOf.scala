@@ -100,9 +100,6 @@ object AsOf {
       .agg(count(lit(1)).as("n_purchases"))
   }
 
-  def lastTouchAttribution(spark: SparkSession, dir: String): DataFrame =
-    lastTouchAttributionOf(Feeds.events(spark, dir))
-
   /** For each event: the customer's most recent order at or before the
     * event time (ts second-truncated for cross-engine stability). */
   def latestOrderPerEvent(spark: SparkSession, dir: String): DataFrame = {

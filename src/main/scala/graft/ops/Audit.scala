@@ -90,12 +90,6 @@ object Audit {
                 col("n_distinct"))
     }.reduce(_ unionAll _)
 
-  /** Query form: the orders table, every column. */
-  def dqProfile(spark: SparkSession, dir: String): DataFrame =
-    dqProfileOf(Feeds.table(spark, dir, "orders"),
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"))
-
   /** Query form: the d_customer snapshot built from order HISTORY vs the
     * one the full feed (history ∪ increment) would build — surrogate ids
     * excluded (they are load-order artifacts, not business attributes). */

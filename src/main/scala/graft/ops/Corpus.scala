@@ -111,9 +111,6 @@ object Corpus {
       quoteHeavy.where(col("dup_ppm") > quotePpmCeiling).select("doc_id"),
       Seq("doc_id"), "left_anti")
 
-  def curatedV3(spark: SparkSession, dir: String): DataFrame =
-    curatedV3Of(curatedV2(spark, dir), Dedup.quoteHeavyDocs(spark, dir))
-
   /** v4 admission — MASK instead of DROP at the quote gate: the docs v3
     * rejects wholesale (dup_ppm over [[quotePpmCeiling]]) are KEPT with
     * their duplicated-span word ranges ([[Dedup.spanMaskRangesOf]])
@@ -188,10 +185,6 @@ object Corpus {
       .select("source", "v3_docs", "v4_docs", "gained_docs", "v3_words",
               "v4_words", "gained_words", "gain_ppm")
   }
-
-  def maskVsDropYield(spark: SparkSession, dir: String): DataFrame =
-    maskVsDropYieldOf(curatedV3(spark, dir), curatedV4(spark, dir),
-                      TextOps.docsWords(spark, dir))
 
   /** INCREMENTAL v4 curation — the admission decision a 100 TB ingest
     * actually runs per batch: which ARRIVING docs enter the corpus, with
@@ -312,9 +305,6 @@ object Corpus {
                 .as("masked_ppm"),
               expr("qm div n_docs").as("mean_quality_ppm"))
 
-  def corpusStatsV4(spark: SparkSession, dir: String): DataFrame =
-    corpusStatsV4Of(curatedV4(spark, dir), TextOps.docs(spark, dir))
-
   /** The CORPUS CARD — the per-(lang, source) summary every dataset
     * release ships (doc/token/char counts, mean quality, PII incidence,
     * mean repetition): one hash-join chain on doc_id over the per-doc
@@ -349,14 +339,6 @@ object Corpus {
               (col("rm").cast("double")
                 / (col("n_docs") * 1000000L).cast("double")).as("avg_rep_ratio"))
 
-  def corpusStats(spark: SparkSession, dir: String): DataFrame =
-    corpusStatsOf(
-      TextOps.docs(spark, dir),
-      TextOps.textStats(spark, dir),
-      TextOps.qualityScore(spark, dir),
-      TextOps.piiScan(spark, dir),
-      TextOps.repetition(spark, dir))
-
   /** Per-source admission quota — the domain-balancing step of corpus
     * curation (cap each source's contribution so no single domain dominates
     * the training mix): rank docs WITHIN source by a deterministic,
@@ -377,9 +359,6 @@ object Corpus {
       .withColumn("rk", row_number().over(w).cast("long"))
       .where(col("rk") <= cap)
   }
-
-  def domainQuota(spark: SparkSession, dir: String): DataFrame =
-    domainQuotaOf(TextOps.docs(spark, dir))
 
   /** Temperature-based mixture weights per source — the data-MIXING side of
     * domain balancing (the quota above drops docs; this REWEIGHTS sampling
@@ -414,9 +393,6 @@ object Corpus {
         expr("(w_num * CAST(1000000 AS BIGINT)) div tot_w").as("w_ppm"))
   }
 
-  def mixWeights(spark: SparkSession, dir: String): DataFrame =
-    mixWeightsOf(TextOps.docs(spark, dir))
-
   /** EPOCHS-over-source: how many (fractional, ppm) passes over each
     * source one epoch of the α-tempered mixture implies — the repetition
     * readout a data scheduler publishes next to the weights (a rare
@@ -429,9 +405,6 @@ object Corpus {
     weights.select(col("source"), col("n_docs"), col("share_ppm"),
       col("w_ppm"),
       expr("w_ppm * 1000000L div share_ppm").as("epochs_ppm"))
-
-  def mixEpochs(spark: SparkSession, dir: String): DataFrame =
-    mixEpochsOf(mixWeights(spark, dir))
 
   /** Canonical-representative selection — per near-dup cluster keep the
     * HIGHEST-QUALITY member (ties → smallest doc_id), not the arbitrary
@@ -455,10 +428,6 @@ object Corpus {
       .select(col("cluster"), col("doc_id"), col("quality"),
               col("n_members"))
   }
-
-  def keepBest(spark: SparkSession, dir: String): DataFrame =
-    keepBestOf(Dedup.clusters(spark, dir),
-               TextOps.qualityScore(spark, dir))
 
   /** Pairwise vocabulary Jaccard between sources — the cross-source
     * redundancy readout behind mixing decisions (two crawls with
@@ -491,9 +460,6 @@ object Corpus {
                 AS BIGINT)""").as("jaccard_ppm"))
   }
 
-  def sourceVocabOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceVocabOverlapOf(TextOps.docsWords(spark, dir))
-
   /** Per-source exact-duplicate rate (ppm) — the corpus-card column that
     * tells you WHERE the dup mass comes from (one bad crawl, not the whole
     * corpus) and what dedup will actually shrink. n_unique is an exact
@@ -507,9 +473,6 @@ object Corpus {
       .select(col("source"), col("n_docs"), col("n_unique"),
         expr("CAST((n_docs - n_unique) * 1000000 DIV n_docs AS BIGINT)")
           .as("dup_ppm"))
-
-  def dupRateBySource(spark: SparkSession, dir: String): DataFrame =
-    dupRateBySourceOf(TextOps.docs(spark, dir))
 
   /** Near-dup attribution per source — the cluster-based sibling of
     * [[dupRateBySourceOf]]: the fraction of each source's docs living in
@@ -532,10 +495,6 @@ object Corpus {
           .as("near_dup_ppm"))
   }
 
-  def nearDupRateBySource(spark: SparkSession, dir: String): DataFrame =
-    nearDupRateBySourceOf(TextOps.docs(spark, dir),
-                          Dedup.clusters(spark, dir))
-
   /** Benchmark-contamination attribution per source: the fraction of each
     * source's docs sharing shingles with the eval needle set — the
     * readout that turns "the corpus is 2% contaminated" into "source 3
@@ -552,10 +511,6 @@ object Corpus {
       .select(col("source"), col("n_docs"), col("n_contaminated"),
         expr("CAST(n_contaminated * 1000000 DIV n_docs AS BIGINT)")
           .as("contam_ppm"))
-
-  def contamRateBySource(spark: SparkSession, dir: String): DataFrame =
-    contamRateBySourceOf(TextOps.docs(spark, dir),
-                         TextOps.contamination(spark, dir))
 
   /** Per-source top-k docs by quality score (ties to min doc_id) — the
     * showcase-sample query every corpus card links ("what does this
@@ -575,10 +530,6 @@ object Corpus {
       .select("source", "doc_id", "quality", "rnk")
   }
 
-  def topDocsPerSource(spark: SparkSession, dir: String): DataFrame =
-    topDocsPerSourceOf(TextOps.docs(spark, dir),
-                       TextOps.qualityScore(spark, dir))
-
   /** Cross-source near-dup pair counts: LSH candidate pairs whose two
     * docs come from DIFFERENT sources, rolled up per unordered source
     * pair — the syndication/cross-crawl overlap readout (two "different"
@@ -597,10 +548,6 @@ object Corpus {
       .groupBy(least(col("source_a"), col("source_b")).as("src_a"),
                greatest(col("source_a"), col("source_b")).as("src_b"))
       .agg(count(lit(1)).as("n_pairs"))
-
-  def crossSourceDupPairs(spark: SparkSession, dir: String): DataFrame =
-    crossSourceDupPairsOf(TextOps.docs(spark, dir),
-                          Dedup.minhashPairs(spark, dir))
 
   /** Token-BUDGET selection: per source, keep the highest-quality docs
     * whose cumulative token count fits the budget — the "give me the best
@@ -649,11 +596,6 @@ object Corpus {
       .select("source", "doc_id", "rank", "n_tokens", "cum_tokens")
   }
 
-  def tokenBudgetSelect(spark: SparkSession, dir: String): DataFrame =
-    tokenBudgetSelectOf(TextOps.docs(spark, dir),
-                        TextOps.textStats(spark, dir),
-                        TextOps.qualityScore(spark, dir))
-
   /** Curriculum ordering: every doc gets a (stage, shard, pos) address —
     * stage = quality decile (floor(quality·10), clamped to 9, NO global
     * ntile window), shard = content-hash slot within the stage, pos =
@@ -683,9 +625,6 @@ object Corpus {
       .select("doc_id", "stage", "shard", "pos")
   }
 
-  def curriculumOrder(spark: SparkSession, dir: String): DataFrame =
-    curriculumOrderOf(TextOps.qualityScore(spark, dir))
-
   /** Quality↔duplication calibration: per quality decile, how many docs
     * sit in an exact-dup group — the sanity check that the quality score
     * and the dedup stack agree (boilerplate SHOULD score low AND
@@ -707,10 +646,6 @@ object Corpus {
            count(when(col("n_dups") > 1L, lit(1))).as("n_dup_docs"))
       .withColumn("dup_ppm", expr("n_dup_docs * 1000000L div n_docs"))
   }
-
-  def qualityDupCalibration(spark: SparkSession, dir: String): DataFrame =
-    qualityDupCalibrationOf(TextOps.docs(spark, dir),
-                            TextOps.qualityScore(spark, dir))
 
   /** Per-source token-concentration (Gini) readout — does a handful of
     * giant docs carry most of a source's token mass? A high-Gini source
@@ -747,9 +682,6 @@ object Corpus {
              - ((n_docs + 1) * 1000000) DIV n_docs AS BIGINT)"""))
   }
 
-  def tokenGiniBySource(spark: SparkSession, dir: String): DataFrame =
-    tokenGiniBySourceOf(TextOps.docsWords(spark, dir))
-
   /** Train/test near-dup LEAKAGE matrix: verified near-dup pairs counted
     * by the (split, split) cell they straddle. The (train, test) cell is
     * the number every eval reader asks for first — near-dups of training
@@ -772,10 +704,6 @@ object Corpus {
               greatest(col("sa"), col("sb")).as("split_b"))
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).as("n_pairs"))
-
-  def splitLeakage(spark: SparkSession, dir: String): DataFrame =
-    splitLeakageOf(Dedup.minhashPairsVerified(spark, dir),
-                   Sampling.trainValTestSplit(spark, dir))
 
   /** The CURATION FUNNEL — the stage-by-stage survivor counts every
     * dataset release publishes ("started with N docs, kept M"): raw →
@@ -840,16 +768,6 @@ object Corpus {
         expr("n_docs * 1000000 DIV s1").cast("long").as("retained_ppm"))
   }
 
-  def curationFunnel(spark: SparkSession, dir: String): DataFrame =
-    curationFunnelOf(
-      TextOps.docs(spark, dir),
-      Dedup.clusters(spark, dir),
-      TextOps.qualityScore(spark, dir),
-      Dedup.exact(spark, dir),
-      TextOps.contamination(spark, dir),
-      TextOps.piiScan(spark, dir),
-      TextOps.repetition(spark, dir))
-
   /** Dedup LENGTH-SHIFT card: what the admission pipeline did to the
     * length distribution — per ⌊log₂ tokens⌋ bucket, raw doc count,
     * curated-v2 survivor count and kept-ppm. The readout that catches a
@@ -871,10 +789,6 @@ object Corpus {
            count(col("kept")).as("n_curated"))
       .withColumn("kept_ppm",
         expr("n_curated * 1000000 DIV n_raw").cast("long"))
-
-  def dedupLengthShift(spark: SparkSession, dir: String): DataFrame =
-    dedupLengthShiftOf(TextOps.textStats(spark, dir),
-                       curatedV2(spark, dir))
 
   /** Source × language quality/duplication matrix: per (source, lang)
     * cell, the doc count, mean quality (exact ppm — per-doc scores floor
@@ -905,10 +819,5 @@ object Corpus {
         expr("CAST(n_dup_docs * 1000000 DIV n_docs AS BIGINT)")
           .as("dup_ppm"))
   }
-
-  def sourceQualityMatrix(spark: SparkSession, dir: String): DataFrame =
-    sourceQualityMatrixOf(TextOps.docs(spark, dir),
-      TextOps.qualityScore(spark, dir),
-      Dedup.exactOf(TextOps.docs(spark, dir)))
 
 }

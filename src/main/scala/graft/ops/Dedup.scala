@@ -57,9 +57,6 @@ object Dedup {
       .agg(min("doc_id").as("keeper_doc_id"),
            count(lit(1)).as("n_dups"))
 
-  def bagExact(spark: SparkSession, dir: String): DataFrame =
-    bagExactOf(TextOps.docsWords(spark, dir))
-
   /** LSH candidates verified by EDIT DISTANCE — the near-exact tier
     * between byte-exact dedup and Jaccard near-dup: catches small-patch
     * duplicates (a changed date, one fixed typo) with a guarantee Jaccard
@@ -75,10 +72,6 @@ object Dedup {
         levenshtein(col("norm_a"), col("norm_b")).cast("long")
           .as("editdist"))
       .where(col("editdist") <= maxDist)
-
-  def minhashPairsEditVerified(spark: SparkSession, dir: String): DataFrame =
-    minhashPairsEditVerifiedOf(minhashPairs(spark, dir),
-                               TextOps.docs(spark, dir))
 
   /** LSH band-bucket size distribution (power-of-2 buckets per band) —
     * the banding-health readout behind the giant-bucket guard: bucket
@@ -96,9 +89,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_buckets"), sum("sz").as("n_docs"),
            max("sz").as("max_sz"))
 
-  def minhashBandStats(spark: SparkSession, dir: String): DataFrame =
-    minhashBandStatsOf(bandsCached(spark, dir))
-
   /** Prefix fingerprint dedup: group on md5 of the first `k` tokens —
     * catches common-prefix duplicates that full-body hashing misses (the
     * same page re-crawled with a different footer/timestamp is the
@@ -111,9 +101,6 @@ object Dedup {
       .groupBy(md5(concat_ws(" ", slice(col("words"), 1, k))).as("fp"))
       .agg(min("doc_id").as("keeper_doc_id"),
            count(lit(1)).as("n_dups"))
-
-  def prefixExact(spark: SparkSession, dir: String): DataFrame =
-    prefixExactOf(TextOps.docsWords(spark, dir))
 
   /** MinHash signatures: k=8 seeded min-hashes per doc
     * (min over shingles of md5(seed || '|' || shingle) — lexicographic min
@@ -391,9 +378,6 @@ object Dedup {
     docsWords.select(col("doc_id"),
       graft.expr.SimHashN(col("words"), 64).as("simhash64"))
 
-  def simhash64(spark: SparkSession, dir: String): DataFrame =
-    simhash64Of(TextOps.docsWords(spark, dir))
-
   /** SimHash near-dup candidate pairs within `maxHamming` bit flips, via
     * pigeonhole banding: split the hash into maxHamming+1 chunks — any
     * pair within the distance must agree EXACTLY on at least one chunk, so
@@ -556,9 +540,6 @@ object Dedup {
       simhashPairsOf(simhash(spark, dir)).truncated
     }
 
-  def simhash64Pairs(spark: SparkSession, dir: String): DataFrame =
-    simhash64PairsOf(simhash64(spark, dir))
-
   /** ENSEMBLE consensus candidates — pairs flagged by BOTH the MinHash-LSH
     * banding (set-overlap signal over shingles) and the 32-bit SimHash
     * hamming banding (bit-vector signal over distinct words). The two
@@ -578,10 +559,6 @@ object Dedup {
     minhashPairs.select("doc_a", "doc_b")
       .join(simhashPairs, Seq("doc_a", "doc_b"))
       .select(col("doc_a"), col("doc_b"), col("hamming"))
-
-  def consensusPairs(spark: SparkSession, dir: String): DataFrame =
-    consensusPairsOf(minhashPairs(spark, dir),
-                     simhashPairs(spark, dir))
 
   /** Near-dup clusters: connected components over the LSH candidate-pair
     * graph via min-label propagation (iterate: every node takes the min
@@ -923,8 +900,8 @@ object Dedup {
         .truncated
     }
 
-  private def verifiedJaccardCached(spark: SparkSession,
-                                    dir: String): DataFrame =
+  private[graft] def verifiedJaccardCached(spark: SparkSession,
+                                            dir: String): DataFrame =
     overlapCached(spark, dir).select(jaccardCols: _*)
 
   /** ASYMMETRIC containment tier over the guarded candidate pairs:
@@ -960,9 +937,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_pairs"),
            sum("n_shared").as("sum_shared"))
 
-  def jaccardHist(spark: SparkSession, dir: String): DataFrame =
-    jaccardHistOf(minhashContainment(spark, dir))
-
   /** Near-dup CLUSTER-SIZE histogram in power-of-2 buckets — the dedup
     * yield forecast: Σ(sz−1) over the histogram is exactly how many docs
     * dedup will drop, and a fattening large-size tail is the earliest
@@ -978,9 +952,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_clusters"),
            sum("sz").as("n_docs"),
            max("sz").as("max_sz"))
-
-  def clusterSizesHist(spark: SparkSession, dir: String): DataFrame =
-    clusterSizesHistOf(clusters(spark, dir))
 
   /** Per-doc candidate-DEGREE histogram (power-of-2 buckets of how many
     * LSH candidate pairs each doc participates in) — the doc-level
@@ -998,9 +969,6 @@ object Dedup {
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_docs"),
            sum("deg").as("sum_deg"))
-
-  def pairDegreeDist(spark: SparkSession, dir: String): DataFrame =
-    pairDegreeDistOf(minhashPairs(spark, dir).select("doc_a", "doc_b"))
 
   /** Sketch-calibration monitor: per LSH candidate pair, the MinHash
     * ESTIMATE of Jaccard (matching-signature fraction, k=8) against the
@@ -1079,9 +1047,6 @@ object Dedup {
       .where(col("sz") >= 2L)
       .withColumn("purity_ppm", expr("majority_n * 1000000L div sz"))
 
-  def clusterSourcePurity(spark: SparkSession, dir: String): DataFrame =
-    clusterSourcePurityOf(clusters(spark, dir), TextOps.docs(spark, dir))
-
   /** Dedup yield vs Jaccard threshold — for τ ∈ {0.5, 0.7, 0.9}, how many
     * verified candidate pairs and distinct docs the near-dup tier would
     * act on. THE tuning readout before committing a threshold: a curve
@@ -1110,9 +1075,6 @@ object Dedup {
     pairs.join(docs, Seq("t_ppm"))
   }
 
-  def dedupThresholdSweep(spark: SparkSession, dir: String): DataFrame =
-    dedupThresholdSweepOf(verifiedJaccardCached(spark, dir))
-
   /** SimHash precision-by-distance curve: for each hamming distance the
     * banding emits (0..maxHamming), the candidate-pair count and how many
     * of those pairs are BYTE-EXACT duplicates — the calibration that
@@ -1132,10 +1094,6 @@ object Dedup {
              .as("n_exact"))
   }
 
-  def simhashPrecisionCurve(spark: SparkSession, dir: String): DataFrame =
-    simhashPrecisionCurveOf(simhashPairs(spark, dir),
-                            TextOps.docs(spark, dir))
-
   /** Cross-language near-dup matrix: the guarded MinHash candidate pairs
     * rolled up by canonical (lang_a ≤ lang_b) language pair — the
     * translated-boilerplate / mislabeled-language readout of a multilingual
@@ -1149,10 +1107,6 @@ object Dedup {
       .groupBy(least(col("la"), col("lb")).as("lang_a"),
                greatest(col("la"), col("lb")).as("lang_b"))
       .agg(count(lit(1)).as("n_pairs"))
-
-  def dupLangPairs(spark: SparkSession, dir: String): DataFrame =
-    dupLangPairsOf(minhashPairs(spark, dir),
-                   graft.etl.Feeds.table(spark, dir, "documents"))
 
 
   /** Term-frequency BAG-COSINE verify tier over the guarded candidates —
@@ -1217,9 +1171,6 @@ object Dedup {
       .withColumn("recall_ppm",
         expr("CAST(n_captured * 1000000 DIV NULLIF(n_truth, 0) AS BIGINT)"))
   }
-
-  def lshRecallSampled(spark: SparkSession, dir: String): DataFrame =
-    lshRecallSampledOf(TextOps.shingles(spark, dir), minhashPairs(spark, dir))
 
   /** SUBSTRING-tier dedup: maximal duplicated word SPANS at arbitrary
     * offsets between doc pairs (r14 verdict task 4) — the "50-token
@@ -1296,8 +1247,8 @@ object Dedup {
     * census → match join → islands pipeline (r15's four most expensive
     * bench plans, ~12.7 s combined at sf0.1). Same stale-read contract as
     * [[bandsCached]]. */
-  private[ops] def substringRunsCached(spark: SparkSession,
-                                       dir: String): DataFrame =
+  private[graft] def substringRunsCached(spark: SparkSession,
+                                               dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "dedup.runs") {
       substringRunsOf(TextOps.posShingles(spark, dir), 8, 64).staged
     }
@@ -1566,9 +1517,6 @@ object Dedup {
              .otherwise(lit(0L))).cast("long").as("pos_kept"),
            max(col("occ_i")).as("max_occ"))
 
-  def substringIndexStats(spark: SparkSession, dir: String): DataFrame =
-    substringIndexStatsOf(TextOps.posShingles(spark, dir))
-
   /** Storage-debt LEDGER of the append-only streamed substring ingest
     * ([[graft.streaming.SubstringIngest]]) — the pure relational form of
     * its batch-by-batch index math, so the compaction payoff is an
@@ -1604,9 +1552,6 @@ object Dedup {
              .as("n_live"))
       .withColumn("n_dead", col("n_appended") - col("n_live"))
   }
-
-  def substringIngestDebt(spark: SparkSession, dir: String): DataFrame =
-    substringIngestDebtOf(TextOps.posShingles(spark, dir))
 
   /** The crawl-replay batch (0, 1, 2) of id column `c`: ascending thirds
     * of `mx`, the max doc_id a broadcast 1-row frame puts in scope — the
@@ -1668,7 +1613,7 @@ object Dedup {
               (col("end_w") - col("start_w") + lit(1L)).as("masked_words"))
   }
 
-  private def maskRangesFromRuns(runs: DataFrame): DataFrame =
+  private[graft] def maskRangesFromRuns(runs: DataFrame): DataFrame =
     mergeSides(sidesFromRuns(runs))
 
   /** Query form rides the same memoized run grain as the other four
@@ -1700,10 +1645,6 @@ object Dedup {
       .withColumn("masked_ppm",
                   expr("masked_words * 1000000L div total_words"))
   }
-
-  def maskSavingsBySource(spark: SparkSession, dir: String): DataFrame =
-    maskSavingsBySourceOf(TextOps.docsWords(spark, dir),
-      maskRangesFromRuns(substringRunsCached(spark, dir)))
 
   /** Crawl-health TREND: the corpus replayed as three ascending
     * doc_id-range batches (the ingest-debt grain), per batch the count
@@ -1797,10 +1738,6 @@ object Dedup {
            sum(when(col("has_m") && col("has_s"), lit(1L)).otherwise(lit(0L)))
              .as("n_both"))
 
-  def dedupTierOverlap(spark: SparkSession, dir: String): DataFrame =
-    dedupTierOverlapOf(minhashPairs(spark, dir),
-                       spansFromRuns(substringRunsCached(spark, dir)))
-
   /** Per-band bucket-occupancy ENTROPY surrogate ([[entropySurrOf]] over
     * the band's bucket sizes) plus count/max — one number per band saying
     * whether the hash spreads signatures (entropy near n·log2(buckets)) or
@@ -1817,8 +1754,5 @@ object Dedup {
       "band", "s", "n_sigs")(
       count(lit(1)).as("n_buckets"), sum("s").as("n_sigs"),
       max("s").as("max_bucket"))
-
-  def bandEntropy(spark: SparkSession, dir: String): DataFrame =
-    bandEntropyOf(bandsCached(spark, dir))
 
 }

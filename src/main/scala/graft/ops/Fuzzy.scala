@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.etl.Feeds
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Blocked fuzzy matching (entity resolution) over part names: candidate
@@ -42,7 +41,4 @@ object Fuzzy {
       .where(col("dist") <= maxDist)
       .select("name_a", "name_b", "dist", "n_a", "n_b")
   }
-
-  def fuzzyPartPairs(spark: SparkSession, dir: String): DataFrame =
-    fuzzyPartPairsOf(Feeds.table(spark, dir, "part"))
 }

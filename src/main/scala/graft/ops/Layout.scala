@@ -75,7 +75,4 @@ object Layout {
         expr(s"CAST($targetBytes DIV greatest(sum_bytes DIV n_docs, 1) " +
           "AS BIGINT)").as("rows_per_file"))
 
-  def partitionPlanner(spark: SparkSession, dir: String): DataFrame =
-    partitionPlannerOf(graft.etl.Feeds.table(spark, dir, "documents"))
-
 }

@@ -127,9 +127,6 @@ object Multimodal {
       .select(col("doc_id"), col("ci").cast("long").as("chunk_idx"),
         md5(expr("substring(text, ci * 256 + 1, 256)")).as("chunk_fp"))
 
-  def chunkFrames(spark: SparkSession, dir: String): DataFrame =
-    chunkFramesOf(Feeds.table(spark, dir, "documents"))
-
   /** Frame-level near-dup pairs: media whose payloads share ≥ `minShared`
     * content-chunk fingerprints — mirrored transcodes, re-uploads with
     * trailing edits, and prefix-padded copies that whole-file hashing
@@ -159,9 +156,6 @@ object Multimodal {
       .where(col("shared_chunks") >= minShared)
   }
 
-  def frameDedupPairs(spark: SparkSession, dir: String): DataFrame =
-    frameDedupPairsOf(chunkFrames(spark, dir))
-
   /** Per-media duplicated-frame RATIO: the share of a payload's content
     * chunks whose fingerprint also appears in at least one OTHER document
     * — the per-asset media twin of [[graft.ops.TextOps.passageDupRatioOf]]
@@ -181,9 +175,6 @@ object Multimodal {
         expr("CAST(n_dup_frames * 1000000 DIV n_frames AS BIGINT)"))
   }
 
-  def frameDupRatio(spark: SparkSession, dir: String): DataFrame =
-    frameDupRatioOf(chunkFrames(spark, dir))
-
   /** Media SIZE histogram: payload bytes in power-of-2 buckets with
     * doc/byte/frame totals per bucket — the storage-planning card a
     * multimodal ingest publishes (how much of the corpus is thumbnails
@@ -201,9 +192,6 @@ object Multimodal {
       .agg(count(lit(1)).as("n_docs"),
            sum("byte_len").cast("long").as("sum_bytes"),
            sum("n_frames").cast("long").as("sum_frames"))
-
-  def sizeHist(spark: SparkSession, dir: String): DataFrame =
-    sizeHistOf(meta(spark, dir))
 
   /** NEAR-dup frame pairs via 4-gram SimHash + pigeonhole banding — the
     * tolerance tier above [[frameDedupPairsOf]]'s exact-chunk match:
@@ -253,9 +241,6 @@ object Multimodal {
         graft.expr.SimHashN(
           expr("transform(sequence(1, greatest(length(c) - 3, 1)), " +
                "i -> substring(c, i, 4))"), 32).as("simhash"))
-
-  def frameNearDup(spark: SparkSession, dir: String): DataFrame =
-    frameNearDupOf(Feeds.table(spark, dir, "documents"))
 
   /** GUARDED frame-near-dup CLUSTERS — the production entry the exact
     * pair list ([[frameNearDupOf]]) is the oracle baseline for (r13

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,9 +43,6 @@ object Pack {
            max("doc_id").as("last_doc"))
   }
 
-  def packSequences(spark: SparkSession, dir: String): DataFrame =
-    packSequencesOf(TextOps.docsWords(spark, dir))
-
   /** Packing-efficiency readout per shard: chunk count, token mass and the
     * ppm fill factor against the chunk capacity — the number a training
     * job watches to know how much compute it wastes on padding (fill can
@@ -63,9 +60,6 @@ object Pack {
         expr(s"""CAST(shard_tokens * 1000000
                  DIV (n_chunks * ${capacity.toLong}) AS BIGINT)""")
           .as("fill_ppm"))
-
-  def packEfficiency(spark: SparkSession, dir: String): DataFrame =
-    packEfficiencyOf(packSequences(spark, dir))
 
   /** LENGTH-BUCKETED packing — the shuffle-friendly alternative to
     * sequential concat-then-chunk: docs are grouped into power-of-2
@@ -107,7 +101,4 @@ object Pack {
                  DIV (n_bins * ${capacity.toLong}) AS BIGINT)""")
           .as("fill_ppm"))
   }
-
-  def packBuckets(spark: SparkSession, dir: String): DataFrame =
-    packBucketsOf(TextOps.docsWords(spark, dir))
 }

@@ -5,28 +5,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Exact data-quality profiling — per-column row/null/distinct counts and
-  * numeric ranges, the first step of any training-data ingest. ALL columns
-  * are profiled in ONE multi-aggregate pass over the table (the distinct
-  * counts plan through a single Expand + aggregate, still one scan), then
-  * pivoted to the long (column, stats) format production profilers emit
-  * via `stack`. */
+  * numeric ranges, the first step of any training-data ingest, emitted in
+  * the long (column, stats) format production profilers use. */
 object Profile {
 
-  /** One scan: every column's aggregates in a single agg, stacked long. */
-  def numericProfile(df: DataFrame, columns: Seq[String]): DataFrame = {
-    val aggs = count(lit(1)).as("n_rows") +: columns.flatMap(c => Seq(
-      count(col(c)).as(s"${c}__nonnull"),
-      countDistinct(col(c)).as(s"${c}__distinct"),
-      min(col(c)).cast("double").as(s"${c}__min"),
-      max(col(c)).cast("double").as(s"${c}__max")))
-    val one = df.agg(aggs.head, aggs.tail: _*)
-    val rows = columns.map(c =>
-      s"'$c', n_rows, `${c}__nonnull`, `${c}__distinct`, `${c}__min`, `${c}__max`")
-      .mkString(", ")
-    one.select(expr(
-      s"stack(${columns.length}, $rows) AS " +
-        "(column, n_rows, n_nonnull, n_distinct, min_val, max_val)"))
-  }
+  /** One row per column: a union of per-column single-distinct aggregates,
+    * each branch reading only its own column — the shape of
+    * [[Audit.dqProfileOf]]. A single-distinct aggregate plans without an
+    * Expand, the same way every run; n countDistincts in one agg plan as a
+    * distinct-aggregate Expand whose grouping keys change order from run
+    * to run. */
+  def numericProfile(df: DataFrame, columns: Seq[String]): DataFrame =
+    columns.map { c =>
+      df.select(col(c))
+        .agg(count(lit(1)).as("n_rows"),
+             count(col(c)).as("n_nonnull"),
+             countDistinct(col(c)).as("n_distinct"),
+             min(col(c)).cast("double").as("min_val"),
+             max(col(c)).cast("double").as("max_val"))
+        .select(lit(c).as("column"), col("n_rows"), col("n_nonnull"),
+                col("n_distinct"), col("min_val"), col("max_val"))
+    }.reduce(_ unionAll _)
 
   /** Profile of the orders table's numeric columns. */
   def ordersProfile(spark: SparkSession, dir: String): DataFrame =

@@ -66,9 +66,6 @@ object Sampling {
       .select("doc_id", "shard", "rank")
   }
 
-  def shuffleShards(spark: SparkSession, dir: String): DataFrame =
-    shuffleShardsOf(TextOps.docs(spark, dir))
-
   /** QUALITY-WEIGHTED deterministic sampling: keep a doc with probability
     * `rate × quality` — importance sampling that thins low-quality docs
     * harder, with the same no-RNG reproducibility as [[hashSample]]. The
@@ -91,7 +88,4 @@ object Sampling {
         expr(s"CAST(floor(quality * $rate * 16777216.0) AS BIGINT)"))
       .where(col("u_hash") < col("threshold"))
       .select("doc_id", "u_hash", "quality")
-
-  def weightedSample(spark: SparkSession, dir: String): DataFrame =
-    weightedSampleOf(TextOps.qualityScore(spark, dir))
 }

@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.Memo.TruncateOps
-import graft.etl.Feeds
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,9 +47,6 @@ object Sessions {
            sum(col("qty")).as("quantity"))
   }
 
-  def sessions(spark: SparkSession, dir: String): DataFrame =
-    sessionsOf(Feeds.events(spark, dir))
-
   /** Per-event-type stats with an EXACT distinct-user count — the oracle
     * anchor for the approximate (HLL) variant below. */
   def eventTypeStatsOf(events: DataFrame): DataFrame =
@@ -58,9 +54,6 @@ object Sessions {
       .agg(count(lit(1)).as("n_events"),
            countDistinct(col("user_id").cast("long")).as("n_users"),
            sum(floor(col("value")).cast("long")).as("quantity"))
-
-  def eventTypeStats(spark: SparkSession, dir: String): DataFrame =
-    eventTypeStatsOf(Feeds.events(spark, dir))
 
   /** Sketch path: approx_count_distinct (HyperLogLog++) — at corpus scale
     * the exact distinct needs a (event_type, user_id) pre-aggregation
@@ -120,9 +113,6 @@ object Sessions {
           .as("est_users"))
   }
 
-  def kmvUsers(spark: SparkSession, dir: String): DataFrame =
-    kmvUsersOf(Feeds.events(spark, dir))
-
   /** Event-type transition counts (first-order Markov edges): for each
     * user's totally-ordered event stream, count (from_type → to_type)
     * adjacencies. The order is (second-truncated ts, event_id) — total
@@ -141,9 +131,6 @@ object Sessions {
       .agg(count(lit(1)).as("n"),
            countDistinct(col("user_id")).as("n_users"))
   }
-
-  def eventTransitions(spark: SparkSession, dir: String): DataFrame =
-    eventTransitionsOf(Feeds.events(spark, dir))
 
   /** Ordered funnel conversion: stage k counts users whose EARLIEST
     * stage-k event is at-or-after their earliest stage-(k-1) event,
@@ -168,10 +155,6 @@ object Sessions {
     }
     byUser.agg(reached.head, reached.tail: _*)
   }
-
-  /** signup → view → purchase over the events feed. */
-  def funnel(spark: SparkSession, dir: String): DataFrame =
-    funnelOf(Feeds.events(spark, dir), Seq("signup", "view", "purchase"))
 
   /** Rolling active users — DAU and trailing-`windowDays` distinct users
     * (WAU at the default 7) per activity day, plus the DAU/WAU stickiness
@@ -207,9 +190,6 @@ object Sessions {
           .as("stickiness"))
   }
 
-  def rollingActiveUsers(spark: SparkSession, dir: String): DataFrame =
-    rollingActiveUsersOf(Feeds.events(spark, dir))
-
   /** Telemetry debounce: drop an event when the SAME (user, event_type)
     * fired within `windowSec` before it — the standard double-fire /
     * client-retry cleaner that runs ahead of sessionization and counters.
@@ -233,9 +213,6 @@ object Sessions {
       .select("event_id", "user_id", "ts2", "event_type")
   }
 
-  def debounce(spark: SparkSession, dir: String): DataFrame =
-    debounceOf(Feeds.events(spark, dir))
-
   /** Per-user event-rate histogram in power-of-2 buckets (bucket =
     * [[ilog2]] of events-per-user) — the bot/outlier readout:
     * a heavy tail of users thousands of buckets above the median is
@@ -248,9 +225,6 @@ object Sessions {
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_users"), sum("n_events").as("sum_events"),
            min("n_events").as("min_events"), max("n_events").as("max_events"))
-
-  def eventRateHist(spark: SparkSession, dir: String): DataFrame =
-    eventRateHistOf(Feeds.events(spark, dir))
 
   /** Hour-of-day × event-type seasonality profile: events, exact distinct
     * users and quantity per (hour, type) — the diurnal-load readout
@@ -270,9 +244,6 @@ object Sessions {
            countDistinct("user_id").as("n_users"),
            sum("qty").as("quantity"))
 
-  def hourProfile(spark: SparkSession, dir: String): DataFrame =
-    hourProfileOf(Feeds.events(spark, dir))
-
   /** Per-user LIFECYCLE mart: first/last activity, event count, exact
     * active-day count and calendar span — the base frame of churn and
     * engagement models. One partial-agg groupBy on user_id (the distinct
@@ -290,9 +261,6 @@ object Sessions {
       .withColumn("span_days",
         datediff(to_date(col("last_ts")), to_date(col("first_ts")))
           .cast("long"))
-
-  def userLifecycle(spark: SparkSession, dir: String): DataFrame =
-    userLifecycleOf(Feeds.events(spark, dir))
 
   /** Daily PEAK-CONCURRENCY profile over the gap-sessions: the classic
     * sweep-line — each session contributes a +1 boundary at start and a
@@ -331,9 +299,6 @@ object Sessions {
       .agg(expr("CAST(count(*) DIV 2 AS BIGINT)").as("n_sessions"),
            max("conc").cast("long").as("max_concurrent"))
   }
-
-  def sessionConcurrency(spark: SparkSession, dir: String): DataFrame =
-    sessionConcurrencyOf(sessions(spark, dir))
 
   /** Time-to-convert between adjacent funnel stages: for users who
     * convert IN ORDER (same condition as [[funnelOf]] — each stage's
@@ -383,10 +348,6 @@ object Sessions {
           .as("p90_sec"))
   }
 
-  def funnelTimeToConvert(spark: SparkSession, dir: String): DataFrame =
-    funnelTimeToConvertOf(Feeds.events(spark, dir),
-                          Seq("signup", "view", "purchase"))
-
   /** Per-user event-type diversity entropy — the bot / stuck-client
     * detector: a user whose events concentrate on one type scores 0, a
     * user spread evenly across the catalog scores high: the integer
@@ -403,9 +364,6 @@ object Sessions {
       .groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("n_t")), "user_id", "n_t", "n_events")(
       sum("n_t").as("n_events"), count(lit(1)).as("n_types"))
-
-  def eventEntropy(spark: SparkSession, dir: String): DataFrame =
-    eventEntropyOf(Feeds.events(spark, dir))
 
   /** Session-DURATION histogram in power-of-2 second buckets (bucket =
     * [[ilog2]] of max(dur, 1) — zero-length single-event sessions land in
@@ -427,9 +385,6 @@ object Sessions {
       .agg(count(lit(1)).as("n_sessions"),
            sum("dur_sec").cast("long").as("sum_dur_sec"),
            max("dur_sec").cast("long").as("max_dur_sec"))
-
-  def sessionDurationHist(spark: SparkSession, dir: String): DataFrame =
-    sessionDurationHistOf(sessions(spark, dir))
 
   /** User-burstiness histogram: users bucketed by ⌊log₂(mean
     * inter-event gap in seconds)⌋. Separates steady hourly users from
@@ -459,9 +414,6 @@ object Sessions {
            sum(col("n_gaps")).as("sum_gaps"),
            sum(col("sum_gap")).as("sum_gap_sec"))
   }
-
-  def userBurstiness(spark: SparkSession, dir: String): DataFrame =
-    userBurstinessOf(Feeds.events(spark, dir))
 
   /** Per-user event-sequence surprisal under the corpus's first-order
     * Markov model, as a quarter-bit mean histogram: each transition
@@ -507,9 +459,6 @@ object Sessions {
       .agg(count(lit(1)).as("n_users"), sum(col("n_trans")).as("sum_trans"))
   }
 
-  def eventSeqSurprisal(spark: SparkSession, dir: String): DataFrame =
-    eventSeqSurprisalOf(Feeds.events(spark, dir))
-
   /** Weekly telemetry-value profile: events, distinct users, and
     * floor-integer value sum/min/max per week — the drift card that
     * catches a broken emitter (value unit change, user-id collapse)
@@ -530,9 +479,6 @@ object Sessions {
            sum(col("v")).as("v_sum"),
            min(col("v")).as("v_min"),
            max(col("v")).as("v_max"))
-
-  def eventValueWeekly(spark: SparkSession, dir: String): DataFrame =
-    eventValueWeeklyOf(Feeds.events(spark, dir))
 
   /** Three-sigma value outliers per event type: share of events whose
     * telemetry value sits beyond mean ± 3σ of its type — the robust-DQ
@@ -569,9 +515,6 @@ object Sessions {
         expr("CAST(n_outliers * 1000000 DIV n_events AS BIGINT)"))
   }
 
-  def valueSigmaOutliers(spark: SparkSession, dir: String): DataFrame =
-    valueSigmaOutliersOf(Feeds.events(spark, dir))
-
   /** Per-event-type ⌊log2⌋ inter-event-gap histogram over same-(user,
     * type) streams — the latency-shape card behind debounce/session
     * thresholds (a bimodal gap distribution says one timeout cannot fit
@@ -595,8 +538,5 @@ object Sessions {
         ilog2(greatest(col("gap_s"), lit(1))).as("bucket"))
       .agg(count(lit(1)).as("n_gaps"))
   }
-
-  def gapHistByType(spark: SparkSession, dir: String): DataFrame =
-    gapHistByTypeOf(Feeds.events(spark, dir))
 
 }

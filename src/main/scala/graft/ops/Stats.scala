@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Memo.TruncateOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,10 +59,6 @@ object Stats {
         (col("n_vocab") * col("sxx") - col("sx") * col("sx")).as("slope_den"))
   }
 
-  def zipfFit(spark: SparkSession, dir: String): DataFrame =
-    zipfFitOf(TextOps.docsWords(spark, dir)
-      .select(col("doc_id"), explode(col("words")).as("w")))
-
   /** Per-source Kolmogorov–Smirnov drift of the doc-length distribution
     * against the whole corpus: ks_num = max over observed lengths of
     * |cdf_source·n_total − cdf_all·n_source| (the KS statistic scaled by
@@ -108,9 +104,6 @@ object Stats {
           .as("ks_ppm"))
   }
 
-  def ksSourceDrift(spark: SparkSession, dir: String): DataFrame =
-    ksSourceDriftOf(graft.etl.Feeds.table(spark, dir, "documents"))
-
   /** Per-source exact second-order moments of (chars, tokens): n, Σx, Σy,
     * Σx², Σy², Σxy as BIGINTs — the sufficient statistics for mean,
     * variance and Pearson correlation of length-vs-tokenization, kept as
@@ -133,10 +126,6 @@ object Stats {
            sum(x * y).as("sxy"))
   }
 
-  def lengthTokenMoments(spark: SparkSession, dir: String): DataFrame =
-    lengthTokenMomentsOf(TextOps.textStats(spark, dir),
-      graft.etl.Feeds.table(spark, dir, "documents"))
-
   /** Per-bit ones-rate of the 64-bit SimHash across the corpus — the
     * sketch-health monitor: a healthy hash keeps every bit near 500 000
     * ppm; a skewed bit (bad hash mixing, degenerate vocabulary) silently
@@ -157,9 +146,6 @@ object Stats {
       .withColumn("ones_ppm",
         expr("CAST(n_ones * 1000000 DIV n_docs AS BIGINT)"))
 
-  def simhashBitBalance(spark: SparkSession, dir: String): DataFrame =
-    simhashBitBalanceOf(Dedup.simhash64(spark, dir))
-
   /** Top-k shingles by DISTINCT-document frequency — the boilerplate
     * detector: navigation chrome, license headers and template footers
     * are exactly the shingles that recur across many documents, and they
@@ -179,11 +165,6 @@ object Stats {
         expr("CAST(n_docs * 1000000 DIV n_total AS BIGINT)").as("df_ppm"))
   }
 
-  def boilerplateShingles(spark: SparkSession, dir: String): DataFrame =
-    boilerplateShinglesOf(TextOps.shingles(spark, dir),
-      graft.etl.Feeds.table(spark, dir, "documents")
-        .agg(count(lit(1)).as("n_total")))
-
   /** Per-source stopword-token rate (ppm) — the coarse register/quality
     * mix card: natural prose sits in a band, code/tables/navigation fall
     * far below it, so a source whose stop_ppm drifts is changing WHAT it
@@ -198,10 +179,6 @@ object Stats {
            sum(col("stop_cnt")).as("sum_stop"))
       .withColumn("stop_ppm",
         expr("CAST(sum_stop * 1000000 DIV sum_tokens AS BIGINT)"))
-
-  def stopwordProfile(spark: SparkSession, dir: String): DataFrame =
-    stopwordProfileOf(TextOps.textStats(spark, dir),
-      graft.etl.Feeds.table(spark, dir, "documents"))
 
   /** Per-source exact-dup token inflation — the "what does dedup save
     * HERE" card: token volume per source vs the volume surviving exact
@@ -234,9 +211,6 @@ object Stats {
         expr("""CAST((tokens_total - tokens_keep) * 1000000
                 DIV tokens_total AS BIGINT)"""))
 
-  def dupInflation(spark: SparkSession, dir: String): DataFrame =
-    dupInflationOf(TextOps.docs(spark, dir), TextOps.textStats(spark, dir))
-
   /** Token-length histogram in BYTES (octet_length on both engines —
     * byte semantics are identical across engines for ANY Unicode input,
     * unlike length(), which counts UTF-16 units in Spark and code
@@ -253,10 +227,6 @@ object Stats {
       .groupBy("len_bytes")
       .agg(count(lit(1)).as("n_tokens"),
            countDistinct(col("w")).as("n_words"))
-
-  def tokenLenHist(spark: SparkSession, dir: String): DataFrame =
-    tokenLenHistOf(TextOps.docsWords(spark, dir)
-      .select(col("doc_id"), explode(col("words")).as("w")))
 
   /** Size distribution of the deterministic training shards — the
     * skew monitor for the (shard, rank) addressing scheme: a healthy
@@ -275,9 +245,6 @@ object Stats {
       .withColumn("skew_ppm",
         expr("CAST(max_sz * 1000000 * n_shards DIV n_docs AS BIGINT)"))
 
-  def shardSkew(spark: SparkSession, dir: String): DataFrame =
-    shardSkewOf(Sampling.shuffleShards(spark, dir))
-
   /** Document-frequency histogram: vocabulary words bucketed by
     * [[ilog2]] of df, with the word
     * and posting counts per bucket — the IDF-side readout that sizes
@@ -292,10 +259,6 @@ object Stats {
       .select(ilog2(greatest(col("df"), lit(1))).as("bucket"), col("df"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_words"), sum("df").as("sum_df"))
-
-  def tokenDocFreq(spark: SparkSession, dir: String): DataFrame =
-    tokenDocFreqOf(TextOps.docsWords(spark, dir)
-      .select(col("doc_id"), explode(col("words")).as("w")).distinct())
 
   /** Heaps-law vocabulary growth curve: per ⌊log₂ doc_id⌋ ingestion
     * bucket, how many NEW words first appear there, plus the cumulative
@@ -316,10 +279,6 @@ object Stats {
       sum("new_words").over(Window.orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
-
-  def heapsLaw(spark: SparkSession, dir: String): DataFrame =
-    heapsLawOf(TextOps.docsWords(spark, dir)
-      .select(col("doc_id"), explode(col("words")).as("w")).distinct())
 
   /** Quality-vs-length Pearson correlation (one row): does the quality
     * score just proxy document length? Computed from exact integer
@@ -356,9 +315,5 @@ object Stats {
                          - CAST(s_l AS DOUBLE) * CAST(s_l AS DOUBLE)),
                     0.0D)""").as("corr"))
   }
-
-  def qualityLenCorr(spark: SparkSession, dir: String): DataFrame =
-    qualityLenCorrOf(TextOps.qualityScore(spark, dir),
-                     TextOps.textStats(spark, dir))
 
 }

@@ -100,9 +100,6 @@ object TextOps {
            min("n_tokens").as("min_tokens"),
            max("n_tokens").as("max_tokens"))
 
-  def docLenHist(spark: SparkSession, dir: String): DataFrame =
-    docLenHistOf(textStats(spark, dir))
-
   /** Per-language scores `<p>_en` … `<p>_es`, one `score(marker)` per
     * language, and their pinned argmax: a tie goes to the language listed
     * first (en ≥ de ≥ fr ≥ es), so an all-zero doc predicts `en`. Both
@@ -138,9 +135,6 @@ object TextOps {
     langArgmaxOf(docsWords, "s", wordMarkers)(
       ws => s"size(filter(words, w -> w IN ($ws)))")
 
-  def langId(spark: SparkSession, dir: String): DataFrame =
-    langIdOf(docsWords(spark, dir))
-
   /** Language-ID confusion matrix — predicted vs labeled language counts,
     * the accuracy readout every classifier-in-the-pipeline ships with
     * (which languages leak into which). One partial-agg groupBy on the
@@ -149,9 +143,6 @@ object TextOps {
   def langConfusionOf(langId: DataFrame): DataFrame =
     langId.groupBy("lang", "pred_lang")
       .agg(count(lit(1)).as("n_docs"))
-
-  def langConfusion(spark: SparkSession, dir: String): DataFrame =
-    langConfusionOf(langId(spark, dir))
 
   /** Character-n-gram language ID — the classic n-gram-profile heuristic
     * at its minimum: per-language counts of characteristic character
@@ -171,9 +162,6 @@ object TextOps {
   def langIdNgramOf(docsNorm: DataFrame): DataFrame =
     langArgmaxOf(docsNorm, "t", triMarkers)(
       pat => s"regexp_count(norm, '$pat')")
-
-  def langIdNgram(spark: SparkSession, dir: String): DataFrame =
-    langIdNgramOf(docs(spark, dir))
 
   /** The adjacent-word window over `words`: for each start offset i in
     * 0..size(words) − n, one element `gram(words[i], …, words[i+n−1])`
@@ -266,9 +254,6 @@ object TextOps {
         Seq("doc_id"))
       .select("doc_id", "md5_norm", "min_shingle_hash")
 
-  def fingerprint(spark: SparkSession, dir: String): DataFrame =
-    fingerprintOf(docs(spark, dir), shingles(spark, dir))
-
   /** Corpus word-frequency top-k — the vocabulary/Zipf profile a tokenizer
     * build starts from. Two-phase count (map-side partial agg on word),
     * then the global [[topKHead]] (TakeOrdered, no full sort): rank by
@@ -278,9 +263,6 @@ object TextOps {
     topKHead(docsWords.select(explode(col("words")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n")), k, "rank")(
       col("n").desc, col("w"))
-
-  def wordFreq(spark: SparkSession, dir: String): DataFrame =
-    wordFreqOf(docsWords(spark, dir))
 
   /** Per-doc top-k terms by TF-IDF — the term-salience profile feeding
     * keyword extraction / topic labeling in a curation pipeline.
@@ -314,9 +296,6 @@ object TextOps {
       .where(col("rank") <= k)
       .select("doc_id", "w", "tf", "df", "score", "rank")
   }
-
-  def tfidfTop(spark: SparkSession, dir: String): DataFrame =
-    tfidfTopOf(docsWords(spark, dir))
 
   /** BM25-shaped relevance ranking of the corpus against a fixed query —
     * the retrieval scorer a data pipeline uses for "find training docs
@@ -373,10 +352,6 @@ object TextOps {
            count(lit(1)).as("n_terms_hit"))
     topKHead(scored, k, "rank")(col("score").desc, col("doc_id"))
   }
-
-  /** Query form: a fixed 3-term probe present in the synthetic corpus. */
-  def bm25Top(spark: SparkSession, dir: String): DataFrame =
-    bm25TopOf(docsWords(spark, dir), Seq("spark", "hash", "join"))
 
   /** Benchmark DECONTAMINATION — the curation step that removes training
     * docs overlapping an eval set: count per doc the distinct 3-gram
@@ -444,9 +419,6 @@ object TextOps {
             ELSE CAST(array() AS ARRAY<STRING>) END"""))
       .as(Seq("p_idx", "passage")))
 
-  def passages(spark: SparkSession, dir: String): DataFrame =
-    passagesOf(docsWords(spark, dir))
-
   /** Per-passage occurrence stats keyed on the md5 of the passage text —
     * the groupBy shuffles 32-byte hashes, never passage strings. */
   def passageStatsOf(passages: DataFrame): DataFrame =
@@ -460,9 +432,6 @@ object TextOps {
     * duplicated-passage inventory (hash, spread, multiplicity, keeper). */
   def dedupPassagesOf(passages: DataFrame): DataFrame =
     passageStatsOf(passages).where(col("n_docs") >= 2)
-
-  def dedupPassages(spark: SparkSession, dir: String): DataFrame =
-    dedupPassagesOf(passages(spark, dir))
 
   /** Per-document duplicated-passage ratio — the filter signal: a doc whose
     * passages mostly exist elsewhere is boilerplate even if its full text
@@ -479,9 +448,6 @@ object TextOps {
         col("n_dup").cast("double") / col("n_passages").cast("double"))
   }
 
-  def passageDupRatio(spark: SparkSession, dir: String): DataFrame =
-    passageDupRatioOf(passages(spark, dir))
-
   /** Corpus word-BIGRAM top-k — the adjacent-pair statistics a BPE-style
     * tokenizer merge step starts from (here at word granularity: the most
     * frequent pair is the first merge candidate). Same two-phase
@@ -490,9 +456,6 @@ object TextOps {
     topKHead(docsWords.select(explode(bigrams).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("n")), k, "rank")(
       col("n").desc, col("bigram"))
-
-  def bigramFreq(spark: SparkSession, dir: String): DataFrame =
-    bigramFreqOf(docsWords(spark, dir))
 
   /** Collocation mining — adjacent word pairs ranked by a pointwise-mutual-
     * information surrogate. Raw bigram frequency (above) surfaces "of the";
@@ -534,9 +497,6 @@ object TextOps {
       .select(col("rank"), col("w1"), col("w2"), col("n_pair"), col("pmi"))
   }
 
-  def collocPmi(spark: SparkSession, dir: String): DataFrame =
-    collocPmiOf(docsWords(spark, dir))
-
   /** Vocabulary coverage curve — for the top-`k` words by corpus frequency,
     * the cumulative fraction of ALL tokens they cover. The Zipf head-mass
     * curve a tokenizer/vocab designer reads to size a vocabulary.
@@ -563,9 +523,6 @@ object TextOps {
         (col("cum_n").cast("double") / col("n_total").cast("double"))
           .as("coverage"))
   }
-
-  def vocabCoverage(spark: SparkSession, dir: String): DataFrame =
-    vocabCoverageOf(docsWords(spark, dir))
 
   /** Per-language percentile-rank normalization of the quality score — the
     * curation-side prerequisite for "keep the top X% per language" filters
@@ -641,9 +598,6 @@ object TextOps {
       .select("doc_id", "rank_bm25", "rank_cov", "rrf_score", "rank")
   }
 
-  def rrfFusion(spark: SparkSession, dir: String): DataFrame =
-    rrfFusionOf(docsWords(spark, dir), Seq("spark", "hash", "join"))
-
   /** Tokenizer fertility per language: chars-per-token (ppm-exact) from
     * whole-corpus sums — the readout that tells you which languages your
     * tokenizer fragments (high fertility → more tokens per char of text →
@@ -670,9 +624,6 @@ object TextOps {
         expr("""CAST((sum_chars DIV sum_tokens) * 1000000
                 + ((sum_chars % sum_tokens) * 1000000) DIV sum_tokens
                 AS BIGINT)"""))
-
-  def tokenFertility(spark: SparkSession, dir: String): DataFrame =
-    tokenFertilityOf(docsWords(spark, dir))
 
   /** Per-doc unigram surprisal under the corpus's own unigram LM — the
     * cheap perplexity proxy quality filters use before any neural scorer
@@ -703,9 +654,6 @@ object TextOps {
         expr("CAST(surprisal * 1000000 DIV n_tokens AS BIGINT)"))
   }
 
-  def unigramSurprisal(spark: SparkSession, dir: String): DataFrame =
-    unigramSurprisalOf(docsWords(spark, dir))
-
   /** Per-doc character-diversity entropy surrogate — the gibberish /
     * binary-junk detector that runs before any tokenizer: a doc whose
     * characters concentrate on a few symbols scores near zero. The score
@@ -730,9 +678,6 @@ object TextOps {
       "doc_id", "n_c", "n_chars")(
       sum("n_c").as("n_chars"), count(lit(1)).as("n_distinct_chars"))
 
-  def charEntropy(spark: SparkSession, dir: String): DataFrame =
-    charEntropyOf(docs(spark, dir))
-
   /** Per-doc n-gram NOVELTY: the ppm fraction of a doc's distinct
     * 3-gram shingles that appear in NO other document (corpus df = 1).
     * The inverse readout of the dedup stack — low novelty flags
@@ -753,9 +698,6 @@ object TextOps {
            count(when(col("sh_df") === 1L, lit(1))).as("n_unique"))
       .withColumn("novelty_ppm", expr("n_unique * 1000000L div n_sh"))
   }
-
-  def ngramNovelty(spark: SparkSession, dir: String): DataFrame =
-    ngramNoveltyOf(shingles(spark, dir))
 
   /** INCREMENTAL novelty: per new-batch doc, the ppm of its shingles
     * absent from the HISTORY's shingle set — the daily-admission
@@ -781,9 +723,6 @@ object TextOps {
       .withColumn("novelty_ppm", expr("n_new * 1000000L div n_sh"))
   }
 
-  def ngramNoveltyInc(spark: SparkSession, dir: String): DataFrame =
-    ngramNoveltyIncOf(shingles(spark, dir))
-
   /** Per-source charset profile: ASCII-printable vs non-ASCII code-point
     * counts and the non-ASCII ppm — the encoding-junk detector a crawl
     * pipeline runs per source (a source whose non-ASCII ppm jumps
@@ -804,9 +743,6 @@ object TextOps {
            sum("n_non_ascii").as("n_non_ascii"))
       .withColumn("non_ascii_ppm",
         expr("n_non_ascii * 1000000L div (n_ascii + n_non_ascii)"))
-
-  def charsetProfile(spark: SparkSession, dir: String): DataFrame =
-    charsetProfileOf(docs(spark, dir))
 
   /** Train/test token-distribution drift over the top-`k` training words:
     * per-split relative frequency in ppm and their signed difference —
@@ -847,10 +783,6 @@ object TextOps {
         (col("f_test_ppm") - col("f_train_ppm")).cast("long"))
   }
 
-  def tokenFreqDrift(spark: SparkSession, dir: String): DataFrame =
-    tokenFreqDriftOf(docsWords(spark, dir),
-                     Sampling.trainValTestSplit(spark, dir))
-
   /** Per-doc BIGRAM surprisal under the corpus's own bigram LM — one
     * order up from [[unigramSurprisalOf]]: the conditional surprisal of
     * each adjacent pair, s(w₁w₂) = [[ilog2]](n(w₁·)) − ilog2(n(w₁w₂)),
@@ -883,9 +815,6 @@ object TextOps {
         expr("CAST(surprisal * 1000000 DIV n_bigrams AS BIGINT)"))
   }
 
-  def bigramSurprisal(spark: SparkSession, dir: String): DataFrame =
-    bigramSurprisalOf(docsWords(spark, dir))
-
   /** Per-doc lexical diversity — token count, type (distinct-token)
     * count, and the type-token ratio in ppm. The repetition detector's
     * cheap cousin: templated or keyword-stuffed docs have few types per
@@ -901,9 +830,6 @@ object TextOps {
       size(array_distinct(col("words"))).cast("long").as("n_types"))
       .withColumn("ttr_ppm",
         expr("CAST(n_types * 1000000 DIV n_tokens AS BIGINT)"))
-
-  def lexicalDiversity(spark: SparkSession, dir: String): DataFrame =
-    lexicalDiversityOf(docsWords(spark, dir))
 
   /** Per-language length-trim fences: DISCRETE p5/p95 token-length picks
     * (order statistics at rank ⌈n/20⌉ / ⌈19n/20⌉ — the same
@@ -942,9 +868,6 @@ object TextOps {
           .as("n_kept"))
   }
 
-  def lengthTrim(spark: SparkSession, dir: String): DataFrame =
-    lengthTrimOf(docsWords(spark, dir))
-
   /** Per-source bigram (transition) diversity: total vs distinct
     * adjacent-pair counts and their ppm ratio — the source-grain twin of
     * [[lexicalDiversityOf]] one Markov order up. A source whose
@@ -964,9 +887,6 @@ object TextOps {
            count(lit(1)).as("n_distinct_bigrams"))
       .withColumn("diversity_ppm",
         expr("CAST(n_distinct_bigrams * 1000000 DIV n_bigrams AS BIGINT)"))
-
-  def sourceBigramDiversity(spark: SparkSession, dir: String): DataFrame =
-    sourceBigramDiversityOf(docsWords(spark, dir))
 
   /** CONTRASTIVE source vocabulary: per source, the top-`k` words that
     * are frequent IN this source relative to the rest of the corpus —
@@ -999,9 +919,6 @@ object TextOps {
       .select("source", "rank", "w", "n_sw", "n_rest", "score")
   }
 
-  def contrastiveTerms(spark: SparkSession, dir: String): DataFrame =
-    contrastiveTermsOf(docsWords(spark, dir))
-
   /** Per-source hapax-legomena profile: vocabulary size, the count of
     * words occurring exactly once IN THAT SOURCE, and two ppm ratios —
     * hapax share of the vocabulary (Zipf-tail health: natural text sits
@@ -1031,9 +948,6 @@ object TextOps {
         expr("hapax * 1000000 DIV n_tokens").cast("long")
           .as("hapax_token_ppm"))
 
-  def hapaxRate(spark: SparkSession, dir: String): DataFrame =
-    hapaxRateOf(docsWords(spark, dir))
-
   /** Per-language readability profile: characters-per-word and
     * words-per-sentence (sentences ≈ period count + 1), as exact
     * integer centiratios — the Flesch-style complexity readout a corpus
@@ -1061,8 +975,5 @@ object TextOps {
           .as("chars_per_word_c"),
         expr("CAST(sum_tok * 100 DIV sum_sent AS BIGINT)")
           .as("words_per_sent_c"))
-
-  def readability(spark: SparkSession, dir: String): DataFrame =
-    readabilityOf(docsWords(spark, dir))
 
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.etl.Feeds
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -70,11 +69,6 @@ object TpchShapes {
               "unit_cost_c")
   }
 
-  def minCostSupplier(spark: SparkSession, dir: String): DataFrame =
-    minCostSupplierOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "supplier"), Feeds.table(spark, dir, "nation"),
-      Feeds.table(spark, dir, "region"), Feeds.table(spark, dir, "part"))
-
   /** Important-stock share (TPC-H Q11 shape): per supplier nation, the
     * parts whose supplied value exceeds `mult`× the nation's average
     * part value — Q11's HAVING-over-scalar-subquery, with the fixed
@@ -112,10 +106,6 @@ object TpchShapes {
       .select("n_name", "p_key", "value_c")
   }
 
-  def importantPartValue(spark: SparkSession, dir: String): DataFrame =
-    importantPartValueOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "supplier"), Feeds.table(spark, dir, "nation"))
-
   /** Late-shipment priority classes (TPC-H Q12 shape): lines shipped more
     * than `lateDays` after order date, bucketed by ship year, split into
     * high-priority (1-URGENT/2-HIGH) vs low — Q12's shipmode×priority
@@ -137,10 +127,6 @@ object TpchShapes {
       .agg(sum(when(hi, 1L).otherwise(0L)).as("high_line_count"),
            sum(when(hi, 0L).otherwise(1L)).as("low_line_count"))
   }
-
-  def priorityShipClasses(spark: SparkSession, dir: String): DataFrame =
-    priorityShipClassesOf(Feeds.table(spark, dir, "lineitem"),
-                          Feeds.table(spark, dir, "orders"))
 
   /** Supplier count per part profile (TPC-H Q16 shape): distinct
     * suppliers observed shipping each (brand, type, size) combination,
@@ -170,10 +156,6 @@ object TpchShapes {
       .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
   }
 
-  def partSupplierCnt(spark: SparkSession, dir: String): DataFrame =
-    partSupplierCntOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "part"), Feeds.table(spark, dir, "supplier"))
-
   /** Discounted revenue under OR-of-ANDs (TPC-H Q19 shape): three
     * (brand, size-range, qty-range) disjuncts — the predicate Catalyst
     * must keep as one join filter rather than three scans.
@@ -196,10 +178,6 @@ object TpchShapes {
            coalesce(sum(discPrice), lit(java.math.BigDecimal.ZERO))
              .cast("double").as("revenue"))
   }
-
-  def discountedRevenue(spark: SparkSession, dir: String): DataFrame =
-    discountedRevenueOf(Feeds.table(spark, dir, "lineitem"),
-                        Feeds.table(spark, dir, "part"))
 
   /** Dominant suppliers (TPC-H Q20 shape): suppliers shipping more than
     * 2× the average supplier share of a multi-supplier part's total
@@ -238,10 +216,6 @@ object TpchShapes {
       .groupBy("s_name", "n_name")
       .agg(count(lit(1)).as("n_dominant_parts"))
   }
-
-  def dominantSuppliers(spark: SparkSession, dir: String): DataFrame =
-    dominantSuppliersOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "supplier"), Feeds.table(spark, dir, "nation"))
 
   /** Sole-late supplier (TPC-H Q21 shape): per supplier, the count of
     * multi-supplier orders where THAT supplier shipped later than
@@ -293,9 +267,4 @@ object TpchShapes {
       .groupBy("s_name", "n_name")
       .agg(count(lit(1)).as("numwait"))
   }
-
-  def lateOnlySupplier(spark: SparkSession, dir: String): DataFrame =
-    lateOnlySupplierOf(Feeds.table(spark, dir, "lineitem"),
-      Feeds.table(spark, dir, "orders"), Feeds.table(spark, dir, "supplier"),
-      Feeds.table(spark, dir, "nation"))
 }

@@ -183,9 +183,6 @@ object Vectors {
       .agg(count(lit(1)).as("n_vecs"),
            min("n2").as("min_n2"), max("n2").as("max_n2"))
 
-  def normHist(spark: SparkSession, dir: String): DataFrame =
-    normHistOf(quantized(spark, dir))
-
   /** Metadata-FILTERED brute-force cosine top-k: candidates restricted to
     * the query's own label — the filtered-search contract every vector
     * store ships (search only `lang='en'`, only this tenant, …). The
@@ -264,7 +261,7 @@ object Vectors {
   // r18 packed these into one hand-offset Int (9·2^20+iters, ...), where
   // an out-of-range caller value silently collided into a frame with a
   // different schema (r18 ADVICE).
-  private def quantizedCached(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def quantizedCached(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "vectors.quantized") {
       graft.Memo.pin(quantized(spark, dir))
     }
@@ -1049,9 +1046,6 @@ object Vectors {
            sum(expr("q * q")).as("sumsq_q"))
       .withColumn("mean_q", expr("sum_q div n_vecs"))
 
-  def embDimProfile(spark: SparkSession, dir: String): DataFrame =
-    embDimProfileOf(quantizedCached(spark, dir))
-
   /** Embedding ANISOTROPY: ‖Σv‖² / (N · Σ‖v‖²) in ppm — the standard
     * mean-direction concentration readout (≈0 for isotropic embeddings;
     * →1e6 when every vector points the same way, the degenerate "cone"
@@ -1082,9 +1076,6 @@ object Vectors {
                 AS BIGINT)""").as("aniso_ppm"))
   }
 
-  def embAnisotropy(spark: SparkSession, dir: String): DataFrame =
-    embAnisotropyOf(quantizedCached(spark, dir))
-
   /** Per-LABEL cohesion: the [[embAnisotropyOf]] ratio grouped by label —
     * ‖Σ_label v‖² / (N_label · Σ_label ‖v‖²) in ppm. High cohesion means
     * the label's vectors point the same way (a tight class cluster);
@@ -1109,9 +1100,6 @@ object Vectors {
                 / (CAST(n_vecs AS DOUBLE) * CAST(sum_norm2 AS DOUBLE)))
                 AS BIGINT)""").as("cohesion_ppm"))
   }
-
-  def embLabelCohesion(spark: SparkSession, dir: String): DataFrame =
-    embLabelCohesionOf(quantizedCached(spark, dir))
 
   /** PQ DISTORTION per label: the quantization error the compressed index
     * carries — Σ‖v − reconstruct(codes(v))‖² over each label's vectors,
@@ -1139,9 +1127,6 @@ object Vectors {
         expr("""CAST(CAST(sum_d2 AS DECIMAL(38,0)) * 1000000
                 div CAST(sum_norm2 AS DECIMAL(38,0)) AS BIGINT)"""))
 
-  def pqDistortion(spark: SparkSession, dir: String): DataFrame =
-    pqDistortionOf(pqCodes(spark, dir), quantizedCached(spark, dir))
-
   /** Mean reciprocal rank of the IVF-PQ serving path against the exact
     * top-1 — the rank-SENSITIVE eval beside recall@k: recall says whether
     * the true neighbor appears anywhere in the top-k, MRR says WHERE
@@ -1166,10 +1151,6 @@ object Vectors {
       .withColumn("mrr_ppm",
         expr("CAST(sum_rr_ppm DIV n_queries AS BIGINT)"))
   }
-
-  def annMrr(spark: SparkSession, dir: String): DataFrame =
-    annMrrOf(annCosineTopK(spark, dir, DefaultK),
-             ivfPqTopK(spark, dir, DefaultK))
 
   /** kNN-graph MUTUALITY rate: of the exact top-k edges whose candidate
     * is itself a query vector (the evaluable subset — both directions
@@ -1210,7 +1191,7 @@ object Vectors {
   /** PRINCIPAL-DIRECTION profile: one exact power-iteration step
     * y = Σᵢ (qvᵢ·1) · qvᵢ from the all-ones probe over the
     * integer-quantized vectors, reporting the top-k dimensions by |y| —
-    * the anisotropy readout with a DIRECTION: [[embAnisotropy]] says how
+    * the anisotropy readout with a DIRECTION: [[embAnisotropyOf]] says how
     * concentrated the space is, this says WHERE (which dimensions carry
     * the rogue common direction that mean-centering / ABTT whitening
     * would remove). All-integer (micro-unit products), so bit-exact
@@ -1236,9 +1217,6 @@ object Vectors {
         Window.orderBy(abs(col("y")).desc, col("dim"))).cast("long"))
       .select("dim", "y", "rank")
   }
-
-  def principalDims(spark: SparkSession, dir: String): DataFrame =
-    principalDimsOf(quantizedCached(spark, dir))
 
   /** Semantic clusters over the mutual-kNN graph of the eval-query set:
     * connected components of the edges where a retrieves b AND b
@@ -1359,9 +1337,6 @@ object Vectors {
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_pairs"))
 
-  def cosScoreHist(spark: SparkSession, dir: String): DataFrame =
-    cosScoreHistOf(quantizedCached(spark, dir))
-
   /** RANK-stability monitor: per query, discordant pairs between the
     * exact cosine top-k order and the PQ-ADC top-k order, over the
     * candidates BOTH lists retain — the Kendall-tau-style readout that
@@ -1390,11 +1365,8 @@ object Vectors {
              1L).otherwise(0L)).as("n_discordant"))
   }
 
-  def rankStability(spark: SparkSession, dir: String): DataFrame =
-    rankStabilityOf(annCosineTopK(spark, dir), pqAdcTopK(spark, dir))
-
   /** SAMPLED rank-stability — the fixed-budget production shape of
-    * [[rankStability]], whose full form COMPOSES the two quadratic
+    * [[rankStabilityOf]], whose full form COMPOSES the two quadratic
     * exactness baselines (brute-force exact top-k × flat-ADC top-k; 64×
     * probe: 300) and stays the documented monitor-of-record. Here the
     * md5-ranked `sampleN` eval queries (the same deterministic draw as

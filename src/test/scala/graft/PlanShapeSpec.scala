@@ -73,7 +73,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("JSON props extraction reads only (event_type, props) from events") {
-    val scans = scansOf(ops.Analytics.propsJsonStats(spark, d), "events")
+    val scans = scansOf(SparkEntry.queries("q_props_json")(spark, d), "events")
     assert(scans.nonEmpty)
     for (s <- scans)
       assert(s.requiredSchema.fieldNames.toSet == Set("event_type", "props"),
@@ -81,7 +81,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("domain quota reads only (doc_id, source) from documents") {
-    val scans = scansOf(ops.Corpus.domainQuota(spark, d), "documents")
+    val scans = scansOf(SparkEntry.queries("q_domain_quota")(spark, d), "documents")
     assert(scans.nonEmpty)
     for (s <- scans)
       assert(s.requiredSchema.fieldNames.toSet == Set("doc_id", "source"),
@@ -110,10 +110,25 @@ class PlanShapeSpec extends SparkSpec {
     // union read the SAME total bytes (each branch prunes to its one
     // column) without the row multiplication — the invariant to pin is
     // column pruning per branch, not scan count.
-    val scans = scansOf(ops.Audit.dqProfile(spark, d), "orders")
+    val scans = scansOf(SparkEntry.queries("q_dq_profile")(spark, d), "orders")
     assert(scans.size == 6, s"${scans.size} scans of orders")
     assert(scans.forall(_.requiredSchema.fieldNames.length == 1),
       scans.map(_.requiredSchema.fieldNames.mkString(",")).mkString(";"))
+  }
+
+  test("orders profile plans no Expand, one single-column scan per column") {
+    // three countDistincts in one agg plan as a distinct-aggregate Expand
+    // whose grouping keys change order from run to run; a union of
+    // single-distinct aggregates plans the same way every run
+    val df = SparkEntry.queries("q_profile_orders")(spark, d)
+    val expands = df.queryExecution.sparkPlan.collect {
+      case e: org.apache.spark.sql.execution.ExpandExec => e
+    }
+    assert(expands.isEmpty, s"Expand in the profile plan: $expands")
+    val read = scansOf(df, "orders").map(_.requiredSchema.fieldNames.toSeq)
+    assert(read.sortBy(_.mkString) ==
+      Seq(Seq("o_custkey"), Seq("o_orderkey"), Seq("o_totalprice")),
+      read.map(_.mkString(",")).mkString(";"))
   }
 
   test("Q5: date filter pushes to the orders scan; nation dim broadcasts") {
@@ -147,7 +162,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("token-budget selection reads only its three columns off documents") {
-    val scans = scansOf(ops.Corpus.tokenBudgetSelect(spark, d), "documents")
+    val scans = scansOf(SparkEntry.queries("q_token_budget_select")(spark, d),
+                        "documents")
     assert(scans.nonEmpty)
     for (s <- scans) {
       val read = s.requiredSchema.fieldNames.toSet
@@ -181,7 +197,7 @@ class PlanShapeSpec extends SparkSpec {
     // the op's whole claim is "entirely map-side": a refactor that
     // introduces an explode+groupBy would silently add a corpus-sized
     // shuffle — pin the absence of any exchange in the plan
-    val df = ops.TextOps.lexicalDiversity(spark, d)
+    val df = SparkEntry.queries("q_lexical_diversity")(spark, d)
     val exchanges = df.queryExecution.sparkPlan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
@@ -194,7 +210,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("benford profile reads only o_totalprice from orders") {
-    val scans = scansOf(ops.Analytics.benfordTotalprice(spark, d), "orders")
+    val scans = scansOf(SparkEntry.queries("q_benford_totalprice")(spark, d), "orders")
     assert(scans.nonEmpty)
     for (s <- scans)
       assert(s.requiredSchema.fieldNames.toSet == Set("o_totalprice"),
@@ -204,7 +220,7 @@ class PlanShapeSpec extends SparkSpec {
   test("frame dedup plans equi-joins only — no cartesian product") {
     // the chunk-fp bucket join is the LSH shape; a refactor that loses
     // the fp equi-key would go all-pairs over the corpus
-    val df = ops.Multimodal.frameDedupPairs(spark, d)
+    val df = SparkEntry.queries("q_multimodal_frame_dedup")(spark, d)
     val cart = df.queryExecution.sparkPlan.collect {
       case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
       case n: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => n

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -287,7 +287,8 @@ class DedupSpec extends SparkSpec {
     val bands = Dedup.minhashBands(spark, "/root/testdata/sf0.001")
     val nDocs = bands.select("doc_id").distinct().count()
     val nBands = bands.select("band").distinct().count()
-    val stats = Dedup.minhashBandStats(spark, "/root/testdata/sf0.001")
+    val stats = SparkEntry.queries("q_minhash_band_stats")(
+        spark, "/root/testdata/sf0.001")
       .as[(Long, Long, Long, Long, Long)].collect()
     // every doc lands in exactly one bucket per band
     for ((band, g) <- stats.groupBy(_._1))

@@ -52,7 +52,7 @@ class Round12dOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val tmp = tempDir("mm")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val r = Multimodal.chunkFrames(spark, tmp)
+    val r = Multimodal.chunkFramesOf(graft.etl.Feeds.table(spark, tmp, "documents"))
       .as[(Long, Long, String)].collect().groupBy(_._1)
     assert(r(1L).length == 2 && r(2L).length == 1)
     val fp0 = r(1L).find(_._2 == 0L).get._3

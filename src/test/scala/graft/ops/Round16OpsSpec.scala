@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -147,7 +147,7 @@ class Round16OpsSpec extends SparkSpec {
   test("tier overlap census: intersection bounded by both tiers and " +
        "counts match the joined frames (sf0.001)") {
     val d = "/root/testdata/sf0.001"
-    val (nM, nS, nBoth) = Dedup.dedupTierOverlap(spark, d)
+    val (nM, nS, nBoth) = SparkEntry.queries("q_dedup_tier_overlap")(spark, d)
       .as[(Long, Long, Long)].head()
     assert(nBoth <= math.min(nM, nS))
     val wantM = Dedup.minhashPairs(spark, d).count()

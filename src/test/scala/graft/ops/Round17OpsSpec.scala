@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Round-17 additions: the substring-ingest storage-debt ledger — checked
@@ -119,7 +119,7 @@ class Round17OpsSpec extends SparkSpec {
   test("mask savings by source: totals reconcile with the range list " +
        "and the doc grain (sf0.001)") {
     val d = "/root/testdata/sf0.001"
-    val rows = Dedup.maskSavingsBySource(spark, d)
+    val rows = SparkEntry.queries("q_mask_savings_by_source")(spark, d)
       .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
     assert(rows.nonEmpty)
     val ranges = Dedup.spanMaskRanges(spark, d)
@@ -177,7 +177,8 @@ class Round17OpsSpec extends SparkSpec {
   }
 
   test("debt ledger on real docs: invariants hold at sf0.001") {
-    val rows = Dedup.substringIngestDebt(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("q_substring_ingest_debt")(
+        spark, "/root/testdata/sf0.001")
       .as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq
     assert(rows.map(_._1) == Seq(0L, 1L, 2L))
     for ((_, nPos, nApp, nLive, nDead) <- rows) {

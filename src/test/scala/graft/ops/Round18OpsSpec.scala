@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Round-18 additions: v4 curation (mask-instead-of-drop at the quote
@@ -69,7 +69,7 @@ class Round18OpsSpec extends SparkSpec {
   test("corpus invariants at sf0.001: v3 ⊆ v4, v4 doc set = v2's, " +
        "non-heavy docs unmasked, gains non-negative") {
     val v2c = Corpus.curatedV2(spark, dir)
-    val v3c = Corpus.curatedV3(spark, dir)
+    val v3c = SparkEntry.queries("q_corpus_curated_v3")(spark, dir)
     val v4c = Corpus.curatedV4(spark, dir)
     assert(v4c.count() == v2c.count(), "v4 must admit every v2 doc")
     assert(v3c.join(v4c.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -81,7 +81,7 @@ class Round18OpsSpec extends SparkSpec {
       .join(heavy, Seq("doc_id"), "left_anti").count() == 0L)
     assert(v4c.where($"masked_words" === 0 || $"kept_words" < 0)
       .where($"kept_words" =!= $"n_words").count() == 0L)
-    val y = Corpus.maskVsDropYield(spark, dir)
+    val y = SparkEntry.queries("q_mask_vs_drop_yield")(spark, dir)
     assert(y.where($"gained_words" < 0 || $"gained_docs" < 0).count() == 0L)
     // total gained docs = admitted quote-heavy docs
     val gained = y.agg(sum("gained_docs")).as[Long].head()
@@ -154,7 +154,7 @@ class Round18OpsSpec extends SparkSpec {
   test("v4 release card reconciles with the admitted corpus and keeps " +
        "ppm columns in range") {
     val v4c = Corpus.curatedV4(spark, dir)
-    val card = Corpus.corpusStatsV4(spark, dir)
+    val card = SparkEntry.queries("q_corpus_stats_v4")(spark, dir)
     assert(card.agg(sum("n_docs")).as[Long].head() == v4c.count())
     assert(card.agg(sum("kept_words")).as[Long].head() ==
       v4c.agg(sum("kept_words")).as[Long].head())

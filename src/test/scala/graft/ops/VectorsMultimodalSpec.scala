@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class VectorsMultimodalSpec extends SparkSpec {
@@ -293,7 +293,7 @@ class VectorsMultimodalSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val a = Vectors.rankStabilitySampled(spark, dir)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
-    val b = Vectors.rankStability(spark, dir)
+    val b = SparkEntry.queries("q_ann_rank_stability")(spark, dir)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
     assert(a.toSeq == b.toSeq && a.nonEmpty)
   }

@@ -351,36 +351,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-static dedup check agrees with the batch incremental join") {
-    import graft.ops.{Dedup, TextOps}
-    implicit val sqlCtx = spark.sqlContext
-    val oldDocs = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog"),
-      (1L, "completely different words entirely here now then"))
-      .toDF("doc_id", "text")
-    val indexBands = Dedup.minhashBandsFastOf(
-      TextOps.withWords(TextOps.normalize(oldDocs)))
-    val newDocs = Seq(
-      (10L, "the quick  brown fox jumps over the LAZY dog"), // dup mod norm
-      (11L, "totally novel content with no index collision"))
-    val input = MemoryStream[(Long, String)]
-    val q = DedupStream.candidatesVsIndex(
-        input.toDF().toDF("doc_id", "text"), indexBands)
-      .writeStream.format("memory").queryName("inc_dedup_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(newDocs: _*)
-      q.processAllAvailable()
-      val got = spark.table("inc_dedup_stream").distinct()
-        .as[(Long, Long)].collect().sorted.toSeq
-      val want = DedupStream.candidatesVsIndex(
-          newDocs.toDF("doc_id", "text"), indexBands)
-        .distinct().as[(Long, Long)].collect().sorted.toSeq
-      assert(got == want && got.contains((0L, 10L)))
-      assert(!got.exists(p => p._1 == 11L || p._2 == 11L))
-    } finally q.stop()
-  }
-
   test("stream-stream interval join matches the batch join, bounds state") {
     def ts(s: String) = Timestamp.valueOf(s)
     val events = Seq(
