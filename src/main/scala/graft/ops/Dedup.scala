@@ -1248,7 +1248,7 @@ object Dedup {
     * bench plans, ~12.7 s combined at sf0.1). Same stale-read contract as
     * [[bandsCached]]. */
   private[graft] def substringRunsCached(spark: SparkSession,
-                                               dir: String): DataFrame =
+                                         dir: String): DataFrame =
     graft.Caches.grain(spark, dir, "dedup.runs") {
       substringRunsOf(TextOps.posShingles(spark, dir), 8, 64).staged
     }
